@@ -6,18 +6,22 @@ The DAAT iterator machinery (`Qry.java:248-364`) is NOT ported (SURVEY.md
 lazy scoring = inner-join semantics, full-sort-truncate = orderBy().limit()
 (Spark's TakeOrderedAndProject does per-partition top-k + merge).
 
-Everything is plan-internal — no driver-side actions per query: derived
-df/ctf for scoring (`QrySopScore.java:96`, `InvList.java:166-167`) are
-computed as 1-row aggregate subplans cross-joined broadcast onto the score
-frame; Indri default scores (`QrySopAnd.java:86-94`) become column
-expressions over doclen + those ctf columns on a full-outer candidate frame.
-Only global corpus stats (N, doc_count, sum_len per field — a handful of
-longs) are collected once at Engine construction.
+One driver action per query at most: the term-leaf (df, ctf) prefetch
+(`_prefetch_stats`, one scan of the persisted term_stats table, skipped
+when every term is cached), after which leaf statistics are literals.
+Everything else is plan-internal: derived df/ctf for scoring
+(`QrySopScore.java:96`, `InvList.java:166-167`) are global window
+aggregates over the derived list, so the zipper that produced it runs
+once; Indri default scores (`QrySopAnd.java:86-94`) become SQL expressions
+over doclen + those ctf values on the matchMin candidate frame. Global
+corpus stats (N, doc_count, sum_len per field — a handful of longs) are
+collected once at index build.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from contextlib import contextmanager
+from functools import cached_property, reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -41,6 +45,13 @@ class Engine:
         self.parser = QueryParser(analyzer, default_field=default_field)
         self._iop_cache: dict[int, tuple[Node, DataFrame]] = {}
         self._leaf_stats: dict[tuple[str, str], tuple[int, int]] = {}
+        self._persisted: list[DataFrame] = []   # last search_many's frames
+
+    @cached_property
+    def _inline_doclen(self) -> bool:
+        """Postings carry doclen (index-built); read lazily, since a
+        segments-only deployment has no postings frame."""
+        return "doclen" in self.index.postings.columns
 
     # ------------------------------------------------------------- public --
 
@@ -51,8 +62,8 @@ class Engine:
 
     def _prefetch_stats(self, node: Node) -> None:
         """Batch-fetch (df, ctf) for every uncached term leaf of the AST
-        in ONE collect — per-leaf lookups would cost one scheduler
-        round-trip each on a cluster."""
+        in ONE collect over the persisted term_stats table — per-leaf
+        lookups would cost one scheduler round-trip each on a cluster."""
         missing = {(n.term, n.field) for n in self._term_leaves(node)
                    if (n.term, n.field) not in self._leaf_stats}
         if not missing:
@@ -69,7 +80,8 @@ class Engine:
         """→ (doc_id, ext_id, score) top-k, score desc / ext_id asc
         (`ScoreList.java:87-114`, truncate `QryEval.java:748-752`)."""
         node = self.parse(qstring)
-        s = self.eval_sop(node).where(F.col("score") >= 0)  # QryEval.java:437
+        with self._plan_scope():
+            s = self.eval_sop(node).where(F.col("score") >= 0)  # QryEval.java:437
         ext = self._extid_expr()
         if ext is not None:
             # ext_id is order-isomorphic to doc_id (Index.extid_docid_fmt):
@@ -80,6 +92,32 @@ class Engine:
         res = s.join(self._doc_map(), "doc_id")
         return (res.orderBy(F.desc("score"), F.asc("ext_id")).limit(k)
                 .select("doc_id", "ext_id", "score"))
+
+    @contextmanager
+    def _plan_scope(self):
+        """Scope the Iop plan cache to one search call: entries are keyed
+        by AST node and hold that query's frames (and so their JVM
+        plans), which a long-lived engine must not accumulate. The lazy
+        frames a call returns keep their own plans."""
+        try:
+            yield
+        finally:
+            self._iop_cache.clear()
+
+    def close(self) -> None:
+        """Release the frames the last `search_many` call persisted (its
+        batched zipper outputs); the next call does this by itself."""
+        self._release(self._persisted, keep=[])
+        self._persisted = []
+
+    @staticmethod
+    def _release(frames: list[DataFrame], keep: list[DataFrame]) -> None:
+        """Unpersist `frames` without blocking, except those with the plan
+        of a frame in `keep`: identical plans share one cache entry, so a
+        repeated batch keeps its materialized zipper output."""
+        for df in frames:
+            if not any(df.sameSemantics(k) for k in keep):
+                df.unpersist(blocking=False)
 
     def attach_segments(self, seg_dir: str, num_buckets: int = 32,
                         as_of: int | None = None) -> None:
@@ -298,7 +336,12 @@ class Engine:
         eng = Engine(sub, self.model, params=self.p,
                      analyzer=self.parser.analyzer,
                      default_field=self.parser.default_field)
-        return eng.search_many(queries, k=k, exclude_docs=deleted)
+        # the throwaway engine releases our last call's frames and leaves
+        # its own for our next call (or close) to release
+        eng._persisted = self._persisted
+        out = eng.search_many(queries, k=k, exclude_docs=deleted)
+        self._persisted = eng._persisted
+        return out
 
     def _term_leaves(self, node: Node) -> list[Node]:
         if node.op == "term":
@@ -324,9 +367,8 @@ class Engine:
         if not fmt:
             return None
         prefix, width = fmt.rsplit(":", 1)
-        return F.concat(F.lit(prefix),
-                        F.lpad(F.col("doc_id").cast("string"),
-                               int(width), "0"))
+        return F.expr(f"concat({_q(prefix)}, "
+                      f"lpad(CAST(doc_id AS STRING), {int(width)}, '0'))")
 
     def search_many(self, queries: dict[str, str], k: int = 100,
                     bow_fast_path: bool = True,
@@ -362,6 +404,15 @@ class Engine:
         scored candidates BEFORE the per-query rank/limit (tombstone
         masking for the segment paths) — scores keep full-corpus stats,
         the excluded docs just never occupy a top-k slot."""
+        held, self._persisted = self._persisted, []
+        with self._plan_scope():
+            out = self._search_many(queries, k, bow_fast_path, exclude_docs)
+        self._release(held, keep=self._persisted)
+        return out
+
+    def _search_many(self, queries: dict[str, str], k: int,
+                     bow_fast_path: bool,
+                     exclude_docs: DataFrame | None) -> DataFrame:
         from pyspark.sql import Window
         frames = []
         bow_rows: list[tuple] = []    # (qid, term, field, mult, df)
@@ -407,7 +458,7 @@ class Engine:
                     continue
             frames.append(self.eval_sop(node)
                           .where(F.col("score") >= 0)
-                          .withColumn("qid", F.lit(qid)))
+                          .select("doc_id", "score", F.lit(qid).alias("qid")))
         if indri_entries:
             frames.append(self._indri_batch_frame(indri_entries))
         if bool_entries:
@@ -514,7 +565,8 @@ class Engine:
 
         The zipped frame is persisted: it feeds both the stats aggregate
         and the scoring join, and it is intersection-sized (≪ the scan),
-        so caching beats re-running the Arrow stage."""
+        so caching beats re-running the Arrow stage. The next call (or
+        `close`) releases it unless it re-persists the same plan."""
         from .batch_structured import arm_postings_frame
         spark = self.index.postings.sparkSession
         zipped = arm_postings_frame(self.index.postings, arms)
@@ -524,6 +576,7 @@ class Engine:
                             .select("doc_id", "field", "doclen"),
                             ["doc_id", "field"]))
         zipped = zipped.persist()
+        self._persisted.append(zipped)
         stats = (zipped.groupBy("arm_id")
                  .agg(F.count("*").alias("df")))
         qa = spark.createDataFrame(prox_rows,
@@ -533,14 +586,12 @@ class Engine:
         fields = sorted({fld for fld, _ in arms.values()})
         if len(fields) == 1:
             st = self.index.stats_for(fields[0])
-            score = self._bm25_expr(F.col("tf"), F.col("df"),
-                                    F.col("doclen"), st) * F.col("mult")
+            score = F.expr(f"{self._bm25_sql('df', st)} * mult")
         else:
             score = None
             for fld in fields:
                 st = self.index.stats_for(fld)
-                s = (self._bm25_expr(F.col("tf"), F.col("df"),
-                                     F.col("doclen"), st) * F.col("mult"))
+                s = F.expr(f"{self._bm25_sql('df', st)} * mult")
                 cond = F.col("field") == fld
                 score = (F.when(cond, s) if score is None
                          else score.when(cond, s))
@@ -567,14 +618,12 @@ class Engine:
         # per-field avglen differs, so score per field then sum
         if len(fields) == 1:
             st = self.index.stats_for(next(iter(fields)))
-            score = self._bm25_expr(F.col("tf"), F.col("df"),
-                                    F.col("doclen"), st) * F.col("mult")
+            score = F.expr(f"{self._bm25_sql('df', st)} * mult")
         else:
             score = None
             for fld in sorted(fields):
                 st = self.index.stats_for(fld)
-                s = (self._bm25_expr(F.col("tf"), F.col("df"),
-                                     F.col("doclen"), st) * F.col("mult"))
+                s = F.expr(f"{self._bm25_sql('df', st)} * mult")
                 cond = F.col("field") == fld
                 score = (F.when(cond, s) if score is None
                          else score.when(cond, s))
@@ -739,6 +788,7 @@ class Engine:
                                 .select("doc_id", "field", "doclen"),
                                 ["doc_id", "field"]))
             zipped = zipped.persist()
+            self._persisted.append(zipped)
             for r in (zipped.groupBy("arm_id")
                       .agg(F.sum("tf").alias("ctf")).collect()):
                 arm_ctf[r["arm_id"]] = int(r["ctf"])
@@ -865,43 +915,62 @@ class Engine:
         The plan cache stores (node, frame) — holding the node itself
         keeps the id() key alive, so a garbage-collected AST from a
         previous query can never alias a live entry (id() reuse would
-        silently return another query's postings)."""
+        silently return another query's postings); `_plan_scope` empties
+        it when the search call returns."""
         key = id(node)
         if key in self._iop_cache:
             return self._iop_cache[key][1]
         if node.op == "term":
             p = self.index.postings
             cols = ["doc_id", "tf", "positions"] + \
-                (["doclen"] if "doclen" in p.columns else [])
-            out = (p.where((F.col("term") == node.term) &
-                           (F.col("field") == node.field))
-                   .select(*cols))
+                (["doclen"] if self._inline_doclen else [])
+            out = p.where(f"term = {_q(node.term)} AND field = "
+                          f"{_q(node.field)}").select(*cols)
         else:
             args = [self.eval_iop(a) for a in node.args]
             dfs = [self._df_hint(a) for a in node.args]
+            n_part = self._list_parts(node)
             if node.op == "near":
-                out = near_frame(args, node.n, dfs)
+                out = near_frame(args, node.n, dfs, n_part)
             elif node.op == "window":
-                out = window_frame(args, node.n, dfs)
+                out = window_frame(args, node.n, dfs, n_part)
             elif node.op == "syn":
-                out = syn_frame(args)
+                out = syn_frame(args, n_part)
             else:
                 raise ValueError(node.op)
-            # NOT persisted: caching a UDF frame materializes it in a
-            # separate job at pre-AQE partitioning (32 near-empty python
-            # tasks) — worse than recomputing a small derived list inside
-            # the single query job. The plan object is still reused via
-            # _iop_cache, and derived df/ctf ride along as a window
-            # aggregate (see _score) instead of a second job.
+            # NOT persisted: a derived list has one consumer per query
+            # (its #SCORE or its parent Iop), and its df/ctf ride along as
+            # window aggregates (see _score) instead of a second job.
         self._iop_cache[key] = (node, out)
         return out
+
+    @cached_property
+    def _list_width(self) -> tuple[int, int]:
+        spark = self.index.postings.sparkSession
+        return (spark.sparkContext.defaultParallelism,
+                int(spark.conf.get(
+                    "spark.sql.execution.arrow.maxRecordsPerBatch")))
+
+    def _list_parts(self, node: Node) -> int:
+        """Partitions for a derived list: its df bound (`_df_hint`) in
+        Arrow batches (`spark.sql.execution.arrow.maxRecordsPerBatch`),
+        at most defaultParallelism — one task for an interactive-sized
+        list, so its zipper and its df/ctf window share that task; the
+        full width for a hot list or an unknown bound."""
+        width, batch = self._list_width
+        hint = self._df_hint(node)
+        if hint is None:
+            return width
+        if batch <= 0:       # unlimited batches: one batch holds any list
+            return 1
+        return max(1, min(width, -(-hint // batch)))
 
     def _df_hint(self, node: Node) -> int | None:
         """Upper bound on a subtree's posting count, from the term stats
         already prefetched at parse time — drives the proximity joins'
         broadcast decision (df ≪ corpus → broadcast; hot term → let
-        Catalyst/AQE pick). NEAR/WINDOW output ⊆ the intersection
-        (min of args); SYN ≤ sum of args."""
+        Catalyst/AQE pick) and the zipper's task count. NEAR/WINDOW
+        output ⊆ the intersection (min of args); SYN ≤ sum of args."""
         if node.op == "term":
             st = self._leaf_stats.get((node.term, node.field))
             return st[0] if st is not None else None
@@ -912,13 +981,6 @@ class Engine:
             return sum(hints)
         return min(hints)
 
-    def _derived_stats(self, node: Node) -> DataFrame:
-        """1-row (df, ctf) of a derived list (`InvList.java:143-169`) —
-        only needed for NEAR/WINDOW/SYN subtrees; term leaves use
-        `_stats_of` (precomputed, no extra job)."""
-        return self.eval_iop(node).agg(
-            F.count("*").alias("df"), F.coalesce(F.sum("tf"), F.lit(0)).alias("ctf"))
-
     def _stats_of(self, node: Node) -> tuple[int, int]:
         """(df, ctf) of a TERM leaf from the index's term_stats table —
         identical by construction to aggregating its postings
@@ -926,7 +988,7 @@ class Engine:
         inlined as literals: no per-term aggregation job, no crossJoin."""
         key = (node.term, node.field)
         if key not in self._leaf_stats:
-            # batch-fetch: grab every uncached term in one collect
+            # a leaf parse() did not prefetch: fetch this one term
             rows = (self.index.term_stats
                     .where(F.col("term") == node.term)
                     .where(F.col("field") == node.field)
@@ -938,7 +1000,9 @@ class Engine:
     # ------------------------------------------------------ Sop compilation --
 
     def eval_sop(self, node: Node) -> DataFrame:
-        """→ (doc_id, score) frame for a Sop subtree."""
+        """→ (doc_id, score) frame for a Sop subtree. Under Indri a frame
+        also carries `_ctf_<id>` for every derived-list #SCORE below it:
+        the combiners' default scores need that ctf on every candidate."""
         if node.op == "score":
             return self._score(node)
         if node.op == "and":
@@ -954,56 +1018,59 @@ class Engine:
     # -- #SCORE ---------------------------------------------------------------
 
     def _score(self, node: Node) -> DataFrame:
+        """#SCORE as ONE projection of its posting list: the model's
+        formula as a single SQL expression with the list's df/ctf folded
+        in. A term leaf's df/ctf are literals (prefetched). A derived list
+        is scored with its OWN df/ctf (`QrySopScore.java:96`), computed
+        as global window aggregates over the list inside the same plan,
+        so the zipper that produced it runs once; a global aggregate
+        cross-joined back would run it a second time."""
         child = node.args[0]
         fld = child.field
         il = self.eval_iop(child)
-        st = self.index.stats_for(fld)
-        if child.op == "term":
-            # leaf: df/ctf as literals (no agg job, no crossJoin)
-            df_v, ctf_v = self._stats_of(child)
-            base = il.withColumn("df", F.lit(int(df_v)).cast("long")) \
-                     .withColumn("ctf", F.lit(int(ctf_v)).cast("long"))
-        else:
-            # derived list (`QrySopScore.java:96` scores with the DERIVED
-            # df/ctf): 1-row parallel aggregate broadcast-cross-joined
-            # back on. NOT a global window — Window.partitionBy() funnels
-            # the whole derived list through ONE partition, which is a
-            # serial stage exactly when the list is big (hot terms);
-            # measured flat 8→32-core scaling on a 200k-doc corpus. The
-            # broadcast agg keeps partial/final parallelism and is still
-            # a single Catalyst plan.
-            base = il.crossJoin(F.broadcast(self._derived_stats(child)))
-        if "doclen" not in base.columns:
+        if not self._inline_doclen:
             # fallback for posting frames without inlined doclen (external
             # tables, streamed sinks); the index-built path carries doclen
             # per posting so NO join happens here — at 10^12 docs the
             # doclens join is a corpus-sized shuffle, inlining erases it
-            base = base.join(self.index.doclens.where(F.col("field") == fld)
-                             .select("doc_id", "doclen"), "doc_id")
+            il = il.join(self.index.doclens.where(F.col("field") == fld)
+                         .select("doc_id", "doclen"), "doc_id")
+        if child.op == "term":
+            df, ctf = (str(int(v)) for v in self._stats_of(child))
+        else:
+            df, ctf = "count(1) OVER ()", "sum(tf) OVER ()"
+        st = self.index.stats_for(fld)
         if self.model == "bm25":
-            score = self._bm25_expr(F.col("tf"), F.col("df"), F.col("doclen"), st)
+            score = self._bm25_sql(df, st)
         elif self.model == "indri":
-            score = self._indri_expr(F.col("tf"), F.col("ctf"), F.col("doclen"), st)
+            score = self._indri_sql("tf", ctf, "doclen", st)
         elif self.model == "rankedboolean":
-            score = F.col("tf").cast("double")       # QrySopScore.java:83-88
+            score = "CAST(tf AS DOUBLE)"             # QrySopScore.java:83-88
         else:  # unrankedboolean
-            score = F.lit(1.0)                       # QrySopScore.java:75-81
-        return base.select("doc_id", score.alias("score"))
+            score = "1.0D"                           # QrySopScore.java:75-81
+        cols = ["doc_id", f"{score} AS score"]
+        if self.model == "indri" and child.op != "term":
+            cols.append(f"{ctf} AS _ctf_{id(node)}")
+        return il.selectExpr(*cols)
 
-    def _bm25_expr(self, tf: Column, df: Column, doclen: Column, st: dict) -> Column:
-        """`QrySopScore.java:90-120`: idf floored at 0, user weight ≡ 1."""
+    def _bm25_sql(self, df: str, st: dict) -> str:
+        """`QrySopScore.java:90-120` over columns tf and doclen: idf
+        floored at 0, user weight ≡ 1. `df` is a SQL operand."""
         n = float(st["n_docs"])
         avglen = st["sum_len"] / st["doc_count"]
-        idf = F.greatest(F.lit(0.0), F.log((F.lit(n) - df + 0.5) / (df + 0.5)))
-        tfw = tf / (tf + self.p.k1 * (1 - self.p.b + self.p.b * doclen / F.lit(avglen)))
-        return idf * tfw * F.lit(1.0)
+        k1, b = self.p.k1, self.p.b
+        idf = f"greatest(0.0D, ln(({_d(n)} - {df} + 0.5D) / ({df} + 0.5D)))"
+        tfw = (f"tf / (tf + {_d(k1)} * ({_d(1 - b)} + {_d(b)} * doclen"
+               f" / {_d(avglen)}))")
+        return f"({idf} * ({tfw}) * 1.0D)"
 
-    def _indri_expr(self, tf: Column, ctf: Column, doclen: Column, st: dict) -> Column:
-        """`QrySopScore.java:140-161`; tf=0 ⇒ the default score (`:123-138`)."""
-        c = float(st["sum_len"])
-        pmle = ctf / F.lit(c)
+    def _indri_sql(self, tf: str, ctf: str, doclen: str, st: dict) -> str:
+        """`QrySopScore.java:140-161`; tf=0 ⇒ the default score
+        (`:123-138`). All arguments are SQL operands."""
+        pmle = f"({ctf} / {_d(st['sum_len'])})"
         mu, lam = self.p.mu, self.p.lam
-        return (1 - lam) * (tf + mu * pmle) / (doclen + F.lit(mu)) + lam * pmle
+        return (f"({_d(1 - lam)} * ({tf} + {_d(mu)} * {pmle})"
+                f" / ({doclen} + {_d(mu)}) + {_d(lam)} * {pmle})")
 
     # -- boolean / bag-of-words combiners --------------------------------------
 
@@ -1051,79 +1118,93 @@ class Engine:
 
     def _indri_combine(self, args: list[Node], shares: list[float],
                        mode: str) -> DataFrame:
-        """matchMin candidates (`Qry.java:325-348`) via outer join; absent
-        args contribute their default score (`QrySopAnd.java:97-107`,
+        """matchMin candidates (`Qry.java:325-348`); absent args
+        contribute their default score (`QrySopAnd.java:97-107`,
         `QrySopWSum.java:52-70`, `QrySopWAnd.java:45-62`).
 
         mode='geo': Π v_i^share_i ; mode='sum': Σ share_i · v_i.
-        """
-        frames = [self.eval_sop(a).withColumnRenamed("score", f"_s{i}")
-                  for i, a in enumerate(args)]
-        cand = reduce(lambda l, r: l.unionByName(r),
-                      [f.select("doc_id") for f in frames]).distinct()
-        j = reduce(lambda l, r: l.join(r, "doc_id", "left"), frames, cand)
+
+        Candidates come from ONE union of the arg frames, each tagged
+        into its own `_s<i>` column, grouped by doc_id: every arg frame
+        is read once, and over the doc_id-partitioned postings the
+        grouping needs no exchange. A derived list's ctf (`_ctf_<id>`)
+        reaches every candidate through a global window max."""
+        k = len(args)
+        own = [[f"_ctf_{sid}" for sid in self._derived_sids(a)] for a in args]
+        ctfs = [c for cs in own for c in cs]
+        tagged = [self.eval_sop(a).selectExpr(
+            "doc_id",
+            *[f"{'score' if j == i else 'CAST(NULL AS DOUBLE)'} AS _s{j}"
+              for j in range(k)],
+            *[f"{c if c in own[i] else 'CAST(NULL AS BIGINT)'} AS {c}"
+              for c in ctfs]) for i, a in enumerate(args)]
+        cols = [f"_s{i}" for i in range(k)] + ctfs
+        j = (reduce(DataFrame.union, tagged).groupBy("doc_id")
+             .agg(*[F.max(c).alias(c) for c in cols]))
+        if ctfs:
+            j = j.selectExpr("doc_id", *cols[:k],
+                             *[f"coalesce(max({c}) OVER (), 0) AS {c}"
+                               for c in ctfs])
         # doclen columns for every field referenced by defaults in the subtree
-        fields = sorted({f for a in args for f in self._fields_of(a)})
-        for fld in fields:
+        for fld in sorted({f for a in args for f in self._fields_of(a)}):
             j = j.join(self.index.doclens.where(F.col("field") == fld)
                        .select("doc_id", F.col("doclen").alias(f"_dl_{fld}")),
                        "doc_id", "left")
-        # ctf columns for every DERIVED-list score node in the subtree
-        # (1-row broadcasts); term leaves use literal stats instead
-        for a in args:
-            for sid, snode in self._score_nodes(a):
-                if snode.args[0].op == "term":
-                    continue
-                j = j.crossJoin(F.broadcast(
-                    self._derived_stats(snode.args[0])
-                    .select(F.col("ctf").alias(f"_ctf_{sid}"))))
-        vals = [F.coalesce(F.col(f"_s{i}"), self._default_expr(a))
+        vals = [f"coalesce(_s{i}, {self._default_sql(a)})"
                 for i, a in enumerate(args)]
         if mode == "geo":
-            score = reduce(lambda acc, sv: acc * F.pow(sv[1], F.lit(sv[0])),
-                           zip(shares, vals), F.lit(1.0))
+            score = reduce(lambda acc, sv: f"({acc} * POWER({sv[1]}, {_d(sv[0])}))",
+                           zip(shares, vals), "1.0D")
         else:
-            score = reduce(lambda acc, sv: acc + F.lit(sv[0]) * sv[1],
-                           zip(shares, vals), F.lit(0.0))
-        return j.select("doc_id", score.alias("score"))
+            score = reduce(lambda acc, sv: f"({acc} + {_d(sv[0])} * {sv[1]})",
+                           zip(shares, vals), "0.0D")
+        return j.selectExpr("doc_id", f"{score} AS score", *ctfs)
 
     def _fields_of(self, node: Node) -> set[str]:
         if node.op == "score":
             return {node.args[0].field}
         return set().union(*(self._fields_of(a) for a in node.args)) if node.args else set()
 
-    def _score_nodes(self, node: Node) -> list[tuple[int, Node]]:
+    def _derived_sids(self, node: Node) -> list[int]:
+        """id()s of the derived-list #SCORE nodes in a Sop subtree."""
         if node.op == "score":
-            return [(id(node), node)]
-        out = []
-        for a in node.args:
-            out.extend(self._score_nodes(a))
-        return out
+            return [] if node.args[0].op == "term" else [id(node)]
+        return [sid for a in node.args for sid in self._derived_sids(a)]
 
-    def _default_expr(self, node: Node) -> Column:
-        """Recursive Indri default score as a pure column expression
+    def _default_sql(self, node: Node) -> str:
+        """Recursive Indri default score as a SQL expression
         (`QrySopAnd.java:86-94`, `QrySopWAnd.java:24-34`)."""
         if node.op == "score":
-            fld = node.args[0].field
-            st = self.index.stats_for(fld)
-            if node.args[0].op == "term":
-                ctf = F.lit(int(self._stats_of(node.args[0])[1]))
-            else:
-                ctf = F.col(f"_ctf_{id(node)}")
-            return self._indri_expr(F.lit(0), ctf, F.col(f"_dl_{fld}"), st)
+            child = node.args[0]
+            ctf = (str(int(self._stats_of(child)[1])) if child.op == "term"
+                   else f"_ctf_{id(node)}")
+            return self._indri_sql("0", ctf, f"`_dl_{child.field}`",
+                                   self.index.stats_for(child.field))
         if node.op == "and":
             k = len(node.args)
-            return reduce(lambda acc, a: acc * F.pow(self._default_expr(a),
-                                                     F.lit(1.0 / k)),
-                          node.args, F.lit(1.0))
+            return reduce(lambda acc, a: f"({acc} * POWER("
+                                         f"{self._default_sql(a)}, {_d(1.0 / k)}))",
+                          node.args, "1.0D")
         if node.op in ("wand", "wsum"):
             w = sum(node.weights)
             if node.op == "wand":
                 return reduce(
-                    lambda acc, wa: acc * F.pow(self._default_expr(wa[1]),
-                                                F.lit(wa[0] / w)),
-                    zip(node.weights, node.args), F.lit(1.0))
+                    lambda acc, wa: f"({acc} * POWER("
+                                    f"{self._default_sql(wa[1])}, {_d(wa[0] / w)}))",
+                    zip(node.weights, node.args), "1.0D")
             return reduce(
-                lambda acc, wa: acc + F.lit(wa[0] / w) * self._default_expr(wa[1]),
-                zip(node.weights, node.args), F.lit(0.0))
+                lambda acc, wa: f"({acc} + {_d(wa[0] / w)} * "
+                                f"{self._default_sql(wa[1])})",
+                zip(node.weights, node.args), "0.0D")
         raise ValueError(f"no default score for #{node.op}")
+
+
+def _q(s: str) -> str:
+    """A Python str as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _d(x: float) -> str:
+    """A Python float as an exact Spark SQL double literal (repr
+    round-trips; the D suffix keeps it from parsing as a decimal)."""
+    return f"{float(x)!r}D"

@@ -1,4 +1,4 @@
-"""#NEAR/n, #WINDOW/n, #SYN as DataFrame plans + Arrow-batched zipper UDFs.
+"""#NEAR/n, #WINDOW/n, #SYN as DataFrame plans + an Arrow-batched zipper.
 
 The reference's doc-at-a-time alignment (`QryIopNear.java:61-92` min-docid
 advancing) becomes an n-way inner join on doc_id — Catalyst picks the join
@@ -12,10 +12,11 @@ cannot drift.
 from __future__ import annotations
 
 from functools import reduce
+from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, IntegerType
 
 from ..oracle import near_positions, window_positions
 
@@ -29,10 +30,8 @@ def _joined_positions(args: list[DataFrame],
     for interactive query terms df ≪ corpus and the broadcast join skips
     shuffling the left side; for stopword-grade terms the positions
     arrays make the frame tens of MB and force-broadcasting it is slower
-    than letting Catalyst/AQE pick sort-merge (and the doc_id shuffle it
-    introduces already satisfies the zipper's repartition below, so no
-    extra exchange appears). Unknown df (dfs=None) keeps the broadcast —
-    the historical interactive-path behavior."""
+    than letting Catalyst/AQE pick sort-merge. Unknown df (dfs=None)
+    keeps the broadcast — the historical interactive-path behavior."""
     # doclen (when the index inlines it) rides the first arg — all args of
     # one proximity node share a field (parser-enforced), so any arg's
     # doclen is THE doclen; keeping it here lets #SCORE over a derived
@@ -55,31 +54,47 @@ def _joined_positions(args: list[DataFrame],
 PROXIMITY_BROADCAST_MAX_DF = 100_000
 
 
-def _zipper_frame(args: list[DataFrame], kernel,
-                  dfs: list[int | None] | None = None) -> DataFrame:
-    """Shared NEAR/WINDOW shape: join on doc_id → per-row position kernel."""
+def _zipper_frame(args: list[DataFrame], kernel, dfs: list[int | None] | None,
+                  n_part: int) -> DataFrame:
+    """Shared NEAR/WINDOW shape: join on doc_id → `n_part`-way doc_id
+    exchange → row-dropping `mapInPandas` position kernel.
+
+    The kernel runs as a map over the exchange's output, not as a
+    filtering pandas UDF: Catalyst pushes a deterministic UDF filter below
+    a repartition (the zipper then runs on the scan side, once for the
+    filter and again for the projection), and a bare repartition("doc_id")
+    is dropped as redundant when its input is already hash-partitioned on
+    doc_id at the session's shuffle width. A map is not pushed below the
+    exchange, so the Arrow round trip happens once, after it, in `n_part`
+    tasks (the caller sizes it from the list's df bound — one task for an
+    interactive-sized intersection). The explicit count also keeps AQE
+    from resizing the exchange."""
     k = len(args)
+    has_dl = "doclen" in args[0].columns
+    schema = "doc_id long, tf int, positions array<int>" + \
+        (", doclen long" if has_dl else "")
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def merge(*cols: pd.Series) -> pd.Series:
-        return pd.Series([kernel([list(c) for c in row]) for row in zip(*cols)])
+    def zipper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pos = [kernel([list(c) for c in row])
+                   for row in zip(*(pdf[f"_p{i}"] for i in range(k)))]
+            keep = np.fromiter((bool(p) for p in pos), bool, len(pos))
+            hits = [p for p in pos if p]
+            out = {"doc_id": pdf["doc_id"].to_numpy()[keep],
+                   "tf": np.fromiter((len(p) for p in hits), np.int32,
+                                     len(hits)),
+                   "positions": pd.Series(hits, dtype=object)}
+            if has_dl:
+                out["doclen"] = pdf["doclen"].to_numpy()[keep]
+            yield pd.DataFrame(out)
 
-    # shuffle boundary before the UDF: AQE size-coalesces it (KB-scale
-    # intersections → 1-2 partitions), so the Arrow round-trip happens in
-    # a couple of big batches instead of 32 near-empty python tasks; a
-    # genuinely large intersection keeps its parallelism (size-based)
-    j = _joined_positions(args, dfs).repartition("doc_id")
-    out_cols = ["doc_id",
-                F.size("positions").cast("int").alias("tf"),
-                "positions"] + (["doclen"] if "doclen" in j.columns else [])
-    out = (j.withColumn("positions", merge(*[F.col(f"_p{i}") for i in range(k)]))
-           .where(F.size("positions") > 0)
-           .select(*out_cols))
-    return out
+    return (_joined_positions(args, dfs)
+            .repartition(n_part, "doc_id")
+            .mapInPandas(zipper, schema=schema))
 
 
-def near_frame(args: list[DataFrame], n: int,
-               dfs: list[int | None] | None = None) -> DataFrame:
+def near_frame(args: list[DataFrame], n: int, dfs: list[int | None] | None,
+               n_part: int) -> DataFrame:
     """#NEAR/n — left-fold two-pointer, `<= n`, emits last arg's positions,
     consumes matched pairs (`QryIopNear.java:97-116`)."""
     def kernel(pos_lists: list[list[int]]) -> list[int]:
@@ -89,19 +104,21 @@ def near_frame(args: list[DataFrame], n: int,
             if not cur:
                 break
         return cur
-    return _zipper_frame(args, kernel, dfs)
+    return _zipper_frame(args, kernel, dfs, n_part)
 
 
-def window_frame(args: list[DataFrame], n: int,
-                 dfs: list[int | None] | None = None) -> DataFrame:
+def window_frame(args: list[DataFrame], n: int, dfs: list[int | None] | None,
+                 n_part: int) -> DataFrame:
     """#WINDOW/n — unordered, strict `< n`, emits max_loc, advances all
     (`QryIopWindow.java:121-137`)."""
-    return _zipper_frame(args, lambda pls: window_positions(pls, n), dfs)
+    return _zipper_frame(args, lambda pls: window_positions(pls, n), dfs,
+                         n_part)
 
 
-def syn_frame(args: list[DataFrame]) -> DataFrame:
+def syn_frame(args: list[DataFrame], n_part: int) -> DataFrame:
     """#SYN — union; positions = sorted concat (`QryIopSyn.java:17-71`).
-    Pure built-ins: union → groupBy(doc_id) → flatten + array_sort."""
+    Pure built-ins: union → `n_part`-way doc_id exchange → groupBy(doc_id)
+    → flatten + array_sort."""
     has_dl = all("doclen" in a.columns for a in args)
     cols = ["doc_id", "positions"] + (["doclen"] if has_dl else [])
     u = reduce(lambda l, r: l.unionByName(r), [a.select(*cols) for a in args])
@@ -110,4 +127,5 @@ def syn_frame(args: list[DataFrame]) -> DataFrame:
         aggs.append(F.first("doclen").alias("doclen"))
     out_cols = ["doc_id", F.size("positions").cast("int").alias("tf"),
                 "positions"] + (["doclen"] if has_dl else [])
-    return u.groupBy("doc_id").agg(*aggs).select(*out_cols)
+    return (u.repartition(n_part, "doc_id").groupBy("doc_id").agg(*aggs)
+            .select(*out_cols))

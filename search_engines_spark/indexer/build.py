@@ -313,12 +313,15 @@ def build_index_frames(docs: DataFrame,
         postings = postings.persist()
         doclens = doclens.persist()
         doc_map = doc_map.persist()
+    # persisted next to its postings: every query's stats prefetch is
+    # then one cached scan, not a filter + aggregate over the postings
+    term_stats = build_term_stats(postings)
     n_docs = docs.count()
     idx = Index(
         docs=docs.drop("_tokens"),
         doclens=doclens,
         postings=postings,
-        term_stats=build_term_stats(postings),
+        term_stats=term_stats.persist() if cache else term_stats,
         corpus_stats=_collect_corpus_stats(doclens, n_docs),
         doc_map=doc_map,
         extid_docid_fmt=extid_docid_fmt,
@@ -367,12 +370,15 @@ def build_index_frames_analyzed(docs: DataFrame, analyzer,
         postings = postings.persist()
         doclens = doclens.persist()
         doc_map = doc_map.persist()
+    # persisted next to its postings: every query's stats prefetch is
+    # then one cached scan, not a filter + aggregate over the postings
+    term_stats = build_term_stats(postings)
     n_docs = docs_out.count()
     return Index(
         docs=docs_out,
         doclens=doclens,
         postings=postings,
-        term_stats=build_term_stats(postings),
+        term_stats=term_stats.persist() if cache else term_stats,
         corpus_stats=_collect_corpus_stats(doclens, n_docs),
         doc_map=doc_map,
         extid_docid_fmt=extid_docid_fmt,

@@ -127,3 +127,26 @@ def test_indri_mixed_models_fallback(spark_index, oracle_index):
     eng = Engine(spark_index, "indri")
     rows = eng.search_many(queries, k=10).collect()
     _against_oracle(rows, queries, oracle_index, "indri", 10)
+
+
+@pytest.mark.parametrize("model,q", [
+    ("bm25", "#sum( #near/{}( creek farm ) fickle )"),
+    ("indri", "#and( creek #near/{}( creek farm ) )")])
+def test_search_many_releases_persisted_frames(spark, spark_index, model, q):
+    """Each call persists its batched zipper frame; the next call (or
+    close) must release it, so a run of distinct calls keeps the count
+    flat (identical calls would share one cache entry and hide a leak).
+    A repeated identical call keeps the cached frame it shares."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    eng = Engine(spark_index, model)
+    eng.search_many({"q": q.format(1)}, k=5).collect()
+    held = len(persisted())
+    for n in range(2, 7):
+        eng.search_many({"q": q.format(n)}, k=5).collect()
+        assert len(persisted()) == held
+    before = persisted()
+    eng.search_many({"q": q.format(6)}, k=5).collect()
+    assert persisted() == before
+    eng.close()
+    assert len(persisted()) == held - 1

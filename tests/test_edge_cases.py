@@ -109,6 +109,38 @@ def test_engine_reuse_many_queries(spark_index, oracle_index):
         assert id(node) == key
 
 
+def test_plan_cache_scoped_to_one_call(spark_index):
+    """The Iop plan cache holds one call's ASTs and frames (and so their
+    JVM plans): a long-lived engine must not keep earlier queries'."""
+    eng = Engine(spark_index, "bm25")
+    for i in range(20):
+        q = f"#sum( #near/{i + 1}( creek farm ) fickle )"
+        if i % 2:
+            eng.search_many({"q": q, "n": f"#sum( #syn( creek #near/{i}( "
+                                          f"fickle farm ) ) )"}, k=5,
+                            bow_fast_path=False)
+        else:
+            eng.search(q, k=5)
+        assert eng._iop_cache == {}, q
+
+
+def test_empty_zipper_output(spark_index, oracle_index):
+    """#WINDOW/1 over two distinct terms can never match (strict
+    max - min < 1): the zipper sees the docs holding both terms and
+    emits nothing, and the empty derived list scores nothing."""
+    _both("#sum( #window/1( creek farm ) fickle )", "bm25",
+          spark_index, oracle_index)
+    _both("#and( #window/1( creek farm ) fickle )", "indri",
+          spark_index, oracle_index)
+
+
+@pytest.mark.parametrize("s", ["a'b", "a\\b", "it\\'s", "'", "\\", "ünï"])
+def test_sql_string_literal_round_trips(spark, s):
+    """Terms reach the compiled filters as SQL string literals."""
+    from search_engines_spark.engine.compile import _q
+    assert spark.sql(f"SELECT {_q(s)} AS v").first()["v"] == s
+
+
 def test_nan_weight_is_a_term_not_weight(spark_index, oracle_index):
     """'nan'/'inf' must parse as terms, not weights
     (Java Double.parseDouble rejects lowercase forms)."""
