@@ -112,12 +112,14 @@ class Engine:
 
     @staticmethod
     def _release(frames: list[DataFrame], keep: list[DataFrame]) -> None:
-        """Unpersist `frames` without blocking, except those with the plan
-        of a frame in `keep`: identical plans share one cache entry, so a
-        repeated batch keeps its materialized zipper output."""
+        """Unpersist `frames`, except those with the plan of a frame in
+        `keep`: identical plans share one cache entry, so a repeated
+        batch keeps its materialized zipper output. Blocking: the block
+        removal finishes before the call returns instead of running
+        alongside the caller's next job."""
         for df in frames:
             if not any(df.sameSemantics(k) for k in keep):
-                df.unpersist(blocking=False)
+                df.unpersist(blocking=True)
 
     def attach_segments(self, seg_dir: str, num_buckets: int = 32,
                         as_of: int | None = None) -> None:
