@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..indexer.build import Index
+from ..literals import local_frame
 
 
 def expansion_scores(index: Index, top: list[tuple[int, float]],
@@ -38,8 +39,9 @@ def expansion_scores(index: Index, top: list[tuple[int, float]],
     spark = index.docs.sparkSession
     c_length = float(index.stats_for(field)["sum_len"])  # QryEval.java:89
 
-    top_df = F.broadcast(spark.createDataFrame(
-        [(int(d), float(s)) for d, s in top], "doc_id long, doc_score double"))
+    top_df = F.broadcast(local_frame(
+        spark, [(int(d), float(s)) for d, s in top],
+        "doc_id long, doc_score double"))
     doclens = (index.doclens.where(F.col("field") == field)
                .select("doc_id", "doclen"))
     # stems of the top docs, with per-doc tf (forward-index scan,
@@ -78,9 +80,9 @@ def expansion_scores_many(index: Index,
     tf=0 grid cells, collection-ctf mle, '.'/',' stems skipped)."""
     spark = index.docs.sparkSession
     c_length = float(index.stats_for(field)["sum_len"])
-    top_df = F.broadcast(spark.createDataFrame(
-        [(qid, int(d), float(s)) for qid, top in tops.items()
-         for d, s in top],
+    top_df = F.broadcast(local_frame(
+        spark, [(qid, int(d), float(s)) for qid, top in tops.items()
+                for d, s in top],
         "qid string, doc_id long, doc_score double"))
     doclens = (index.doclens.where(F.col("field") == field)
                .select("doc_id", "doclen"))

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..analysis import Analyzer, CANONICAL
 from ..indexer.build import Index
+from ..literals import local_frame
 from ..oracle import Models
 
 
@@ -96,7 +97,7 @@ def letor_features(index: Index, queries: dict[str, str],
     spark = index.docs.sparkSession
     rows = [(qid, t) for qid, q in queries.items()
             for t in analyzer.query_terms(q)]
-    qterms = F.broadcast(spark.createDataFrame(rows, "qid string, term string"))
+    qterms = F.broadcast(local_frame(spark, rows, "qid string, term string"))
     out = candidates.select("qid", "doc_id", "rel")
     feat_names: list[str] = []
     for fld in fields:
@@ -160,8 +161,7 @@ def letor_features_18(index: Index, queries: dict[str, str],
     spark = index.docs.sparkSession
     rows = [(qid, t) for qid, q in queries.items()
             for t in analyzer.query_terms(q)]
-    qterms = F.broadcast(spark.createDataFrame(rows,
-                                               "qid string, term string"))
+    qterms = F.broadcast(local_frame(spark, rows, "qid string, term string"))
     out = candidates.select("qid", "doc_id", "rel")
     slots: dict[int, str] = {}
 

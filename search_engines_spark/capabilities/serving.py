@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..analysis import SPARK_TOKENS_EXPR
+from ..literals import local_frame
 
 
 def snippets(results: DataFrame, docs: DataFrame, terms: list[str],
@@ -118,8 +119,8 @@ def suggest_terms(term_stats: DataFrame, probes: list[str],
     suggested — the standard first-letter-is-reliable heuristic.
     → (probe, suggestion, df, rank)."""
     spark = term_stats.sparkSession
-    p = (spark.createDataFrame([(t,) for t in sorted(set(probes))],
-                               "probe string")
+    p = (local_frame(spark, [(t,) for t in sorted(set(probes))],
+                     "probe string")
          .withColumn("_c1", F.substring("probe", 1, 1))
          .withColumn("_len", F.length("probe")))
     cand = (term_stats.where(F.col("field") == field)

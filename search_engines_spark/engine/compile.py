@@ -16,6 +16,15 @@ once; Indri default scores (`QrySopAnd.java:86-94`) become SQL expressions
 over doclen + those ctf values on the matchMin candidate frame. Global
 corpus stats (N, doc_count, sum_len per field — a handful of longs) are
 collected once at index build.
+
+Query-file set-up adds no driver action of its own. The batch paths'
+per-call query tables are JVM-local `VALUES` relations
+(`literals.local_frame`) that plan as LocalTableScan, not Python-RDD
+stages, and the segment readers declare their schemas and constant-fold
+their bucket filters (`indexer.segments.read_segments`). A steady
+`search_many` or `search_daat_many` call therefore runs only the jobs of
+its result, plus one per-arm ctf collect when Indri queries carry
+proximity arms (`_indri_batch_frame`).
 """
 
 from __future__ import annotations
@@ -27,6 +36,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..analysis import Analyzer, CANONICAL
 from ..indexer.build import Index
+from ..literals import double_lit as _d, local_frame, str_lit as _q
 from ..oracle import DEFAULT_OPS, Models
 from ..parser import Node, QueryParser
 from .proximity import near_frame, syn_frame, window_frame
@@ -483,10 +493,10 @@ class Engine:
             # arm contributes. Return the empty result shape instead of
             # crashing the reduce; the runner's trec writer emits the
             # per-qid dummy lines (`QryEval.java:790-795`) from all_qids.
-            spark = self.index.postings.sparkSession
-            return spark.createDataFrame(
-                [], "qid string, doc_id long, ext_id string, "
-                    "score double, rank int")
+            return local_frame(
+                self.index.postings.sparkSession, [],
+                "qid string, doc_id long, ext_id string, score double, "
+                "rank int")
         u = reduce(lambda l, r: l.unionByName(r), frames)
         if exclude_docs is not None:
             u = u.join(F.broadcast(exclude_docs.select("doc_id")),
@@ -581,8 +591,7 @@ class Engine:
         self._persisted.append(zipped)
         stats = (zipped.groupBy("arm_id")
                  .agg(F.count("*").alias("df")))
-        qa = spark.createDataFrame(prox_rows,
-                                   "qid string, arm_id int, mult int")
+        qa = local_frame(spark, prox_rows, "qid string, arm_id int, mult int")
         j = (zipped.join(F.broadcast(stats), "arm_id")
              .join(F.broadcast(qa), "arm_id"))
         fields = sorted({fld for fld, _ in arms.values()})
@@ -610,8 +619,9 @@ class Engine:
         partial+final aggregation keyed (qid, doc_id) — skew-free even
         for stopword-grade terms."""
         spark = self.index.postings.sparkSession
-        qt = spark.createDataFrame(
-            bow_rows, "qid string, term string, field string, mult int, df long")
+        qt = local_frame(
+            spark, bow_rows,
+            "qid string, term string, field string, mult int, df long")
         terms = sorted({r[1] for r in bow_rows})
         fields = {r[2] for r in bow_rows}
         p = self.index.postings.where(F.col("term").isin(terms))
@@ -825,14 +835,14 @@ class Engine:
             if arr:
                 map_entries += [F.lit(qid), F.array(*arr)]
         if not rows and not prox_rows:
-            return spark.createDataFrame(
-                [], "qid string, doc_id long, score double")
+            return local_frame(spark, [],
+                               "qid string, doc_id long, score double")
         cols = ["qid", "doc_id", "tf", "doclen", "share", "pmle", "geo"]
         present = None
         if rows:
-            qt = F.broadcast(spark.createDataFrame(
-                rows, "qid string, term string, field string, share double, "
-                      "pmle double, geo boolean"))
+            qt = F.broadcast(local_frame(
+                spark, rows, "qid string, term string, field string, "
+                             "share double, pmle double, geo boolean"))
             p = self.index.postings.where(
                 F.col("term").isin(sorted({r[1] for r in rows})))
             j = p.join(qt, ["term", "field"])
@@ -842,9 +852,9 @@ class Engine:
                            ["doc_id", "field"])
             present = j.select(*cols)
         if prox_rows:
-            pqt = F.broadcast(spark.createDataFrame(
-                prox_rows, "arm_id int, qid string, share double, "
-                           "pmle double, geo boolean"))
+            pqt = F.broadcast(local_frame(
+                spark, prox_rows, "arm_id int, qid string, share double, "
+                                  "pmle double, geo boolean"))
             j2 = zipped.join(pqt, "arm_id").select(*cols)
             present = j2 if present is None else present.unionByName(j2)
         p_tf = ((1 - lam) * (F.col("tf") + mu * F.col("pmle"))
@@ -887,8 +897,8 @@ class Engine:
         rows = [(qid, t, f) for qid, _, pairs in entries for t, f in pairs]
         and_entries = [(qid, pairs) for qid, root, pairs in entries
                        if root == "and"]
-        qt = F.broadcast(spark.createDataFrame(
-            rows, "qid string, term string, field string"))
+        qt = F.broadcast(local_frame(
+            spark, rows, "qid string, term string, field string"))
         p = self.index.postings.where(
             F.col("term").isin(sorted({t for _, t, _ in rows})))
         g = (p.join(qt, ["term", "field"])
@@ -1199,14 +1209,3 @@ class Engine:
                                 f"{self._default_sql(wa[1])})",
                 zip(node.weights, node.args), "0.0D")
         raise ValueError(f"no default score for #{node.op}")
-
-
-def _q(s: str) -> str:
-    """A Python str as a Spark SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _d(x: float) -> str:
-    """A Python float as an exact Spark SQL double literal (repr
-    round-trips; the D suffix keeps it from parsing as a decimal)."""
-    return f"{float(x)!r}D"

@@ -48,6 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..indexer.codec import varbyte_decode, varbyte_encode
+from ..literals import local_frame
 from ..oracle import Models
 
 STRIDE = 4096  # docs per stride; pruning granularity
@@ -208,8 +209,8 @@ def bm25_wand_topk(segments: DataFrame, terms: list[str],
            * w.get(t, 1)
            for t, (df, _) in term_stats.items() if t in terms}
     if not idf:
-        spark = segments.sparkSession
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(segments.sparkSession, [],
+                           "doc_id long, score double")
     k1, b = p.k1, p.b
 
     spp = _strides_per_part(segments.sparkSession, n_docs, stride)
@@ -309,12 +310,13 @@ def bm25_wand_topk(segments: DataFrame, terms: list[str],
 
     per_part = _apply_with_tombstones(
         blocks, deleted, stride, spp, score_partition,
-        "doc_id long, score double")
+        "doc_id long, score double", n_docs)
     return per_part.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
-                           spp: int, score_fn, schema: str) -> DataFrame:
+                           spp: int, score_fn, schema: str,
+                           n_docs: int) -> DataFrame:
     """Run `score_fn(blocks_pdf, deleted_ids | None)` per `pk` partition
     group. With a tombstone mask, the mask rows are COGROUPED on the
     same doc-stride `pk` the blocks shuffle on — each task sees only
@@ -322,11 +324,9 @@ def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
     the closure, and an empty group costs nothing."""
     if deleted is not None and not isinstance(deleted, DataFrame):
         arr = np.asarray(deleted, dtype=np.int64)   # convenience form
-        if arr.size:
-            deleted = blocks.sparkSession.createDataFrame(
-                [(int(x),) for x in arr], "doc_id long")
-        else:
-            deleted = None
+        deleted = (local_frame(blocks.sparkSession,
+                               [(int(x),) for x in arr], "doc_id long")
+                   if arr.size else None)
     # The kernel-input shuffle width is EXPLICIT, the
     # batch_structured.py precedent: a bare groupBy("pk") exchange is
     # AQE-coalescible, and the session's size-first policy
@@ -340,14 +340,22 @@ def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
     # ClusteredDistribution the Arrow kernel needs (no second
     # exchange) and AQE never coalesces an explicit width, so decode
     # parallelism tracks cores, not an advisory byte threshold.
-    # 8× cores (not the zipper's 2×): pk groups are FEW at moderate
-    # corpus sizes (61 at 2M docs) and equal-weight, so hash-bin
-    # collisions turn directly into stragglers — 8× bins make a group
-    # ~alone in its task (measured on the 2M store, 48q@32c: 5.39 s at
-    # 2× → 4.48 s at 8×; neutral at 8 cores, and at production group
-    # counts ≫ bins the multiplier is irrelevant while empty bins cost
-    # ~ms each).
-    n_part = blocks.sparkSession.sparkContext.defaultParallelism * 8
+    # Width min(8 × cores, 8 × G) for G = ⌈n_docs / (stride·spp)⌉ pk
+    # groups, not the zipper's 2×: pk groups are FEW at moderate corpus
+    # sizes (61 at 2M docs) and equal-weight, so hash-bin collisions
+    # turn directly into stragglers — 8× bins make a group ~alone in its
+    # task (measured on the 2M store, 48q@32c: 5.39 s at 2× → 4.48 s at
+    # 8×; neutral at 8 cores, and at production group counts ≫ bins the
+    # multiplier is irrelevant). Past 8·G, extra bins only add empty
+    # tasks, so the width stops there. One group (≤ stride·spp docs)
+    # gets ONE partition: the exchange plans as SinglePartition, which
+    # also satisfies a per-qid window above the kernel, so the batched
+    # path's rank window runs with no exchange of its own. G assumes
+    # dense doc ids; exactness never depends on the width, only the
+    # task shape does.
+    n_groups = -(-max(n_docs, 1) // (stride * spp))
+    cores = blocks.sparkSession.sparkContext.defaultParallelism
+    n_part = 1 if n_groups == 1 else 8 * min(cores, n_groups)
     blocks = blocks.repartition(n_part, "pk")
     if deleted is None:
         return (blocks.groupBy("pk")
@@ -404,8 +412,7 @@ def bm25_wand_topk_many(segments: DataFrame,
     terms = sorted({t for m in idf_q.values() for t in m})
     spark = segments.sparkSession
     if not terms:
-        return spark.createDataFrame([],
-                                     "qid string, doc_id long, score double")
+        return local_frame(spark, [], "qid string, doc_id long, score double")
     k1, b = p.k1, p.b
 
     spp = _strides_per_part(spark, n_docs, stride)
@@ -512,7 +519,7 @@ def bm25_wand_topk_many(segments: DataFrame,
     from pyspark.sql import Window
     per_part = _apply_with_tombstones(
         blocks, deleted, stride, spp, score_partition,
-        "qid string, doc_id long, score double")
+        "qid string, doc_id long, score double", n_docs)
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return (per_part.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k).drop("rank"))

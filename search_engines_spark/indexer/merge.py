@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import POSTINGS_SCHEMA
 from .segments import (SEGMENT_SCHEMA, _encode_partition, _fingerprint,
-                       journal_append, journal_read, read_segments)
+                       bucket_of, journal_append, journal_read, read_segments)
 
 _DELTA_DIR = "_delta"
 
@@ -155,9 +155,7 @@ def append_segments(postings: DataFrame, seg_dir: str,
                     "postings": m.get("postings", 0)}
     gen = max([int(m["gen"]) for m in manifest if "gen" in m], default=0) + 1
     out = _gen_path(seg_dir, gen)
-    src = postings.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"))
+    src = postings.withColumn("bucket", bucket_of("term", num_buckets))
     part = (src.repartitionByRange(num_buckets, "bucket", "term", "doc_id")
             .sortWithinPartitions("bucket", "term", "field", "doc_id")
             .select("term", "field", "bucket", "doc_id", "tf",
@@ -165,7 +163,7 @@ def append_segments(postings: DataFrame, seg_dir: str,
     seg = part.mapInPandas(_encode_partition, schema=SEGMENT_SCHEMA)
     seg.write.mode("overwrite").partitionBy("bucket").parquet(out)
     spark = postings.sparkSession
-    counts = (spark.read.parquet(out)
+    counts = (spark.read.schema(SEGMENT_SCHEMA).parquet(out)
               .agg(F.count("*").alias("blocks"),
                    F.sum("n").alias("postings")).collect()[0])
     entry = {"gen": gen, "fingerprint": fingerprint,
@@ -322,6 +320,9 @@ def _decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
 
 
 _TOMBSTONE_DIR = "_tombstones"
+# declared, not inferred: no footer-inference job per read, and files
+# written before gen-stamping existed (doc_id only) read gen as null
+_TOMBSTONE_SCHEMA = "doc_id long, gen int"
 
 # Fault-injection hook for crash-replay tests: called with
 # ("chunk_written", i) after a chunk's staging write commits,
@@ -352,9 +353,11 @@ def delete_docs(spark: SparkSession, seg_dir: str, doc_ids) -> dict:
     # as_of ≥ this generation (deletions fold into the CURRENT snapshot
     # rather than opening a new one — set semantics keep replays cheap)
     gen = latest_generation(seg_dir)
-    (doc_ids.select("doc_id", F.lit(gen).cast("int").alias("gen"))
+    (doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"),
+                    F.lit(gen).cast("int").alias("gen"))
      .write.mode("append").parquet(out))
-    total = (spark.read.parquet(out).select("doc_id").distinct().count())
+    total = (spark.read.schema(_TOMBSTONE_SCHEMA).parquet(out)
+             .select("doc_id").distinct().count())
     return {"deleted_total": int(total)}
 
 
@@ -366,7 +369,8 @@ def deleted_doc_ids(spark: SparkSession, seg_dir: str) -> np.ndarray:
     p = os.path.join(seg_dir, _TOMBSTONE_DIR)
     if not os.path.isdir(p):
         return np.empty(0, dtype=np.int64)
-    rows = spark.read.parquet(p).select("doc_id").distinct().collect()
+    rows = (spark.read.schema(_TOMBSTONE_SCHEMA).parquet(p)
+            .select("doc_id").distinct().collect())
     return np.array(sorted(r["doc_id"] for r in rows), dtype=np.int64)
 
 
@@ -382,13 +386,12 @@ def deleted_docs_df(spark: SparkSession, seg_dir: str,
     p = os.path.join(seg_dir, _TOMBSTONE_DIR)
     if not os.path.isdir(p):
         return None
-    # mergeSchema: a store that predates gen-stamping may mix stamped
-    # and unstamped tombstone files; unstamped rows read as null → gen 0
-    df = spark.read.option("mergeSchema", "true").parquet(p)
+    # a store that predates gen-stamping may mix stamped and unstamped
+    # tombstone files; under the declared schema unstamped rows read
+    # gen as null → gen 0
+    df = spark.read.schema(_TOMBSTONE_SCHEMA).parquet(p)
     if as_of is not None:
-        gen = (F.coalesce(F.col("gen"), F.lit(0))
-               if "gen" in df.columns else F.lit(0))
-        df = df.where(gen <= as_of)
+        df = df.where(F.coalesce(F.col("gen"), F.lit(0)) <= as_of)
     return df.select("doc_id").distinct()
 
 
@@ -582,7 +585,8 @@ def compact_segments(spark: SparkSession, seg_dir: str,
         seg.write.mode("overwrite").partitionBy("bucket").parquet(out)
         if _test_crash_hook is not None:
             _test_crash_hook("chunk_written", i // chunk)
-        counts = (spark.read.parquet(out).where(F.col("n") > 0)
+        counts = (spark.read.schema(SEGMENT_SCHEMA).parquet(out)
+                  .where(F.col("n") > 0)
                   .agg(F.count("*").alias("blocks"),
                        F.sum("n").alias("postings")).collect()[0])
         metrics["blocks"] += int(counts["blocks"] or 0)

@@ -44,7 +44,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .codec import BLOCK_SIZE, delta_encode, varbyte_decode, varbyte_encode
 
@@ -53,6 +53,11 @@ SEGMENT_SCHEMA = (
     "min_docid long, max_docid long, max_tf int, min_doclen long, "
     "docids_vb binary, tfs_vb binary, positions_vb binary, "
     "doclens_vb binary")
+
+
+def bucket_of(term: Column | str, num_buckets: int) -> Column:
+    """The bucket a term's blocks live in: pmod(xxhash64(term), B)."""
+    return F.pmod(F.xxhash64(term), F.lit(num_buckets)).cast("int")
 
 
 def _vb_nbytes(v: np.ndarray) -> np.ndarray:
@@ -271,9 +276,7 @@ def build_segments(postings: DataFrame, doclens: DataFrame, out_dir: str,
     else:
         src = postings.join(doclens.select("doc_id", "field", "doclen"),
                             ["doc_id", "field"])
-    src = src.withColumn("bucket",
-                         F.pmod(F.xxhash64("term"), F.lit(num_buckets))
-                         .cast("int"))
+    src = src.withColumn("bucket", bucket_of("term", num_buckets))
     metrics = {"buckets_total": num_buckets, "buckets_skipped": len(done),
                "buckets_built": 0, "blocks": 0, "postings": 0}
     for i in range(0, len(todo), chunk):
@@ -289,7 +292,7 @@ def build_segments(postings: DataFrame, doclens: DataFrame, out_dir: str,
          .partitionBy("bucket").parquet(out_dir))
         # per-bucket counters for the manifest (lineage + metrics)
         spark = postings.sparkSession
-        counts = (spark.read.parquet(out_dir)
+        counts = (spark.read.schema(SEGMENT_SCHEMA).parquet(out_dir)
                   .where(F.col("bucket").isin(batch))
                   .groupBy("bucket")
                   .agg(F.count("*").alias("blocks"),
@@ -320,16 +323,19 @@ def read_segments(spark: SparkSession, out_dir: str,
     """Scan segment blocks, pruned to the query terms' buckets (directory
     pruning on `bucket`) + parquet row-group min/max on `term`. n=0
     placeholder blocks (partition pins written by a purging
-    `merge.compact_segments`) are dropped at the scan."""
-    df = spark.read.parquet(out_dir).where(F.col("n") > 0)
+    `merge.compact_segments`) are dropped at the scan.
+
+    Building the frame runs no Spark job: the read declares
+    SEGMENT_SCHEMA (no footer-inference job), and the bucket filter is
+    `bucket IN (bucket_of(lit(t)), ...)`, which Catalyst constant-folds
+    into the scan's PartitionFilters."""
+    df = spark.read.schema(SEGMENT_SCHEMA).parquet(out_dir) \
+        .where(F.col("n") > 0)
     if terms:
-        import pyspark.sql.functions as SF
-        bks = {r["b"] for r in
-               spark.createDataFrame([(t,) for t in terms], "term string")
-               .select(SF.pmod(SF.xxhash64("term"), SF.lit(num_buckets))
-                       .cast("int").alias("b")).collect()}
-        df = df.where(F.col("bucket").isin(sorted(bks)) &
-                      F.col("term").isin(terms))
+        df = df.where(
+            F.col("bucket").isin([bucket_of(F.lit(t), num_buckets)
+                                  for t in sorted(set(terms))])
+            & F.col("term").isin(terms))
     return df
 
 

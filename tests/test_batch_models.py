@@ -150,3 +150,27 @@ def test_search_many_releases_persisted_frames(spark, spark_index, model, q):
     assert persisted() == before
     eng.close()
     assert len(persisted()) == held - 1
+
+
+def _leaf_names(df):
+    """Node names of the physical plan's leaves (a cached frame's scan is
+    a leaf; its cached plan is not walked)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+@pytest.mark.parametrize("model,queries", [
+    ("bm25", {"q1": "fickle creek farm",
+              "q2": "#sum( #near/1( creek farm ) fickle )",
+              "q3": "#sum( #syn( creek farm ) voyager )"}),
+    ("indri", {"i1": "fickle creek farm",
+               "i2": "#and( creek #near/1( creek farm ) )"}),
+    ("rankedboolean", {"b1": "#and( creek farm )",
+                       "b2": "#or( creek farm voyager )"})])
+def test_search_many_query_tables_are_local(spark_index, model, queries):
+    """The per-call query tables of the batch paths are JVM-local
+    relations: the plan scans them as LocalTableScan, never as a
+    Python-RDD `Scan ExistingRDD` run by Python workers in every job."""
+    names = _leaf_names(Engine(spark_index, model).search_many(queries, k=10))
+    assert "LocalTableScan" in names
+    assert not [n for n in names if "ExistingRDD" in n], names

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from search_engines_spark.engine import Engine
 from search_engines_spark.indexer.codec import varbyte_decode
 from search_engines_spark.indexer.merge import (
-    append_segments, compact_segments, live_generations, merged_batches,
-    merge_stream_into_segments, read_segments_merged)
+    append_segments, compact_segments, deleted_docs_df, live_generations,
+    merged_batches, merge_stream_into_segments, read_segments_merged)
 from search_engines_spark.indexer.segments import build_segments, read_segments
 
 NUM_BUCKETS = 8
@@ -74,6 +74,67 @@ def test_merged_read_is_term_pruned(spark, merged_dir):
     rows = read_segments_merged(spark, merged_dir, terms=["creek", "farm"],
                                 num_buckets=NUM_BUCKETS).collect()
     assert rows and {r["term"] for r in rows} <= {"creek", "farm"}
+
+
+def _jobs_submitted(spark, group, fn):
+    """→ (fn(), ids of the Spark jobs fn submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pruned_reads_build_without_jobs(spark, merged_dir):
+    """Building the term-pruned readers submits no Spark job (declared
+    schema: no footer inference; bucket filter constant-folded: no
+    term-hashing collect), and every scan's partition filter names
+    exactly the buckets pmod(xxhash64(term), B) gives over a column."""
+    import re
+    terms = ["creek", "farm", "fickle", "voyager"]
+    want = {r["b"] for r in spark.createDataFrame(
+        [(t,) for t in terms], "term string").select(
+            F.pmod(F.xxhash64("term"), F.lit(NUM_BUCKETS)).alias("b"))
+        .collect()}
+    for i, read in enumerate((read_segments, read_segments_merged)):
+        df, jobs = _jobs_submitted(
+            spark, f"pruned-read-{i}",
+            lambda: read(spark, merged_dir, terms=terms,
+                         num_buckets=NUM_BUCKETS))
+        assert jobs == [], read.__name__
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert len(filters) == (1 if read is read_segments else 2)
+        for f in filters:
+            assert "xxhash64" not in f
+            got = re.search(r"bucket#\d+ IN \(([\d,]+)\)", f).group(1)
+            assert {int(b) for b in got.split(",")} == want
+
+
+def test_deleted_docs_mixed_stamped_and_unstamped(spark, tmp_path):
+    """A tombstone directory holding a file from before gen-stamping
+    (doc_id only) and a stamped one reads the same rows as a
+    mergeSchema read — unstamped rows count as generation 0 — at every
+    snapshot, and building the mask submits no job."""
+    d = str(tmp_path)
+    tomb = os.path.join(d, "_tombstones")
+    spark.createDataFrame([(1,), (2,)], "doc_id long").write.parquet(tomb)
+    spark.createDataFrame([(2, 1), (7, 1)], "doc_id long, gen int") \
+        .write.mode("append").parquet(tomb)
+    ref = spark.read.option("mergeSchema", "true").parquet(tomb)
+    for as_of, ids in ((0, [1, 2]), (1, [1, 2, 7]), (None, [1, 2, 7])):
+        mask, jobs = _jobs_submitted(
+            spark, f"tombstones-{as_of}",
+            lambda: deleted_docs_df(spark, d, as_of=as_of))
+        assert jobs == []
+        want = ref if as_of is None else ref.where(
+            F.coalesce(F.col("gen"), F.lit(0)) <= as_of)
+        want = sorted(r["doc_id"] for r in
+                      want.select("doc_id").distinct().collect())
+        got = sorted(r["doc_id"] for r in mask.collect())
+        assert got == want == ids
 
 
 def test_daat_over_generations_matches_engine(spark, spark_index, merged_dir):

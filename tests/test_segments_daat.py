@@ -339,3 +339,31 @@ def test_strides_per_part_fixed_width():
     # group count is data-driven: 500k docs → ≥15 groups even at 2 cores
     n_strides = -(-500_000 // STRIDE)  # 123
     assert -(-n_strides // STRIDES_PER_PART) >= 15
+
+
+@pytest.mark.parametrize("deleted", [None, np.array([3, 17], np.int64)])
+def test_daat_many_single_group_plans_one_kernel_partition(
+        spark, spark_index, seg_dir, deleted):
+    """A store within one pk group (n_docs ≤ STRIDE·STRIDES_PER_PART)
+    feeds the kernel through ONE partition — the exchange plans as
+    SinglePartition — and that partitioning satisfies the per-qid rank
+    window, which then runs with no exchange of its own. The tombstone
+    array form takes the same shape through the cogroup."""
+    from search_engines_spark.engine.daat import bm25_wand_topk_many
+    queries = {"q1": {"fickle": 1, "creek": 1}, "q2": {"farm": 2}}
+    ts = spark_index.term_stats
+    stats = {r["term"]: (r["df"], r["ctf"]) for r in
+             ts.where(ts.term.isin("fickle", "creek", "farm")).collect()}
+    st = spark_index.stats_for("body")
+    segs = read_segments(spark, seg_dir, terms=sorted(stats),
+                         num_buckets=NUM_BUCKETS)
+    top = bm25_wand_topk_many(segs, queries, stats, st["n_docs"],
+                              st["sum_len"] / st["doc_count"], k=10,
+                              deleted=deleted)
+    lines = top._jdf.queryExecution().executedPlan().toString().splitlines()
+    kern = next(i for i, ln in enumerate(lines) if "InPandas" in ln)
+    window = max(i for i, ln in enumerate(lines[:kern]) if "Window [" in ln)
+    assert not [ln for ln in lines[window:kern] if "Exchange" in ln]
+    below = [ln for ln in lines[kern:] if "REPARTITION_BY_NUM" in ln]
+    assert below and all("Exchange SinglePartition" in ln for ln in below)
+    assert top.count() > 0
