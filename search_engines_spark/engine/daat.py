@@ -194,8 +194,10 @@ def bm25_wand_topk(segments: DataFrame, terms: list[str],
     prune_counter: optional `sc.accumulator(0)` — incremented once per
     stride SKIPPED without decoding (observability for the block-max
     prune; accumulator updates flow back from the Arrow workers).
-    deleted: optional tombstone mask (`indexer.merge.deleted_docs_df`
-    DataFrame, or an id array for convenience — converted): docs are
+    deleted: optional tombstone mask, a `doc_id` DataFrame such as
+    `indexer.merge.deleted_docs_df` (a file read or a local relation; a
+    mask over a Python RDD makes Spark re-shuffle both cogroup sides
+    at the default width): docs are
     masked out after decode, before scoring, so a deleted doc can never
     occupy a top-k slot; stats stay full-corpus until a purging merge,
     matching Lucene's docFreq-includes-deletes semantics. The mask is
@@ -322,11 +324,6 @@ def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
     same doc-stride `pk` the blocks shuffle on — each task sees only
     the deleted ids that can appear in its own strides, nothing rides
     the closure, and an empty group costs nothing."""
-    if deleted is not None and not isinstance(deleted, DataFrame):
-        arr = np.asarray(deleted, dtype=np.int64)   # convenience form
-        deleted = (local_frame(blocks.sparkSession,
-                               [(int(x),) for x in arr], "doc_id long")
-                   if arr.size else None)
     # The kernel-input shuffle width is EXPLICIT, the
     # batch_structured.py precedent: a bare groupBy("pk") exchange is
     # AQE-coalescible, and the session's size-first policy
@@ -340,14 +337,13 @@ def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
     # ClusteredDistribution the Arrow kernel needs (no second
     # exchange) and AQE never coalesces an explicit width, so decode
     # parallelism tracks cores, not an advisory byte threshold.
-    # Width min(8 × cores, 8 × G) for G = ⌈n_docs / (stride·spp)⌉ pk
-    # groups, not the zipper's 2×: pk groups are FEW at moderate corpus
-    # sizes (61 at 2M docs) and equal-weight, so hash-bin collisions
-    # turn directly into stragglers — 8× bins make a group ~alone in its
-    # task (measured on the 2M store, 48q@32c: 5.39 s at 2× → 4.48 s at
-    # 8×; neutral at 8 cores, and at production group counts ≫ bins the
-    # multiplier is irrelevant). Past 8·G, extra bins only add empty
-    # tasks, so the width stops there. One group (≤ stride·spp docs)
+    # Width 8 × cores, not the zipper's 2×: pk groups are FEW at
+    # moderate corpus sizes (61 at 2M docs) and equal-weight, so
+    # hash-bin collisions turn directly into stragglers — 8× bins make
+    # a group ~alone in its task (measured on the 2M store, 48q@32c:
+    # 5.39 s at 2× → 4.48 s at 8×; neutral at 8 cores, and at
+    # production group counts ≫ bins the multiplier is irrelevant).
+    # One group (G = ⌈n_docs / (stride·spp)⌉ = 1, ≤ stride·spp docs)
     # gets ONE partition: the exchange plans as SinglePartition, which
     # also satisfies a per-qid window above the kernel, so the batched
     # path's rank window runs with no exchange of its own. G assumes
@@ -355,7 +351,7 @@ def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
     # task shape does.
     n_groups = -(-max(n_docs, 1) // (stride * spp))
     cores = blocks.sparkSession.sparkContext.defaultParallelism
-    n_part = 1 if n_groups == 1 else 8 * min(cores, n_groups)
+    n_part = 1 if n_groups == 1 else 8 * cores
     blocks = blocks.repartition(n_part, "pk")
     if deleted is None:
         return (blocks.groupBy("pk")

@@ -14,13 +14,11 @@ local relation, but it silently falls back to the Python-RDD path when
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (BinaryType, BooleanType, ByteType, DataType,
-                               DoubleType, FloatType, IntegerType, LongType,
-                               ShortType, StringType, StructType)
+from pyspark.sql.types import (BooleanType, DataType, DoubleType,
+                               IntegerType, LongType, StringType, StructType)
 
 
 def str_lit(s: str) -> str:
@@ -30,12 +28,8 @@ def str_lit(s: str) -> str:
 
 def double_lit(x: float) -> str:
     """A Python float as an exact Spark SQL double literal (repr
-    round-trips; the D suffix keeps it from parsing as a decimal).
-    Non-finite values go through a string cast, which Spark parses."""
-    x = float(x)
-    if not math.isfinite(x):
-        return f"CAST('{x!r}' AS DOUBLE)"
-    return f"{x!r}D"
+    round-trips; the D suffix keeps it from parsing as a decimal)."""
+    return f"{float(x)!r}D"
 
 
 def _lit(v, t: DataType) -> str:
@@ -45,21 +39,20 @@ def _lit(v, t: DataType) -> str:
         return str_lit(str(v))
     if isinstance(t, BooleanType):
         return "TRUE" if v else "FALSE"
-    if isinstance(t, (ByteType, ShortType, IntegerType)):
+    if isinstance(t, IntegerType):
         return str(int(v))
     if isinstance(t, LongType):
         return f"{int(v)}L"
-    if isinstance(t, (DoubleType, FloatType)):
+    if isinstance(t, DoubleType):
         return double_lit(v)
-    if isinstance(t, BinaryType):
-        return f"X'{bytes(v).hex()}'"
     raise TypeError(f"local_frame: no literal form for {t.simpleString()}")
 
 
 def local_frame(spark: SparkSession, rows: Iterable[Sequence],
                 schema: str) -> DataFrame:
     """`rows` (tuples in `schema` column order) as a JVM-local DataFrame
-    with exactly `schema` ("name type, ..." DDL; atomic types only).
+    with exactly `schema` ("name type, ..." DDL over string, int,
+    bigint, double and boolean columns).
     No rows gives an empty local relation of the same schema."""
     st = DataType.fromDDL(schema)
     if not isinstance(st, StructType):

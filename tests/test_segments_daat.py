@@ -341,15 +341,18 @@ def test_strides_per_part_fixed_width():
     assert -(-n_strides // STRIDES_PER_PART) >= 15
 
 
-@pytest.mark.parametrize("deleted", [None, np.array([3, 17], np.int64)])
+@pytest.mark.parametrize("deleted", [None, [3, 17]])
 def test_daat_many_single_group_plans_one_kernel_partition(
         spark, spark_index, seg_dir, deleted):
     """A store within one pk group (n_docs ≤ STRIDE·STRIDES_PER_PART)
     feeds the kernel through ONE partition — the exchange plans as
     SinglePartition — and that partitioning satisfies the per-qid rank
-    window, which then runs with no exchange of its own. The tombstone
-    array form takes the same shape through the cogroup."""
+    window, which then runs with no exchange of its own. A tombstone
+    mask takes the same shape through the cogroup."""
     from search_engines_spark.engine.daat import bm25_wand_topk_many
+    from search_engines_spark.literals import local_frame
+    if deleted is not None:
+        deleted = local_frame(spark, [(d,) for d in deleted], "doc_id long")
     queries = {"q1": {"fickle": 1, "creek": 1}, "q2": {"farm": 2}}
     ts = spark_index.term_stats
     stats = {r["term"]: (r["df"], r["ctf"]) for r in
