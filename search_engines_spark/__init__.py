@@ -7,9 +7,9 @@ idiomatic Spark: DataFrame plans compiled from the structured query language
 (Unranked/Ranked Boolean, BM25, Indri), pseudo-relevance feedback, result
 diversification (xQuAD/PM2), LeToR feature extraction — plus the index
 *builder* the reference delegated to Lucene (posting lists with positions,
-delta+varbyte compressed segments, salted skew-safe merge, resumable
-manifests), and a training-data pipeline layer (dedup, similarity search,
-text analysis, multimodal plumbing).
+delta+varbyte compressed segments, a skew-safe range-partitioned build,
+resumable manifests), and a training-data pipeline layer (dedup,
+similarity search, text analysis, multimodal plumbing).
 
 Nothing here is a port: the reference's document-at-a-time Java iterators
 become joins/aggregations; its per-query loop becomes a Catalyst plan.

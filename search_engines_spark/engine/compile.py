@@ -145,62 +145,12 @@ class Engine:
 
     def search_daat(self, qstring: str, k: int = 100) -> DataFrame:
         """Bag-of-words BM25 top-k over the attached segment store via
-        document-at-a-time scoring with block-max pruning (engine/daat).
-        Exact — rank-identical to `search` up to the doc_id-vs-ext_id
-        tie-break (see daat module docstring); requires
-        `attach_segments` and model == 'bm25'."""
-        if self.model != "bm25":
-            raise ValueError("search_daat is the BM25 fast path")
-        if not hasattr(self, "_seg_dir"):
-            raise ValueError("no segment store attached; call attach_segments")
-        from ..indexer.merge import deleted_docs_df, read_segments_merged
-        from .daat import bm25_wand_topk
-        node = self.parse(qstring)
-        leaves = self._term_leaves(node)
-        is_bow = (node.op == "sum"
-                  and all(a.op == "score" and a.args[0].op == "term"
-                          for a in node.args)) \
-            or (node.op == "score" and node.args[0].op == "term")
-        if not is_bow:
-            raise ValueError("search_daat handles bag-of-words #SUM only; "
-                             "structured operators go through search()")
-        fields = {n.field for n in leaves}
-        if len(fields) != 1:
-            raise ValueError(f"search_daat needs a single field, got {fields}")
-        field = next(iter(fields))
-        # a term repeated in the query contributes one #SCORE arm per
-        # occurrence in search(); fold the multiplicity into its idf
-        mult: dict[str, int] = {}
-        for n in leaves:
-            mult[n.term] = mult.get(n.term, 0) + 1
-        terms = sorted(mult)
-        stats = {t: self._stats_of(Node("term", term=t, field=field))
-                 for t in terms}
-        st = self.index.stats_for(field)
-        # merged read: base ∪ any live delta generations appended since
-        # the last compaction (indexer.merge); identical to read_segments
-        # when no generations exist (one tiny manifest stat call)
-        segs = read_segments_merged(self.index.docs.sparkSession,
-                                    self._seg_dir, terms=terms,
-                                    num_buckets=self._seg_buckets,
-                                    as_of=self._seg_as_of)
-        # tombstone mask (indexer.merge.delete_docs): deleted docs are
-        # filtered at score time; stats stay full-corpus until a
-        # purging merge — Lucene liveDocs/docFreq semantics. The mask is
-        # a lazy DataFrame cogrouped per doc-stride inside the kernel —
-        # never a driver array
-        deleted = deleted_docs_df(self.index.docs.sparkSession,
-                                  self._seg_dir, as_of=self._seg_as_of)
-        top = bm25_wand_topk(segs, terms, stats, st["n_docs"],
-                             st["sum_len"] / st["doc_count"], k=k,
-                             params=self.p, field=field,
-                             term_weights=mult, deleted=deleted)
-        ext = self._extid_expr()
-        if ext is not None:
-            return (top.orderBy(F.desc("score"), F.asc("doc_id"))
-                    .select("doc_id", ext.alias("ext_id"), "score"))
-        return (top.join(self._doc_map(), "doc_id")
-                .orderBy(F.desc("score"), F.asc("doc_id"))
+        document-at-a-time scoring with block-max pruning (engine/daat):
+        a one-query `search_daat_many`. Exact — rank-identical to
+        `search` up to the doc_id-vs-ext_id tie-break (see daat module
+        docstring). → (doc_id, ext_id, score), score desc / doc_id asc."""
+        top = self.search_daat_many({qstring: qstring}, k=k)
+        return (top.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                 .select("doc_id", "ext_id", "score"))
 
     def search_daat_many(self, queries: dict[str, str],
@@ -208,37 +158,25 @@ class Engine:
         """Batched DAAT: per-query BM25 top-k for a whole query file over
         the attached segment store in ONE segments pass
         (engine.daat.bm25_wand_topk_many — shared block decode, per-query
-        block-max pruning). Same constraints as `search_daat` (model ==
-        'bm25', bag-of-words #SUM, one field for the whole batch); the
+        block-max pruning). Requires `attach_segments`, model == 'bm25',
+        bag-of-words #SUM queries and one field for the whole batch; the
         reference loops queries one-by-one (`QryEval.java:684`).
         → (qid, doc_id, ext_id, score, rank ≤ k), tie-break doc_id asc
         (see daat module docstring for the ext_id-coincidence argument)."""
-        from pyspark.sql import Window
-
-        from ..indexer.merge import deleted_docs_df, read_segments_merged
         from .daat import bm25_wand_topk_many
         if self.model != "bm25":
             raise ValueError("search_daat_many is the BM25 fast path")
-        if not hasattr(self, "_seg_dir"):
-            raise ValueError("no segment store attached; call attach_segments")
         bags: dict[str, dict[str, int]] = {}
         fields: set[str] = set()
         for qid, q in queries.items():
-            node = self.parse(q)
-            is_bow = (node.op == "sum"
-                      and all(a.op == "score" and a.args[0].op == "term"
-                              for a in node.args)) \
-                or (node.op == "score" and node.args[0].op == "term")
-            if not is_bow:
+            bow = self._bow_of(self.parse(q))
+            if bow is None:
                 raise ValueError(
                     f"search_daat_many handles bag-of-words #SUM only; "
                     f"query {qid!r} has structured operators")
-            leaves = self._term_leaves(node)
-            fields |= {n.field for n in leaves}
-            mult: dict[str, int] = {}
-            for n in leaves:
-                mult[n.term] = mult.get(n.term, 0) + 1
-            bags[qid] = mult
+            fields |= {f for _, f in bow}
+            # one field per batch (checked below): {term: multiplicity}
+            bags[qid] = {t: m for (t, _), m in bow.items()}
         if len(fields) > 1:
             raise ValueError(f"search_daat_many needs a single field, "
                              f"got {fields}")
@@ -247,26 +185,48 @@ class Engine:
         stats = {t: self._stats_of(Node("term", term=t, field=field))
                  for t in terms}
         st = self.index.stats_for(field)
+        segs, deleted = self._attached_store(terms)
+        top = bm25_wand_topk_many(
+            segs, bags, stats, st["n_docs"],
+            st["sum_len"] / st["doc_count"], k=k, params=self.p,
+            field=field, deleted=deleted)
+        ext = self._extid_expr()
+        if ext is not None:
+            top = top.withColumn("ext_id", ext)
+        else:
+            top = top.join(self._doc_map(), "doc_id")
+        return top.select("qid", "doc_id", "ext_id", "score", "rank")
+
+    def _attached_store(self, terms: list[str], decode: bool = False):
+        """→ (segments, deleted) of the attached store for `terms`: the
+        merged read, base ∪ the live delta generations appended since
+        the last compaction (indexer.merge), pinned to `as_of`; and the
+        tombstone mask as a lazy `doc_id` frame (None when nothing is
+        deleted). Deleted docs are masked at score time while stats stay
+        full-corpus until a purging merge — Lucene liveDocs/docFreq
+        semantics. decode=True returns, in place of the segments, an
+        Engine of this one's model and parser whose postings are the
+        decoded blocks (indexer.segments.decode_to_postings), so every
+        compiled plan runs off the store unchanged."""
+        import dataclasses
+
+        from ..indexer.merge import deleted_docs_df, read_segments_merged
+        from ..indexer.segments import decode_to_postings
+        if not hasattr(self, "_seg_dir"):
+            raise ValueError("no segment store attached; call attach_segments")
         spark = self.index.docs.sparkSession
         segs = read_segments_merged(spark, self._seg_dir, terms=terms,
                                     num_buckets=self._seg_buckets,
                                     as_of=self._seg_as_of)
         deleted = deleted_docs_df(spark, self._seg_dir,
                                   as_of=self._seg_as_of)
-        top = bm25_wand_topk_many(
-            segs, bags, stats, st["n_docs"],
-            st["sum_len"] / st["doc_count"], k=k, params=self.p,
-            field=field, deleted=deleted)
-        w = Window.partitionBy("qid").orderBy(F.desc("score"),
-                                              F.asc("doc_id"))
-        ext = self._extid_expr()
-        if ext is not None:
-            return (top.withColumn("rank", F.row_number().over(w))
-                    .withColumn("ext_id", ext)
-                    .select("qid", "doc_id", "ext_id", "score", "rank"))
-        return (top.join(self._doc_map(), "doc_id")
-                .withColumn("rank", F.row_number().over(w))
-                .select("qid", "doc_id", "ext_id", "score", "rank"))
+        if not decode:
+            return segs, deleted
+        sub = dataclasses.replace(self.index,
+                                  postings=decode_to_postings(segs))
+        return Engine(sub, self.model, params=self.p,
+                      analyzer=self.parser.analyzer,
+                      default_field=self.parser.default_field), deleted
 
     def search_segments(self, qstring: str, k: int = 100) -> DataFrame:
         """The FULL query language (Boolean / Indri / BM25, structured
@@ -285,25 +245,9 @@ class Engine:
         `search_daat`'s docFreq-includes-deletes masking. `search_daat`
         is the bag-of-words fast path; this is the completeness path
         that makes the segment store a full index substitute."""
-        import dataclasses
-
-        from ..indexer.merge import deleted_docs_df, read_segments_merged
-        from ..indexer.segments import decode_to_postings
-        if not hasattr(self, "_seg_dir"):
-            raise ValueError("no segment store attached; call attach_segments")
-        node = self.parse(qstring)
-        terms = sorted({n.term for n in self._term_leaves(node)})
-        spark = self.index.docs.sparkSession
-        segs = read_segments_merged(spark, self._seg_dir, terms=terms,
-                                    num_buckets=self._seg_buckets,
-                                    as_of=self._seg_as_of)
-        deleted = deleted_docs_df(spark, self._seg_dir,
-                                  as_of=self._seg_as_of)
-        decoded = decode_to_postings(segs)
-        sub = dataclasses.replace(self.index, postings=decoded)
-        eng = Engine(sub, self.model, params=self.p,
-                     analyzer=self.parser.analyzer,
-                     default_field=self.parser.default_field)
+        terms = sorted({n.term
+                        for n in self._term_leaves(self.parse(qstring))})
+        eng, deleted = self._attached_store(terms, decode=True)
         s = eng.eval_sop(eng.parse(qstring)).where(F.col("score") >= 0)
         if deleted is not None:
             s = s.join(F.broadcast(deleted), "doc_id", "left_anti")
@@ -329,25 +273,9 @@ class Engine:
         row_number/limit — fetch depth stays k no matter how many
         deletes are pending.
         → (qid, doc_id, ext_id, score, rank ≤ k)."""
-        import dataclasses
-
-        from ..indexer.merge import deleted_docs_df, read_segments_merged
-        from ..indexer.segments import decode_to_postings
-        if not hasattr(self, "_seg_dir"):
-            raise ValueError("no segment store attached; call attach_segments")
         terms = sorted({n.term for q in queries.values()
                         for n in self._term_leaves(self.parse(q))})
-        spark = self.index.docs.sparkSession
-        segs = read_segments_merged(spark, self._seg_dir, terms=terms,
-                                    num_buckets=self._seg_buckets,
-                                    as_of=self._seg_as_of)
-        deleted = deleted_docs_df(spark, self._seg_dir,
-                                  as_of=self._seg_as_of)
-        sub = dataclasses.replace(self.index,
-                                  postings=decode_to_postings(segs))
-        eng = Engine(sub, self.model, params=self.p,
-                     analyzer=self.parser.analyzer,
-                     default_field=self.parser.default_field)
+        eng, deleted = self._attached_store(terms, decode=True)
         # the throwaway engine releases our last call's frames and leaves
         # its own for our next call (or close) to release
         eng._persisted = self._persisted

@@ -2,10 +2,12 @@
 pruning (the north-star WAND path).
 
 The set-at-a-time `Engine` (compile.py) is the semantics reference; this
-module is the throughput path for bag-of-words BM25 top-k: it reads the
-varbyte segment blocks (indexer.segments) for the query terms only —
-bucket directory pruning + parquet min/max on `term` — and scores inside
-one `applyInPandas` pass per doc-range partition:
+module is the throughput path for bag-of-words BM25 top-k. One kernel,
+`bm25_wand_topk_many`, scores a batch of queries (a single query is a
+batch of one, `Engine.search_daat`): it reads the varbyte segment blocks
+(indexer.segments) for the union of the query terms only — bucket
+directory pruning + parquet min/max on `term` — and scores inside one
+`applyInPandas` pass per doc-range partition:
 
 1. each block is assigned to the pk partition groups (runs of
    STRIDES_PER_PART doc-range strides) it overlaps: dense and
@@ -19,24 +21,25 @@ one `applyInPandas` pass per doc-range partition:
    for all query terms co-locate in one partition — per-doc score sums
    are complete with NO shuffle of decoded postings;
 3. inside a partition, strides are processed in doc order.  For each
-   stride, the WAND-style upper bound
+   stride and query, the WAND-style upper bound
         Σ_t idf_t · max_tf_t / (max_tf_t + k1·(1−b+b·min_doclen_t/avg))
    (monotone bound: tf/(tf+c) increases in tf, decreases in doclen;
-   `QrySopScore.java:90-120` formula) is compared against the running
-   top-k threshold θ; strides that cannot beat θ are SKIPPED WITHOUT
-   DECODING — the block-max skip.  Surviving strides are varbyte-decoded
-   (numpy) and scored vectorized, θ is updated from the heap;
-4. per-partition top-k then global `orderBy().limit(k)` merge
-   (TakeOrderedAndProject), tie-break score desc / doc_id asc.  The
-   reference tie-break is EXTERNAL id asc (`ScoreList.java:87-114`);
-   these coincide whenever internal ids are assigned in external-id
-   order (true for the `documents` corpus and any corpus ingested via
+   `QrySopScore.java:90-120` formula) is compared against that query's
+   running top-k threshold θ; a stride no query can improve is SKIPPED
+   WITHOUT DECODING — the block-max skip.  Surviving strides are
+   varbyte-decoded once (numpy), the per-posting weights are shared by
+   every query that holds the term, and each θ is updated from its heap;
+4. per-partition top-k per query, then one per-qid `row_number` window
+   (score desc / doc_id asc) keeps rank ≤ k.  The reference tie-break
+   is EXTERNAL id asc (`ScoreList.java:87-114`); these coincide
+   whenever internal ids are assigned in external-id order (true for
+   the `documents` corpus and any corpus ingested via
    `assign_dense_ids` on the ext-id key).  When they differ, re-sort
    the k returned rows by ext_id after joining `docs` — k rows, free.
 
 Rank-identity vs `Engine.search` is the test gate
-(tests/test_daat.py); the pruning only ever skips strides whose bound is
-strictly below θ, so results are exact, not approximate.
+(tests/test_segments_daat.py); the pruning only ever skips strides whose
+bound is strictly below θ, so results are exact, not approximate.
 """
 
 from __future__ import annotations
@@ -45,46 +48,35 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..indexer.codec import varbyte_decode, varbyte_encode
 from ..literals import local_frame
 from ..oracle import Models
 
 STRIDE = 4096  # docs per stride; pruning granularity
-STRIDES_PER_PART = 8  # ceiling on strides per scoring task
+# Strides per `applyInPandas` scoring group (pk): a fixed width, so the
+# group count scales with DATA (n_strides / width), not with the
+# cluster. At production corpus sizes (10^9+ docs) that is orders of
+# magnitude more groups than slots, so the stage is never slot-starved
+# where it matters. An adaptive width that narrowed groups to ~2 per
+# slot on small corpora was measured SLOWER at 32 cores on the 500k-doc
+# bench (5.77 s @ 8 → 7.45 s @ 32, vs 5.03 → 4.79 s fixed;
+# BENCH/BASELINE.md): narrower groups duplicate varbyte block decode
+# across groups, give the block-max θ fewer strides to build up over,
+# and add no DRAM bandwidth to a bandwidth-bound kernel. That r4
+# measurement predates the explicit kernel exchange width in
+# `_apply_with_tombstones` (the stage was then AQE-coalesced to a few
+# tasks, so both variants ran nearly serial); the argument is about
+# decode duplication and θ quality, which the exchange width does not
+# change. Exactness never depends on the grouping.
+STRIDES_PER_PART = 8
 
 _BLOCK_COLS = ("term", "min_docid", "max_docid", "max_tf", "min_doclen",
                "docids_vb", "tfs_vb", "doclens_vb")
 _BLOCK_SCHEMA_PK = ("term string, min_docid long, max_docid long, "
                     "max_tf int, min_doclen long, docids_vb binary, "
                     "tfs_vb binary, doclens_vb binary, pk long")
-
-
-def _strides_per_part(spark, n_docs: int, stride: int) -> int:
-    """Strides per `applyInPandas` scoring group: fixed width.
-
-    Group count therefore scales with DATA (``n_strides / width``), not
-    with the cluster: at production corpus sizes (10^9+ docs) that is
-    orders of magnitude more groups than slots, so the stage is never
-    slot-starved where it matters. An adaptive variant that narrowed
-    groups to force ~2 groups/slot on small corpora was measured
-    SLOWER at 32 cores on the 500k-doc bench (5.77 s @ 8 → 7.45 s @ 32,
-    vs 5.03 → 4.79 s fixed-width; BENCH/BASELINE.md): narrower groups
-    duplicate varbyte block decode across groups, give the shared
-    block-max θ fewer strides to build up over, and add no DRAM
-    bandwidth on a bandwidth-bound kernel. Exactness never depends on
-    the grouping; only prune efficiency and task shape do.
-
-    (That r4 measurement predates the r5 exchange-width fix in
-    `_apply_with_tombstones` — the kernel stage was then AQE-coalesced
-    to a few tasks, so both variants ran nearly serial. The argument
-    above is about per-group decode duplication and θ quality, which
-    the exchange width does not change; group width stays fixed, and
-    task-level parallelism now comes from the explicit pk
-    repartition.)
-    """
-    return STRIDES_PER_PART
 
 
 def _split_wide_kernel(span: int):
@@ -130,7 +122,7 @@ def _split_wide_kernel(span: int):
 
 
 def _blocks_by_pk(segments: DataFrame, terms: list[str], field: str,
-                  stride: int, spp: int, n_docs: int = 0) -> DataFrame:
+                  stride: int, n_docs: int = 0) -> DataFrame:
     """Blocks of the queried terms, one row per (block, pk) with NO
     corpus-size-dependent duplication.
 
@@ -150,7 +142,7 @@ def _blocks_by_pk(segments: DataFrame, terms: list[str], field: str,
     The scoring kernel derives stride membership inside the task from
     block [min,max] metadata (strides of its own pk only, so a 2-pk
     narrow block is scored exactly once per posting globally)."""
-    span = stride * spp
+    span = stride * STRIDES_PER_PART
     base = (segments
             .where((F.col("field") == field) & F.col("term").isin(terms))
             .select(*_BLOCK_COLS)
@@ -174,150 +166,8 @@ def _blocks_by_pk(segments: DataFrame, terms: list[str], field: str,
     return narrow.unionByName(wide)
 
 
-def bm25_wand_topk(segments: DataFrame, terms: list[str],
-                   term_stats: dict[str, tuple[int, int]],
-                   n_docs: int, avglen: float, k: int = 100,
-                   params: Models | None = None,
-                   field: str = "body",
-                   term_weights: dict[str, int] | None = None,
-                   stride: int = STRIDE,
-                   prune_counter=None,
-                   deleted=None) -> DataFrame:
-    """→ (doc_id, score) global top-k for BM25 #SUM over `terms`.
-
-    term_stats: {term: (df, ctf)} — collected once, driver-side (tiny).
-    term_weights: query-multiplicity per term (a term repeated q times in
-    the bag contributes q identical #SCORE arms, `QrySopSum.java:39-53`)
-    — folded into the per-term idf weight.
-    stride: docs per pruning unit (tunable so small corpora still
-    exercise the skip path; production default STRIDE).
-    prune_counter: optional `sc.accumulator(0)` — incremented once per
-    stride SKIPPED without decoding (observability for the block-max
-    prune; accumulator updates flow back from the Arrow workers).
-    deleted: optional tombstone mask, a `doc_id` DataFrame such as
-    `indexer.merge.deleted_docs_df` (a file read or a local relation; a
-    mask over a Python RDD makes Spark re-shuffle both cogroup sides
-    at the default width): docs are
-    masked out after decode, before scoring, so a deleted doc can never
-    occupy a top-k slot; stats stay full-corpus until a purging merge,
-    matching Lucene's docFreq-includes-deletes semantics. The mask is
-    COGROUPED with the blocks on the doc-stride partition key — each
-    task receives only its own strides' tombstones, so the mask never
-    rides a UDF closure and a delete-heavy store stays scale-safe.
-    """
-    p = params or Models()
-    w = term_weights or {}
-    idf = {t: max(0.0, math.log((n_docs - df + 0.5) / (df + 0.5)))
-           * w.get(t, 1)
-           for t, (df, _) in term_stats.items() if t in terms}
-    if not idf:
-        return local_frame(segments.sparkSession, [],
-                           "doc_id long, score double")
-    k1, b = p.k1, p.b
-
-    spp = _strides_per_part(segments.sparkSession, n_docs, stride)
-    blocks = _blocks_by_pk(segments, terms, field, stride, spp, n_docs)
-
-    idf_b = dict(idf)  # captured in the UDF closure (broadcast via pickle)
-    stride_w = stride
-
-    def score_partition(pdf: pd.DataFrame,
-                        deleted_b: np.ndarray | None,
-                        pk: int) -> pd.DataFrame:
-        if pdf is None or len(pdf) == 0:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        mins = pdf["min_docid"].to_numpy(np.int64)
-        maxs = pdf["max_docid"].to_numpy(np.int64)
-        terms_a = pdf["term"].to_numpy(object)
-        mtf_a = pdf["max_tf"].to_numpy(np.float64)
-        mdl_a = pdf["min_doclen"].to_numpy(np.float64)
-        vb_i = pdf["docids_vb"].to_numpy(object)
-        vb_t = pdf["tfs_vb"].to_numpy(object)
-        vb_d = pdf["doclens_vb"].to_numpy(object)
-        # per-row bound contribution from block metadata (monotone:
-        # tf/(tf+c) increases in tf, decreases in doclen) — per-row is
-        # TIGHTER than the old per-stride (max tf, min doclen) pairing
-        # and still an upper bound for every posting the row holds
-        tfw_a = mtf_a / (mtf_a + k1 * (1 - b + b * mdl_a / avglen))
-        cache: dict[int, tuple] = {}
-
-        def decode(i: int):
-            """Decode a block ONCE per task (the old kernel re-decoded
-            once per overlapped stride); weights are posting-local so
-            they are precomputed here too."""
-            c = cache.get(i)
-            if c is None:
-                ids = np.cumsum(varbyte_decode(bytes(vb_i[i])))
-                tfs = varbyte_decode(bytes(vb_t[i])).astype(np.float64)
-                dls = varbyte_decode(bytes(vb_d[i])).astype(np.float64)
-                w = tfs / (tfs + k1 * (1 - b + b * dls / avglen))
-                cache[i] = c = (ids, w)
-            return c
-
-        theta = -1.0
-        top_ids = np.empty(0, dtype=np.int64)
-        top_sc = np.empty(0, dtype=np.float64)
-        for s in range(pk * spp, (pk + 1) * spp):
-            lo, hi = s * stride_w, (s + 1) * stride_w
-            sel = np.flatnonzero((mins < hi) & (maxs >= lo))
-            if sel.size == 0:
-                continue
-            # block-max upper bound for this stride
-            best: dict[str, float] = {}
-            for i in sel:
-                t = terms_a[i]
-                if tfw_a[i] > best.get(t, 0.0):
-                    best[t] = tfw_a[i]
-            bound = sum(idf_b[t] * v for t, v in best.items())
-            if len(top_ids) >= k and bound < theta:
-                # skip without decoding — the block-max prune
-                # (strict <: a stride tying θ may still win the doc-id
-                # tie-break, `ScoreList.java:90-97`)
-                if prune_counter is not None:
-                    prune_counter.add(1)
-                continue
-            ids_all, sc_all = [], []
-            for i in sel:
-                ids, w = decode(i)
-                a = int(np.searchsorted(ids, lo, side="left"))
-                z = int(np.searchsorted(ids, hi, side="left"))
-                if a == z:
-                    continue
-                sids, sw = ids[a:z], w[a:z]
-                if deleted_b is not None:
-                    keep = ~np.isin(sids, deleted_b, assume_unique=False)
-                    if not keep.any():
-                        continue
-                    sids, sw = sids[keep], sw[keep]
-                ids_all.append(sids)
-                sc_all.append(idf_b[terms_a[i]] * sw)
-            if not ids_all:
-                continue
-            ids_c = np.concatenate(ids_all)
-            sc_c = np.concatenate(sc_all)
-            uids, inv = np.unique(ids_c, return_inverse=True)
-            sums = np.zeros(len(uids), dtype=np.float64)
-            np.add.at(sums, inv, sc_c)
-            # merge into running top-k, update θ
-            top_ids = np.concatenate([top_ids, uids])
-            top_sc = np.concatenate([top_sc, sums])
-            if len(top_ids) > k:
-                # tie-aware trim: among equal scores keep the lowest
-                # doc_ids (tie-break parity with the global merge)
-                order = np.lexsort((top_ids, -top_sc))[:k]
-                top_ids, top_sc = top_ids[order], top_sc[order]
-                theta = float(top_sc.min())
-        return pd.DataFrame({"doc_id": top_ids, "score": top_sc})
-
-    per_part = _apply_with_tombstones(
-        blocks, deleted, stride, spp, score_partition,
-        "doc_id long, score double", n_docs)
-    return per_part.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
 def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
-                           spp: int, score_fn, schema: str,
+                           score_fn, schema: str,
                            n_docs: int) -> DataFrame:
     """Run `score_fn(blocks_pdf, deleted_ids | None)` per `pk` partition
     group. With a tombstone mask, the mask rows are COGROUPED on the
@@ -343,13 +193,13 @@ def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
     # a group ~alone in its task (measured on the 2M store, 48q@32c:
     # 5.39 s at 2× → 4.48 s at 8×; neutral at 8 cores, and at
     # production group counts ≫ bins the multiplier is irrelevant).
-    # One group (G = ⌈n_docs / (stride·spp)⌉ = 1, ≤ stride·spp docs)
+    # One group (G = ⌈n_docs / (stride·STRIDES_PER_PART)⌉ = 1)
     # gets ONE partition: the exchange plans as SinglePartition, which
-    # also satisfies a per-qid window above the kernel, so the batched
-    # path's rank window runs with no exchange of its own. G assumes
+    # also satisfies the per-qid rank window above the kernel, which
+    # then runs with no exchange of its own. G assumes
     # dense doc ids; exactness never depends on the width, only the
     # task shape does.
-    n_groups = -(-max(n_docs, 1) // (stride * spp))
+    n_groups = -(-max(n_docs, 1) // (stride * STRIDES_PER_PART))
     cores = blocks.sparkSession.sparkContext.defaultParallelism
     n_part = 1 if n_groups == 1 else 8 * cores
     blocks = blocks.repartition(n_part, "pk")
@@ -360,7 +210,7 @@ def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
                                schema=schema))
     tomb = (deleted
             .withColumn("pk", ((F.col("doc_id") / stride).cast("long")
-                               / spp).cast("long"))
+                               / STRIDES_PER_PART).cast("long"))
             .select("pk", "doc_id")
             .repartition(n_part, "pk"))
 
@@ -380,21 +230,40 @@ def bm25_wand_topk_many(segments: DataFrame,
                         params: Models | None = None,
                         field: str = "body",
                         stride: int = STRIDE,
+                        prune_counter=None,
                         deleted=None) -> DataFrame:
-    """→ (qid, doc_id, score) per-query top-k for a BATCH of bag-of-words
-    BM25 queries over ONE segments pass.
+    """→ (qid, doc_id, score, rank ≤ k) per-query top-k for a batch of
+    bag-of-words BM25 queries over ONE segments pass, rank by score desc
+    / doc_id asc.
 
-    queries: {qid: {term: multiplicity}}. The batch shape mirrors the
+    queries: {qid: {term: multiplicity}} — a term repeated q times in
+    the bag contributes q identical #SCORE arms (`QrySopSum.java:39-53`),
+    folded into its per-query idf weight. The batch shape mirrors the
     set-at-a-time one-pass plan (`Engine.search_many`) on the compressed
     store: blocks for the UNION of all query terms are read once, each
     surviving block is varbyte-decoded ONCE and its per-posting BM25
     weight computed once, then every query that contains the term folds
     the shared weights into its own accumulator — cost is one postings
-    pass regardless of query count, the production operating point for
-    reference-style query files (`QryEval.java:649-764` loops them
-    one-by-one). Block-max pruning stays per-query: a stride is skipped
-    for the queries it cannot improve while still decoding for the rest
-    (decode happens if ANY query needs the stride).
+    pass regardless of query count (the reference loops queries
+    one-by-one, `QryEval.java:649-764`). Block-max pruning stays
+    per-query: a stride is skipped for the queries it cannot improve
+    while still decoding for the rest.
+    term_stats: {term: (df, ctf)} — collected once, driver-side (tiny).
+    stride: docs per pruning unit (tunable so small corpora still
+    exercise the skip path; production default STRIDE).
+    prune_counter: optional `sc.accumulator(0)` — incremented once per
+    stride that no query needs, i.e. skipped WITHOUT decoding
+    (accumulator updates flow back from the Arrow workers).
+    deleted: optional tombstone mask, a `doc_id` DataFrame such as
+    `indexer.merge.deleted_docs_df` (a file read or a local relation; a
+    mask over a Python RDD makes Spark re-shuffle both cogroup sides
+    at the default width): docs are masked out after decode, before
+    scoring, so a deleted doc can never occupy a top-k slot; stats stay
+    full-corpus until a purging merge, matching Lucene's
+    docFreq-includes-deletes semantics. The mask is COGROUPED with the
+    blocks on the doc-stride partition key — each task receives only
+    its own strides' tombstones, so the mask never rides a UDF closure
+    and a delete-heavy store stays scale-safe.
     """
     p = params or Models()
     idf_q: dict[str, dict[str, float]] = {}
@@ -408,14 +277,11 @@ def bm25_wand_topk_many(segments: DataFrame,
     terms = sorted({t for m in idf_q.values() for t in m})
     spark = segments.sparkSession
     if not terms:
-        return local_frame(spark, [], "qid string, doc_id long, score double")
+        return local_frame(spark, [], "qid string, doc_id long, "
+                                      "score double, rank int")
     k1, b = p.k1, p.b
-
-    spp = _strides_per_part(spark, n_docs, stride)
-    blocks = _blocks_by_pk(segments, terms, field, stride, spp, n_docs)
-
-    idf_b = {q: dict(m) for q, m in idf_q.items()}
-    stride_w = stride
+    spp = STRIDES_PER_PART
+    blocks = _blocks_by_pk(segments, terms, field, stride, n_docs)
 
     def score_partition(pdf: pd.DataFrame,
                         deleted_b: np.ndarray | None,
@@ -448,9 +314,9 @@ def bm25_wand_topk_many(segments: DataFrame,
 
         state = {q: {"theta": -1.0,
                      "ids": np.empty(0, np.int64),
-                     "sc": np.empty(0, np.float64)} for q in idf_b}
+                     "sc": np.empty(0, np.float64)} for q in idf_q}
         for s in range(pk * spp, (pk + 1) * spp):
-            lo, hi = s * stride_w, (s + 1) * stride_w
+            lo, hi = s * stride, (s + 1) * stride
             sel = np.flatnonzero((mins < hi) & (maxs >= lo))
             if sel.size == 0:
                 continue
@@ -460,12 +326,17 @@ def bm25_wand_topk_many(segments: DataFrame,
                 t = terms_a[i]
                 if tfw_a[i] > tb.get(t, 0.0):
                     tb[t] = tfw_a[i]
+            # a query needs the stride unless its bound is strictly
+            # below its θ (a stride tying θ may still win the doc-id
+            # tie-break, `ScoreList.java:90-97`)
             live = [q for q, st_ in state.items()
-                    if any(t in tb for t in idf_b[q])
+                    if any(t in tb for t in idf_q[q])
                     and (len(st_["ids"]) < k
-                         or sum(w * tb[t] for t, w in idf_b[q].items()
+                         or sum(w * tb[t] for t, w in idf_q[q].items()
                                 if t in tb) >= st_["theta"])]
             if not live:
+                if prune_counter is not None:
+                    prune_counter.add(1)
                 continue
             # slice each block's task-cached decode; share across queries
             dec: dict[str, tuple[np.ndarray, np.ndarray]] = {}
@@ -489,10 +360,10 @@ def bm25_wand_topk_many(segments: DataFrame,
             if not dec:
                 continue
             for q in live:
-                ids_all = [dec[t][0] for t in idf_b[q] if t in dec]
+                ids_all = [dec[t][0] for t in idf_q[q] if t in dec]
                 if not ids_all:
                     continue
-                sc_all = [dec[t][1] * idf_b[q][t] for t in idf_b[q]
+                sc_all = [dec[t][1] * idf_q[q][t] for t in idf_q[q]
                           if t in dec]
                 ids_c = np.concatenate(ids_all)
                 sc_c = np.concatenate(sc_all)
@@ -512,10 +383,9 @@ def bm25_wand_topk_many(segments: DataFrame,
                   for q, st_ in state.items() if len(st_["ids"])]
         return pd.concat(frames, ignore_index=True) if frames else empty
 
-    from pyspark.sql import Window
     per_part = _apply_with_tombstones(
-        blocks, deleted, stride, spp, score_partition,
+        blocks, deleted, stride, score_partition,
         "qid string, doc_id long, score double", n_docs)
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return (per_part.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k).drop("rank"))
+            .where(F.col("rank") <= k))

@@ -2,17 +2,19 @@
 rank-identity vs the set-at-a-time Engine (SURVEY.md §7.1 items 3+5)."""
 
 import json
+from collections import Counter
 
 import numpy as np
 import pytest
 
 from search_engines_spark.engine import Engine
-from search_engines_spark.engine.daat import bm25_wand_topk
+from search_engines_spark.engine.daat import bm25_wand_topk_many
 from search_engines_spark.indexer.codec import varbyte_decode
 from search_engines_spark.indexer.segments import (
     build_segments, read_manifest, read_segments)
 
 NUM_BUCKETS = 8
+STEADY_DAAT_JOBS = 5
 
 
 @pytest.fixture(scope="module")
@@ -97,32 +99,19 @@ def test_daat_wand_rank_identity(spark, spark_index, seg_dir, q):
              .where(spark_index.term_stats.term.isin(terms)).collect()}
     st = spark_index.stats_for("body")
     segs = read_segments(spark, seg_dir, terms=terms, num_buckets=NUM_BUCKETS)
-    got = bm25_wand_topk(segs, terms, stats, st["n_docs"],
-                         st["sum_len"] / st["doc_count"], k=30).collect()
-    # DAAT's documented tie-break is doc_id asc (ext_id asc whenever ids
-    # are assigned in ext-id order); compare against the Engine plan under
-    # the same tie-break
-    from pyspark.sql import functions as F
-    want = (eng.eval_sop(eng.parse(q)).where(F.col("score") >= 0)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(30).collect())
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
-    for g, w in zip(got, want):
-        assert g["score"] == pytest.approx(w["score"], abs=1e-9)
+    got = _ranked(bm25_wand_topk_many(
+        segs, {"q": dict.fromkeys(terms, 1)}, stats, st["n_docs"],
+        st["sum_len"] / st["doc_count"], k=30))["q"]
+    _assert_matches_eval_sop(eng, q, got, 30)
 
 
 def test_engine_search_daat_api(spark, spark_index, seg_dir):
     """Engine.attach_segments + search_daat end-to-end; rank-identical to
     the compiled plan under the doc_id tie-break."""
-    from pyspark.sql import functions as F
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(seg_dir, num_buckets=NUM_BUCKETS)
     got = eng.search_daat("fickle creek farm", k=20).collect()
-    want = (eng.eval_sop(eng.parse("fickle creek farm"))
-            .where(F.col("score") >= 0)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(20).collect())
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
-    for g, w in zip(got, want):
-        assert g["score"] == pytest.approx(w["score"], abs=1e-9)
+    _assert_matches_eval_sop(eng, "fickle creek farm", got, 20)
     with pytest.raises(ValueError):
         eng.search_daat("#near/2( creek farm )")
 
@@ -130,16 +119,10 @@ def test_engine_search_daat_api(spark, spark_index, seg_dir):
 def test_search_daat_repeated_term(spark, spark_index, seg_dir):
     """A term repeated in the bag contributes once per occurrence
     (`QrySopSum.java:39-53`) — DAAT folds multiplicity into idf."""
-    from pyspark.sql import functions as F
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(seg_dir, num_buckets=NUM_BUCKETS)
     got = eng.search_daat("creek creek farm", k=15).collect()
-    want = (eng.eval_sop(eng.parse("creek creek farm"))
-            .where(F.col("score") >= 0)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(15).collect())
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
-    for g, w in zip(got, want):
-        assert g["score"] == pytest.approx(w["score"], abs=1e-9)
+    _assert_matches_eval_sop(eng, "creek creek farm", got, 15)
 
 
 def test_block_max_pruning_fires_and_stays_exact(spark, spark_index,
@@ -147,7 +130,6 @@ def test_block_max_pruning_fires_and_stays_exact(spark, spark_index,
     """With a small stride the corpus spans many pruning units; the skip
     counter must show strides skipped WITHOUT decoding, and the result
     must still be exactly the unpruned top-k (pruning is lossless)."""
-    from pyspark.sql import functions as F
     eng = Engine(spark_index, "bm25")
     terms = ["creek", "farm", "buffer"]
     stats = {r["term"]: (r["df"], r["ctf"])
@@ -157,42 +139,84 @@ def test_block_max_pruning_fires_and_stays_exact(spark, spark_index,
     segs = read_segments(spark, seg_dir, terms=terms,
                          num_buckets=NUM_BUCKETS)
     acc = spark.sparkContext.accumulator(0)
-    got = bm25_wand_topk(segs, terms, stats, st["n_docs"],
-                         st["sum_len"] / st["doc_count"], k=3,
-                         stride=8, prune_counter=acc).collect()
+    got = _ranked(bm25_wand_topk_many(
+        segs, {"q": dict.fromkeys(terms, 1)}, stats, st["n_docs"],
+        st["sum_len"] / st["doc_count"], k=3, stride=8,
+        prune_counter=acc))["q"]
     assert acc.value > 0, "no stride was ever skipped — pruning dead"
-    want = (eng.eval_sop(eng.parse("creek farm buffer"))
-            .where(F.col("score") >= 0)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(3).collect())
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
-    for g, w in zip(got, want):
-        assert g["score"] == pytest.approx(w["score"], abs=1e-9)
+    _assert_matches_eval_sop(eng, "creek farm buffer", got, 3)
 
 
 def test_search_daat_many_batch_identity(spark, spark_index, seg_dir):
     """Batched DAAT (one segments pass for the whole query file) is
-    rank/score-identical per query to the single-query DAAT path, incl.
-    a repeated-term query and an OOV-only query (which simply yields no
-    rows — the runner's dummy-line contract covers absent qids)."""
+    rank/score-identical per query to the compiled plan under the doc_id
+    tie-break, incl. a repeated-term query and an OOV-only query (which
+    simply yields no rows — the runner's dummy-line contract covers
+    absent qids)."""
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(seg_dir, num_buckets=NUM_BUCKETS)
     queries = {"q1": "fickle creek farm",
                "q2": "buffer overflow guard",
                "q3": "creek creek farm",
                "q4": "zzzunknownterm"}
-    got = eng.search_daat_many(queries, k=20).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["qid"], []).append(r)
+    by_q = _ranked(eng.search_daat_many(queries, k=20))
     assert "q4" not in by_q
     for qid in ("q1", "q2", "q3"):
-        rows = sorted(by_q[qid], key=lambda r: r["rank"])
-        want = eng.search_daat(queries[qid], k=20).collect()
-        assert [r["doc_id"] for r in rows] == [w["doc_id"] for w in want], qid
-        for g, w in zip(rows, want):
-            assert g["score"] == pytest.approx(w["score"], abs=1e-9)
+        _assert_matches_eval_sop(eng, queries[qid], by_q[qid], 20)
     with pytest.raises(ValueError):
         eng.search_daat_many({"q1": "#near/2( creek farm )"})
+
+
+def test_prune_counter_batch_stays_exact(spark, spark_index, seg_dir):
+    """The one kernel counts strides that no query of the batch needs;
+    with a small stride a two-query batch must skip some without
+    decoding, and each query's top-k must still equal the compiled
+    plan's under the doc_id tie-break."""
+    eng = Engine(spark_index, "bm25")
+    queries = {"a": "creek farm buffer", "b": "fickle fickle overflow"}
+    bags = {qid: dict(Counter(n.term for n in _terms_of(eng.parse(q))))
+            for qid, q in queries.items()}
+    terms = sorted({t for bag in bags.values() for t in bag})
+    ts = spark_index.term_stats
+    stats = {r["term"]: (r["df"], r["ctf"])
+             for r in ts.where(ts.term.isin(terms)).collect()}
+    st = spark_index.stats_for("body")
+    segs = read_segments(spark, seg_dir, terms=terms,
+                         num_buckets=NUM_BUCKETS)
+    acc = spark.sparkContext.accumulator(0)
+    got = _ranked(bm25_wand_topk_many(
+        segs, bags, stats, st["n_docs"], st["sum_len"] / st["doc_count"],
+        k=3, stride=8, prune_counter=acc))
+    assert acc.value > 0, "no stride was ever skipped — pruning dead"
+    for qid, q in queries.items():
+        _assert_matches_eval_sop(eng, q, got[qid], 3)
+
+
+def test_search_daat_steady_job_count(spark, spark_index, tmp_path_factory):
+    """A steady single-query DAAT call over a one-group store with one
+    tombstone submits a pinned number of Spark jobs. The one-query
+    batch's rank window rides the kernel's SinglePartition exchange,
+    and the final sort + limit plans as TakeOrderedAndProject."""
+    from pyspark.sql import functions as F
+    from search_engines_spark.indexer.merge import delete_docs
+    d = str(tmp_path_factory.mktemp("segs_jobs"))
+    build_segments(spark_index.postings, spark_index.doclens, d,
+                   num_buckets=NUM_BUCKETS)
+    delete_docs(spark, d, spark_index.docs.where(F.col("doc_id") == 3)
+                .select("doc_id"))
+    eng = Engine(spark_index, "bm25")
+    eng.attach_segments(d, num_buckets=NUM_BUCKETS)
+    q = "fickle creek farm"
+    want = eng.search_daat(q, k=10).collect()  # warm: stats prefetch
+    sc = spark.sparkContext
+    sc.setJobGroup("daat_steady", "steady search_daat")
+    try:
+        got = eng.search_daat(q, k=10).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == want and 3 not in [r["doc_id"] for r in got]
+    assert len(sc.statusTracker().getJobIdsForGroup("daat_steady")) == \
+        STEADY_DAAT_JOBS
 
 
 @pytest.mark.parametrize("model,q", [
@@ -316,29 +340,24 @@ def _terms_of(node):
     return out
 
 
-def test_strides_per_part_fixed_width():
-    """Scoring-group width is fixed; group count scales with data, not
-    slots. An adaptive width (~2 groups/slot) was measured slower at 32
-    cores on the 500k-doc bench — narrower groups duplicate block decode
-    and starve the block-max θ — so the width stays STRIDES_PER_PART at
-    every parallelism level (see the _strides_per_part docstring)."""
-    from search_engines_spark.engine.daat import (_strides_per_part,
-                                                  STRIDES_PER_PART, STRIDE)
+def _ranked(top) -> dict:
+    """Collect a (qid, …, rank) frame → {qid: rows in rank order}."""
+    out = {}
+    for r in sorted(top.collect(), key=lambda r: (r["qid"], r["rank"])):
+        out.setdefault(r["qid"], []).append(r)
+    return out
 
-    class _SC:
-        def __init__(self, p):
-            self.defaultParallelism = p
 
-    class _Spark:
-        def __init__(self, p):
-            self.sparkContext = _SC(p)
-
-    for cores in (2, 8, 32):
-        assert _strides_per_part(_Spark(cores), 500_000, STRIDE) \
-            == STRIDES_PER_PART
-    # group count is data-driven: 500k docs → ≥15 groups even at 2 cores
-    n_strides = -(-500_000 // STRIDE)  # 123
-    assert -(-n_strides // STRIDES_PER_PART) >= 15
+def _assert_matches_eval_sop(eng, q, rows, k):
+    """rows == the compiled plan's top-k of `q` under the doc_id
+    tie-break, scores within 1e-9. DAAT's documented tie-break is doc_id
+    asc (ext_id asc whenever ids are assigned in ext-id order)."""
+    from pyspark.sql import functions as F
+    want = (eng.eval_sop(eng.parse(q)).where(F.col("score") >= 0)
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect())
+    assert [r["doc_id"] for r in rows] == [w["doc_id"] for w in want], q
+    for g, w in zip(rows, want):
+        assert g["score"] == pytest.approx(w["score"], abs=1e-9)
 
 
 @pytest.mark.parametrize("deleted", [None, [3, 17]])

@@ -924,7 +924,7 @@ def main() -> None:
             line = [ln for ln in out.stdout.splitlines()
                     if ln.startswith("{")][-1]
             r[cores] = json.loads(line)
-            print(r[cores])
+            print(json.dumps(r[cores]))
         if args.save_json:
             with open(args.save_json, "w") as f:
                 json.dump({"hw": {},
@@ -957,7 +957,7 @@ def main() -> None:
             capture_output=True, text=True, check=True)
         line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
         r[cores] = json.loads(line)
-        print(r[cores])
+        print(json.dumps(r[cores]))
 
     lc = None
     if not args.skip_local_cluster:
@@ -1315,7 +1315,7 @@ is FIXED at 8 strides (group count grows with corpus size): an
 adaptive ~2-groups-per-slot width was measured slower at 32 cores
 (5.77 → 7.45 s on this workload) because narrower groups duplicate
 block decode and starve the shared block-max θ on a bandwidth-bound
-kernel (`engine/daat.py:_strides_per_part`).
+kernel (`engine/daat.py:STRIDES_PER_PART`).
 
 ## Structured retrieval off the compressed store (8 vs 32 cores)
 
