@@ -9,7 +9,7 @@ diversification (xQuAD/PM2), LeToR feature extraction — plus the index
 *builder* the reference delegated to Lucene (posting lists with positions,
 delta+varbyte compressed segments, a skew-safe range-partitioned build,
 resumable manifests), and a training-data pipeline layer (dedup,
-similarity search, text analysis, multimodal plumbing).
+similarity search, text analysis).
 
 Nothing here is a port: the reference's document-at-a-time Java iterators
 become joins/aggregations; its per-query loop becomes a Catalyst plan.

@@ -393,20 +393,23 @@ def analyze_udf(analyzer: Analyzer):
 def build_postings_udf(docs, analyzer: Analyzer, text_col: str = "text",
                        field: str = "body"):
     """UDF-analyzer postings build — same output contract as
-    `indexer.build.build_postings` (term, field, doc_id, tf, positions),
-    for analyzer configurations the SQL tokenizer can't express.
-    Same shuffle shape: repartition docs by doc_id first, then the
-    per-doc aggregation never reshuffles the token stream."""
+    `indexer.build.build_postings` (term, field, doc_id, tf, positions,
+    doclen), for analyzer configurations the SQL tokenizer can't
+    express; doclen is the analyzer's own token count. Same shuffle
+    shape: repartition docs by doc_id first, then the per-doc
+    aggregation never reshuffles the token stream."""
     from pyspark.sql import functions as F
     ana = analyze_udf(analyzer)
     num = docs.sparkSession.sparkContext.defaultParallelism * 2
     d = (docs.repartition(num, "doc_id")
          .withColumn("_a", ana(F.col(text_col))))
-    toks = (d.select("doc_id", F.explode("_a.terms").alias("_t"))
-            .select("doc_id", F.col("_t.term").alias("term"),
+    toks = (d.select("doc_id", F.col("_a.doclen").alias("doclen"),
+                     F.explode("_a.terms").alias("_t"))
+            .select("doc_id", "doclen", F.col("_t.term").alias("term"),
                     F.col("_t.pos").alias("pos")))
     return (toks.groupBy("term", "doc_id")
             .agg(F.count("*").cast("int").alias("tf"),
-                 F.sort_array(F.collect_list("pos")).alias("positions"))
+                 F.sort_array(F.collect_list("pos")).alias("positions"),
+                 F.first("doclen").alias("doclen"))
             .withColumn("field", F.lit(field))
-            .select("term", "field", "doc_id", "tf", "positions"))
+            .select("term", "field", "doc_id", "tf", "positions", "doclen"))

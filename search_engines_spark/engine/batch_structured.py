@@ -100,10 +100,8 @@ def arm_postings_frame(postings: DataFrame,
         c = (F.col("field") == fld) & F.col("term").isin(terms)
         cond = c if cond is None else (cond | c)
 
-    has_dl = "doclen" in postings.columns
-    cols = ["term", "field", "doc_id", "positions"] + \
-        (["doclen"] if has_dl else [])
-    scan = postings.where(cond).select(*cols)
+    scan = postings.where(cond).select("term", "field", "doc_id",
+                                       "positions", "doclen")
     # The ONE shuffle, skew-free key. The partition count is EXPLICIT:
     # a bare repartition("doc_id") is AQE-coalescible, and the session's
     # size-first coalescing (parallelismFirst=false — right for KB-scale
@@ -120,17 +118,16 @@ def arm_postings_frame(postings: DataFrame,
                .groupBy("doc_id", "field")
                .agg(F.collect_list("term").alias("_terms"),
                     F.collect_list("positions").alias("_poss"),
-                    *([F.first("doclen").alias("doclen")] if has_dl else [])))
+                    F.first("doclen").alias("doclen")))
 
     out_schema = "arm_id int, doc_id long, field string, tf int, doclen long"
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             arm_o, doc_o, fld_o, tf_o, dl_o = [], [], [], [], []
-            dls = pdf["doclen"] if has_dl else pd.Series([-1] * len(pdf))
             for doc_id, field, terms, poss, doclen in zip(
                     pdf["doc_id"], pdf["field"], pdf["_terms"],
-                    pdf["_poss"], dls):
+                    pdf["_poss"], pdf["doclen"]):
                 specs = by_field.get(field)
                 if not specs:
                     continue

@@ -57,12 +57,6 @@ class Engine:
         self._leaf_stats: dict[tuple[str, str], tuple[int, int]] = {}
         self._persisted: list[DataFrame] = []   # last search_many's frames
 
-    @cached_property
-    def _inline_doclen(self) -> bool:
-        """Postings carry doclen (index-built); read lazily, since a
-        segments-only deployment has no postings frame."""
-        return "doclen" in self.index.postings.columns
-
     # ------------------------------------------------------------- public --
 
     def parse(self, qstring: str) -> Node:
@@ -146,11 +140,18 @@ class Engine:
     def search_daat(self, qstring: str, k: int = 100) -> DataFrame:
         """Bag-of-words BM25 top-k over the attached segment store via
         document-at-a-time scoring with block-max pruning (engine/daat):
-        a one-query `search_daat_many`. Exact — rank-identical to
-        `search` up to the doc_id-vs-ext_id tie-break (see daat module
-        docstring). → (doc_id, ext_id, score), score desc / doc_id asc."""
-        top = self.search_daat_many({qstring: qstring}, k=k)
-        return (top.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        the kernel of `search_daat_many` with one query, ranked by a
+        sort plus limit (TakeOrderedAndProject) instead of a per-qid
+        window. Exact — rank-identical to `search` up to the
+        doc_id-vs-ext_id tie-break (see daat module docstring).
+        → (doc_id, ext_id, score), score desc / doc_id asc."""
+        top = self._daat_topk({qstring: qstring}, k)
+        ext = self._extid_expr()
+        if ext is not None:
+            return (top.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+                    .select("doc_id", ext.alias("ext_id"), "score"))
+        return (top.join(self._doc_map(), "doc_id")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                 .select("doc_id", "ext_id", "score"))
 
     def search_daat_many(self, queries: dict[str, str],
@@ -163,6 +164,19 @@ class Engine:
         reference loops queries one-by-one (`QryEval.java:684`).
         → (qid, doc_id, ext_id, score, rank ≤ k), tie-break doc_id asc
         (see daat module docstring for the ext_id-coincidence argument)."""
+        from .daat import rank_topk
+        top = rank_topk(self._daat_topk(queries, k), k)
+        ext = self._extid_expr()
+        if ext is not None:
+            top = top.withColumn("ext_id", ext)
+        else:
+            top = top.join(self._doc_map(), "doc_id")
+        return top.select("qid", "doc_id", "ext_id", "score", "rank")
+
+    def _daat_topk(self, queries: dict[str, str], k: int) -> DataFrame:
+        """The DAAT kernel over the attached store for a batch of
+        bag-of-words BM25 queries → (qid, doc_id, score), each pk
+        partition's top-k per query, unranked."""
         from .daat import bm25_wand_topk_many
         if self.model != "bm25":
             raise ValueError("search_daat_many is the BM25 fast path")
@@ -186,16 +200,10 @@ class Engine:
                  for t in terms}
         st = self.index.stats_for(field)
         segs, deleted = self._attached_store(terms)
-        top = bm25_wand_topk_many(
+        return bm25_wand_topk_many(
             segs, bags, stats, st["n_docs"],
             st["sum_len"] / st["doc_count"], k=k, params=self.p,
             field=field, deleted=deleted)
-        ext = self._extid_expr()
-        if ext is not None:
-            top = top.withColumn("ext_id", ext)
-        else:
-            top = top.join(self._doc_map(), "doc_id")
-        return top.select("qid", "doc_id", "ext_id", "score", "rank")
 
     def _attached_store(self, terms: list[str], decode: bool = False):
         """→ (segments, deleted) of the attached store for `terms`: the
@@ -509,13 +517,7 @@ class Engine:
         `close`) releases it unless it re-persists the same plan."""
         from .batch_structured import arm_postings_frame
         spark = self.index.postings.sparkSession
-        zipped = arm_postings_frame(self.index.postings, arms)
-        if "doclen" not in self.index.postings.columns:
-            zipped = (zipped.drop("doclen")
-                      .join(self.index.doclens
-                            .select("doc_id", "field", "doclen"),
-                            ["doc_id", "field"]))
-        zipped = zipped.persist()
+        zipped = arm_postings_frame(self.index.postings, arms).persist()
         self._persisted.append(zipped)
         stats = (zipped.groupBy("arm_id")
                  .agg(F.count("*").alias("df")))
@@ -554,7 +556,6 @@ class Engine:
         fields = {r[2] for r in bow_rows}
         p = self.index.postings.where(F.col("term").isin(terms))
         joined = p.join(F.broadcast(qt), ["term", "field"])
-        # all fields referenced must carry inlined doclen or share stats;
         # per-field avglen differs, so score per field then sum
         if len(fields) == 1:
             st = self.index.stats_for(next(iter(fields)))
@@ -568,11 +569,6 @@ class Engine:
                 score = (F.when(cond, s) if score is None
                          else score.when(cond, s))
             score = F.coalesce(score, F.lit(0.0))
-        if "doclen" not in joined.columns:
-            # legacy postings without inlined doclen: join the store once
-            joined = joined.join(
-                self.index.doclens.select("doc_id", "field", "doclen"),
-                ["doc_id", "field"])
         return (joined.groupBy("qid", "doc_id")
                 .agg(F.sum(score).alias("score")))
 
@@ -706,7 +702,6 @@ class Engine:
         from .batch_structured import arm_postings_frame
         spark = self.index.postings.sparkSession
         mu, lam = self.p.mu, self.p.lam
-        has_doclen = "doclen" in self.index.postings.columns
 
         # ---- proximity arms: ONE batched zipper pass for the whole
         # batch; derived (ctf) per arm is a tiny aggregate of the
@@ -721,13 +716,7 @@ class Engine:
         arm_ctf: dict[int, int] = {}
         if arm_ids:
             arms = {aid: key for key, aid in arm_ids.items()}
-            zipped = arm_postings_frame(self.index.postings, arms)
-            if not has_doclen:
-                zipped = (zipped.drop("doclen")
-                          .join(self.index.doclens
-                                .select("doc_id", "field", "doclen"),
-                                ["doc_id", "field"]))
-            zipped = zipped.persist()
+            zipped = arm_postings_frame(self.index.postings, arms).persist()
             self._persisted.append(zipped)
             for r in (zipped.groupBy("arm_id")
                       .agg(F.sum("tf").alias("ctf")).collect()):
@@ -773,12 +762,7 @@ class Engine:
                              "share double, pmle double, geo boolean"))
             p = self.index.postings.where(
                 F.col("term").isin(sorted({r[1] for r in rows})))
-            j = p.join(qt, ["term", "field"])
-            if not has_doclen:
-                j = j.join(self.index.doclens
-                           .select("doc_id", "field", "doclen"),
-                           ["doc_id", "field"])
-            present = j.select(*cols)
+            present = p.join(qt, ["term", "field"]).select(*cols)
         if prox_rows:
             pqt = F.broadcast(local_frame(
                 spark, prox_rows, "arm_id int, qid string, share double, "
@@ -850,7 +834,8 @@ class Engine:
     # ------------------------------------------------------ Iop compilation --
 
     def eval_iop(self, node: Node) -> DataFrame:
-        """→ (doc_id, tf, positions) posting frame for an Iop subtree.
+        """→ (doc_id, tf, positions, doclen) posting frame for an Iop
+        subtree.
 
         The plan cache stores (node, frame) — holding the node itself
         keeps the id() key alive, so a garbage-collected AST from a
@@ -861,11 +846,9 @@ class Engine:
         if key in self._iop_cache:
             return self._iop_cache[key][1]
         if node.op == "term":
-            p = self.index.postings
-            cols = ["doc_id", "tf", "positions"] + \
-                (["doclen"] if self._inline_doclen else [])
-            out = p.where(f"term = {_q(node.term)} AND field = "
-                          f"{_q(node.field)}").select(*cols)
+            out = self.index.postings.where(
+                f"term = {_q(node.term)} AND field = {_q(node.field)}"
+            ).select("doc_id", "tf", "positions", "doclen")
         else:
             args = [self.eval_iop(a) for a in node.args]
             dfs = [self._df_hint(a) for a in node.args]
@@ -966,20 +949,15 @@ class Engine:
         so the zipper that produced it runs once; a global aggregate
         cross-joined back would run it a second time."""
         child = node.args[0]
-        fld = child.field
+        # doclen rides every posting row (the Index contract), so scoring
+        # joins nothing: at 10^12 docs a doclens join would be a
+        # corpus-sized shuffle per query
         il = self.eval_iop(child)
-        if not self._inline_doclen:
-            # fallback for posting frames without inlined doclen (external
-            # tables, streamed sinks); the index-built path carries doclen
-            # per posting so NO join happens here — at 10^12 docs the
-            # doclens join is a corpus-sized shuffle, inlining erases it
-            il = il.join(self.index.doclens.where(F.col("field") == fld)
-                         .select("doc_id", "doclen"), "doc_id")
         if child.op == "term":
             df, ctf = (str(int(v)) for v in self._stats_of(child))
         else:
             df, ctf = "count(1) OVER ()", "sum(tf) OVER ()"
-        st = self.index.stats_for(fld)
+        st = self.index.stats_for(child.field)
         if self.model == "bm25":
             score = self._bm25_sql(df, st)
         elif self.model == "indri":

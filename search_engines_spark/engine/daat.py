@@ -29,8 +29,11 @@ directory pruning + parquet min/max on `term` — and scores inside one
    WITHOUT DECODING — the block-max skip.  Surviving strides are
    varbyte-decoded once (numpy), the per-posting weights are shared by
    every query that holds the term, and each θ is updated from its heap;
-4. per-partition top-k per query, then one per-qid `row_number` window
-   (score desc / doc_id asc) keeps rank ≤ k.  The reference tie-break
+4. per-partition top-k per query; the caller ranks those survivors
+   (score desc / doc_id asc): `rank_topk`'s per-qid `row_number`
+   window for a batch, a sort plus limit for one query
+   (`Engine.search_daat`), which needs no window and, over a store of
+   more than one pk group, no extra exchange.  The reference tie-break
    is EXTERNAL id asc (`ScoreList.java:87-114`); these coincide
    whenever internal ids are assigned in external-id order (true for
    the `documents` corpus and any corpus ingested via
@@ -195,10 +198,10 @@ def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
     # production group counts ≫ bins the multiplier is irrelevant).
     # One group (G = ⌈n_docs / (stride·STRIDES_PER_PART)⌉ = 1)
     # gets ONE partition: the exchange plans as SinglePartition, which
-    # also satisfies the per-qid rank window above the kernel, which
-    # then runs with no exchange of its own. G assumes
-    # dense doc ids; exactness never depends on the width, only the
-    # task shape does.
+    # also satisfies a per-qid rank window above the kernel
+    # (`rank_topk`), which then runs with no exchange of its own. G
+    # assumes dense doc ids; exactness never depends on the width, only
+    # the task shape does.
     n_groups = -(-max(n_docs, 1) // (stride * STRIDES_PER_PART))
     cores = blocks.sparkSession.sparkContext.defaultParallelism
     n_part = 1 if n_groups == 1 else 8 * cores
@@ -232,9 +235,11 @@ def bm25_wand_topk_many(segments: DataFrame,
                         stride: int = STRIDE,
                         prune_counter=None,
                         deleted=None) -> DataFrame:
-    """→ (qid, doc_id, score, rank ≤ k) per-query top-k for a batch of
-    bag-of-words BM25 queries over ONE segments pass, rank by score desc
-    / doc_id asc.
+    """→ (qid, doc_id, score): each pk partition's top-k per query for
+    a batch of bag-of-words BM25 queries over ONE segments pass, score
+    desc / doc_id asc within a partition. Every query's global top-k is
+    among these rows; `rank_topk` (or a sort plus limit for one query)
+    picks it.
 
     queries: {qid: {term: multiplicity}} — a term repeated q times in
     the bag contributes q identical #SCORE arms (`QrySopSum.java:39-53`),
@@ -277,8 +282,8 @@ def bm25_wand_topk_many(segments: DataFrame,
     terms = sorted({t for m in idf_q.values() for t in m})
     spark = segments.sparkSession
     if not terms:
-        return local_frame(spark, [], "qid string, doc_id long, "
-                                      "score double, rank int")
+        return local_frame(spark, [],
+                           "qid string, doc_id long, score double")
     k1, b = p.k1, p.b
     spp = STRIDES_PER_PART
     blocks = _blocks_by_pk(segments, terms, field, stride, n_docs)
@@ -383,9 +388,15 @@ def bm25_wand_topk_many(segments: DataFrame,
                   for q, st_ in state.items() if len(st_["ids"])]
         return pd.concat(frames, ignore_index=True) if frames else empty
 
-    per_part = _apply_with_tombstones(
+    return _apply_with_tombstones(
         blocks, deleted, stride, score_partition,
         "qid string, doc_id long, score double", n_docs)
+
+
+def rank_topk(top: DataFrame, k: int) -> DataFrame:
+    """(qid, doc_id, score) kernel survivors → the same columns plus
+    `rank` ≤ k per qid, by score desc / doc_id asc: one per-qid
+    `row_number` window."""
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (per_part.withColumn("rank", F.row_number().over(w))
+    return (top.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k))

@@ -32,13 +32,11 @@ def _joined_positions(args: list[DataFrame],
     arrays make the frame tens of MB and force-broadcasting it is slower
     than letting Catalyst/AQE pick sort-merge. Unknown df (dfs=None)
     keeps the broadcast — the historical interactive-path behavior."""
-    # doclen (when the index inlines it) rides the first arg — all args of
-    # one proximity node share a field (parser-enforced), so any arg's
-    # doclen is THE doclen; keeping it here lets #SCORE over a derived
-    # list skip the doclens join too
-    first_cols = ["doc_id", F.col("positions").alias("_p0")] + \
-        (["doclen"] if "doclen" in args[0].columns else [])
-    renamed = [args[0].select(*first_cols)] + \
+    # doclen rides the first arg — all args of one proximity node share
+    # a field (parser-enforced), so any arg's doclen is THE doclen;
+    # keeping it lets #SCORE over a derived list skip a doclens join too
+    renamed = [args[0].select("doc_id", F.col("positions").alias("_p0"),
+                              "doclen")] + \
         [a.select("doc_id", F.col("positions").alias(f"_p{i}"))
          for i, a in enumerate(args) if i > 0]
 
@@ -70,9 +68,6 @@ def _zipper_frame(args: list[DataFrame], kernel, dfs: list[int | None] | None,
     interactive-sized intersection). The explicit count also keeps AQE
     from resizing the exchange."""
     k = len(args)
-    has_dl = "doclen" in args[0].columns
-    schema = "doc_id long, tf int, positions array<int>" + \
-        (", doclen long" if has_dl else "")
 
     def zipper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -80,17 +75,17 @@ def _zipper_frame(args: list[DataFrame], kernel, dfs: list[int | None] | None,
                    for row in zip(*(pdf[f"_p{i}"] for i in range(k)))]
             keep = np.fromiter((bool(p) for p in pos), bool, len(pos))
             hits = [p for p in pos if p]
-            out = {"doc_id": pdf["doc_id"].to_numpy()[keep],
-                   "tf": np.fromiter((len(p) for p in hits), np.int32,
-                                     len(hits)),
-                   "positions": pd.Series(hits, dtype=object)}
-            if has_dl:
-                out["doclen"] = pdf["doclen"].to_numpy()[keep]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"].to_numpy()[keep],
+                "tf": np.fromiter((len(p) for p in hits), np.int32,
+                                  len(hits)),
+                "positions": pd.Series(hits, dtype=object),
+                "doclen": pdf["doclen"].to_numpy()[keep]})
 
     return (_joined_positions(args, dfs)
             .repartition(n_part, "doc_id")
-            .mapInPandas(zipper, schema=schema))
+            .mapInPandas(zipper, schema="doc_id long, tf int, "
+                                        "positions array<int>, doclen long"))
 
 
 def near_frame(args: list[DataFrame], n: int, dfs: list[int | None] | None,
@@ -119,13 +114,12 @@ def syn_frame(args: list[DataFrame], n_part: int) -> DataFrame:
     """#SYN — union; positions = sorted concat (`QryIopSyn.java:17-71`).
     Pure built-ins: union → `n_part`-way doc_id exchange → groupBy(doc_id)
     → flatten + array_sort."""
-    has_dl = all("doclen" in a.columns for a in args)
-    cols = ["doc_id", "positions"] + (["doclen"] if has_dl else [])
-    u = reduce(lambda l, r: l.unionByName(r), [a.select(*cols) for a in args])
-    aggs = [F.array_sort(F.flatten(F.collect_list("positions"))).alias("positions")]
-    if has_dl:   # one doc has one doclen per field; args share the field
-        aggs.append(F.first("doclen").alias("doclen"))
-    out_cols = ["doc_id", F.size("positions").cast("int").alias("tf"),
-                "positions"] + (["doclen"] if has_dl else [])
-    return (u.repartition(n_part, "doc_id").groupBy("doc_id").agg(*aggs)
-            .select(*out_cols))
+    u = reduce(lambda l, r: l.unionByName(r),
+               [a.select("doc_id", "positions", "doclen") for a in args])
+    return (u.repartition(n_part, "doc_id").groupBy("doc_id")
+            .agg(F.array_sort(F.flatten(F.collect_list("positions")))
+                 .alias("positions"),
+                 # one doc has one doclen per field; args share the field
+                 F.first("doclen").alias("doclen"))
+            .select("doc_id", F.size("positions").cast("int").alias("tf"),
+                    "positions", "doclen"))

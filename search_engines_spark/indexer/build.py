@@ -251,7 +251,8 @@ class Index:
 
     docs: DataFrame        # doc_id, ext_id, sha256, doclen, source cols
     doclens: DataFrame     # doc_id, field, doclen
-    postings: DataFrame    # term, field, doc_id, tf, positions, doclen
+    postings: DataFrame    # term, field, doc_id, tf, positions, doclen;
+    # None for a segments-only store (indexer.store.open_index)
     term_stats: DataFrame  # term, field, df, ctf
     corpus_stats: dict = dc_field(default_factory=dict)
     # field -> {"n_docs": long, "doc_count": long, "sum_len": long}
@@ -269,6 +270,14 @@ class Index:
     # the doc_map join is the difference between a k-row projection and
     # a per-query corpus-wide hash join. None = resolve by join (always
     # correct; the reference's getExternalDocid, `Idx.java:74-78`).
+
+    def __post_init__(self):
+        # One posting layout feeds every operator: scoring reads doclen
+        # off the posting row, never from a doclens join.
+        if self.postings is not None and \
+                "doclen" not in self.postings.columns:
+            raise ValueError("Index postings must carry a doclen column "
+                             "(term, field, doc_id, tf, positions, doclen)")
 
     def stats_for(self, field: str) -> dict:
         return self.corpus_stats[field]
@@ -339,31 +348,20 @@ def build_index_frames_analyzed(docs: DataFrame, analyzer,
     analog → possessive → stop → KStem, the reference's exact chain,
     `EnglishAnalyzerConfigurable.java:143-162`).
 
-    Same shuffle shape as `build_postings` (docs repartitioned by doc_id
-    BEFORE the analyzer UDF + explode, so the token stream never
-    shuffles); the analyzer runs as ONE Arrow-batched pandas UDF per doc
-    row — vectorized, never per-row at the DataFrame layer (input_hint).
+    Postings come from `analysis.build_postings_udf` (same shuffle shape
+    as `build_postings`: docs repartitioned by doc_id BEFORE the
+    analyzer UDF + explode, so the token stream never shuffles); the
+    analyzer runs as ONE Arrow-batched pandas UDF per doc row —
+    vectorized, never per-row at the DataFrame layer (input_hint).
     `docs` needs doc_id/ext_id assigned (docs_from_* helpers); doclen is
     recomputed by the analyzer (its tokenizer may split differently from
     the SQL expression)."""
-    from ..analysis import analyze_udf
-    ana = analyze_udf(analyzer)
-    num = docs.sparkSession.sparkContext.defaultParallelism * 2
-    d = (docs.drop("_tokens", "doclen")
-         .repartition(num, "doc_id")
-         .withColumn("_a", ana(F.col(text_col)))
-         .withColumn("doclen", F.col("_a.doclen")))
-    toks = (d.select("doc_id", "doclen", F.explode("_a.terms").alias("_t"))
-            .select("doc_id", "doclen", F.col("_t.term").alias("term"),
-                    F.col("_t.pos").alias("pos")))
-    postings = (toks.groupBy("term", "doc_id")
-                .agg(F.count("*").cast("int").alias("tf"),
-                     F.sort_array(F.collect_list("pos")).alias("positions"),
-                     F.first("doclen").alias("doclen"))
-                .withColumn("field", F.lit(field))
-                .select("term", "field", "doc_id", "tf", "positions",
-                        "doclen"))
-    docs_out = d.drop("_a")
+    from ..analysis import analyze_udf, build_postings_udf
+    src = docs.drop("_tokens", "doclen")
+    postings = build_postings_udf(src, analyzer, text_col=text_col,
+                                  field=field)
+    docs_out = src.withColumn("doclen", analyze_udf(analyzer)(
+        F.col(text_col)).getField("doclen"))
     doclens = build_doclens(docs_out, field)
     doc_map = docs_out.select("doc_id", "ext_id")
     if cache:

@@ -259,7 +259,9 @@ def completed_buckets(out_dir: str, fingerprint: dict) -> set[int]:
 def build_segments(postings: DataFrame, doclens: DataFrame, out_dir: str,
                    num_buckets: int = 32, chunk: int = 8,
                    fingerprint: dict | None = None) -> dict:
-    """Build (or resume) compressed segments for `postings`.
+    """Build (or resume) compressed segments for `postings`, which carry
+    doclen per row (the `indexer.build.Index` contract). `doclens` is
+    not read; it stays in the signature for existing callers.
 
     Returns build metrics. Safe to re-run after interruption: buckets
     already recorded in the manifest (with a matching input fingerprint)
@@ -271,12 +273,7 @@ def build_segments(postings: DataFrame, doclens: DataFrame, out_dir: str,
     fingerprint = fingerprint or _fingerprint(postings)
     done = completed_buckets(out_dir, fingerprint)
     todo = [b for b in range(num_buckets) if b not in done]
-    if "doclen" in postings.columns:   # index-built postings inline doclen
-        src = postings
-    else:
-        src = postings.join(doclens.select("doc_id", "field", "doclen"),
-                            ["doc_id", "field"])
-    src = src.withColumn("bucket", bucket_of("term", num_buckets))
+    src = postings.withColumn("bucket", bucket_of("term", num_buckets))
     metrics = {"buckets_total": num_buckets, "buckets_skipped": len(done),
                "buckets_built": 0, "blocks": 0, "postings": 0}
     for i in range(0, len(todo), chunk):

@@ -611,77 +611,3 @@ def semantic_dedup(emb: DataFrame, n_cells: int = 16,
             .select("vec_id", "cell",
                     F.when(F.col("_drop").isNull(), F.lit(1))
                     .otherwise(F.lit(0)).cast("long").alias("kept")))
-
-
-# ------------------------------------------------- perceptual-hash dedup --
-
-
-def phash_near_dup_pairs(hashes: DataFrame, max_dist: int = 6,
-                         bands: int = 8,
-                         id_col: str = "media_id",
-                         hash_col: str = "phash") -> DataFrame:
-    """Image near-dup candidate pairs over 64-bit perceptual hashes
-    (`multimodal.phash_images`) → (id_a, id_b, dist) with
-    hamming(a, b) ≤ max_dist.
-
-    Banded equi-join, never all-pairs: each hash splits into `bands`
-    contiguous bit fields; a pair is a candidate iff SOME band matches
-    exactly, then the true hamming distance (bit_count of the xor)
-    filters. By pigeonhole this is EXACT — zero recall loss — whenever
-    max_dist < bands (a pair differing in ≤ bands−1 bits cannot differ
-    in every band); the defaults (6 < 8) keep that guarantee. Larger
-    max_dist trades recall like MinHash banding does.
-
-    Scale: the join shuffles (band, field, id) triples — bands×12 bytes
-    per image — and lands on uniform xxhash-free integer keys; per-band
-    bucket width is corpus_size / 2^(64/bands) in expectation, so the
-    self-join stays candidate-bounded (identical hashes, e.g. exact
-    duplicate files, collapse into one bucket — the pathological case
-    is the duplicate cluster itself, which is the output)."""
-    if 64 % bands:
-        raise ValueError(f"bands must divide 64, got {bands}")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    h = hashes.select(F.col(id_col).cast("long").alias("id"),
-                      F.col(hash_col).cast("long").alias("h"))
-    banded = h.select(
-        "id", "h",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.shiftright(F.col("h"), b * width)
-                     .bitwiseAND(F.lit(mask)).alias("field"))
-            for b in range(bands)])).alias("bf")) \
-        .select("id", "h", "bf.band", "bf.field")
-    a = banded.select(F.col("band"), F.col("field"),
-                      F.col("id").alias("id_a"), F.col("h").alias("ha"))
-    b = banded.select(F.col("band"), F.col("field"),
-                      F.col("id").alias("id_b"), F.col("h").alias("hb"))
-    return (a.join(b, ["band", "field"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b",
-                    F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-                    .alias("dist"))
-            .where(F.col("dist") <= max_dist)
-            .distinct())
-
-
-def phash_dedup_clusters(hashes: DataFrame, max_dist: int = 6,
-                         bands: int = 8,
-                         id_col: str = "media_id",
-                         hash_col: str = "phash") -> DataFrame:
-    """`dedup_clusters` for the image modality: connected components
-    over the perceptual-hash near-dup graph, smallest-media_id
-    representative. → (media_id, component, keep) for every hashed
-    image."""
-    pairs = phash_near_dup_pairs(hashes, max_dist, bands, id_col,
-                                 hash_col) \
-        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-    cc = connected_components(pairs)
-    return (hashes.select(F.col(id_col).cast("long").alias("media_id"))
-            .join(cc.withColumnRenamed("doc_id", "media_id"),
-                  "media_id", "left")
-            .withColumn("component",
-                        F.coalesce("component", F.col("media_id")))
-            .withColumn("keep",
-                        (F.col("media_id") == F.col("component"))
-                        .cast("int")))

@@ -33,6 +33,15 @@ def test_udf_matches_sql_path(spark, small_docs):
     assert udf_out == sql_out
 
 
+def test_udf_postings_carry_doclen(spark, small_docs):
+    """The UDF build inlines each posting's doclen, as the SQL build
+    does; with the canonical analyzer the two agree."""
+    def dl(df):
+        return {(r["term"], r["doc_id"]): r["doclen"] for r in df.collect()}
+    assert dl(build_postings_udf(small_docs.drop("_tokens"), Analyzer())) \
+        == dl(build_postings(small_docs))
+
+
 def test_udf_stemming_changes_terms(spark, small_docs):
     out = _pset(build_postings_udf(small_docs.drop("_tokens"),
                                    Analyzer(stem=True)))

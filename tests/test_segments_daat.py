@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 
 from search_engines_spark.engine import Engine
-from search_engines_spark.engine.daat import bm25_wand_topk_many
+from search_engines_spark.engine.daat import bm25_wand_topk_many, rank_topk
 from search_engines_spark.indexer.codec import varbyte_decode
 from search_engines_spark.indexer.segments import (
     build_segments, read_manifest, read_segments)
@@ -99,9 +99,9 @@ def test_daat_wand_rank_identity(spark, spark_index, seg_dir, q):
              .where(spark_index.term_stats.term.isin(terms)).collect()}
     st = spark_index.stats_for("body")
     segs = read_segments(spark, seg_dir, terms=terms, num_buckets=NUM_BUCKETS)
-    got = _ranked(bm25_wand_topk_many(
+    got = _ranked(rank_topk(bm25_wand_topk_many(
         segs, {"q": dict.fromkeys(terms, 1)}, stats, st["n_docs"],
-        st["sum_len"] / st["doc_count"], k=30))["q"]
+        st["sum_len"] / st["doc_count"], k=30), 30))["q"]
     _assert_matches_eval_sop(eng, q, got, 30)
 
 
@@ -139,10 +139,10 @@ def test_block_max_pruning_fires_and_stays_exact(spark, spark_index,
     segs = read_segments(spark, seg_dir, terms=terms,
                          num_buckets=NUM_BUCKETS)
     acc = spark.sparkContext.accumulator(0)
-    got = _ranked(bm25_wand_topk_many(
+    got = _ranked(rank_topk(bm25_wand_topk_many(
         segs, {"q": dict.fromkeys(terms, 1)}, stats, st["n_docs"],
         st["sum_len"] / st["doc_count"], k=3, stride=8,
-        prune_counter=acc))["q"]
+        prune_counter=acc), 3))["q"]
     assert acc.value > 0, "no stride was ever skipped — pruning dead"
     _assert_matches_eval_sop(eng, "creek farm buffer", got, 3)
 
@@ -184,9 +184,9 @@ def test_prune_counter_batch_stays_exact(spark, spark_index, seg_dir):
     segs = read_segments(spark, seg_dir, terms=terms,
                          num_buckets=NUM_BUCKETS)
     acc = spark.sparkContext.accumulator(0)
-    got = _ranked(bm25_wand_topk_many(
+    got = _ranked(rank_topk(bm25_wand_topk_many(
         segs, bags, stats, st["n_docs"], st["sum_len"] / st["doc_count"],
-        k=3, stride=8, prune_counter=acc))
+        k=3, stride=8, prune_counter=acc), 3))
     assert acc.value > 0, "no stride was ever skipped — pruning dead"
     for qid, q in queries.items():
         _assert_matches_eval_sop(eng, q, got[qid], 3)
@@ -194,9 +194,9 @@ def test_prune_counter_batch_stays_exact(spark, spark_index, seg_dir):
 
 def test_search_daat_steady_job_count(spark, spark_index, tmp_path_factory):
     """A steady single-query DAAT call over a one-group store with one
-    tombstone submits a pinned number of Spark jobs. The one-query
-    batch's rank window rides the kernel's SinglePartition exchange,
-    and the final sort + limit plans as TakeOrderedAndProject."""
+    tombstone submits a pinned number of Spark jobs. The kernel's
+    survivors are ranked by the final sort + limit, which plans as
+    TakeOrderedAndProject."""
     from pyspark.sql import functions as F
     from search_engines_spark.indexer.merge import delete_docs
     d = str(tmp_path_factory.mktemp("segs_jobs"))
@@ -217,6 +217,21 @@ def test_search_daat_steady_job_count(spark, spark_index, tmp_path_factory):
     assert got == want and 3 not in [r["doc_id"] for r in got]
     assert len(sc.statusTracker().getJobIdsForGroup("daat_steady")) == \
         STEADY_DAAT_JOBS
+
+
+def test_search_daat_plans_no_rank_window(spark, spark_index, seg_dir):
+    """A single DAAT query is ranked by its final sort + limit alone:
+    the executed plan holds no per-qid Window node (one costs its own
+    exchange over a store of more than one pk group). The fixture's
+    cached doc_map carries the id-assignment window, which is not it."""
+    eng = Engine(spark_index, "bm25")
+    eng.attach_segments(seg_dir, num_buckets=NUM_BUCKETS)
+    top = eng.search_daat("fickle creek farm", k=20)
+    _assert_matches_eval_sop(eng, "fickle creek farm", top.collect(), 20)
+    plan = top._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    assert not [ln for ln in plan.splitlines()
+                if "Window" in ln and "qid" in ln]
 
 
 @pytest.mark.parametrize("model,q", [
@@ -368,7 +383,6 @@ def test_daat_many_single_group_plans_one_kernel_partition(
     SinglePartition — and that partitioning satisfies the per-qid rank
     window, which then runs with no exchange of its own. A tombstone
     mask takes the same shape through the cogroup."""
-    from search_engines_spark.engine.daat import bm25_wand_topk_many
     from search_engines_spark.literals import local_frame
     if deleted is not None:
         deleted = local_frame(spark, [(d,) for d in deleted], "doc_id long")
@@ -379,9 +393,9 @@ def test_daat_many_single_group_plans_one_kernel_partition(
     st = spark_index.stats_for("body")
     segs = read_segments(spark, seg_dir, terms=sorted(stats),
                          num_buckets=NUM_BUCKETS)
-    top = bm25_wand_topk_many(segs, queries, stats, st["n_docs"],
-                              st["sum_len"] / st["doc_count"], k=10,
-                              deleted=deleted)
+    top = rank_topk(bm25_wand_topk_many(
+        segs, queries, stats, st["n_docs"], st["sum_len"] / st["doc_count"],
+        k=10, deleted=deleted), 10)
     lines = top._jdf.queryExecution().executedPlan().toString().splitlines()
     kern = next(i for i, ln in enumerate(lines) if "InPandas" in ln)
     window = max(i for i, ln in enumerate(lines[:kern]) if "Window [" in ln)

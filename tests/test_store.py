@@ -45,6 +45,17 @@ def test_reopened_postings_carry_doclen(spark, saved_dir):
     assert "doclen" in reopened.postings.columns  # fast path survives save
 
 
+def test_index_requires_postings_doclen(spark_index):
+    """Postings carry doclen: an Index over postings without it is
+    rejected at construction instead of being joined to `doclens` at
+    query time. A segments-only index (postings=None) stays valid."""
+    import dataclasses
+    with pytest.raises(ValueError, match="doclen"):
+        dataclasses.replace(spark_index,
+                            postings=spark_index.postings.drop("doclen"))
+    assert dataclasses.replace(spark_index, postings=None).postings is None
+
+
 def test_runner_accepts_index_path(spark, spark_index, saved_dir, tmp_path):
     from search_engines_spark.run import main
     qf = tmp_path / "q.txt"

@@ -630,33 +630,6 @@ def run_one(cores: int, sf_dir: str, mult: int, corpus: str = "zipf",
         res["qsketch_sec"] = round(best, 2)
         res["qsketch_docs_per_sec"] = round(n_docs / best, 1)
 
-        # ---- media decode + fingerprints (pipeline.multimodal) ------------
-        # the heaviest pure-Python kernels in the repo: real
-        # BMP/JPEG/WAV/DIB-AVI/MJPEG decode + pHash/AFP/video-pHash,
-        # map-only over a PERSISTED media table (generation excluded
-        # from the timed region). Python-worker bound, not DRAM — the
-        # scaling axis that stresses the Arrow worker pool.
-        from search_engines_spark.pipeline.multimodal import (
-            audio_fingerprints, make_media_table, phash_images,
-            phash_videos)
-        media = make_media_table(
-            src.where(F.col("doc_id") % 8 == 0), real_payloads=True) \
-            .persist()
-        n_media = media.count()
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            n_fp = (phash_images(media).count()
-                    + audio_fingerprints(media).count()
-                    + phash_videos(media).count())
-            s = time.time() - t0
-            best = s if best is None else min(best, s)
-        media.unpersist()
-        res["n_media"] = n_media
-        assert n_fp == n_media
-        res["media_sec"] = round(best, 2)
-        res["media_docs_per_sec"] = round(n_media / best, 1)
-
         # ---- PQ encode (pipeline.similarity) ------------------------------
         # the ADC-side ingest kernel: per-subspace least-chain argmin
         # over literal codebooks — m×k aggregate-folds of 64-dim
@@ -818,7 +791,6 @@ ARM_PAIRS = (
     ("hll_sec", "hll_docs_per_sec"),
     ("bloom_sec", "bloom_docs_per_sec"),
     ("qsketch_sec", "qsketch_docs_per_sec"),
-    ("media_sec", "media_docs_per_sec"),
     ("pq_sec", "pq_docs_per_sec"),
 )
 
@@ -1118,7 +1090,6 @@ def write_report(r: dict, hw: dict, corpus: str, mult: int,
     hl832 = _eff(r, 8, 32, "hll_docs_per_sec")
     bl832 = _eff(r, 8, 32, "bloom_docs_per_sec")
     qk832 = _eff(r, 8, 32, "qsketch_docs_per_sec")
-    md832 = _eff(r, 8, 32, "media_docs_per_sec")
 
     if corpus == "zipf":
         corpus_desc = (f"{r[8]['n_docs']:,} docs, deterministic Zipf(1) "
@@ -1432,7 +1403,6 @@ the {bw_832:.2f} DRAM / {sha_832:.2f} CPU ceilings):
 | `sketches.hll_token_cardinality` (256-register max groupBy + the exact-distinct rider) | {r[8]['hll_sec']} | {r[32]['hll_sec']} | {r[32]['hll_docs_per_sec']:,} | {hl832:.2f} |
 | `sketches.bloom_decontam_scan` (bench grams as a 512-byte literal bitmask; k bit tests/gram, doc_id-keyed count — no gram join) | {r[8]['bloom_sec']} | {r[32]['bloom_sec']} | {r[32]['bloom_docs_per_sec']:,} | {bl832:.2f} |
 | `sketches.log2_histogram`+`quantiles` (≤64-bucket bit-length groupBy + 64-row cumulative window) | {r[8]['qsketch_sec']} | {r[32]['qsketch_sec']} | {r[32]['qsketch_docs_per_sec']:,} | {qk832:.2f} |
-| `multimodal` media fingerprints over {r[32]['n_media']:,} persisted real payloads (BMP/JPEG/WAV/DIB+MJPEG-AVI decode → image pHash + audio AFP + video pHash; map-only, pure-Python kernels — the arm that stresses the Arrow worker pool, not DRAM) | {r[8]['media_sec']} | {r[32]['media_sec']} | {r[32]['media_docs_per_sec']:,} | {md832:.2f} |
 | `similarity.pq_encode` over {r[32]['pq_n_vecs']:,} 64-dim vectors (per-subspace least-chain argmin over literal codebooks — m×k aggregate-folds, pure codegen, zero shuffle; the IVF-PQ ingest kernel) | {r[8]['pq_sec']} | {r[32]['pq_sec']} | {r[32]['pq_docs_per_sec']:,} | floor† |
 
 † pq_encode sits at the SCHEDULER FLOOR at both levels (~1.7 s for
