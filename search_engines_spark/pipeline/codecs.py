@@ -1,8 +1,5 @@
-"""Real image/audio codecs with zero external dependencies.
-
-The container has no PIL/libvips/soundfile, so earlier rounds stubbed
-every decode behind `fake=True`. These codecs remove the stub for the
-formats the Python stdlib + numpy can handle for real:
+"""Lossless image/audio/video codecs with zero external dependencies
+(Python stdlib + numpy):
 
 * **BMP** — 24/32-bit uncompressed BITMAPINFOHEADER, bottom-up and
   top-down rows (struct + numpy).
@@ -18,18 +15,13 @@ formats the Python stdlib + numpy can handle for real:
   needs no codec at all, only container parsing. Frame pixel data is
   the same bottom-up padded BGR layout as BMP.
 
-* **JPEG** — baseline sequential DCT (SOF0/1) AND progressive DCT
-  (SOF2: spectral selection + successive approximation, EOB runs),
-  encode and decode, via the pure-numpy implementation in
-  `pipeline.jpeg` (Annex K tables, restart intervals,
-  4:2:0/4:2:2/4:4:4). AVI gains the matching 'MJPG' compression: each
-  frame chunk is a complete baseline JPEG.
+Encoders for the same formats exist so tests can produce real payloads
+deterministically (no external data). `sniff` still names JPEG by its
+magic bytes, but nothing here decodes it; compressed AVI streams
+(MJPG, H.264) raise ValueError.
 
-Encoders for the same formats exist so tests and the synthetic media
-table can produce REAL payloads deterministically (no external data).
-Formats still needing external codecs (MP3, H.264):
-`sniff` returns None / decode raises ValueError and the multimodal
-kernels fall back to the gated fake path.
+No workload, registry entry or bench arm reads this module; it is kept
+only until its tests can be deleted with it (ROADMAP item 6).
 """
 
 from __future__ import annotations
@@ -41,8 +33,6 @@ import wave
 import zlib
 
 import numpy as np
-
-from . import jpeg as _jpeg
 
 # ------------------------------------------------------------------ sniffing --
 
@@ -69,8 +59,8 @@ def sniff(data: bytes) -> str | None:
 def _malformed_raises_valueerror(fn):
     """Truncated/garbage payloads fail mid-parse with struct.error,
     zlib.error, or IndexError depending on where the bytes run out; the
-    decode contract (and the fake-gates in `multimodal`) is ValueError
-    for ANY undecodable payload, so normalize here."""
+    decode contract is ValueError for ANY undecodable payload, so
+    normalize here."""
     @functools.wraps(fn)
     def wrapper(data, *a, **k):
         try:
@@ -215,23 +205,6 @@ def encode_png(arr: np.ndarray) -> bytes:
             + chunk(b"IEND", b""))
 
 
-# ---------------------------------------------------------------------- JPEG --
-
-@_malformed_raises_valueerror
-def decode_jpeg(data: bytes) -> np.ndarray:
-    """→ (h, w, 3) uint8 RGB (color) or (h, w, 1) uint8 (grayscale).
-    Baseline sequential DCT only (`pipeline.jpeg.decode_jpeg`)."""
-    return _jpeg.decode_jpeg(data)
-
-
-def encode_jpeg(arr: np.ndarray, quality: int = 75,
-                subsample: bool = False, restart: int = 0) -> bytes:
-    """(h, w, 3) RGB / (h, w) gray uint8 → baseline JFIF bytes
-    (`pipeline.jpeg.encode_jpeg`)."""
-    return _jpeg.encode_jpeg(arr, quality=quality, subsample=subsample,
-                             restart=restart)
-
-
 # ----------------------------------------------------------------------- AVI --
 
 def _dib_rows(frame: np.ndarray) -> bytes:
@@ -257,18 +230,13 @@ def _undib_rows(raw: bytes, w: int, h: int,
     return px[:, :, ::-1].copy()
 
 
-_MJPG = struct.unpack("<I", b"MJPG")[0]
-
-
 @_malformed_raises_valueerror
 def decode_avi(data: bytes) -> tuple[np.ndarray, float]:
-    """→ ((n, h, w, 3) uint8 RGB frames, fps). Two codecs: uncompressed
-    24-bit DIB (biCompression=BI_RGB; '..db' or '..dc' chunks — the
-    suffix is naming convention, the strf header decides) and Motion
-    JPEG (biCompression='MJPG'; every frame chunk is a complete
-    baseline JPEG decoded via `decode_jpeg`). Walks the RIFF chunk tree
-    with plain struct offsets; chunk bodies pad to even length per the
-    RIFF spec."""
+    """→ ((n, h, w, 3) uint8 RGB frames, fps). Uncompressed 24-bit DIB
+    only (biCompression=BI_RGB; '..db' or '..dc' chunks — the suffix is
+    naming convention, the strf header decides). Walks the RIFF chunk
+    tree with plain struct offsets; chunk bodies pad to even length per
+    the RIFF spec."""
     if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not an AVI")
     w = h = None                       # avih dwWidth/dwHeight
@@ -303,12 +271,12 @@ def decode_avi(data: bytes) -> tuple[np.ndarray, float]:
                     saw_vids_strf = True
                     sw, sh = struct.unpack_from("<ii", data, body_at + 4)
                     bpp, comp = struct.unpack_from("<HI", data, body_at + 14)
-                    if comp not in (0, _MJPG):
+                    if comp != 0:
                         # headers precede movi: reject before buffering
                         # a whole compressed video's frames
                         raise ValueError(
                             f"compressed AVI unsupported "
-                            f"(biCompression={comp}; DIB and MJPG only)")
+                            f"(biCompression={comp}; DIB only)")
             elif (tag[:2].isdigit() and tag[2:4] in (b"db", b"dc") and ln
                   and (vids_idx is None or int(tag[:2]) == vids_idx)):
                 # db/dc is a chunk-naming convention, not the codec:
@@ -323,24 +291,13 @@ def decode_avi(data: bytes) -> tuple[np.ndarray, float]:
         raise ValueError("AVI without avih header or video frames")
     if saw_dc and not saw_vids_strf:
         # only the strf header can vouch for what dc-tagged chunks hold
-        # (raw DIB or MJPG); without one they must be presumed to be a
-        # codec we don't ship
+        # (raw DIB); without one they must be presumed to be a codec we
+        # don't ship
         raise ValueError("dc-tagged AVI frames without a vids strf header")
-    if comp not in (0, _MJPG):   # crafted files may place strf after movi
+    if comp != 0:   # crafted files may place strf after movi
         raise ValueError(
-            f"compressed AVI unsupported (biCompression={comp}; "
-            f"DIB and MJPG only)")
+            f"compressed AVI unsupported (biCompression={comp}; DIB only)")
     fps = rate / scale if scale else 0.0
-    if comp == _MJPG:
-        decoded = []
-        for f in frames:
-            px = decode_jpeg(f)
-            if px.shape[2] == 1:       # grayscale MJPEG → replicate
-                px = np.repeat(px, 3, axis=2)
-            decoded.append(px)
-        if len({d.shape for d in decoded}) != 1:
-            raise ValueError("MJPG AVI with varying frame dimensions")
-        return np.stack(decoded), fps
     if bpp != 24:
         raise ValueError(f"unsupported AVI frame depth {bpp}")
     # spec: players use strf dims when avih carries zeros; a negative
@@ -354,25 +311,15 @@ def decode_avi(data: bytes) -> tuple[np.ndarray, float]:
             fps)
 
 
-def encode_avi(frames: np.ndarray, fps: float = 10.0,
-               codec: str = "DIB", quality: int = 85) -> bytes:
-    """(n, h, w, 3) uint8 RGB → AVI bytes, decodable by `decode_avi`
-    and any standard player. `codec="DIB"` (default) writes
-    uncompressed bottom-up DIB '00db' frames; `codec="MJPG"` writes
-    Motion JPEG — every '00dc' chunk a complete baseline JPEG at
-    `quality` (the shape real MJPEG cameras/muxers produce)."""
+def encode_avi(frames: np.ndarray, fps: float = 10.0) -> bytes:
+    """(n, h, w, 3) uint8 RGB → AVI bytes of uncompressed bottom-up DIB
+    '00db' frames, decodable by `decode_avi` and any standard player."""
     a = np.asarray(frames, dtype=np.uint8)
     if a.ndim != 4 or a.shape[0] == 0:
         raise ValueError(
             "encode_avi needs at least one frame of shape (h, w, 3)")
-    if codec not in ("DIB", "MJPG"):
-        raise ValueError(f"unsupported AVI codec {codec!r}")
-    mjpg = codec == "MJPG"
     n, h, w, _ = a.shape
-    if mjpg:
-        payloads = [encode_jpeg(f, quality=quality) for f in a]
-    else:
-        payloads = [_dib_rows(f) for f in a]
+    payloads = [_dib_rows(f) for f in a]
     frame_size = max(len(p) for p in payloads)
     scale, rate = 1000, int(round(fps * 1000))
 
@@ -383,8 +330,8 @@ def encode_avi(frames: np.ndarray, fps: float = 10.0,
     def lst(kind: bytes, body: bytes) -> bytes:
         return chunk(b"LIST", kind + body)
 
-    fourcc = b"MJPG" if mjpg else b"DIB "
-    frame_tag = b"00dc" if mjpg else b"00db"
+    fourcc = b"DIB "
+    frame_tag = b"00db"
     avih = struct.pack("<14I", int(1e6 * scale / max(rate, 1)),
                        frame_size * int(max(fps, 1)), 0, 0x10, n, 0, 1,
                        frame_size, w, h, 0, 0, 0, 0)
@@ -392,8 +339,8 @@ def encode_avi(frames: np.ndarray, fps: float = 10.0,
                                            scale, rate, 0, n, frame_size,
                                            0xFFFFFFFF, 0)
             + struct.pack("<4h", 0, 0, w, h))
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24,
-                       _MJPG if mjpg else 0, frame_size, 0, 0, 0, 0)
+    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, frame_size,
+                       0, 0, 0, 0)
     hdrl = lst(b"hdrl", chunk(b"avih", avih)
                + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
     movi_body, idx, off = b"", b"", 4

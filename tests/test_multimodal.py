@@ -1,46 +1,11 @@
-"""Multimodal plumbing: schemas, batch shapes, determinism — plus the
-REAL BMP/PNG/WAV decode paths (pure stdlib/numpy codecs, no fake)."""
+"""The lossless BMP/PNG/WAV/AVI codecs in `pipeline.codecs` (pure
+stdlib/numpy): round trips, AVI container edge cases, every PNG
+scanline filter, and ValueError on malformed or mutated payloads."""
 
 import numpy as np
 import pytest
 
 from search_engines_spark.pipeline import codecs as C
-from search_engines_spark.pipeline import multimodal as mm
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    docs = spark.createDataFrame(
-        [(i, f"payload text {i} " * (i + 1)) for i in range(20)],
-        "doc_id long, text string")
-    return mm.make_media_table(docs).persist()
-
-
-def test_media_schema(media):
-    assert media.schema.simpleString() == (
-        "struct<media_id:bigint,kind:string,mime:string,width:int,"
-        "height:int,duration_ms:int,payload:binary>")
-    kinds = {r["kind"] for r in media.select("kind").distinct().collect()}
-    assert kinds <= {"image", "audio", "video"}
-
-
-def test_decode_gated_for_unsupported_formats():
-    # GIF/MP3/MP4 still need codecs the container lacks
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"GIF89a not decodable", fake=False)
-    with pytest.raises(NotImplementedError):
-        mm.decode_audio(b"ID3 not decodable", fake=False)
-    with pytest.raises(NotImplementedError):
-        mm.decode_video(b"\x00\x00\x00\x18ftypmp42 not decodable",
-                        fake=False)
-    # JPEG now sniffs and decodes for real, so garbage with a JPEG
-    # magic is a MALFORMED payload (ValueError), not an unsupported
-    # format — and it still falls back under fake=True
-    with pytest.raises(ValueError):
-        mm.decode_image(b"\xff\xd8\xff not decodable", fake=False)
-    assert mm.decode_image(b"\xff\xd8\xff not decodable",
-                           fake=True).shape == (4096,)
-
 
 def test_codec_round_trips():
     rng = np.random.RandomState(7)
@@ -117,111 +82,6 @@ def test_avi_codec_edge_cases():
         C.decode_avi(patched_comp)
 
 
-def test_real_image_decode_no_fake():
-    rng = np.random.RandomState(3)
-    img = rng.randint(0, 256, (4, 4, 3), dtype=np.uint8)
-    flat = mm.decode_image(C.encode_bmp(img), fake=False)
-    assert flat.shape == (16,)
-    assert np.allclose(flat, img.astype(np.float64).mean(axis=2).ravel())
-    flat_png = mm.decode_image(C.encode_png(img), fake=False)
-    assert np.allclose(flat_png, flat)
-
-
-def test_real_media_pipeline_end_to_end(spark):
-    docs = spark.createDataFrame(
-        [(i, f"payload text {i} " * (i + 1)) for i in range(20)],
-        "doc_id long, text string")
-    real = mm.make_media_table(docs, real_payloads=True).persist()
-    mimes = {r["kind"]: set() for r in real.collect()}
-    for r in real.collect():
-        mimes[r["kind"]].add(r["mime"])
-    assert mimes.get("image", set()) <= {"image/bmp", "image/jpeg"}
-    assert mimes.get("audio") == {"audio/wav"}
-    # metadata is truthful to the generated payloads — a consumer
-    # validating decode shape against (width, height, duration_ms)
-    # must never see a mismatch on the real table
-    for r in real.collect():
-        if r["kind"] == "image":
-            px = mm.decode_image_2d(bytes(r["payload"]))
-            assert (px.shape[1], px.shape[0]) == (r["width"], r["height"])
-            assert r["duration_ms"] == 0
-        elif r["kind"] == "audio":
-            x, rate = C.decode_wav(bytes(r["payload"]))
-            assert round(1000 * len(x) / rate) == r["duration_ms"]
-            assert r["width"] == r["height"] == 0
-        else:
-            frames, fps = C.decode_avi(bytes(r["payload"]))
-            assert (frames.shape[2], frames.shape[1]) == \
-                (r["width"], r["height"])
-            assert round(1000 * frames.shape[0] / fps) == r["duration_ms"]
-    # features over image+audio WITHOUT the fake decoder
-    ia = real.where("kind in ('image', 'audio')")
-    feats = mm.extract_features(ia, fake=False).collect()
-    assert len(feats) == ia.count() > 0
-    for r in feats:
-        assert len(r["feature"]) == mm.FEATURE_DIM
-    # real 2-D resize re-encodes a BMP of the target size
-    imgs = real.where("kind = 'image'")
-    out = mm.resize_image(imgs, 8, 6, fake=False).collect()
-    assert len(out) == imgs.count() > 0
-    for r in out:
-        px = C.decode_bmp(bytes(r["payload"]))
-        assert px.shape == (6, 8, 3)
-    # real video: AVI payloads frame-sample WITHOUT the fake decoder,
-    # and each sampled frame is a standalone decodable BMP
-    vids = real.where("kind = 'video'")
-    assert mimes.get("video") == {"video/avi"}
-    sampled = mm.sample_frames(vids, every_ms=250, fake=False).collect()
-    assert len(sampled) == vids.count() * 4  # 4 frames @ 4 fps, 1 s
-    for r in sampled:
-        px = C.decode_bmp(bytes(r["payload"]))
-        assert px.shape == (12, 16, 3)
-    # sampled frame pixels match the container's frames exactly
-    one = vids.limit(1).collect()[0]
-    frames, fps = mm.decode_video(bytes(one["payload"]))
-    got = sorted((r["frame_no"], bytes(r["payload"])) for r in sampled
-                 if r["media_id"] == one["media_id"])
-    for fi, bmp in got:
-        assert (C.decode_bmp(bmp) == frames[fi]).all()
-    # video features run the real temporal-mean branch
-    vfeats = mm.extract_features(vids, fake=False).collect()
-    assert len(vfeats) == vids.count() > 0
-    # determinism: same docs → byte-identical payloads
-    again = {r["media_id"]: bytes(r["payload"])
-             for r in mm.make_media_table(docs, real_payloads=True).collect()}
-    first = {r["media_id"]: bytes(r["payload"]) for r in real.collect()}
-    assert again == first
-
-
-def test_extract_features_shape_and_determinism(media):
-    f1 = mm.extract_features(media, fake=True).collect()
-    f2 = mm.extract_features(media, fake=True).collect()
-    assert len(f1) == media.count()
-    by_id1 = {r["media_id"]: r["feature"] for r in f1}
-    by_id2 = {r["media_id"]: r["feature"] for r in f2}
-    assert by_id1 == by_id2  # deterministic across runs
-    for v in by_id1.values():
-        assert len(v) == mm.FEATURE_DIM
-        assert all(0.0 <= x <= 255.0 for x in v)
-
-
-def test_resize_payload_size(media):
-    out = mm.resize_image(media, 8, 8, fake=True).collect()
-    for r in out:
-        assert len(bytes(r["payload"])) == 64
-        assert (r["width"], r["height"]) == (8, 8)
-
-
-def test_sample_frames_explodes(media):
-    vids = media.where("kind = 'video'")
-    n_vids = vids.count()
-    frames = mm.sample_frames(media, every_ms=10000, fake=True)
-    rows = frames.collect()
-    assert len(rows) >= n_vids  # ≥1 frame per video
-    for r in rows:
-        assert r["ts_ms"] == r["frame_no"] * 10000
-
-
 def _png_with_filters(img, filters):
     """Hand-encode `img` (h, w, c) with a chosen filter id per row —
     encode_png only emits filter 0, so the decoder's Sub/Up/Average/
@@ -276,42 +136,6 @@ def test_png_all_filters_decode():
     assert (C.decode_png(data) == img).all()
 
 
-def test_png_gray_alpha_becomes_rgb():
-    """Color type 4 (gray+alpha) must reach (h, w, 3) as replicated
-    gray with alpha dropped — and survive resize."""
-    rng = np.random.RandomState(29)
-    ga = rng.randint(0, 256, (6, 7, 2), dtype=np.uint8)
-    data = _png_with_filters(ga, [0, 1, 2, 3, 4, 0])
-    px = mm.decode_image_2d(data)
-    assert px.shape == (6, 7, 3)
-    assert (px == np.repeat(ga[:, :, :1], 3, axis=2)).all()
-    flat = mm.decode_image(data, fake=False)
-    assert flat.shape == (42,)
-    assert np.allclose(flat, ga[:, :, 0].astype(np.float64).ravel())
-
-
-def test_sniffable_but_undecodable_falls_back_when_fake():
-    """A payload that sniffs as a known format but fails its decoder
-    must fall back to the deterministic fake path when fake=True and
-    raise ValueError (not wave.Error / crash) when fake=False."""
-    import struct
-    # IEEE-float WAV: format tag 3 — the stdlib wave module rejects it
-    body = (b"WAVEfmt " + struct.pack("<I", 16)
-            + struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
-            + b"data" + struct.pack("<I", 8) + b"\x00" * 8)
-    bad_wav = b"RIFF" + struct.pack("<I", len(body)) + body
-    assert C.sniff(bad_wav) == "wav"
-    with pytest.raises(ValueError, match="WAV"):
-        mm.decode_audio(bad_wav, fake=False)
-    y = mm.decode_audio(bad_wav, fake=True)
-    assert y.shape == (4096,)          # the deterministic fake decoder
-    # truncated PNG: sniffs, fails, falls back
-    bad_png = b"\x89PNG\r\n\x1a\n" + b"\x00" * 8
-    with pytest.raises(Exception):
-        mm.decode_image(bad_png, fake=False)
-    assert mm.decode_image(bad_png, fake=True).shape == (4096,)
-
-
 def test_malformed_payloads_raise_valueerror_not_struct_error():
     """Truncated headers used to escape the fake-gates as struct.error;
     the codec layer must normalize EVERY undecodable payload to
@@ -326,35 +150,6 @@ def test_malformed_payloads_raise_valueerror_not_struct_error():
         with pytest.raises(ValueError):
             {"bmp": C.decode_bmp, "png": C.decode_png,
              "avi": C.decode_avi, "wav": C.decode_wav}[kind](payload)
-
-
-def test_kernels_fall_back_on_malformed_payloads(spark):
-    """extract_features / resize_image / sample_frames with fake=True
-    over malformed-but-sniffable payloads must produce the deterministic
-    fake output for every row instead of failing the stage (the
-    fake-gate bypasses found in review: decode_video called without
-    fake, decode_image_2d uncaught ValueError, struct.error escapes)."""
-    bad_avi = (b"RIFF" + (9000).to_bytes(4, "little") + b"AVI "
-               + b"\x00" * 64)
-    bad_bmp = b"BM" + b"\x00" * 10
-    bad_wav = b"RIFF" + b"\x00" * 4 + b"WAVE" + b"\x00" * 4
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(bad_avi), 2000),
-         (2, "image", bytearray(bad_bmp), 0),
-         (3, "audio", bytearray(bad_wav), 0)],
-        "media_id long, kind string, payload binary, duration_ms long")
-    feats = mm.extract_features(media, fake=True).collect()
-    assert sorted((r["media_id"], len(r["feature"])) for r in feats) == \
-        [(1, mm.FEATURE_DIM), (2, mm.FEATURE_DIM), (3, mm.FEATURE_DIM)]
-    res = mm.resize_image(media, 8, 8, fake=True).collect()
-    assert sorted((r["media_id"], len(bytes(r["payload"]))) for r in res) \
-        == [(1, 64), (2, 64), (3, 64)]
-    frames = mm.sample_frames(media.where("kind = 'video'"),
-                              1000, fake=True).collect()
-    assert [(r["media_id"], r["frame_no"]) for r in frames] == [(1, 0)]
-    # fake=False must still surface the failure loudly
-    with pytest.raises(Exception):
-        mm.extract_features(media, fake=False).collect()
 
 
 def test_avi_strf_dims_and_topdown_and_no_strf():
@@ -389,9 +184,8 @@ def test_avi_strf_dims_and_topdown_and_no_strf():
 
 def test_fuzz_codec_mutations_raise_only_valueerror():
     """Random byte corruption of every container must yield either a
-    decode or ValueError — the contract all fake-gates rely on (found
-    for real: stdlib wave raises BARE RuntimeError on corrupt chunk
-    lengths)."""
+    decode or ValueError — the codecs' decode contract (found for real:
+    stdlib wave raises BARE RuntimeError on corrupt chunk lengths)."""
     import random
     rs = np.random.RandomState(5)
     img = rs.randint(0, 256, (9, 13, 3), dtype=np.uint8)
@@ -402,7 +196,6 @@ def test_fuzz_codec_mutations_raise_only_valueerror():
         (C.encode_wav(np.sin(np.linspace(0, 20, 500)), 8000),
          C.decode_wav),
         (C.encode_avi(vid, fps=4.0), C.decode_avi),
-        (C.encode_avi(vid, fps=4.0, codec="MJPG"), C.decode_avi),
     ]
     rng = random.Random(0)
     for base, dec in bases:
