@@ -6,16 +6,21 @@ The DAAT iterator machinery (`Qry.java:248-364`) is NOT ported (SURVEY.md
 lazy scoring = inner-join semantics, full-sort-truncate = orderBy().limit()
 (Spark's TakeOrderedAndProject does per-partition top-k + merge).
 
-One driver action per query at most: the term-leaf (df, ctf) prefetch
-(`_prefetch_stats`, one scan of the persisted term_stats table, skipped
-when every term is cached), after which leaf statistics are literals.
-Everything else is plan-internal: derived df/ctf for scoring
+One statistics round trip per search call at most: the term-leaf (df,
+ctf) prefetch (`_prefetch_stats`, one scan of the persisted term_stats
+table for the union of a call's uncached leaves — `parse_many` parses a
+whole query file first), after which leaf statistics are literals. The
+batch paths cache derived-arm statistics the same way (`_arm_stats_of`:
+one grouped collect over the persisted zipper frame when a call brings
+an arm not seen before), so a call that repeats runs no statistics job.
+Everything else is plan-internal: the per-query plan's derived df/ctf
 (`QrySopScore.java:96`, `InvList.java:166-167`) are global window
 aggregates over the derived list, so the zipper that produced it runs
-once; Indri default scores (`QrySopAnd.java:86-94`) become SQL expressions
-over doclen + those ctf values on the matchMin candidate frame. Global
-corpus stats (N, doc_count, sum_len per field — a handful of longs) are
-collected once at index build.
+once; Indri default scores (`QrySopAnd.java:86-94`) become SQL
+expressions over doclen + those ctf values on the matchMin candidate
+frame, with doclen carried from the candidates' own posting rows.
+Global corpus stats (N, doc_count, sum_len per field — a handful of
+longs) are collected once at index build.
 
 Query-file set-up adds no driver action of its own. The batch paths'
 per-call query tables are JVM-local `VALUES` relations
@@ -23,12 +28,12 @@ per-call query tables are JVM-local `VALUES` relations
 stages, and the segment readers declare their schemas and constant-fold
 their bucket filters (`indexer.segments.read_segments`). A steady
 `search_many` or `search_daat_many` call therefore runs only the jobs of
-its result, plus one per-arm ctf collect when Indri queries carry
-proximity arms (`_indri_batch_frame`).
+its result.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from contextlib import contextmanager
 from functools import cached_property, reduce
 
@@ -55,20 +60,32 @@ class Engine:
         self.parser = QueryParser(analyzer, default_field=default_field)
         self._iop_cache: dict[int, tuple[Node, DataFrame]] = {}
         self._leaf_stats: dict[tuple[str, str], tuple[int, int]] = {}
+        # (field, spec) → (df, ctf) of the batch paths' derived arms over
+        # this engine's postings; the attached store's decoded postings
+        # keep their own cache (`_store_arm_stats`)
+        self._arm_stats: dict[tuple[str, object], tuple[int, int]] = {}
         self._persisted: list[DataFrame] = []   # last search_many's frames
 
     # ------------------------------------------------------------- public --
 
     def parse(self, qstring: str) -> Node:
-        node = self.parser.parse(qstring, default_op=DEFAULT_OPS[self.model])
-        self._prefetch_stats(node)
-        return node
+        return self.parse_many([qstring])[0]
 
-    def _prefetch_stats(self, node: Node) -> None:
-        """Batch-fetch (df, ctf) for every uncached term leaf of the AST
-        in ONE collect over the persisted term_stats table — per-leaf
-        lookups would cost one scheduler round-trip each on a cluster."""
-        missing = {(n.term, n.field) for n in self._term_leaves(node)
+    def parse_many(self, qstrings: Iterable[str]) -> list[Node]:
+        """Parse a query file, then fetch (df, ctf) for the uncached
+        term leaves of ALL its queries in one collect — per-query
+        prefetches would cost one Spark job each."""
+        nodes = [self.parser.parse(q, default_op=DEFAULT_OPS[self.model])
+                 for q in qstrings]
+        self._prefetch_stats([leaf for n in nodes
+                              for leaf in self._term_leaves(n)])
+        return nodes
+
+    def _prefetch_stats(self, leaves: list[Node]) -> None:
+        """Batch-fetch (df, ctf) for every uncached term leaf in ONE
+        collect over the persisted term_stats table — per-leaf lookups
+        would cost one scheduler round-trip each on a cluster."""
+        missing = {(n.term, n.field) for n in leaves
                    if (n.term, n.field) not in self._leaf_stats}
         if not missing:
             return
@@ -132,10 +149,15 @@ class Engine:
         block-max DAAT path in `search_daat`. `as_of=G` pins every
         segment read to the store's snapshot at generation G (appends
         and deletions after G are invisible — indexer.merge time
-        travel); history reaches back to the compaction floor."""
+        travel); history reaches back to the compaction floor.
+
+        Derived-arm statistics that `search_segments_many` reads off the
+        store are cached per attachment: attach again after appending
+        to the store to have them recomputed."""
         self._seg_dir = seg_dir
         self._seg_buckets = num_buckets
         self._seg_as_of = as_of
+        self._store_arm_stats: dict[tuple[str, object], tuple[int, int]] = {}
 
     def search_daat(self, qstring: str, k: int = 100) -> DataFrame:
         """Bag-of-words BM25 top-k over the attached segment store via
@@ -182,8 +204,8 @@ class Engine:
             raise ValueError("search_daat_many is the BM25 fast path")
         bags: dict[str, dict[str, int]] = {}
         fields: set[str] = set()
-        for qid, q in queries.items():
-            bow = self._bow_of(self.parse(q))
+        for qid, node in zip(queries, self.parse_many(queries.values())):
+            bow = self._bow_of(node)
             if bow is None:
                 raise ValueError(
                     f"search_daat_many handles bag-of-words #SUM only; "
@@ -215,7 +237,9 @@ class Engine:
         semantics. decode=True returns, in place of the segments, an
         Engine of this one's model and parser whose postings are the
         decoded blocks (indexer.segments.decode_to_postings), so every
-        compiled plan runs off the store unchanged."""
+        compiled plan runs off the store unchanged. It shares this
+        engine's leaf statistics (the same term_stats table) and the
+        store's derived-arm cache, so it fetches no statistic twice."""
         import dataclasses
 
         from ..indexer.merge import deleted_docs_df, read_segments_merged
@@ -232,9 +256,12 @@ class Engine:
             return segs, deleted
         sub = dataclasses.replace(self.index,
                                   postings=decode_to_postings(segs))
-        return Engine(sub, self.model, params=self.p,
-                      analyzer=self.parser.analyzer,
-                      default_field=self.parser.default_field), deleted
+        eng = Engine(sub, self.model, params=self.p,
+                     analyzer=self.parser.analyzer,
+                     default_field=self.parser.default_field)
+        eng._leaf_stats = self._leaf_stats
+        eng._arm_stats = self._store_arm_stats
+        return eng, deleted
 
     def search_segments(self, qstring: str, k: int = 100) -> DataFrame:
         """The FULL query language (Boolean / Indri / BM25, structured
@@ -253,10 +280,10 @@ class Engine:
         `search_daat`'s docFreq-includes-deletes masking. `search_daat`
         is the bag-of-words fast path; this is the completeness path
         that makes the segment store a full index substitute."""
-        terms = sorted({n.term
-                        for n in self._term_leaves(self.parse(qstring))})
+        node = self.parse(qstring)
+        terms = sorted({n.term for n in self._term_leaves(node)})
         eng, deleted = self._attached_store(terms, decode=True)
-        s = eng.eval_sop(eng.parse(qstring)).where(F.col("score") >= 0)
+        s = eng.eval_sop(node).where(F.col("score") >= 0)
         if deleted is not None:
             s = s.join(F.broadcast(deleted), "doc_id", "left_anti")
         ext = eng._extid_expr()
@@ -281,8 +308,9 @@ class Engine:
         row_number/limit — fetch depth stays k no matter how many
         deletes are pending.
         → (qid, doc_id, ext_id, score, rank ≤ k)."""
-        terms = sorted({n.term for q in queries.values()
-                        for n in self._term_leaves(self.parse(q))})
+        terms = sorted({n.term
+                        for node in self.parse_many(queries.values())
+                        for n in self._term_leaves(node)})
         eng, deleted = self._attached_store(terms, decode=True)
         # the throwaway engine releases our last call's frames and leaves
         # its own for our next call (or close) to release
@@ -335,7 +363,9 @@ class Engine:
           against ONE postings scan, then groupBy(qid, doc_id);
         * proximity arms (#NEAR/#WINDOW/#SYN subtrees): ONE batched
           postings pass + ONE Arrow kernel stage evaluating every arm
-          (engine.batch_structured), derived df per arm broadcast back.
+          (engine.batch_structured), each arm's derived df riding a
+          broadcast (qid, arm_id, mult, df) table;
+        * both scored frames are unioned and aggregated ONCE.
 
         Flat Indri queries (`#AND/#WAND/#WSUM` over plain term arms, one
         field) take their own single-pass plan (_indri_batch_frame): the
@@ -369,8 +399,8 @@ class Engine:
         arm_ids: dict[tuple, int] = {}               # (field, spec) → arm_id
         indri_entries: list[tuple] = []   # (qid, mode, field, shares, zero)
         bool_entries: list[tuple] = []    # (qid, root, {(term, field)})
-        for qid, q in queries.items():
-            node = self.parse(q)
+        nodes = self.parse_many(queries.values())
+        for qid, node in zip(queries, nodes):
             if bow_fast_path and self.model == "bm25":
                 split = self._split_arms(node)
                 if split is not None:
@@ -416,14 +446,13 @@ class Engine:
             fast.append(self._bow_batch_frame(bow_rows))
         if prox_rows:
             fast.append(self._prox_batch_frame(prox_rows, arms))
-        if len(fast) == 2:
-            # a query mixing term and proximity arms has partial scores
-            # in both frames; #SUM is associative so re-aggregate
-            frames.append(fast[0].unionByName(fast[1])
+        if fast:
+            # a query mixing term and proximity arms has per-arm scores
+            # in both frames; #SUM is associative, so ONE aggregation
+            # over their union sums every arm of a (qid, doc_id)
+            frames.append(reduce(DataFrame.unionByName, fast)
                           .groupBy("qid", "doc_id")
                           .agg(F.sum("score").alias("score")))
-        elif fast:
-            frames.append(fast[0])
         if not frames:
             # every query was bag-of-words with all terms OOV (df=0): no
             # arm contributes. Return the empty result shape instead of
@@ -504,73 +533,83 @@ class Engine:
 
     def _prox_batch_frame(self, prox_rows: list[tuple],
                           arms: dict[int, tuple[str, object]]) -> DataFrame:
-        """(qid, arm_id, mult) rows + arm specs → (qid, doc_id, score):
-        every arm's derived posting list from ONE batched pass
-        (batch_structured.arm_postings_frame), derived df per arm as one
-        tiny aggregate broadcast back (`QrySopScore.java:96` — a derived
-        list is scored with its own df), BM25 per (arm, doc) × mult, then
-        ONE aggregation keyed (qid, doc_id).
+        """(qid, arm_id, mult) rows + arm specs → (qid, doc_id, score)
+        per (qid, arm, doc), for `_search_many` to aggregate: every arm's
+        derived posting list from ONE batched pass
+        (batch_structured.arm_postings_frame), BM25 per (arm, doc) ×
+        mult with the arm's own df (`QrySopScore.java:96` — a derived
+        list is scored with its own df). The df rides the broadcast
+        (qid, arm_id, mult, df) table, read from the engine's arm cache
+        (`_arm_stats_of`), as term df rides the bag-of-words table.
 
-        The zipped frame is persisted: it feeds both the stats aggregate
-        and the scoring join, and it is intersection-sized (≪ the scan),
-        so caching beats re-running the Arrow stage. The next call (or
-        `close`) releases it unless it re-persists the same plan."""
+        The zipped frame is persisted: on a first call it feeds both the
+        arm-stats collect and the scoring join, and it is
+        intersection-sized (≪ the scan), so caching beats re-running the
+        Arrow stage. The next call (or `close`) releases it unless it
+        re-persists the same plan."""
         from .batch_structured import arm_postings_frame
         spark = self.index.postings.sparkSession
         zipped = arm_postings_frame(self.index.postings, arms).persist()
         self._persisted.append(zipped)
-        stats = (zipped.groupBy("arm_id")
-                 .agg(F.count("*").alias("df")))
-        qa = local_frame(spark, prox_rows, "qid string, arm_id int, mult int")
-        j = (zipped.join(F.broadcast(stats), "arm_id")
-             .join(F.broadcast(qa), "arm_id"))
+        stats = self._arm_stats_of(zipped, arms)
+        qa = local_frame(spark, [(qid, aid, m, stats[aid][0])
+                                 for qid, aid, m in prox_rows],
+                         "qid string, arm_id int, mult int, df long")
+        j = zipped.join(F.broadcast(qa), "arm_id")
         fields = sorted({fld for fld, _ in arms.values()})
-        if len(fields) == 1:
-            st = self.index.stats_for(fields[0])
-            score = F.expr(f"{self._bm25_sql('df', st)} * mult")
-        else:
-            score = None
-            for fld in fields:
-                st = self.index.stats_for(fld)
-                s = F.expr(f"{self._bm25_sql('df', st)} * mult")
-                cond = F.col("field") == fld
-                score = (F.when(cond, s) if score is None
-                         else score.when(cond, s))
-            score = F.coalesce(score, F.lit(0.0))
-        return (j.groupBy("qid", "doc_id")
-                .agg(F.sum(score).alias("score")))
+        return j.select("qid", "doc_id",
+                        self._bm25_field_score(fields).alias("score"))
+
+    def _arm_stats_of(self, zipped: DataFrame,
+                      arms: dict[int, tuple[str, object]]
+                      ) -> dict[int, tuple[int, int]]:
+        """arm_id → (df, ctf) of a batch's derived arms, from the
+        engine's arm cache. A batch with an arm not cached yet fills the
+        cache by ONE groupBy(arm_id) collect over the persisted zipped
+        frame: a partial + final aggregate, so a hot arm's rows stay
+        spread over every task (a window partitioned by arm_id would put
+        them in one). An arm with no postings is (0, 0)."""
+        if any(key not in self._arm_stats for key in arms.values()):
+            rows = (zipped.groupBy("arm_id")
+                    .agg(F.count("*").alias("df"), F.sum("tf").alias("ctf"))
+                    .collect())
+            got = {r["arm_id"]: (int(r["df"]), int(r["ctf"])) for r in rows}
+            for aid, key in arms.items():
+                self._arm_stats[key] = got.get(aid, (0, 0))
+        return {aid: self._arm_stats[key] for aid, key in arms.items()}
 
     def _bow_batch_frame(self, bow_rows: list[tuple]) -> DataFrame:
-        """(qid, term, field, mult, df) rows → (qid, doc_id, score) via
-        one postings pass: scan pruned by the union of all query terms
+        """(qid, term, field, mult, df) rows → (qid, doc_id, score) per
+        (qid, term, doc), for `_search_many` to aggregate, via one
+        postings pass: scan pruned by the union of all query terms
         (parquet row-group / cache-batch skipping), broadcast hash join
-        (no postings shuffle), per-row BM25 as codegen'd arithmetic
-        (df rides the broadcast side — no stats subqueries), then ONE
-        partial+final aggregation keyed (qid, doc_id) — skew-free even
-        for stopword-grade terms."""
+        (no postings shuffle), per-row BM25 as codegen'd arithmetic (df
+        rides the broadcast side — no stats subqueries)."""
         spark = self.index.postings.sparkSession
         qt = local_frame(
             spark, bow_rows,
             "qid string, term string, field string, mult int, df long")
         terms = sorted({r[1] for r in bow_rows})
-        fields = {r[2] for r in bow_rows}
+        fields = sorted({r[2] for r in bow_rows})
         p = self.index.postings.where(F.col("term").isin(terms))
         joined = p.join(F.broadcast(qt), ["term", "field"])
-        # per-field avglen differs, so score per field then sum
+        return joined.select("qid", "doc_id",
+                             self._bm25_field_score(fields).alias("score"))
+
+    def _bm25_field_score(self, fields: list[str]) -> Column:
+        """BM25 × mult over rows carrying tf, doclen, df, mult and
+        field; per-field avglen differs, so a multi-field batch picks
+        each row's formula by its field."""
         if len(fields) == 1:
-            st = self.index.stats_for(next(iter(fields)))
-            score = F.expr(f"{self._bm25_sql('df', st)} * mult")
-        else:
-            score = None
-            for fld in sorted(fields):
-                st = self.index.stats_for(fld)
-                s = F.expr(f"{self._bm25_sql('df', st)} * mult")
-                cond = F.col("field") == fld
-                score = (F.when(cond, s) if score is None
-                         else score.when(cond, s))
-            score = F.coalesce(score, F.lit(0.0))
-        return (joined.groupBy("qid", "doc_id")
-                .agg(F.sum(score).alias("score")))
+            st = self.index.stats_for(fields[0])
+            return F.expr(f"{self._bm25_sql('df', st)} * mult")
+        score = None
+        for fld in fields:
+            st = self.index.stats_for(fld)
+            s = F.expr(f"{self._bm25_sql('df', st)} * mult")
+            cond = F.col("field") == fld
+            score = F.when(cond, s) if score is None else score.when(cond, s)
+        return F.coalesce(score, F.lit(0.0))
 
     # -- Indri / boolean one-pass batch fast paths ------------------------------
 
@@ -674,8 +713,9 @@ class Engine:
         ONE broadcast-joined postings pass + ONE aggregation — stage
         count constant in query count, mirroring the BM25 bow plan.
         Proximity arms (SDM shape) add ONE shared zipper pass
-        (batch_structured.arm_postings_frame) and a tiny per-arm ctf
-        collect, after which a derived arm is literally a term arm with
+        (batch_structured.arm_postings_frame) and read their ctf from
+        the engine's arm cache (one grouped collect for arms not seen
+        before), after which a derived arm is literally a term arm with
         its own stats (`QrySopScore.java:96`).
 
         The per-query plan (_indri_combine) outer-joins one frame per
@@ -704,10 +744,10 @@ class Engine:
         mu, lam = self.p.mu, self.p.lam
 
         # ---- proximity arms: ONE batched zipper pass for the whole
-        # batch; derived (ctf) per arm is a tiny aggregate of the
-        # persisted zipped frame collected as literals, so derived
-        # arms score and default EXACTLY like term arms
-        # (`QrySopScore.java:96` — a derived list carries its own stats)
+        # batch; derived ctf per arm comes from the engine's arm cache
+        # (`_arm_stats_of`) as literals, so derived arms score and
+        # default EXACTLY like term arms (`QrySopScore.java:96` — a
+        # derived list carries its own stats)
         arm_ids: dict[tuple, int] = {}
         for _, _, fld, _, prox, _ in entries:
             for spec in prox:
@@ -718,9 +758,8 @@ class Engine:
             arms = {aid: key for key, aid in arm_ids.items()}
             zipped = arm_postings_frame(self.index.postings, arms).persist()
             self._persisted.append(zipped)
-            for r in (zipped.groupBy("arm_id")
-                      .agg(F.sum("tf").alias("ctf")).collect()):
-                arm_ctf[r["arm_id"]] = int(r["ctf"])
+            arm_ctf = {aid: ctf for aid, (_, ctf)
+                       in self._arm_stats_of(zipped, arms).items()}
 
         rows: list[tuple] = []       # (qid, term, field, share, pmle, geo)
         prox_rows: list[tuple] = []  # (arm_id, qid, share, pmle, geo)
@@ -924,8 +963,10 @@ class Engine:
 
     def eval_sop(self, node: Node) -> DataFrame:
         """→ (doc_id, score) frame for a Sop subtree. Under Indri a frame
-        also carries `_ctf_<id>` for every derived-list #SCORE below it:
-        the combiners' default scores need that ctf on every candidate."""
+        also carries `_ctf_<id>` for every derived-list #SCORE below it,
+        and `_dl_<field>` when the subtree reads one field: the
+        combiners' default scores need that ctf and doclen on every
+        candidate."""
         if node.op == "score":
             return self._score(node)
         if node.op == "and":
@@ -967,8 +1008,10 @@ class Engine:
         else:  # unrankedboolean
             score = "1.0D"                           # QrySopScore.java:75-81
         cols = ["doc_id", f"{score} AS score"]
-        if self.model == "indri" and child.op != "term":
-            cols.append(f"{ctf} AS _ctf_{id(node)}")
+        if self.model == "indri":
+            cols.append(f"doclen AS `_dl_{child.field}`")
+            if child.op != "term":
+                cols.append(f"{ctf} AS _ctf_{id(node)}")
         return il.selectExpr(*cols)
 
     def _bm25_sql(self, df: str, st: dict) -> str:
@@ -1046,28 +1089,39 @@ class Engine:
         into its own `_s<i>` column, grouped by doc_id: every arg frame
         is read once, and over the doc_id-partitioned postings the
         grouping needs no exchange. A derived list's ctf (`_ctf_<id>`)
-        reaches every candidate through a global window max."""
+        reaches every candidate through a global window max.
+
+        A single-field subtree takes each candidate's doclen from its
+        own posting rows (`_dl_<field>`, carried through the union as a
+        max): every candidate has a posting in that field. A multi-field
+        subtree left-joins the doclens of every field it reads, since a
+        candidate can lack a posting in some field."""
         k = len(args)
         own = [[f"_ctf_{sid}" for sid in self._derived_sids(a)] for a in args]
         ctfs = [c for cs in own for c in cs]
+        fields = sorted({f for a in args for f in self._fields_of(a)})
+        dls = [f"_dl_{fields[0]}"] if len(fields) == 1 else []
         tagged = [self.eval_sop(a).selectExpr(
             "doc_id",
             *[f"{'score' if j == i else 'CAST(NULL AS DOUBLE)'} AS _s{j}"
               for j in range(k)],
             *[f"{c if c in own[i] else 'CAST(NULL AS BIGINT)'} AS {c}"
-              for c in ctfs]) for i, a in enumerate(args)]
-        cols = [f"_s{i}" for i in range(k)] + ctfs
+              for c in ctfs],
+            *[f"`{c}`" for c in dls]) for i, a in enumerate(args)]
+        cols = [f"_s{i}" for i in range(k)] + ctfs + dls
         j = (reduce(DataFrame.union, tagged).groupBy("doc_id")
-             .agg(*[F.max(c).alias(c) for c in cols]))
+             .agg(*[F.max(F.col(f"`{c}`")).alias(c) for c in cols]))
         if ctfs:
             j = j.selectExpr("doc_id", *cols[:k],
                              *[f"coalesce(max({c}) OVER (), 0) AS {c}"
-                               for c in ctfs])
-        # doclen columns for every field referenced by defaults in the subtree
-        for fld in sorted({f for a in args for f in self._fields_of(a)}):
-            j = j.join(self.index.doclens.where(F.col("field") == fld)
-                       .select("doc_id", F.col("doclen").alias(f"_dl_{fld}")),
-                       "doc_id", "left")
+                               for c in ctfs],
+                             *[f"`{c}`" for c in dls])
+        if not dls:
+            for fld in fields:
+                j = j.join(self.index.doclens.where(F.col("field") == fld)
+                           .select("doc_id",
+                                   F.col("doclen").alias(f"_dl_{fld}")),
+                           "doc_id", "left")
         vals = [f"coalesce(_s{i}, {self._default_sql(a)})"
                 for i, a in enumerate(args)]
         if mode == "geo":
@@ -1076,7 +1130,8 @@ class Engine:
         else:
             score = reduce(lambda acc, sv: f"({acc} + {_d(sv[0])} * {sv[1]})",
                            zip(shares, vals), "0.0D")
-        return j.selectExpr("doc_id", f"{score} AS score", *ctfs)
+        return j.selectExpr("doc_id", f"{score} AS score", *ctfs,
+                            *[f"`{c}`" for c in dls])
 
     def _fields_of(self, node: Node) -> set[str]:
         if node.op == "score":

@@ -11,6 +11,23 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def jobs_submitted(spark):
+    """→ probe(group, fn) → (fn(), ids of the Spark jobs fn submitted).
+    Each probe needs a job group name of its own: the status tracker
+    keeps every job a group ever ran."""
+    sc = spark.sparkContext
+
+    def probe(group, fn):
+        sc.setJobGroup(group, "job-count probe")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    return probe
+
+
+@pytest.fixture(scope="session")
 def corpus_rows():
     from search_engines_spark.corpus import generate_corpus
     return generate_corpus(n_docs=120, seed=42)

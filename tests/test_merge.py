@@ -76,18 +76,8 @@ def test_merged_read_is_term_pruned(spark, merged_dir):
     assert rows and {r["term"] for r in rows} <= {"creek", "farm"}
 
 
-def _jobs_submitted(spark, group, fn):
-    """→ (fn(), ids of the Spark jobs fn submitted)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "job-count probe")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_pruned_reads_build_without_jobs(spark, merged_dir):
+def test_pruned_reads_build_without_jobs(spark, merged_dir,
+                                         jobs_submitted):
     """Building the term-pruned readers submits no Spark job (declared
     schema: no footer inference; bucket filter constant-folded: no
     term-hashing collect), and every scan's partition filter names
@@ -99,8 +89,8 @@ def test_pruned_reads_build_without_jobs(spark, merged_dir):
             F.pmod(F.xxhash64("term"), F.lit(NUM_BUCKETS)).alias("b"))
         .collect()}
     for i, read in enumerate((read_segments, read_segments_merged)):
-        df, jobs = _jobs_submitted(
-            spark, f"pruned-read-{i}",
+        df, jobs = jobs_submitted(
+            f"pruned-read-{i}",
             lambda: read(spark, merged_dir, terms=terms,
                          num_buckets=NUM_BUCKETS))
         assert jobs == [], read.__name__
@@ -113,7 +103,8 @@ def test_pruned_reads_build_without_jobs(spark, merged_dir):
             assert {int(b) for b in got.split(",")} == want
 
 
-def test_deleted_docs_mixed_stamped_and_unstamped(spark, tmp_path):
+def test_deleted_docs_mixed_stamped_and_unstamped(spark, tmp_path,
+                                                  jobs_submitted):
     """A tombstone directory holding a file from before gen-stamping
     (doc_id only) and a stamped one reads the same rows as a
     mergeSchema read — unstamped rows count as generation 0 — at every
@@ -125,8 +116,8 @@ def test_deleted_docs_mixed_stamped_and_unstamped(spark, tmp_path):
         .write.mode("append").parquet(tomb)
     ref = spark.read.option("mergeSchema", "true").parquet(tomb)
     for as_of, ids in ((0, [1, 2]), (1, [1, 2, 7]), (None, [1, 2, 7])):
-        mask, jobs = _jobs_submitted(
-            spark, f"tombstones-{as_of}",
+        mask, jobs = jobs_submitted(
+            f"tombstones-{as_of}",
             lambda: deleted_docs_df(spark, d, as_of=as_of))
         assert jobs == []
         want = ref if as_of is None else ref.where(

@@ -192,7 +192,8 @@ def test_prune_counter_batch_stays_exact(spark, spark_index, seg_dir):
         _assert_matches_eval_sop(eng, q, got[qid], 3)
 
 
-def test_search_daat_steady_job_count(spark, spark_index, tmp_path_factory):
+def test_search_daat_steady_job_count(spark, spark_index, tmp_path_factory,
+                                      jobs_submitted):
     """A steady single-query DAAT call over a one-group store with one
     tombstone submits a pinned number of Spark jobs. The kernel's
     survivors are ranked by the final sort + limit, which plans as
@@ -208,15 +209,10 @@ def test_search_daat_steady_job_count(spark, spark_index, tmp_path_factory):
     eng.attach_segments(d, num_buckets=NUM_BUCKETS)
     q = "fickle creek farm"
     want = eng.search_daat(q, k=10).collect()  # warm: stats prefetch
-    sc = spark.sparkContext
-    sc.setJobGroup("daat_steady", "steady search_daat")
-    try:
-        got = eng.search_daat(q, k=10).collect()
-    finally:
-        sc.setJobGroup(None, None)
+    got, jobs = jobs_submitted(
+        "daat_steady", lambda: eng.search_daat(q, k=10).collect())
     assert got == want and 3 not in [r["doc_id"] for r in got]
-    assert len(sc.statusTracker().getJobIdsForGroup("daat_steady")) == \
-        STEADY_DAAT_JOBS
+    assert len(jobs) == STEADY_DAAT_JOBS
 
 
 def test_search_daat_plans_no_rank_window(spark, spark_index, seg_dir):
@@ -277,6 +273,34 @@ def test_search_segments_many_batch(spark, spark_index, seg_dir):
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], qid
         for g, w in zip(got, want):
             assert g["score"] == pytest.approx(w["score"], abs=1e-9)
+
+
+def test_segments_sub_engine_fetches_no_stats(spark_index, seg_dir,
+                                             monkeypatch):
+    """The decoded sub-engine shares the caller's leaf statistics: only
+    the caller fetches term statistics, once per call, and a repeated
+    call fetches none."""
+    fetched = []   # (fetching engine is the caller, leaves fetched)
+    real = Engine._prefetch_stats
+
+    def spy(self, *args):
+        before = len(self._leaf_stats)
+        real(self, *args)
+        if len(self._leaf_stats) > before:
+            fetched.append((self is eng, len(self._leaf_stats) - before))
+    monkeypatch.setattr(Engine, "_prefetch_stats", spy)
+    eng = Engine(spark_index, "bm25")
+    eng.attach_segments(seg_dir, num_buckets=NUM_BUCKETS)
+    queries = {"s1": "#sum( #near/2( fickle creek ) farm )",
+               "s2": "buffer overflow guard",
+               "s3": "#sum( #syn( voyager probe ) creek )"}
+    eng.search_segments_many(queries, k=5).collect()
+    assert [who for who, _ in fetched] == [True]
+    eng.search_segments_many(queries, k=5).collect()
+    eng.search_segments("#sum( #window/4( stage token ) index )",
+                        k=5).collect()
+    assert [who for who, _ in fetched] == [True, True]
+    eng.close()
 
 
 def test_search_segments_many_masks_deletes(spark, spark_index,
