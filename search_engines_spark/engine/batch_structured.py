@@ -31,6 +31,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..literals import sql_in, str_lit
 from ..oracle import near_positions, window_positions
 from ..parser import Node
 
@@ -94,11 +95,10 @@ def arm_postings_frame(postings: DataFrame,
         by_field.setdefault(field, []).append((arm_id, spec))
         pairs |= term_pairs_of(spec, field)
 
-    cond = None
-    for fld in sorted(by_field):
-        terms = sorted({t for t, f in pairs if f == fld})
-        c = (F.col("field") == fld) & F.col("term").isin(terms)
-        cond = c if cond is None else (cond | c)
+    cond = " OR ".join(
+        f"(field = {str_lit(fld)} AND "
+        f"{sql_in('term', sorted({t for t, f in pairs if f == fld}))})"
+        for fld in sorted(by_field))
 
     scan = postings.where(cond).select("term", "field", "doc_id",
                                        "positions", "doclen")
@@ -116,9 +116,9 @@ def arm_postings_frame(postings: DataFrame,
     grouped = (scan
                .repartition(n_part, "doc_id")
                .groupBy("doc_id", "field")
-               .agg(F.collect_list("term").alias("_terms"),
-                    F.collect_list("positions").alias("_poss"),
-                    F.first("doclen").alias("doclen")))
+               .agg(F.expr("collect_list(term) AS _terms"),
+                    F.expr("collect_list(positions) AS _poss"),
+                    F.expr("first(doclen) AS doclen")))
 
     out_schema = "arm_id int, doc_id long, field string, tf int, doclen long"
 

@@ -29,6 +29,17 @@ stages, and the segment readers declare their schemas and constant-fold
 their bucket filters (`indexer.segments.read_segments`). A steady
 `search_many` or `search_daat_many` call therefore runs only the jobs of
 its result.
+
+The batch paths plan from SQL expression strings. Every filter, score,
+default-score map and rank/ext_id projection of `search_many` and
+`search_daat_many` is one `where` / `selectExpr` / `F.expr` string
+with its literals written by `literals` (`str_lit`, `double_lit`,
+`sql_in`); DataFrame calls remain only where the plan has structure
+(scans, joins, unions, groupBy, the Arrow stages). In classic PySpark
+each `Column` the driver builds is a Py4J round trip, so a tree of
+`F.lit` / `F.struct` / `isin` Columns cost one per literal, and the
+planning of a query file grew with its terms and arms; a string costs
+one whatever its size, and Catalyst resolves it to the same plan.
 """
 
 from __future__ import annotations
@@ -37,11 +48,11 @@ from collections.abc import Iterable
 from contextlib import contextmanager
 from functools import cached_property, reduce
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..analysis import Analyzer, CANONICAL
 from ..indexer.build import Index
-from ..literals import double_lit as _d, local_frame, str_lit as _q
+from ..literals import double_lit as _d, local_frame, sql_in, str_lit as _q
 from ..oracle import DEFAULT_OPS, Models
 from ..parser import Node, QueryParser
 from .proximity import near_frame, syn_frame, window_frame
@@ -90,8 +101,7 @@ class Engine:
         if not missing:
             return
         terms = sorted({t for t, _ in missing})
-        rows = (self.index.term_stats
-                .where(F.col("term").isin(terms))
+        rows = (self.index.term_stats.where(sql_in("term", terms))
                 .select("term", "field", "df", "ctf").collect())
         found = {(r["term"], r["field"]): (r["df"], r["ctf"]) for r in rows}
         for key in missing:
@@ -103,13 +113,13 @@ class Engine:
         node = self.parse(qstring)
         with self._plan_scope():
             s = self.eval_sop(node).where(F.col("score") >= 0)  # QryEval.java:437
-        ext = self._extid_expr()
+        ext = self._extid_sql()
         if ext is not None:
             # ext_id is order-isomorphic to doc_id (Index.extid_docid_fmt):
             # the ScoreList tie-break runs on doc_id and ext_id becomes a
             # projection — top-k never touches the corpus-sized doc_map
             return (s.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                    .select("doc_id", ext.alias("ext_id"), "score"))
+                    .selectExpr("doc_id", f"{ext} AS ext_id", "score"))
         res = s.join(self._doc_map(), "doc_id")
         return (res.orderBy(F.desc("score"), F.asc("ext_id")).limit(k)
                 .select("doc_id", "ext_id", "score"))
@@ -168,10 +178,10 @@ class Engine:
         doc_id-vs-ext_id tie-break (see daat module docstring).
         → (doc_id, ext_id, score), score desc / doc_id asc."""
         top = self._daat_topk({qstring: qstring}, k)
-        ext = self._extid_expr()
+        ext = self._extid_sql()
         if ext is not None:
             return (top.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                    .select("doc_id", ext.alias("ext_id"), "score"))
+                    .selectExpr("doc_id", f"{ext} AS ext_id", "score"))
         return (top.join(self._doc_map(), "doc_id")
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                 .select("doc_id", "ext_id", "score"))
@@ -188,12 +198,11 @@ class Engine:
         (see daat module docstring for the ext_id-coincidence argument)."""
         from .daat import rank_topk
         top = rank_topk(self._daat_topk(queries, k), k)
-        ext = self._extid_expr()
-        if ext is not None:
-            top = top.withColumn("ext_id", ext)
-        else:
-            top = top.join(self._doc_map(), "doc_id")
-        return top.select("qid", "doc_id", "ext_id", "score", "rank")
+        ext = self._extid_sql()
+        if ext is None:
+            top, ext = top.join(self._doc_map(), "doc_id"), "ext_id"
+        return top.selectExpr("qid", "doc_id", f"{ext} AS ext_id", "score",
+                              "rank")
 
     def _daat_topk(self, queries: dict[str, str], k: int) -> DataFrame:
         """The DAAT kernel over the attached store for a batch of
@@ -286,10 +295,10 @@ class Engine:
         s = eng.eval_sop(node).where(F.col("score") >= 0)
         if deleted is not None:
             s = s.join(F.broadcast(deleted), "doc_id", "left_anti")
-        ext = eng._extid_expr()
+        ext = eng._extid_sql()
         if ext is not None:
             return (s.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                    .select("doc_id", ext.alias("ext_id"), "score"))
+                    .selectExpr("doc_id", f"{ext} AS ext_id", "score"))
         res = s.join(eng._doc_map(), "doc_id")
         return (res.orderBy(F.desc("score"), F.asc("ext_id")).limit(k)
                 .select("doc_id", "ext_id", "score"))
@@ -334,8 +343,8 @@ class Engine:
             return self.index.doc_map
         return self.index.docs.select("doc_id", "ext_id")
 
-    def _extid_expr(self) -> Column | None:
-        """ext_id as a pure doc_id expression when the index declares
+    def _extid_sql(self) -> str | None:
+        """ext_id as a pure doc_id SQL expression when the index declares
         `extid_docid_fmt` ("prefix:width" → concat(prefix, lpad(doc_id,
         width, '0')), order-isomorphic to doc_id) — the top-k paths then
         skip the doc_map join entirely; None = join resolution."""
@@ -343,8 +352,8 @@ class Engine:
         if not fmt:
             return None
         prefix, width = fmt.rsplit(":", 1)
-        return F.expr(f"concat({_q(prefix)}, "
-                      f"lpad(CAST(doc_id AS STRING), {int(width)}, '0'))")
+        return (f"concat({_q(prefix)}, "
+                f"lpad(CAST(doc_id AS STRING), {int(width)}, '0'))")
 
     def search_many(self, queries: dict[str, str], k: int = 100,
                     bow_fast_path: bool = True,
@@ -391,7 +400,6 @@ class Engine:
     def _search_many(self, queries: dict[str, str], k: int,
                      bow_fast_path: bool,
                      exclude_docs: DataFrame | None) -> DataFrame:
-        from pyspark.sql import Window
         frames = []
         bow_rows: list[tuple] = []    # (qid, term, field, mult, df)
         prox_rows: list[tuple] = []   # (qid, arm_id, mult)
@@ -434,9 +442,8 @@ class Engine:
                 if ent is not None:
                     bool_entries.append(ent)
                     continue
-            frames.append(self.eval_sop(node)
-                          .where(F.col("score") >= 0)
-                          .select("doc_id", "score", F.lit(qid).alias("qid")))
+            frames.append(self.eval_sop(node).where("score >= 0")
+                          .selectExpr("doc_id", "score", f"{_q(qid)} AS qid"))
         if indri_entries:
             frames.append(self._indri_batch_frame(indri_entries))
         if bool_entries:
@@ -452,7 +459,7 @@ class Engine:
             # over their union sums every arm of a (qid, doc_id)
             frames.append(reduce(DataFrame.unionByName, fast)
                           .groupBy("qid", "doc_id")
-                          .agg(F.sum("score").alias("score")))
+                          .agg(F.expr("sum(score) AS score")))
         if not frames:
             # every query was bag-of-words with all terms OOV (df=0): no
             # arm contributes. Return the empty result shape instead of
@@ -466,22 +473,19 @@ class Engine:
         if exclude_docs is not None:
             u = u.join(F.broadcast(exclude_docs.select("doc_id")),
                        "doc_id", "left_anti")
-        ext = self._extid_expr()
-        if ext is not None:
-            # tie-break on doc_id (order-isomorphic, Index.extid_docid_fmt)
-            # and project ext_id AFTER the per-query limit: the batch plan
-            # carries k·|Q| ids to resolution, not every scored candidate
-            w = Window.partitionBy("qid").orderBy(F.desc("score"),
-                                                  F.asc("doc_id"))
-            return (u.withColumn("rank", F.row_number().over(w))
-                    .where(F.col("rank") <= k)
-                    .withColumn("ext_id", ext)
-                    .select("qid", "doc_id", "ext_id", "score", "rank"))
-        u = u.join(self._doc_map(), "doc_id")
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("ext_id"))
-        return (u.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select("qid", "doc_id", "ext_id", "score", "rank"))
+        # with an ext_id expression the tie-break is on doc_id
+        # (order-isomorphic, Index.extid_docid_fmt) and ext_id is
+        # projected AFTER the per-query limit: the batch plan carries
+        # k·|Q| ids to resolution, not every scored candidate
+        ext, tie = self._extid_sql(), "doc_id"
+        if ext is None:
+            u = u.join(self._doc_map(), "doc_id")
+            ext = tie = "ext_id"
+        return (u.selectExpr("*", f"row_number() OVER (PARTITION BY qid "
+                                  f"ORDER BY score DESC, {tie} ASC) AS rank")
+                .where(f"rank <= {int(k)}")
+                .selectExpr("qid", "doc_id", f"{ext} AS ext_id", "score",
+                            "rank"))
 
     def _bow_of(self, node: Node) -> dict[tuple[str, str], int] | None:
         """{(term, field): multiplicity} when the tree is `#SUM` of plain
@@ -557,8 +561,8 @@ class Engine:
                          "qid string, arm_id int, mult int, df long")
         j = zipped.join(F.broadcast(qa), "arm_id")
         fields = sorted({fld for fld, _ in arms.values()})
-        return j.select("qid", "doc_id",
-                        self._bm25_field_score(fields).alias("score"))
+        return j.selectExpr("qid", "doc_id",
+                            f"{self._bm25_field_sql(fields)} AS score")
 
     def _arm_stats_of(self, zipped: DataFrame,
                       arms: dict[int, tuple[str, object]]
@@ -571,7 +575,7 @@ class Engine:
         them in one). An arm with no postings is (0, 0)."""
         if any(key not in self._arm_stats for key in arms.values()):
             rows = (zipped.groupBy("arm_id")
-                    .agg(F.count("*").alias("df"), F.sum("tf").alias("ctf"))
+                    .agg(F.expr("count(1) AS df"), F.expr("sum(tf) AS ctf"))
                     .collect())
             got = {r["arm_id"]: (int(r["df"]), int(r["ctf"])) for r in rows}
             for aid, key in arms.items():
@@ -591,25 +595,22 @@ class Engine:
             "qid string, term string, field string, mult int, df long")
         terms = sorted({r[1] for r in bow_rows})
         fields = sorted({r[2] for r in bow_rows})
-        p = self.index.postings.where(F.col("term").isin(terms))
+        p = self.index.postings.where(sql_in("term", terms))
         joined = p.join(F.broadcast(qt), ["term", "field"])
-        return joined.select("qid", "doc_id",
-                             self._bm25_field_score(fields).alias("score"))
+        return joined.selectExpr("qid", "doc_id",
+                                 f"{self._bm25_field_sql(fields)} AS score")
 
-    def _bm25_field_score(self, fields: list[str]) -> Column:
+    def _bm25_field_sql(self, fields: list[str]) -> str:
         """BM25 × mult over rows carrying tf, doclen, df, mult and
-        field; per-field avglen differs, so a multi-field batch picks
-        each row's formula by its field."""
-        if len(fields) == 1:
-            st = self.index.stats_for(fields[0])
-            return F.expr(f"{self._bm25_sql('df', st)} * mult")
-        score = None
-        for fld in fields:
-            st = self.index.stats_for(fld)
-            s = F.expr(f"{self._bm25_sql('df', st)} * mult")
-            cond = F.col("field") == fld
-            score = F.when(cond, s) if score is None else score.when(cond, s)
-        return F.coalesce(score, F.lit(0.0))
+        field, as a SQL expression; per-field avglen differs, so a
+        multi-field batch picks each row's formula by its field."""
+        scores = {fld: f"{self._bm25_sql('df', self.index.stats_for(fld))}"
+                       f" * mult" for fld in fields}
+        if len(scores) == 1:
+            return scores[fields[0]]
+        cases = " ".join(f"WHEN field = {_q(fld)} THEN {s}"
+                         for fld, s in scores.items())
+        return f"coalesce(CASE {cases} END, 0.0D)"
 
     # -- Indri / boolean one-pass batch fast paths ------------------------------
 
@@ -741,7 +742,6 @@ class Engine:
         1e-9."""
         from .batch_structured import arm_postings_frame
         spark = self.index.postings.sparkSession
-        mu, lam = self.p.mu, self.p.lam
 
         # ---- proximity arms: ONE batched zipper pass for the whole
         # batch; derived ctf per arm comes from the engine's arm cache
@@ -763,7 +763,7 @@ class Engine:
 
         rows: list[tuple] = []       # (qid, term, field, share, pmle, geo)
         prox_rows: list[tuple] = []  # (arm_id, qid, share, pmle, geo)
-        map_entries: list[Column] = []
+        map_entries: list[str] = []  # "qid, array((sh, pm), ...)" per query
         geo_qids, zero_qids = [], []
         for qid, mode, fld, shares, prox, zero in entries:
             c = float(self.index.stats_for(fld)["sum_len"])
@@ -773,8 +773,7 @@ class Engine:
             for term, share in shares.items():
                 pmle = self._leaf_stats[(term, fld)][1] / c
                 rows.append((qid, term, fld, share, pmle, mode == "geo"))
-                arr.append(F.struct(F.lit(share).alias("sh"),
-                                    F.lit(pmle).alias("pm")))
+                arr.append((share, pmle))
             for spec, share in prox.items():
                 ctf = arm_ctf.get(arm_ids[(fld, spec)], 0)
                 if ctf == 0:   # empty at runtime: same rules as ctf=0 terms
@@ -784,12 +783,13 @@ class Engine:
                 pmle = ctf / c
                 prox_rows.append((arm_ids[(fld, spec)], qid, share, pmle,
                                   mode == "geo"))
-                arr.append(F.struct(F.lit(share).alias("sh"),
-                                    F.lit(pmle).alias("pm")))
+                arr.append((share, pmle))
             if zero:
                 zero_qids.append(qid)
             if arr:
-                map_entries += [F.lit(qid), F.array(*arr)]
+                structs = ", ".join(f"named_struct('sh', {_d(sh)}, "
+                                    f"'pm', {_d(pm)})" for sh, pm in arr)
+                map_entries.append(f"{_q(qid)}, array({structs})")
         if not rows and not prox_rows:
             return local_frame(spark, [],
                                "qid string, doc_id long, score double")
@@ -800,7 +800,7 @@ class Engine:
                 spark, rows, "qid string, term string, field string, "
                              "share double, pmle double, geo boolean"))
             p = self.index.postings.where(
-                F.col("term").isin(sorted({r[1] for r in rows})))
+                sql_in("term", sorted({r[1] for r in rows})))
             present = p.join(qt, ["term", "field"]).select(*cols)
         if prox_rows:
             pqt = F.broadcast(local_frame(
@@ -808,34 +808,25 @@ class Engine:
                                   "pmle double, geo boolean"))
             j2 = zipped.join(pqt, "arm_id").select(*cols)
             present = j2 if present is None else present.unionByName(j2)
-        p_tf = ((1 - lam) * (F.col("tf") + mu * F.col("pmle"))
-                / (F.col("doclen") + F.lit(mu)) + lam * F.col("pmle"))
-        p_0 = ((1 - lam) * (mu * F.col("pmle"))
-               / (F.col("doclen") + F.lit(mu)) + lam * F.col("pmle"))
-        adj = F.when(F.col("geo"),
-                     F.col("share") * (F.log(p_tf) - F.log(p_0))) \
-               .otherwise(F.col("share") * (p_tf - p_0))
+        p_tf = self._indri_p_sql("tf", "pmle", "doclen")
+        p_0 = self._indri_p_sql("0", "pmle", "doclen")
+        adj = (f"CASE WHEN geo THEN share * (ln({p_tf}) - ln({p_0})) "
+               f"ELSE share * ({p_tf} - {p_0}) END")
         g = (present.groupBy("qid", "doc_id")
-             .agg(F.sum(adj).alias("adj"),
-                  F.first("doclen").alias("doclen")))
-        qmap = F.create_map(*map_entries)
-        arms_of = F.element_at(qmap, F.col("qid"))
-
-        def dflt(x):
-            return ((1 - lam) * (mu * x["pm"])
-                    / (F.col("doclen") + F.lit(mu)) + lam * x["pm"])
-
-        base_geo = F.aggregate(arms_of, F.lit(0.0),
-                               lambda acc, x: acc + x["sh"] * F.log(dflt(x)))
-        base_sum = F.aggregate(arms_of, F.lit(0.0),
-                               lambda acc, x: acc + x["sh"] * dflt(x))
-        score = F.when(F.col("qid").isin(geo_qids),
-                       F.exp(F.col("adj") + base_geo)) \
-                 .otherwise(F.col("adj") + base_sum)
+             .agg(F.expr(f"sum({adj}) AS adj"),
+                  F.expr("first(doclen) AS doclen")))
+        arms_of = f"element_at(map({', '.join(map_entries)}), qid)"
+        dflt = self._indri_p_sql("0", "x.pm", "doclen")
+        base_geo = (f"aggregate({arms_of}, 0.0D, "
+                    f"(acc, x) -> acc + x.sh * ln({dflt}))")
+        base_sum = (f"aggregate({arms_of}, 0.0D, "
+                    f"(acc, x) -> acc + x.sh * {dflt})")
+        score = (f"CASE WHEN {sql_in('qid', geo_qids)} "
+                 f"THEN exp(adj + {base_geo}) ELSE adj + {base_sum} END")
         if zero_qids:
-            score = F.when(F.col("qid").isin(zero_qids), F.lit(0.0)) \
-                     .otherwise(score)
-        return g.select("qid", "doc_id", score.alias("score"))
+            score = (f"CASE WHEN {sql_in('qid', zero_qids)} THEN 0.0D "
+                     f"ELSE {score} END")
+        return g.selectExpr("qid", "doc_id", f"{score} AS score")
 
     def _bool_batch_frame(self, entries: list[tuple]) -> DataFrame:
         """Flat-boolean batch: → (qid, doc_id, score) from one postings
@@ -851,24 +842,23 @@ class Engine:
         qt = F.broadcast(local_frame(
             spark, rows, "qid string, term string, field string"))
         p = self.index.postings.where(
-            F.col("term").isin(sorted({t for _, t, _ in rows})))
+            sql_in("term", sorted({t for _, t, _ in rows})))
         g = (p.join(qt, ["term", "field"])
              .groupBy("qid", "doc_id")
-             .agg(F.min("tf").alias("_min_tf"), F.max("tf").alias("_max_tf"),
-                  F.countDistinct("term", "field").alias("_nt")))
+             .agg(F.expr("min(tf) AS _min_tf"), F.expr("max(tf) AS _max_tf"),
+                  F.expr("count(DISTINCT term, field) AS _nt")))
         if and_entries:
-            need = F.create_map(*[c for qid, pairs in and_entries
-                                  for c in (F.lit(qid), F.lit(len(pairs)))])
-            and_list = [qid for qid, _ in and_entries]
-            g = g.where(~F.col("qid").isin(and_list)
-                        | (F.col("_nt") == F.element_at(need, F.col("qid"))))
-            tf_score = F.when(F.col("qid").isin(and_list), F.col("_min_tf")) \
-                        .otherwise(F.col("_max_tf"))
+            need = ", ".join(f"{_q(qid)}, {len(pairs)}"
+                             for qid, pairs in and_entries)
+            is_and = sql_in("qid", [qid for qid, _ in and_entries])
+            g = g.where(f"NOT ({is_and}) "
+                        f"OR _nt = element_at(map({need}), qid)")
+            tf_score = f"CASE WHEN {is_and} THEN _min_tf ELSE _max_tf END"
         else:
-            tf_score = F.col("_max_tf")
-        score = (F.lit(1.0) if self.model == "unrankedboolean"
-                 else tf_score.cast("double"))
-        return g.select("qid", "doc_id", score.alias("score"))
+            tf_score = "_max_tf"
+        score = ("1.0D" if self.model == "unrankedboolean"
+                 else f"CAST({tf_score} AS DOUBLE)")
+        return g.selectExpr("qid", "doc_id", f"{score} AS score")
 
     # ------------------------------------------------------ Iop compilation --
 
@@ -952,8 +942,8 @@ class Engine:
         if key not in self._leaf_stats:
             # a leaf parse() did not prefetch: fetch this one term
             rows = (self.index.term_stats
-                    .where(F.col("term") == node.term)
-                    .where(F.col("field") == node.field)
+                    .where(f"term = {_q(node.term)} AND "
+                           f"field = {_q(node.field)}")
                     .collect())
             self._leaf_stats[key] = ((rows[0]["df"], rows[0]["ctf"])
                                      if rows else (0, 0))
@@ -1028,7 +1018,11 @@ class Engine:
     def _indri_sql(self, tf: str, ctf: str, doclen: str, st: dict) -> str:
         """`QrySopScore.java:140-161`; tf=0 ⇒ the default score
         (`:123-138`). All arguments are SQL operands."""
-        pmle = f"({ctf} / {_d(st['sum_len'])})"
+        return self._indri_p_sql(tf, f"({ctf} / {_d(st['sum_len'])})", doclen)
+
+    def _indri_p_sql(self, tf: str, pmle: str, doclen: str) -> str:
+        """The smoothed Indri probability over SQL operands tf, pmle
+        (ctf / collection length) and doclen."""
         mu, lam = self.p.mu, self.p.lam
         return (f"({_d(1 - lam)} * ({tf} + {_d(mu)} * {pmle})"
                 f" / ({doclen} + {_d(mu)}) + {_d(lam)} * {pmle})")

@@ -40,6 +40,14 @@ directory pruning + parquet min/max on `term` — and scores inside one
    `assign_dense_ids` on the ext-id key).  When they differ, re-sort
    the k returned rows by ext_id after joining `docs` — k rows, free.
 
+The driver plans the kernel's input from SQL strings: the segment
+reader's bucket and term filter (`indexer.segments.read_segments`), the
+block projection and pk explode, the tombstone pk and the rank window
+are each one expression string, so planning a query file costs a
+number of Py4J round trips fixed by the plan's shape, not one per
+term. The tombstone mask is read as is: a doc deleted twice simply
+appears twice in its cogroup side, which `np.isin` ignores.
+
 Rank-identity vs `Engine.search` is the test gate
 (tests/test_segments_daat.py); the pruning only ever skips strides whose
 bound is strictly below θ, so results are exact, not approximate.
@@ -51,10 +59,10 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 
 from ..indexer.codec import varbyte_decode, varbyte_encode
-from ..literals import local_frame
+from ..literals import local_frame, sql_in, str_lit
 from ..oracle import Models
 
 STRIDE = 4096  # docs per stride; pruning granularity
@@ -146,24 +154,22 @@ def _blocks_by_pk(segments: DataFrame, terms: list[str], field: str,
     block [min,max] metadata (strides of its own pk only, so a 2-pk
     narrow block is scored exactly once per posting globally)."""
     span = stride * STRIDES_PER_PART
-    base = (segments
-            .where((F.col("field") == field) & F.col("term").isin(terms))
-            .select(*_BLOCK_COLS)
-            .withColumn("pk0", (F.col("min_docid") / span).cast("long"))
-            .withColumn("pk1", (F.col("max_docid") / span).cast("long")))
+    pk0 = f"CAST(min_docid / {span} AS BIGINT)"
+    pk1 = f"CAST(max_docid / {span} AS BIGINT)"
+    base = segments.where(f"field = {str_lit(field)} AND "
+                          f"{sql_in('term', terms)}")
+    explode = f"explode(sequence({pk0}, {pk1})) AS pk"
     if n_docs and n_docs <= 3 * span:
         # ≤3 pk groups exist in the whole corpus → no block can span
         # >2 pks... except one touching pks {0,1,2}; route everything
         # through the narrow explode (≤3 copies, bounded) and skip the
         # wide branch's extra scan+Arrow stage — at interactive corpus
         # sizes that stage is pure scheduler-floor cost on every batch
-        return (base.withColumn("pk", F.explode(F.sequence("pk0", "pk1")))
-                .drop("pk0", "pk1"))
-    narrow = (base.where(F.col("pk1") - F.col("pk0") <= 1)
-              .withColumn("pk", F.explode(F.sequence("pk0", "pk1")))
-              .drop("pk0", "pk1"))
-    wide = (base.where(F.col("pk1") - F.col("pk0") > 1)
-            .drop("pk0", "pk1")
+        return base.selectExpr(*_BLOCK_COLS, explode)
+    narrow = (base.where(f"{pk1} - {pk0} <= 1")
+              .selectExpr(*_BLOCK_COLS, explode))
+    wide = (base.where(f"{pk1} - {pk0} > 1")
+            .select(*_BLOCK_COLS)
             .mapInPandas(_split_wide_kernel(span),
                          schema=_BLOCK_SCHEMA_PK))
     return narrow.unionByName(wide)
@@ -212,9 +218,8 @@ def _apply_with_tombstones(blocks: DataFrame, deleted, stride: int,
                                                        int(key[0])),
                                schema=schema))
     tomb = (deleted
-            .withColumn("pk", ((F.col("doc_id") / stride).cast("long")
-                               / STRIDES_PER_PART).cast("long"))
-            .select("pk", "doc_id")
+            .selectExpr(f"CAST(CAST(doc_id / {stride} AS BIGINT) / "
+                        f"{STRIDES_PER_PART} AS BIGINT) AS pk", "doc_id")
             .repartition(n_part, "pk"))
 
     def run(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -397,6 +402,6 @@ def rank_topk(top: DataFrame, k: int) -> DataFrame:
     """(qid, doc_id, score) kernel survivors → the same columns plus
     `rank` ≤ k per qid, by score desc / doc_id asc: one per-qid
     `row_number` window."""
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (top.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return (top.selectExpr("*", "row_number() OVER (PARTITION BY qid "
+                                "ORDER BY score DESC, doc_id ASC) AS rank")
+            .where(f"rank <= {int(k)}"))

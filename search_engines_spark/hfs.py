@@ -59,13 +59,14 @@ __all__ = [
 ]
 
 
-_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
+_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:/")
 
 
 def has_scheme(path: str) -> bool:
     """True for URI-style paths — both `scheme://...` and the
-    single-slash `scheme:/...` form Hadoop's `Path.toString()` emits
-    (a bare POSIX path never starts with `name:`)."""
+    single-slash `scheme:/...` form Hadoop's `Path.toString()` emits.
+    A relative POSIX path may hold a colon (`a:b/journal`); without the
+    `:/` it is a local path, not a URI."""
     return bool(_SCHEME_RE.match(path))
 
 

@@ -291,6 +291,18 @@ def _collect_corpus_stats(doclens: DataFrame, n_docs: int) -> dict:
                          "sum_len": r["sum_len"]} for r in rows}
 
 
+def _term_stats(postings: DataFrame, cache: bool) -> DataFrame:
+    """The (term, field, df, ctf) table. Cached, it is persisted next to
+    its postings and filled here, at build: every query's stats prefetch
+    is then one cached scan, and the first one of a session does not run
+    the postings aggregate (nor fill the postings cache) inside a query."""
+    term_stats = build_term_stats(postings)
+    if cache:
+        term_stats = term_stats.persist()
+        term_stats.count()
+    return term_stats
+
+
 def build_index_frames(docs: DataFrame,
                        extra_fields: dict[str, str] | None = None,
                        cache: bool = True, builder: str = "jvm",
@@ -322,15 +334,13 @@ def build_index_frames(docs: DataFrame,
         postings = postings.persist()
         doclens = doclens.persist()
         doc_map = doc_map.persist()
-    # persisted next to its postings: every query's stats prefetch is
-    # then one cached scan, not a filter + aggregate over the postings
-    term_stats = build_term_stats(postings)
+    term_stats = _term_stats(postings, cache)
     n_docs = docs.count()
     idx = Index(
         docs=docs.drop("_tokens"),
         doclens=doclens,
         postings=postings,
-        term_stats=term_stats.persist() if cache else term_stats,
+        term_stats=term_stats,
         corpus_stats=_collect_corpus_stats(doclens, n_docs),
         doc_map=doc_map,
         extid_docid_fmt=extid_docid_fmt,
@@ -368,15 +378,13 @@ def build_index_frames_analyzed(docs: DataFrame, analyzer,
         postings = postings.persist()
         doclens = doclens.persist()
         doc_map = doc_map.persist()
-    # persisted next to its postings: every query's stats prefetch is
-    # then one cached scan, not a filter + aggregate over the postings
-    term_stats = build_term_stats(postings)
+    term_stats = _term_stats(postings, cache)
     n_docs = docs_out.count()
     return Index(
         docs=docs_out,
         doclens=doclens,
         postings=postings,
-        term_stats=term_stats.persist() if cache else term_stats,
+        term_stats=term_stats,
         corpus_stats=_collect_corpus_stats(doclens, n_docs),
         doc_map=doc_map,
         extid_docid_fmt=extid_docid_fmt,

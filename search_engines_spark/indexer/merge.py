@@ -57,6 +57,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..literals import local_frame, sql_in
 from .build import POSTINGS_SCHEMA
 from .segments import (SEGMENT_SCHEMA, _encode_partition, _fingerprint,
                        bucket_of, journal_append, journal_read, read_segments)
@@ -155,7 +156,8 @@ def append_segments(postings: DataFrame, seg_dir: str,
                     "postings": m.get("postings", 0)}
     gen = max([int(m["gen"]) for m in manifest if "gen" in m], default=0) + 1
     out = _gen_path(seg_dir, gen)
-    src = postings.withColumn("bucket", bucket_of("term", num_buckets))
+    src = postings.withColumn("bucket",
+                              F.expr(bucket_of("term", num_buckets)))
     part = (src.repartitionByRange(num_buckets, "bucket", "term", "doc_id")
             .sortWithinPartitions("bucket", "term", "field", "doc_id")
             .select("term", "field", "bucket", "doc_id", "tf",
@@ -259,12 +261,12 @@ def read_segments_merged(spark: SparkSession, seg_dir: str,
                                           f"bucket={b}")):
                 override[b] = txn
     if override:
-        df = df.where(~F.col("bucket").isin(sorted(override)))
+        df = df.where(f"NOT {sql_in('bucket', sorted(override))}")
         for txn in sorted(set(override.values())):
             bks = sorted(b for b, t in override.items() if t == txn)
             s = read_segments(spark, _txn_path(seg_dir, txn),
                               terms=terms, num_buckets=num_buckets)
-            df = df.unionByName(s.where(F.col("bucket").isin(bks)))
+            df = df.unionByName(s.where(sql_in("bucket", bks)))
     folded = folded_map(seg_dir, manifest)
     for gen in live_generations(seg_dir, manifest):
         if as_of is not None and gen > as_of:
@@ -273,7 +275,7 @@ def read_segments_merged(spark: SparkSession, seg_dir: str,
                           terms=terms, num_buckets=num_buckets)
         done = folded.get(gen)
         if done:   # buckets a journaled txn already holds
-            g = g.where(~F.col("bucket").isin(sorted(done)))
+            g = g.where(f"NOT {sql_in('bucket', sorted(done))}")
         df = df.unionByName(g)
     return df
 
@@ -293,13 +295,9 @@ def read_segments_for_docs(spark: SparkSession, seg_dir: str,
     ids = sorted({int(d) for d in doc_ids})
     df = read_segments_merged(spark, seg_dir, num_buckets=num_buckets,
                               as_of=as_of)
-    if not ids:
-        return df.where(F.lit(False))
-    cond = None
-    for d in ids:
-        c = (F.col("min_docid") <= d) & (F.col("max_docid") >= d)
-        cond = c if cond is None else (cond | c)
-    return df.where(cond)
+    cond = " OR ".join(f"(min_docid <= {d} AND max_docid >= {d})"
+                       for d in ids)
+    return df.where(cond or "FALSE")
 
 
 _DECODE_SCHEMA = POSTINGS_SCHEMA + ", bucket int"
@@ -339,22 +337,25 @@ def delete_docs(spark: SparkSession, seg_dir: str, doc_ids) -> dict:
     scattered across every bucket its terms hash to; rewriting them
     eagerly would be a corpus-sized job). Accepts a DataFrame with a
     `doc_id` column or an iterable of ids; set semantics make replays
-    idempotent. Lucene-faithful scoring contract: corpus stats and df
+    idempotent. An iterable is written from a JVM-local table
+    (`literals.local_frame`, one inline VALUES literal), so the ids
+    must fit in a driver-side SQL text; pass large id sets as a
+    DataFrame. Lucene-faithful scoring contract: corpus stats and df
     keep counting deleted docs (Lucene's docFreq-includes-deletes) —
     readers only mask the docs out of results. A purging merge
     (`compact_segments(purge_deletes=True)` = forceMerge) removes the
     physical postings; stats change only when the logical Index frames
     are rebuilt over the surviving corpus."""
     if not isinstance(doc_ids, DataFrame):
-        doc_ids = spark.createDataFrame(
-            [(int(d),) for d in doc_ids], "doc_id long")
+        doc_ids = local_frame(spark, [(int(d),) for d in doc_ids],
+                              "doc_id long")
     out = os.path.join(seg_dir, _TOMBSTONE_DIR)
     # stamp the snapshot the deletion belongs to: visible to readers at
     # as_of ≥ this generation (deletions fold into the CURRENT snapshot
     # rather than opening a new one — set semantics keep replays cheap)
     gen = latest_generation(seg_dir)
-    (doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"),
-                    F.lit(gen).cast("int").alias("gen"))
+    (doc_ids.selectExpr("CAST(doc_id AS BIGINT) AS doc_id",
+                        f"CAST({int(gen)} AS INT) AS gen")
      .write.mode("append").parquet(out))
     total = (spark.read.schema(_TOMBSTONE_SCHEMA).parquet(out)
              .select("doc_id").distinct().count())
@@ -376,13 +377,16 @@ def deleted_doc_ids(spark: SparkSession, seg_dir: str) -> np.ndarray:
 
 def deleted_docs_df(spark: SparkSession, seg_dir: str,
                     as_of: int | None = None) -> DataFrame | None:
-    """Distinct tombstoned doc_ids as a lazy DataFrame (None when no
-    tombstones exist) — the scale-safe mask form: readers anti-join or
-    cogroup it instead of shipping an id array in a closure, so a
-    delete-heavy store between purges never grows the driver heap or
-    task binaries. `as_of=G`: only deletions stamped at generation ≤ G
-    (snapshot read); tombstones written before stamping existed count
-    as generation 0 (visible at every snapshot)."""
+    """Tombstoned doc_ids as a lazy DataFrame (None when no tombstones
+    exist) — the scale-safe mask form: readers anti-join or cogroup it
+    instead of shipping an id array in a closure, so a delete-heavy
+    store between purges never grows the driver heap or task binaries.
+    An id deleted twice appears twice: both readers ignore repeats (the
+    left-anti join by definition, the DAAT kernel's `np.isin`), so a
+    `distinct` here would only add a shuffle stage to every query.
+    `as_of=G`: only deletions stamped at generation ≤ G (snapshot
+    read); tombstones written before stamping existed count as
+    generation 0 (visible at every snapshot)."""
     p = os.path.join(seg_dir, _TOMBSTONE_DIR)
     if not os.path.isdir(p):
         return None
@@ -391,8 +395,8 @@ def deleted_docs_df(spark: SparkSession, seg_dir: str,
     # gen as null → gen 0
     df = spark.read.schema(_TOMBSTONE_SCHEMA).parquet(p)
     if as_of is not None:
-        df = df.where(F.coalesce(F.col("gen"), F.lit(0)) <= as_of)
-    return df.select("doc_id").distinct()
+        df = df.where(f"coalesce(gen, 0) <= {int(as_of)}")
+    return df.select("doc_id")
 
 
 def update_segments(spark: SparkSession, seg_dir: str,
@@ -562,12 +566,12 @@ def compact_segments(spark: SparkSession, seg_dir: str,
         # buckets — a partially-compacted bucket decodes base-only here
         blocks = read_segments_merged(spark, seg_dir,
                                       num_buckets=num_buckets) \
-            .where(F.col("bucket").isin(batch))
+            .where(sql_in("bucket", batch))
         decoded = blocks.mapInPandas(_decode_partition,
                                      schema=_DECODE_SCHEMA)
         if tombs.size:
-            tomb_df = spark.createDataFrame(
-                [(int(d),) for d in tombs], "doc_id long")
+            tomb_df = local_frame(spark, [(int(d),) for d in tombs],
+                                  "doc_id long")
             decoded = decoded.join(F.broadcast(tomb_df), "doc_id",
                                    "left_anti")
         part = (decoded
@@ -641,7 +645,7 @@ def merge_stream_into_segments(spark: SparkSession, stream_dir: str,
     new = sorted(have - merged_batches(seg_dir))
     if not new:
         return {"skipped": True, "batches": []}
-    delta = df.where(F.col("batch_id").isin(new)).drop("batch_id")
+    delta = df.where(sql_in("batch_id", new)).drop("batch_id")
     out = append_segments(delta, seg_dir, num_buckets=num_buckets,
                           source_batches=new)
     return {**out, "batches": new}

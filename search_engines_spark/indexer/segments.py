@@ -44,8 +44,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..literals import sql_in, str_lit
 from .codec import BLOCK_SIZE, delta_encode, varbyte_decode, varbyte_encode
 
 SEGMENT_SCHEMA = (
@@ -55,9 +56,11 @@ SEGMENT_SCHEMA = (
     "doclens_vb binary")
 
 
-def bucket_of(term: Column | str, num_buckets: int) -> Column:
-    """The bucket a term's blocks live in: pmod(xxhash64(term), B)."""
-    return F.pmod(F.xxhash64(term), F.lit(num_buckets)).cast("int")
+def bucket_of(term: str, num_buckets: int) -> str:
+    """The bucket a term's blocks live in, as a SQL expression over the
+    SQL operand `term` (a column name or a string literal):
+    pmod(xxhash64(term), B)."""
+    return f"CAST(pmod(xxhash64({term}), {int(num_buckets)}) AS INT)"
 
 
 def _vb_nbytes(v: np.ndarray) -> np.ndarray:
@@ -273,12 +276,13 @@ def build_segments(postings: DataFrame, doclens: DataFrame, out_dir: str,
     fingerprint = fingerprint or _fingerprint(postings)
     done = completed_buckets(out_dir, fingerprint)
     todo = [b for b in range(num_buckets) if b not in done]
-    src = postings.withColumn("bucket", bucket_of("term", num_buckets))
+    src = postings.withColumn("bucket",
+                              F.expr(bucket_of("term", num_buckets)))
     metrics = {"buckets_total": num_buckets, "buckets_skipped": len(done),
                "buckets_built": 0, "blocks": 0, "postings": 0}
     for i in range(0, len(todo), chunk):
         batch = todo[i:i + chunk]
-        part = (src.where(F.col("bucket").isin(batch))
+        part = (src.where(sql_in("bucket", batch))
                 .repartitionByRange(len(batch), "bucket", "term", "doc_id")
                 .sortWithinPartitions("bucket", "term", "field", "doc_id"))
         seg = part.select("term", "field", "bucket", "doc_id", "tf",
@@ -290,7 +294,7 @@ def build_segments(postings: DataFrame, doclens: DataFrame, out_dir: str,
         # per-bucket counters for the manifest (lineage + metrics)
         spark = postings.sparkSession
         counts = (spark.read.schema(SEGMENT_SCHEMA).parquet(out_dir)
-                  .where(F.col("bucket").isin(batch))
+                  .where(sql_in("bucket", batch))
                   .groupBy("bucket")
                   .agg(F.count("*").alias("blocks"),
                        F.sum("n").alias("postings"),
@@ -324,16 +328,16 @@ def read_segments(spark: SparkSession, out_dir: str,
 
     Building the frame runs no Spark job: the read declares
     SEGMENT_SCHEMA (no footer-inference job), and the bucket filter is
-    `bucket IN (bucket_of(lit(t)), ...)`, which Catalyst constant-folds
-    into the scan's PartitionFilters."""
-    df = spark.read.schema(SEGMENT_SCHEMA).parquet(out_dir) \
-        .where(F.col("n") > 0)
+    `bucket IN (bucket_of('t'), ...)`, which Catalyst constant-folds
+    into the scan's PartitionFilters. The filter is one SQL string, so
+    its size costs the driver no Py4J round trip per term."""
+    df = spark.read.schema(SEGMENT_SCHEMA).parquet(out_dir)
+    cond = "n > 0"
     if terms:
-        df = df.where(
-            F.col("bucket").isin([bucket_of(F.lit(t), num_buckets)
-                                  for t in sorted(set(terms))])
-            & F.col("term").isin(terms))
-    return df
+        ts = sorted(set(terms))
+        buckets = ", ".join(bucket_of(str_lit(t), num_buckets) for t in ts)
+        cond += f" AND bucket IN ({buckets}) AND {sql_in('term', ts)}"
+    return df.where(cond)
 
 
 def decode_to_postings(segments: DataFrame,

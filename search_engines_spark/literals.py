@@ -10,6 +10,14 @@ instead. Catalyst resolves it to a LocalRelation, so the table plans as a
 broadcast of it collects no job. Arrow-from-pandas would also give a
 local relation, but it silently falls back to the Python-RDD path when
 `spark.sql.execution.arrow.pyspark.enabled` is off.
+
+Expressions over such tables are written the same way: one SQL string
+(`F.expr`, `selectExpr`, a `where` string) whose literals come from
+`str_lit`, `double_lit` and `sql_in`. Each `Column` a classic PySpark
+driver builds (every `F.lit`, every `isin` value, every `F.struct`) is a
+Py4J round trip of its own; an expression string is one, whatever its
+size. Named parameter markers (`spark.sql(text, args=...)`) do not help
+here: classic PySpark turns each argument into a `lit` Column over Py4J.
 """
 
 from __future__ import annotations
@@ -30,6 +38,15 @@ def double_lit(x: float) -> str:
     """A Python float as an exact Spark SQL double literal (repr
     round-trips; the D suffix keeps it from parsing as a decimal)."""
     return f"{float(x)!r}D"
+
+
+def sql_in(column: str, values: Iterable) -> str:
+    """`column IN (v, ...)` as one SQL predicate over str or int values;
+    FALSE for no values. One `where` string costs one Py4J call, where
+    `Column.isin` sends one per value."""
+    vals = [str_lit(v) if isinstance(v, str) else str(int(v))
+            for v in values]
+    return f"{column} IN ({', '.join(vals)})" if vals else "FALSE"
 
 
 def _lit(v, t: DataType) -> str:

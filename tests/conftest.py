@@ -28,6 +28,35 @@ def jobs_submitted(spark):
 
 
 @pytest.fixture(scope="session")
+def py4j_calls(spark):
+    """→ probe(fn) → (fn(), Py4J commands fn sent to the JVM from this
+    thread). The gateway's object-release commands are not counted: the
+    finalizer thread sends them whenever Python drops a proxy, so their
+    count depends on garbage-collection timing, not on fn."""
+    import threading
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def probe(fn):
+        me, n = threading.get_ident(), 0
+
+        def counting(command, *args, **kwargs):
+            nonlocal n
+            if threading.get_ident() == me and \
+                    not command.startswith("m\nd\n"):
+                n += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            out = fn()
+        finally:
+            del client.send_command
+        return out, n
+    return probe
+
+
+@pytest.fixture(scope="session")
 def corpus_rows():
     from search_engines_spark.corpus import generate_corpus
     return generate_corpus(n_docs=120, seed=42)

@@ -33,6 +33,22 @@ def test_path_helpers():
         hfs.local_part("file://otherhost/tmp/x")
 
 
+def test_relative_path_with_colon_stays_local(tmp_path, monkeypatch):
+    """A relative path holding a colon (`a:b/journal`) is a local path:
+    its journal is the jsonl file the POSIX branch writes, and no
+    Hadoop FileSystem (no Spark session) is needed to read it back."""
+    assert not hfs.has_scheme("a:b/journal")
+    assert not hfs.has_scheme("a:b")
+    monkeypatch.chdir(tmp_path)
+    os.mkdir("a:b")
+    hfs.journal_append("a:b/journal", {"gen": 1}, {"gen": 2})
+    assert os.path.isfile(tmp_path / "a:b" / "journal")
+    assert hfs.journal_read("a:b/journal") == [{"gen": 1}, {"gen": 2}]
+    hfs.write_text("a:b/meta.json", "{}")
+    assert hfs.exists("a:b/meta.json")
+    assert hfs.read_text("a:b/meta.json") == "{}"
+
+
 def test_single_slash_file_uri_roundtrip(spark, tmp_path):
     """file:/p (no //) must route through the Hadoop branch like
     file:///p — previously it fell into the POSIX branch and open()'d

@@ -106,9 +106,11 @@ def test_pruned_reads_build_without_jobs(spark, merged_dir,
 def test_deleted_docs_mixed_stamped_and_unstamped(spark, tmp_path,
                                                   jobs_submitted):
     """A tombstone directory holding a file from before gen-stamping
-    (doc_id only) and a stamped one reads the same rows as a
+    (doc_id only) and a stamped one reads the same ids as a
     mergeSchema read — unstamped rows count as generation 0 — at every
-    snapshot, and building the mask submits no job."""
+    snapshot, and building the mask submits no job. An id deleted twice
+    may appear twice (its readers ignore repeats), so ids compare as
+    sets."""
     d = str(tmp_path)
     tomb = os.path.join(d, "_tombstones")
     spark.createDataFrame([(1,), (2,)], "doc_id long").write.parquet(tomb)
@@ -124,8 +126,26 @@ def test_deleted_docs_mixed_stamped_and_unstamped(spark, tmp_path,
             F.coalesce(F.col("gen"), F.lit(0)) <= as_of)
         want = sorted(r["doc_id"] for r in
                       want.select("doc_id").distinct().collect())
-        got = sorted(r["doc_id"] for r in mask.collect())
+        got = sorted({r["doc_id"] for r in mask.collect()})
         assert got == want == ids
+
+
+def test_tombstone_ids_write_from_a_local_table(spark, tmp_path):
+    """delete_docs writes an iterable of ids from a JVM-local VALUES
+    table: the write plan's leaf is a LocalTableScan, not a scan of a
+    Python RDD, and the ids read back stamped with the generation."""
+    from search_engines_spark.indexer.merge import delete_docs
+    d = str(tmp_path)
+    assert delete_docs(spark, d, [5, 3, 5]) == {"deleted_total": 2}
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    plans = [execs.apply(i).physicalPlanDescription()
+             for i in range(execs.size())]
+    write = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p
+             and os.path.join(d, "_tombstones") in p][-1]
+    assert "LocalTableScan" in write and "ExistingRDD" not in write
+    rows = spark.read.parquet(os.path.join(d, "_tombstones")).collect()
+    assert sorted(tuple(r) for r in rows) == [(3, 0), (5, 0), (5, 0)]
 
 
 def test_daat_over_generations_matches_engine(spark, spark_index, merged_dir):

@@ -14,7 +14,9 @@ from search_engines_spark.indexer.segments import (
     build_segments, read_manifest, read_segments)
 
 NUM_BUCKETS = 8
-STEADY_DAAT_JOBS = 5
+# the tombstone mask is a plain file read (no distinct, so no shuffle
+# stage of its own)
+STEADY_DAAT_JOBS = 4
 
 
 @pytest.fixture(scope="module")
