@@ -3,9 +3,9 @@
 `entry(spark)` runs the flagship batch-BM25 plan on sf0.001;
 `queries()` / `oracle_sql()` delegate to
 `search_engines_spark.entry_queries.REGISTRY` — one entry per implemented
-operator from SURVEY.md §2 plus the training-data pipeline operators
-(dedup / similarity / text analysis), each paired with DuckDB oracle SQL
-transcribing the same reference semantics.
+operator from SURVEY.md §2 plus the dedup / similarity / serving /
+streaming operators, each paired with DuckDB oracle SQL transcribing the
+same reference semantics. The first 50 entries are the driver window.
 """
 
 from __future__ import annotations

@@ -30,7 +30,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from search_engines_spark.engine.compile import Engine  # noqa: E402
 from search_engines_spark.indexer.build import index_documents_table  # noqa: E402
-from search_engines_spark.pipeline import codestats as cst  # noqa: E402
 from search_engines_spark.pipeline import dedup as dd  # noqa: E402
 from search_engines_spark.pipeline import similarity as sim  # noqa: E402
 from search_engines_spark.session import get_spark  # noqa: E402
@@ -343,29 +342,6 @@ def main() -> None:
     finally:
         shutil.rmtree(ann_dir, ignore_errors=True)
 
-    t0 = time.time()
-    cst.winnow_dedup_pairs(docs).count()
-    queries["code_winnow_pairs"] = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    cst.pii_scan(docs).count()
-    queries["pii_scan"] = round(time.time() - t0, 3)
-
-    # end-to-end corpus-assembly funnel (quality -> license -> dedup ->
-    # decontam -> temperature sample) — the full curation pass in one plan
-    from search_engines_spark.pipeline import curation as cur
-    t0 = time.time()
-    bench_split = docs.where(F.col("doc_id") % 41 == 0)
-    cur.curate_corpus(docs, bench_split)[1].collect()
-    queries["curation_funnel"] = round(time.time() - t0, 3)
-
-    # model-based quality gate (hashed-NB, CCNet-style): closed-form
-    # train (<=256-row groupBy) + broadcast-weights score in one plan
-    from search_engines_spark.pipeline.quality_model import model_scores
-    t0 = time.time()
-    model_scores(docs).count()
-    queries["quality_model_score"] = round(time.time() - t0, 3)
-
     # iterative graph centrality: 6 PageRank power iterations over a
     # 3-out-degree-max graph on the corpus ids (one src-layout join +
     # one dst-keyed agg per iteration)
@@ -390,51 +366,6 @@ def main() -> None:
     t0 = time.time()
     serving.snippets(res, idx.docs, ["spark", "stream", "join"]).collect()
     queries["snippets_top10"] = round(time.time() - t0, 3)
-
-    # training-sequence packing: the distributed prefix sum (block
-    # token sums -> block-count offset window -> broadcast -> bucketed
-    # window) over the whole corpus
-    from search_engines_spark.pipeline.export import pack_sequences
-    t0 = time.time()
-    pack_sequences(docs.select("doc_id", "text")).count()
-    queries["pack_sequences"] = round(time.time() - t0, 3)
-
-    # distributed BPE: one corpus scan -> vocab table, then 4
-    # vocab-bounded merge rounds (pair agg + 1-row argmax each)
-    from search_engines_spark.pipeline.tokenizer import bpe_train
-    t0 = time.time()
-    bpe_train(docs, num_merges=4)
-    queries["bpe_train_4merges"] = round(time.time() - t0, 3)
-
-    # count-min heavy hitters: fixed 4x1024-cell groupBy (map-side
-    # partials absorb the token volume) + broadcast estimate join
-    from search_engines_spark.pipeline.sketches import cms_heavy_hitters
-    t0 = time.time()
-    cms_heavy_hitters(docs, k=20).collect()
-    queries["cms_heavy_hitters"] = round(time.time() - t0, 3)
-
-    # HyperLogLog distinct-token estimate: one scan, 256-register max
-    # groupBy (exact side rides along in the same plan)
-    from search_engines_spark.pipeline.sketches import (
-        hll_token_cardinality, log2_histogram, histogram_quantiles)
-    t0 = time.time()
-    hll_token_cardinality(docs).collect()
-    queries["hll_token_cardinality"] = round(time.time() - t0, 3)
-
-    # bloom-prefiltered decontamination: bench grams as a 512-byte
-    # literal bitmask, k bit tests per gram, no gram-vs-gram join
-    from search_engines_spark.pipeline.sketches import bloom_decontam_scan
-    t0 = time.time()
-    bloom_decontam_scan(docs, bench_split).count()
-    queries["bloom_decontam_scan"] = round(time.time() - t0, 3)
-
-    # doc-length quantile sketch: <=64-bucket bit-length histogram +
-    # 5 quantile rows with power-of-two brackets
-    from search_engines_spark.pipeline.textstats import _tokens
-    t0 = time.time()
-    lens = docs.select(F.size(_tokens("text")).cast("long").alias("v"))
-    histogram_quantiles(log2_histogram(lens, "v")).collect()
-    queries["doclen_quantile_sketch"] = round(time.time() - t0, 3)
 
     total = time.time() - t_total
 

@@ -8,8 +8,9 @@ idiomatic Spark: DataFrame plans compiled from the structured query language
 diversification (xQuAD/PM2), LeToR feature extraction — plus the index
 *builder* the reference delegated to Lucene (posting lists with positions,
 delta+varbyte compressed segments, a skew-safe range-partitioned build,
-resumable manifests), and a training-data pipeline layer (dedup,
-similarity search, text analysis).
+resumable manifests), and corpus-side dedup, ANN similarity search,
+PageRank, token statistics (BPE, sketches, shard export) and streaming
+ingest.
 
 Nothing here is a port: the reference's document-at-a-time Java iterators
 become joins/aggregations; its per-query loop becomes a Catalyst plan.

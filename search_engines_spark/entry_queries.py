@@ -19,20 +19,14 @@ driver records a rows-only check); their exact semantics are covered by
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .analysis import STOPWORDS
 from .engine.compile import Engine
 from .oracle import Models as _Models
 from .indexer.build import Index, index_documents_table
-from .pipeline import codestats as cst
-from .pipeline import curation as cur
 from .pipeline import dedup as dd
-from .pipeline import quality_model as qm
 from .pipeline import similarity as sim
-from .pipeline import textstats as ts
 
 # --------------------------------------------------------------- constants --
 
@@ -524,283 +518,6 @@ def q_standing_stream(spark, sf_dir):
             .select("qid", "ext_id", "rank", "score_r"))
 
 
-EXPORT_SHARDS = 8
-
-
-def q_export_shards(spark, sf_dir):
-    """Training-corpus export manifest (pipeline.export.shard_manifest):
-    deterministic md5-based shard membership + order-independent
-    sha256-prefix checksums — the lineage rollup a consumer verifies a
-    delivered shard against."""
-    from .pipeline import export as ex
-    return ex.shard_manifest(_docs(spark, sf_dir),
-                             n_shards=EXPORT_SHARDS) \
-        .select("shard", "n_docs", "n_chars", "checksum")
-
-
-PACK_SEQ_LEN = 128   # sequence length for the packing entry (sf docs
-                     # are ~100-200 tokens → most docs span 1-3 windows)
-PACK_ID_BLOCK = 64   # id block for the distributed prefix sum (500-doc
-                     # sf corpora → ~8 blocks, exercising the offset path)
-
-
-def q_pack_sequences(spark, sf_dir):
-    """GPT-style training-sequence packing (pipeline.export
-    .pack_sequences): id-ordered corpus as one token stream, per-doc
-    global offset + first/last sequence window via a DISTRIBUTED prefix
-    sum (block sums → block-count-sized offset window → broadcast →
-    bucketed window; no corpus-sized single-partition stage)."""
-    from .pipeline import export as ex
-    return ex.pack_sequences(_docs(spark, sf_dir), seq_len=PACK_SEQ_LEN,
-                             id_block=PACK_ID_BLOCK)
-
-
-def _sql_pack_sequences() -> str:
-    """Replays `pack_sequences` as the plain global window cumsum the
-    distributed prefix sum is provably equal to (same order key, same
-    exclusive frame)."""
-    k = PACK_SEQ_LEN
-    return f"""WITH pd AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         len(list_filter(regexp_split_to_array(lower(coalesce(text, '')),
-                                               '[^a-z0-9]+'),
-                         t -> t <> ''))::BIGINT AS n_tokens
-  FROM documents),
-po AS (SELECT doc_id, n_tokens,
-              coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                0)::BIGINT AS tok_start
-       FROM pd)
-SELECT doc_id, n_tokens, tok_start,
-       (CASE WHEN n_tokens > 0 THEN floor(tok_start / {k})
-             ELSE -1 END)::BIGINT AS seq_first,
-       (CASE WHEN n_tokens > 0
-             THEN floor((tok_start + n_tokens - 1) / {k})
-             ELSE -1 END)::BIGINT AS seq_last
-FROM po"""
-
-
-BPE_MERGES = 8       # merge rounds for the BPE entries: enough to fuse
-                     # multi-char subwords at sf scale, small enough that
-                     # the generated oracle CTE chain stays readable
-CMS_HH_K = 20        # heavy-hitter candidates returned
-CMS_HH_WIDTH = 256   # sketch width < sf vocab so collisions (and the
-                     # est >= exact overcount) are actually exercised
-
-
-def q_bpe_train(spark, sf_dir):
-    """Distributed BPE training (pipeline.tokenizer.bpe_train, Sennrich
-    et al. 2016): one corpus scan → word-frequency table, then
-    vocab-bounded pair-count rounds with a 1-row argmax collect each —
-    the learned merge table (rank, left_sym, right_sym, merged, cnt)."""
-    from .pipeline import tokenizer as tk
-    return tk.bpe_train(_docs(spark, sf_dir), num_merges=BPE_MERGES)
-
-
-def q_bpe_encode(spark, sf_dir):
-    """BPE encoding (pipeline.tokenizer.bpe_encode): train BPE_MERGES
-    merges, inline them as literals into a chain of per-token folds,
-    and encode every document in ONE zero-shuffle projection → (doc_id,
-    n_tokens, n_pieces, pieces_fp). No vocabulary join — OOV-safe."""
-    from .pipeline import tokenizer as tk
-    docs = _docs(spark, sf_dir)
-    merges = [(r["left_sym"], r["right_sym"])
-              for r in tk.bpe_train(docs, num_merges=BPE_MERGES)
-              .orderBy("rank").collect()]
-    return tk.bpe_encode(docs, merges)
-
-
-def _bpe_ctes(n: int) -> str:
-    """The BPE training replay as a generated CTE chain: w0 is the
-    word-frequency table (symbols space-joined), then per round r:
-    p{r} counts adjacent pairs (all positions, freq-weighted), b{r}
-    picks the argmax with the (cnt DESC, l ASC, r ASC) tie-break, w{r}
-    applies the merge with the same left-to-right fold the Spark side
-    uses (list_reduce's first-element seeding == the fold's empty-init
-    first-element branch). Returns the chain BODY (no WITH keyword) so
-    callers append their own terminal CTEs."""
-    ctes = ["""w0 AS (
-  SELECT word, count(*)::BIGINT AS freq,
-         array_to_string(
-           list_append(regexp_extract_all(word, '.'), '_'), ' ') AS seq
-  FROM (SELECT unnest(list_filter(
-          regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-          t -> t <> '')) AS word
-        FROM documents)
-  GROUP BY word)"""]
-    for r in range(1, n + 1):
-        ctes.append(f"""p{r} AS (
-  SELECT syms[i] AS l, syms[i + 1] AS r, sum(freq)::BIGINT AS cnt
-  FROM (SELECT freq, syms, unnest(generate_series(1, len(syms) - 1)) AS i
-        FROM (SELECT freq, string_split(seq, ' ') AS syms FROM w{r - 1}))
-  GROUP BY syms[i], syms[i + 1])""")
-        ctes.append(f"""b{r} AS (
-  SELECT {r}::BIGINT AS rank, l, r AS rr, l || r AS merged, cnt
-  FROM p{r} ORDER BY cnt DESC, l ASC, r ASC LIMIT 1)""")
-        ctes.append(f"""w{r} AS (
-  SELECT word, freq,
-         list_reduce(string_split(seq, ' '),
-           (acc, x) -> CASE WHEN (string_split(acc, ' '))[-1] = b.l
-                              AND x = b.rr
-                       THEN acc || x ELSE acc || ' ' || x END) AS seq
-  FROM w{r - 1}, b{r} b)""")
-    return ",\n".join(ctes)
-
-
-def _sql_bpe_train() -> str:
-    n = BPE_MERGES
-    union = " UNION ALL ".join(
-        f"SELECT rank, l AS left_sym, rr AS right_sym, merged, cnt "
-        f"FROM b{r}" for r in range(1, n + 1))
-    return f"WITH {_bpe_ctes(n)}\n{union}"
-
-
-def _sql_bpe_encode() -> str:
-    """Encode replay: the training corpus has no OOV words by
-    definition, so the oracle may encode by JOINING tokens to the final
-    vocabulary w{N} (word → merged symbol sequence) — a different
-    algorithm from the Spark side's literal-inlined fold chain, equal
-    on the defined result."""
-    n = BPE_MERGES
-    return f"""WITH {_bpe_ctes(n)},
-dt AS (SELECT doc_id::BIGINT AS doc_id,
-              list_filter(regexp_split_to_array(lower(coalesce(text, '')),
-                                                '[^a-z0-9]+'),
-                          t -> t <> '') AS toks
-       FROM documents),
-tok AS (SELECT doc_id, i, toks[i] AS word
-        FROM (SELECT doc_id, toks,
-                     unnest(generate_series(1, len(toks))) AS i
-              FROM dt)),
-enc AS (SELECT t.doc_id, t.i, w.seq,
-               len(string_split(w.seq, ' '))::BIGINT AS np
-        FROM tok t JOIN w{n} w USING (word)),
-ag AS (SELECT doc_id, string_agg(seq, ' ' ORDER BY i) AS pieces,
-              sum(np)::BIGINT AS n_pieces, count(*)::BIGINT AS n_tokens
-       FROM enc GROUP BY doc_id)
-SELECT d.doc_id,
-       coalesce(a.n_tokens, 0)::BIGINT AS n_tokens,
-       coalesce(a.n_pieces, 0)::BIGINT AS n_pieces,
-       md5(coalesce(a.pieces, '')) AS pieces_fp
-FROM dt d LEFT JOIN ag a USING (doc_id)"""
-
-
-def q_cms_heavy_hitters(spark, sf_dir):
-    """Count-min-sketch heavy hitters (pipeline.sketches, Cormode &
-    Muthukrishnan 2005): fixed depth×width mergeable sketch (one
-    map-side-combined cell groupBy), point-queried for every vocab
-    token → top-k (token, est, exact) with the overcount visible."""
-    from .pipeline import sketches as sk
-    return sk.cms_heavy_hitters(_docs(spark, sf_dir), k=CMS_HH_K,
-                                width=CMS_HH_WIDTH)
-
-
-def _sql_cms_heavy_hitters() -> str:
-    d, w, k = 4, CMS_HH_WIDTH, CMS_HH_K
-    return f"""WITH toks AS (
-  SELECT unnest(list_filter(
-           regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-           t -> t <> '')) AS token
-  FROM documents),
-exact AS (SELECT token, count(*)::BIGINT AS exact FROM toks GROUP BY token),
-cells AS (
-  SELECT row,
-         ('0x' || substr(md5('cms' || row || '|' || token), 1, 8))
-           ::UBIGINT::BIGINT % {w} AS bucket,
-         count(*)::BIGINT AS cnt
-  FROM toks, (SELECT unnest(generate_series(0, {d - 1})) AS row)
-  GROUP BY row, bucket),
-probes AS (
-  SELECT e.token, e.exact, r.row,
-         ('0x' || substr(md5('cms' || r.row || '|' || e.token), 1, 8))
-           ::UBIGINT::BIGINT % {w} AS bucket
-  FROM exact e, (SELECT unnest(generate_series(0, {d - 1})) AS row) r),
-est AS (
-  SELECT p.token, any_value(p.exact) AS exact,
-         min(coalesce(c.cnt, 0))::BIGINT AS est
-  FROM probes p LEFT JOIN cells c ON p.row = c.row AND p.bucket = c.bucket
-  GROUP BY p.token)
-SELECT token, est, exact FROM est
-ORDER BY est DESC, token ASC LIMIT {k}"""
-
-
-HLL_SQL_RHO = """CASE WHEN s = '' THEN 33
-         ELSE 4 * (8 - length(s)) + CASE
-           WHEN substr(s, 1, 1) IN ('8','9','a','b','c','d','e','f') THEN 0
-           WHEN substr(s, 1, 1) IN ('4','5','6','7') THEN 1
-           WHEN substr(s, 1, 1) IN ('2','3') THEN 2
-           ELSE 3 END + 1 END"""
-
-_HLL_SQL_REG = """WITH toks AS (
-  SELECT unnest(list_filter(
-           regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-           t -> t <> '')) AS token
-  FROM documents),
-h AS (
-  SELECT ('0x' || substr(md5('hllb|' || token), 1, 8))
-           ::UBIGINT::BIGINT % 256 AS bucket,
-         regexp_replace(substr(md5('hll|' || token), 1, 8),
-                        '^0+', '') AS s
-  FROM toks),
-reg AS (
-  SELECT bucket, max({rho})::BIGINT AS r FROM h GROUP BY bucket)"""
-
-
-def q_hll_registers(spark, sf_dir):
-    """HyperLogLog register table (pipeline.sketches, Flajolet et al.
-    2007) over the corpus token stream: 2^p-bucket max-rho sketch —
-    one map-side-combined groupBy whose exchange is ≤ 2^p rows; the
-    string-domain rho (md5 hex prefix, no float log2) is what makes
-    every register oracle-exact."""
-    from .pipeline import sketches as sk
-    from .pipeline.textstats import _tokens
-    toks = _docs(spark, sf_dir).select(F.explode(_tokens("text")).alias("t"))
-    return sk.hll_build(toks, "t").orderBy("bucket")
-
-
-def _sql_hll_registers() -> str:
-    return (_HLL_SQL_REG.format(rho=HLL_SQL_RHO)
-            + "\nSELECT bucket, r FROM reg ORDER BY bucket")
-
-
-def q_hll_cardinality(spark, sf_dir):
-    """HLL distinct-token estimate vs the exact distinct — the
-    quantized estimate (floor(est·1e6+0.5)) rides the driver's integer
-    compare; Σ2^-r is exact in IEEE double (dyadic terms, < 53-bit
-    exponent span) and jvm Math.log == DuckDB libm ln on this box."""
-    from .pipeline import sketches as sk
-    return sk.hll_token_cardinality(_docs(spark, sf_dir))
-
-
-def _sql_hll_cardinality() -> str:
-    raw = ("(0.7213 / (1.0 + 1.079 / 256.0)) * 256.0 * 256.0"
-           " / (s_ne + (256.0 - nz))")
-    return (_HLL_SQL_REG.format(rho=HLL_SQL_RHO) + f""",
-agg AS (
-  SELECT count(*)::DOUBLE AS nz,
-         sum(power(2.0, -r)) AS s_ne
-  FROM reg)
-SELECT (SELECT count(DISTINCT token) FROM toks)::BIGINT AS exact_distinct,
-       nz::BIGINT AS nonempty_buckets,
-       floor(CASE WHEN (256.0 - nz) > 0 AND {raw} <= 640.0
-                  THEN 256.0 * ln(256.0 / (256.0 - nz))
-                  ELSE {raw} END * 1e6 + 0.5)::BIGINT AS est_micro
-FROM agg""")
-
-
-def _sql_export_shards() -> str:
-    return f"""SELECT shard,
-       count(*)::BIGINT AS n_docs,
-       sum(length(text))::BIGINT AS n_chars,
-       sum(('0x' || substr(sha256(text), 1, 8))::UBIGINT::BIGINT)::BIGINT
-           AS checksum
-FROM (SELECT text,
-             (('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::UBIGINT::BIGINT
-              % {EXPORT_SHARDS})::INT AS shard
-      FROM documents)
-GROUP BY shard"""
-
-
 SNIPPET_W = 8
 SPELL_PROBES = ["stram", "mergee", "batc"]
 FACET_TERMS = ["merge", "batch"]
@@ -1124,31 +841,6 @@ def q_ann_ivf_indexed(spark, sf_dir):
                                 k=20, nprobe=4)
 
 
-def q_langid(spark, sf_dir):
-    return ts.language_id(_docs(spark, sf_dir))
-
-
-def q_token_counts(spark, sf_dir):
-    return ts.token_counts(_docs(spark, sf_dir))
-
-
-def q_quality(spark, sf_dir):
-    return ts.quality_features(_docs(spark, sf_dir))
-
-
-def q_fingerprints(spark, sf_dir):
-    return ts.fingerprints(_docs(spark, sf_dir))
-
-
-def q_repetition(spark, sf_dir):
-    """Gopher repetition-removal (Rae et al. 2021 Table A1): dup-line /
-    dup-paragraph fractions (count and char share) + top-2/3/4-gram char
-    share, with the keep/drop verdict. One zero-shuffle projection; the
-    n-gram kernel is a sorted one-pass fold (textstats._top_ngram_cover),
-    not a per-gram nested scan."""
-    return ts.repetition_filter(_docs(spark, sf_dir))
-
-
 def q_graph_pagerank(spark, sf_dir):
     """Distributed PageRank (pipeline.graph — the computation behind the
     reference's letor pageRankFile, `FeatureVector.java:53-72`) over a
@@ -1172,193 +864,6 @@ def q_graph_pagerank(spark, sf_dir):
     pr = pagerank(e, damping=0.85, n_iter=6, nodes=ids)
     return (pr.select("node", _r(F.col("pr") * n).alias("pr_r"))
             .orderBy(F.desc("pr_r"), F.asc("node")).limit(100))
-
-
-def q_code_tokens(spark, sf_dir):
-    """Identifier-aware code tokenization (comments stripped, camel/snake
-    split) — the normalization layer for the source-code corpus shape
-    (BASELINE.json input_hint)."""
-    return cst.code_token_stats(_docs(spark, sf_dir))
-
-
-def q_winnow_fps(spark, sf_dir):
-    """MOSS winnowing fingerprints (Schleimer et al., SIGMOD 2003):
-    k-gram md5-prefix hashes, window-min selection — exploded (doc_id, fp)
-    set. The oracle replays the identical k/w/hash in DuckDB list SQL."""
-    return cst.winnow_fingerprints(_docs(spark, sf_dir))
-
-
-def q_winnow_pairs(spark, sf_dir):
-    """Code near-dup candidates: self-join on winnowed fps, pair count
-    ≥ WINNOW_MIN_SHARED — the corpus-scale MOSS shape."""
-    return cst.winnow_dedup_pairs(_docs(spark, sf_dir))
-
-
-def q_pii_scan(spark, sf_dir):
-    """PII / secret counts + email-redacted fingerprint, all regexp
-    codegen."""
-    return cst.pii_scan(_docs(spark, sf_dir))
-
-
-def q_license_scan(spark, sf_dir):
-    """Per-file license detection (SPDX tag, then header-phrase priority
-    cascade) — the compliance gate of a source-code training pipeline."""
-    return cst.license_scan(_docs(spark, sf_dir))
-
-
-def q_quality_filter(spark, sf_dir):
-    """Gopher-rule keep/drop verdict with ','-joined violation reasons
-    over `quality_features` — still one codegen projection."""
-    return ts.quality_filter(_docs(spark, sf_dir))
-
-
-def q_quality_model_weights(spark, sf_dir):
-    """Closed-form hashed-NB quality-model TRAINING (CCNet/GPT-3-style
-    model-based filtering, bootstrapped from the Gopher heuristic
-    labels): one ≤256-row groupBy over md5-bucketed token occurrences +
-    a log-odds projection — deterministic, no SGD, oracle-replayable."""
-    return qm.train_quality_model(_docs(spark, sf_dir))
-
-
-def q_quality_model_score(spark, sf_dir):
-    """Train + score the hashed-NB quality model in ONE plan: broadcast
-    the ≤256-row weight table, per-doc BIGINT ppm score = prior + Σ
-    bucket log-odds, model_keep = score > 0. The zero-shuffle collected-
-    weights scorer (`score_with_model`) is pytest-gated identical."""
-    return qm.model_scores(_docs(spark, sf_dir))
-
-
-def q_lm_unigram(spark, sf_dir):
-    """Unigram-LM perplexity scoring (CCNet §4.3's model-filtering
-    shape, unigram estimator): per-term Laplace log-probs quantized to
-    ppm BIGINTs, per-doc mean NLL — token fold, broadcast LM join,
-    doc_id-keyed sum."""
-    return qm.unigram_lm_scores(_docs(spark, sf_dir))
-
-
-def q_dsir_importance(spark, sf_dir):
-    """DSIR importance weights (Xie et al. 2023): hashed-bigram
-    log(p_target/p_raw) per raw doc, target = the BENCH_MOD eval split
-    (the same target-distribution convention as decontam_scan)."""
-    docs = _docs(spark, sf_dir)
-    return qm.dsir_importance(
-        docs.where(F.col("doc_id") % BENCH_MOD != 0),
-        docs.where(F.col("doc_id") % BENCH_MOD == 0))
-
-
-def q_corpus_composition(spark, sf_dir):
-    """Per-(lang, source) corpus composition report: doc/char/token
-    totals + exact distinct-text count (HLL at 100 TB)."""
-    return ts.corpus_composition(_docs(spark, sf_dir))
-
-
-BENCH_MOD = 41  # every doc_id ≡ 0 (mod 41) plays the "eval set" role
-
-
-def q_decontam_scan(spark, sf_dir):
-    """Benchmark decontamination: flag corpus docs sharing any distinct
-    {cur.DECONTAM_K}-gram with the deterministic bench split (doc_id %
-    41 == 0) — GPT-3-appendix-C-style n-gram overlap, broadcast bench
-    side."""
-    docs = _docs(spark, sf_dir)
-    bench = docs.where(F.col("doc_id") % BENCH_MOD == 0)
-    return cur.decontaminate(docs, bench)
-
-
-def q_bloom_decontam(spark, sf_dir):
-    """Bloom-prefiltered decontamination (pipeline.sketches): the bench
-    split's gram set rides as a 512-byte literal bitmask (the
-    collected-state scan pattern) — per-doc bloom-positive gram counts,
-    one-sided vs the exact `decontam_scan` (never a false negative)."""
-    from .pipeline import sketches as sk
-    docs = _docs(spark, sf_dir)
-    bench = docs.where(F.col("doc_id") % BENCH_MOD == 0)
-    return sk.bloom_decontam_scan(docs, bench, kgram=cur.DECONTAM_K,
-                                  min_hits=cur.DECONTAM_MIN_HITS)
-
-
-def _sql_bloom_decontam() -> str:
-    """Replays the bloom bit set (3 salted-md5 hashes mod 4096 over the
-    bench grams) and the all-k-bits-set membership test with plain
-    joins — same defined result as the Spark side's literal bitmask."""
-    from .pipeline.sketches import BLOOM_K, BLOOM_M
-    d = BLOOM_K - 1
-    return f"""{PRELUDE},
-{_decontam_ctes()},
-bbits AS (SELECT DISTINCT
-    ('0x' || substr(md5('bloom' || i || '|' || gram), 1, 8))
-      ::UBIGINT::BIGINT % {BLOOM_M} AS bit
-  FROM bng, (SELECT unnest(generate_series(0, {d})) AS i)),
-ph AS (SELECT doc_id, gram,
-    ('0x' || substr(md5('bloom' || i || '|' || gram), 1, 8))
-      ::UBIGINT::BIGINT % {BLOOM_M} AS bit
-  FROM ng, (SELECT unnest(generate_series(0, {d})) AS i)),
-gh AS (SELECT doc_id, gram,
-         (count(*) FILTER (WHERE bit IN (SELECT bit FROM bbits))
-          = {BLOOM_K}) AS hit
-       FROM ph GROUP BY doc_id, gram),
-agg AS (SELECT doc_id, count(*)::BIGINT AS n_grams,
-               sum(hit::INT)::BIGINT AS n_hits_bloom
-        FROM gh GROUP BY doc_id)
-SELECT d.doc_id,
-       coalesce(a.n_grams, 0)::BIGINT AS n_grams,
-       coalesce(a.n_hits_bloom, 0)::BIGINT AS n_hits_bloom,
-       (coalesce(a.n_hits_bloom, 0) >= {cur.DECONTAM_MIN_HITS})::BIGINT
-         AS flagged
-FROM (SELECT DISTINCT doc_id::BIGINT AS doc_id FROM documents) d
-LEFT JOIN agg a USING (doc_id)"""
-
-
-def q_doclen_quantiles(spark, sf_dir):
-    """Doc-length quantile sketch (pipeline.sketches): ≤64-bucket log2
-    histogram of per-doc token counts (bucket = bit length — integer-
-    exact in both engines via bin()) + quantile rows with provable
-    [lo, hi] bounds, all from one scan and two metadata-sized frames."""
-    from .pipeline import sketches as sk
-    from .pipeline.textstats import _tokens
-    lens = _docs(spark, sf_dir).select(
-        F.size(_tokens("text")).cast("long").alias("v"))
-    return sk.histogram_quantiles(sk.log2_histogram(lens, "v"))
-
-
-def _sql_doclen_quantiles() -> str:
-    return """WITH lens AS (
-  SELECT len(list_filter(
-           regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-           t -> t <> ''))::BIGINT AS v
-  FROM documents),
-hist AS (SELECT length(bin(v))::BIGINT AS bucket, count(*)::BIGINT AS cnt
-         FROM lens WHERE v >= 0 GROUP BY 1),
-cum AS (SELECT bucket, sum(cnt) OVER (ORDER BY bucket)::BIGINT AS cum
-        FROM hist),
-tot AS (SELECT sum(cnt)::BIGINT AS total FROM hist),
-qs AS (SELECT unnest([50, 250, 500, 750, 950])::BIGINT AS q_permille),
-hit AS (SELECT q_permille, min(bucket)::BIGINT AS bucket
-        FROM qs, tot, cum
-        WHERE (q_permille * total + 999) // 1000 <= cum
-        GROUP BY q_permille)
-SELECT q_permille, bucket,
-       (CASE WHEN bucket = 1 THEN 0
-             ELSE (1::BIGINT << (bucket - 1)::INT) END)::BIGINT AS lo,
-       ((1::BIGINT << bucket::INT) - 1)::BIGINT AS hi
-FROM hit ORDER BY q_permille"""
-
-
-def q_sample_temperature(spark, sf_dir):
-    """Deterministic alpha=0.5 temperature sampling over (lang, source)
-    groups — per-doc keep verdict, pure function of (doc_id, group
-    sizes)."""
-    return cur.sample_temperature(_docs(spark, sf_dir))
-
-
-def q_curation_funnel(spark, sf_dir):
-    """End-to-end corpus-assembly funnel (quality → repetition →
-    license → exact dedup → decontam → temperature sample): the
-    per-stage survivor report of `curation.curate_corpus`."""
-    docs = _docs(spark, sf_dir)
-    bench = docs.where(F.col("doc_id") % BENCH_MOD == 0)
-    _, funnel = cur.curate_corpus(docs, bench)
-    return funnel
 
 
 def q_feedback_expand(spark, sf_dir):
@@ -1756,111 +1261,6 @@ def q_streamed_postings(spark, sf_dir):
                     F.array_join(
                         F.transform("positions", lambda x: x.cast("string")),
                         ",").alias("poss")))
-
-
-_DEDUP_STREAM_CACHE: dict[tuple, str] = {}
-
-
-def q_streamed_dedup(spark, sf_dir):
-    """Streaming first-wins exact dedup (streaming.dedup): the sf
-    corpus plus a LATER file resending every document under shifted ids
-    (doc_id + 1000000, same text) run through the survivor sink —
-    survivors must equal the batch GROUP BY fp MIN(doc_id) over the
-    union: every original survives, every resent copy is dropped by
-    the sink-as-state anti-join, whatever the batch split."""
-    import os
-    import shutil
-
-    from .streaming.dedup import dedup_survivors, start_dedup_stream
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    d, created = _session_tmpdir(_DEDUP_STREAM_CACHE, key, "entry_sdedup_")
-    if created:
-        src_pq = f"{sf_dir}/documents.parquet"
-        os.makedirs(f"{d}/src", exist_ok=True)
-        if os.path.isdir(src_pq):
-            for f in os.listdir(src_pq):
-                shutil.copy(os.path.join(src_pq, f), f"{d}/src/{f}")
-        else:
-            shutil.copy(src_pq, f"{d}/src/a_documents.parquet")
-        now = __import__("time").time()
-        for f in os.listdir(f"{d}/src"):   # originals strictly earlier
-            os.utime(f"{d}/src/{f}", (now - 100, now - 100))
-        dups = (spark.read.parquet(src_pq)
-                .withColumn("doc_id",
-                            (F.col("doc_id") + F.lit(1000000))
-                            .cast("long")))
-        dups.coalesce(1).write.mode("overwrite").parquet(f"{d}/dupstage")
-        part = [f for f in os.listdir(f"{d}/dupstage")
-                if f.endswith(".parquet")][0]
-        shutil.copy(f"{d}/dupstage/{part}", f"{d}/src/z_dups.parquet")
-        q = start_dedup_stream(spark, f"{d}/src", f"{d}/out", f"{d}/ckpt")
-        q.awaitTermination(300)
-    return dedup_survivors(spark, f"{d}/out").select("doc_id", "fp")
-
-
-def _sql_streamed_dedup() -> str:
-    return """WITH u AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         sha256(coalesce(text, '')) AS fp
-  FROM documents
-  UNION ALL
-  SELECT doc_id::BIGINT + 1000000, sha256(coalesce(text, ''))
-  FROM documents)
-SELECT min(doc_id)::BIGINT AS doc_id, fp FROM u GROUP BY fp"""
-
-
-_SKETCH_STREAM_CACHE: dict[tuple, str] = {}
-
-
-def q_streamed_sketches(spark, sf_dir):
-    """Streaming corpus-statistics sketches (streaming.sketches): the
-    sf corpus split into two files streamed one-per-batch; the
-    merged-at-read CMS cells (sum over published batch partitions) must
-    equal a batch `cms_build` over the whole corpus — exact for ANY
-    batch split because cell addition is the CMS merge."""
-    import os
-
-    from .streaming.sketches import start_sketch_stream, stream_cms
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    d, created = _session_tmpdir(_SKETCH_STREAM_CACHE, key,
-                                 "entry_sksketch_")
-    if created:
-        src_pq = f"{sf_dir}/documents.parquet"
-        docs = spark.read.parquet(src_pq)
-        os.makedirs(f"{d}/src", exist_ok=True)
-        now = __import__("time").time()
-        for i, half in enumerate((docs.where(F.col("doc_id") % 2 == 0),
-                                  docs.where(F.col("doc_id") % 2 == 1))):
-            stage = f"{d}/stage{i}"
-            half.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = [f for f in os.listdir(stage)
-                    if f.endswith(".parquet")][0]
-            dst = f"{d}/src/f{i}.parquet"
-            os.replace(os.path.join(stage, part), dst)
-            os.utime(dst, (now - 100 + i, now - 100 + i))
-        q = start_sketch_stream(spark, f"{d}/src", f"{d}/out",
-                                f"{d}/ckpt", max_files_per_trigger=1)
-        q.awaitTermination(300)
-    return (stream_cms(spark, f"{d}/out")
-            .select(F.col("row").cast("long").alias("row"),
-                    "bucket", "cnt")
-            .orderBy("row", "bucket"))
-
-
-def _sql_streamed_sketches() -> str:
-    from .pipeline.sketches import CMS_DEPTH, CMS_WIDTH
-    return f"""WITH toks AS (
-  SELECT unnest(list_filter(
-           regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-           t -> t <> '')) AS token
-  FROM documents)
-SELECT row,
-       ('0x' || substr(md5('cms' || row || '|' || token), 1, 8))
-         ::UBIGINT::BIGINT % {CMS_WIDTH} AS bucket,
-       count(*)::BIGINT AS cnt
-FROM toks, (SELECT unnest(generate_series(0, {CMS_DEPTH - 1})) AS row)
-GROUP BY row, bucket
-ORDER BY row, bucket"""
 
 
 _FIELDS_INDEX_CACHE: dict[tuple, Index] = {}
@@ -2651,39 +2051,6 @@ WHERE asg.cell IN (SELECT cid FROM probe)
 ORDER BY cos_r DESC, vec_id LIMIT {k}"""
 
 
-def _lang_count_sql(words: tuple[str, ...]) -> str:
-    lst = ", ".join(f"'{w}'" for w in words)
-    return f"len(list_filter(toks, t -> list_contains([{lst}], t)))::BIGINT"
-
-
-def _sql_langid() -> str:
-    c_en = _lang_count_sql(ts.LANG_MARKERS["en"])
-    c_de = _lang_count_sql(ts.LANG_MARKERS["de"])
-    c_fr = _lang_count_sql(ts.LANG_MARKERS["fr"])
-    return f"""{PRELUDE},
-counts AS (SELECT doc_id, {c_en} AS c_en, {c_de} AS c_de, {c_fr} AS c_fr
-           FROM docs0)
-SELECT doc_id,
-       CASE WHEN c_en = 0 AND c_de = 0 AND c_fr = 0 THEN 'und'
-            WHEN c_en >= c_de AND c_en >= c_fr THEN 'en'
-            WHEN c_de >= c_fr THEN 'de' ELSE 'fr' END AS lang_guess,
-       c_en, c_de, c_fr
-FROM counts"""
-
-
-def _sql_token_counts() -> str:
-    return r"""SELECT doc_id::BIGINT AS doc_id,
-       length(coalesce(text, ''))::BIGINT AS n_chars,
-       len(list_filter(regexp_split_to_array(coalesce(text, ''), '\s+'),
-                       t -> t <> ''))::BIGINT AS ws_tokens,
-       len(list_filter(regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-                       t -> t <> ''))::BIGINT AS re_tokens,
-       len(list_distinct(list_filter(
-           regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-           t -> t <> '')))::BIGINT AS uniq_tokens
-FROM documents"""
-
-
 def _sql_graph_pagerank(n_iter: int = 6) -> str:
     """6 unrolled power-iteration CTEs — same edge synthesis, same
     teleport/contribution arithmetic as q_graph_pagerank, every IEEE op
@@ -2720,503 +2087,6 @@ SELECT node,
 FROM {prev}
 ORDER BY pr_r DESC, node ASC
 LIMIT 100"""
-
-
-def _sql_quality() -> str:
-    stop = _lang_count_sql(ts.LANG_MARKERS["en"])
-    return f"""{PRELUDE},
-base AS (SELECT d.doc_id, toks,
-                len(toks) AS n_tok,
-                {stop} AS stop_cnt,
-                length(coalesce(text, '')) AS n_chars,
-                (length(coalesce(text, '')) - length(regexp_replace(coalesce(text, ''), '[0-9]', '', 'g')))
-                  AS digits,
-                list_sum(list_transform(toks, t -> length(t))) AS tok_chars
-         FROM documents d JOIN docs0 USING (doc_id)),
-ratios AS (SELECT doc_id, n_tok,
-    CASE WHEN n_tok > 0 THEN stop_cnt / n_tok ELSE 0.0 END AS stop_ratio,
-    CASE WHEN n_chars > 0 THEN digits / n_chars ELSE 0.0 END AS digit_ratio,
-    CASE WHEN n_tok > 0 THEN tok_chars / n_tok ELSE 0.0 END AS avgtok
-  FROM base)
-SELECT doc_id, n_tok::BIGINT AS n_tokens,
-       floor(stop_ratio * 1e6 + 0.5)::BIGINT AS stop_r,
-       floor(digit_ratio * 1e6 + 0.5)::BIGINT AS digit_r,
-       floor(avgtok * 1e6 + 0.5)::BIGINT AS avgtok_r,
-       floor((0.4 * (1.0 - stop_ratio)
-              + 0.3 * least(1.0, n_tok / 100.0)
-              + 0.3 * (1.0 - digit_ratio)) * 1e6 + 0.5)::BIGINT AS quality_r
-FROM ratios"""
-
-
-def _sql_fingerprints() -> str:
-    # coalesce: DuckDB array_to_string([]) is NULL, Spark's is '' —
-    # zero-token docs must hash identically on both sides
-    return """SELECT doc_id::BIGINT AS doc_id,
-       sha256(text) AS fp_exact,
-       md5(coalesce(array_to_string(list_filter(
-           regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-           t -> t <> ''), ' '), '')) AS fp_norm
-FROM documents"""
-
-
-def _repetition_ctes(p: str = "") -> str:
-    """Replays `textstats.repetition_filter` as a CTE chain ending in
-    `{p}v(doc_id, <ratio columns>, reasons)`. The Spark side finds the
-    heaviest n-gram with a sorted one-pass fold; DuckDB gets the same
-    max(count · char_length) by unnest + GROUP BY — clearer as an
-    oracle, identical by construction. Division pairs are BIGINT/BIGINT
-    → double on both engines, so the floor(r·1e6+0.5) integers match
-    exactly. `p` prefixes every CTE name so the chain composes into
-    other WITH chains without collisions (_sql_curation_funnel appends
-    it after the quality chain, whose names overlap)."""
-    def gram(n: int) -> str:
-        return (f"list_transform(generate_series(1, "
-                f"greatest(len(toks) - {n - 1}, 0)), "
-                f"i -> array_to_string(list_slice(toks, i, i + {n - 1}),"
-                f" ' '))")
-
-    def dup_cols(col: str, p: str) -> str:
-        return f"""len({col}) AS n{p},
-         len(list_distinct({col})) AS n{p}d,
-         coalesce(list_sum(list_transform({col}, x -> length(x))), 0)
-           AS {p}ch,
-         coalesce(list_sum(list_transform(list_distinct({col}),
-             d -> length(d) * (len(list_filter({col}, x -> x = d)) - 1))),
-           0) AS {p}dup"""
-
-    def ratio(num: str, den: str, alias: str) -> str:
-        return (f"floor(CASE WHEN {den} > 0 THEN {num} / {den} "
-                f"ELSE 0.0 END * 1e6 + 0.5)::BIGINT AS {alias}")
-
-    rules = [("dup_line_r", ts.REP_MAX_DUP_LINE_R, "dup_lines"),
-             ("dup_line_char_r", ts.REP_MAX_DUP_LINE_CHAR_R,
-              "dup_line_chars"),
-             ("dup_para_r", ts.REP_MAX_DUP_PARA_R, "dup_paras"),
-             ("dup_para_char_r", ts.REP_MAX_DUP_PARA_CHAR_R,
-              "dup_para_chars"),
-             ("top2_r", ts.REP_MAX_TOP2_R, "top2_heavy"),
-             ("top3_r", ts.REP_MAX_TOP3_R, "top3_heavy"),
-             ("top4_r", ts.REP_MAX_TOP4_R, "top4_heavy")]
-    reason_arms = ",\n    ".join(
-        f"CASE WHEN {col} > {thr} THEN '{name}' END"
-        for col, thr, name in rules)
-    return f"""{p}t AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         list_filter(list_transform(string_split(coalesce(text, ''),
-             chr(10)), x -> trim(x)), x -> x <> '') AS lines,
-         list_filter(list_transform(regexp_split_to_array(
-             coalesce(text, ''), '\\n{{2,}}'), x -> trim(x)),
-             x -> x <> '') AS paras,
-         list_filter(regexp_split_to_array(lower(coalesce(text, '')),
-             '[^a-z0-9]+'), x -> x <> '') AS toks
-  FROM documents),
-{p}base AS (
-  SELECT doc_id, toks,
-         coalesce(list_sum(list_transform(toks, x -> length(x))), 0)
-           AS tok_chars,
-         {dup_cols('lines', 'l')},
-         {dup_cols('paras', 'p')}
-  FROM {p}t),
-{p}gu AS (SELECT doc_id, 2 AS n, unnest({gram(2)}) AS gm FROM {p}t
-       UNION ALL SELECT doc_id, 3, unnest({gram(3)}) FROM {p}t
-       UNION ALL SELECT doc_id, 4, unnest({gram(4)}) FROM {p}t),
-{p}gc AS (SELECT doc_id, n, gm, count(*) AS cnt FROM {p}gu
-          GROUP BY doc_id, n, gm),
-{p}tops AS (SELECT doc_id,
-    max(CASE WHEN n = 2 AND cnt >= 2 THEN cnt * (length(gm) - 1) END) AS b2,
-    max(CASE WHEN n = 3 AND cnt >= 2 THEN cnt * (length(gm) - 2) END) AS b3,
-    max(CASE WHEN n = 4 AND cnt >= 2 THEN cnt * (length(gm) - 3) END) AS b4
-  FROM {p}gc GROUP BY doc_id),
-{p}r AS (SELECT b.doc_id,
-    {ratio('(nl - nld)', 'nl', 'dup_line_r')},
-    {ratio('ldup', 'lch', 'dup_line_char_r')},
-    {ratio('(np - npd)', 'np', 'dup_para_r')},
-    {ratio('pdup', 'pch', 'dup_para_char_r')},
-    {ratio('coalesce(b2, 0)', 'tok_chars', 'top2_r')},
-    {ratio('coalesce(b3, 0)', 'tok_chars', 'top3_r')},
-    {ratio('coalesce(b4, 0)', 'tok_chars', 'top4_r')}
-  FROM {p}base b LEFT JOIN {p}tops USING (doc_id)),
-{p}v AS (SELECT *, concat_ws(',',
-    {reason_arms}) AS reasons FROM {p}r)"""
-
-
-def _sql_repetition() -> str:
-    return f"""WITH {_repetition_ctes()}
-SELECT doc_id, dup_line_r, dup_line_char_r, dup_para_r, dup_para_char_r,
-       top2_r, top3_r, top4_r,
-       (CASE WHEN reasons = '' THEN 1 ELSE 0 END)::BIGINT AS keep,
-       reasons
-FROM v"""
-
-
-def _code_toks_sql() -> str:
-    """DuckDB expression for `codestats.code_tokens_expr` over `text`,
-    built from the module's own pattern constants (Java `$n` backrefs →
-    RE2 `\\n`; DuckDB needs the explicit 'g' flag Spark implies)."""
-    s1 = cst.CAMEL1_SUB.replace("$", "\\")
-    s2 = cst.CAMEL2_SUB.replace("$", "\\")
-    return (
-        "list_filter(regexp_split_to_array(lower("
-        f"regexp_replace(regexp_replace("
-        f"regexp_replace(regexp_replace(text, '{cst.BLOCK_COMMENT_RE}', ' ', 'g'),"
-        f" '{cst.LINE_COMMENT_RE}', ' ', 'g'),"
-        f" '{cst.CAMEL1_RE}', '{s1}', 'g'),"
-        f" '{cst.CAMEL2_RE}', '{s2}', 'g')),"
-        " '[^a-z0-9]+'), t -> t <> '')")
-
-
-def _sql_code_tokens() -> str:
-    return f"""WITH t AS (SELECT doc_id, {_code_toks_sql()} AS toks
-           FROM documents)
-SELECT doc_id::BIGINT AS doc_id,
-       len(toks)::BIGINT AS n_code_tokens,
-       len(list_distinct(toks))::BIGINT AS n_uniq_code,
-       md5(coalesce(array_to_string(toks, ' '), '')) AS stream_hash
-FROM t"""
-
-
-def _winnow_fp_ctes() -> str:
-    """CTE chain → `fp(doc_id, fp)`: the winnowed fingerprint set with
-    the exact k/w/hash of `codestats.winnow_fingerprints`."""
-    k, w = cst.WINNOW_K, cst.WINNOW_W
-    return f"""WITH t AS (SELECT doc_id, {_code_toks_sql()} AS toks
-           FROM documents),
-g AS (SELECT doc_id,
-        list_transform(generate_series(1, greatest(len(toks) - {k} + 1, 0)),
-          i -> ('0x' || substr(md5(array_to_string(
-                   list_slice(toks, i, i + {k} - 1), ' ')), 1, 8)
-               )::UBIGINT::BIGINT) AS kh
-      FROM t),
-w AS (SELECT doc_id,
-        CASE WHEN len(kh) < {w} THEN list_distinct(kh)
-             ELSE list_distinct(list_transform(
-                    generate_series(1, len(kh) - {w} + 1),
-                    j -> list_aggregate(list_slice(kh, j, j + {w} - 1),
-                                        'min')))
-        END AS fps
-      FROM g),
-fp AS (SELECT doc_id::BIGINT AS doc_id, unnest(fps) AS fp FROM w)"""
-
-
-def _sql_winnow_fps() -> str:
-    return f"{_winnow_fp_ctes()}\nSELECT doc_id, fp FROM fp"
-
-
-def _sql_winnow_pairs() -> str:
-    return f"""{_winnow_fp_ctes()}
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_shared
-FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY a.doc_id, b.doc_id
-HAVING count(*) >= {cst.WINNOW_MIN_SHARED}"""
-
-
-def _license_arms() -> str:
-    """The LICENSE_PHRASES priority cascade as CASE arms (first match
-    wins) — shared by _sql_license_scan and _sql_curation_funnel."""
-    return "\n            ".join(
-        f"WHEN regexp_matches(text, '{pat}') THEN '{name}'"
-        for name, pat in cst.LICENSE_PHRASES)
-
-
-def _sql_license_scan() -> str:
-    """Replays `codestats.license_scan`: SPDX tag wins, else the FIRST
-    matching phrase of LICENSE_PHRASES in priority order, else 'none'
-    (a CASE cascade IS first-match-wins)."""
-    arms = _license_arms()
-    return f"""WITH s AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         lower(regexp_extract(text, '{cst.SPDX_RE}', 1)) AS spdx_id,
-         text
-  FROM documents)
-SELECT doc_id,
-       CASE WHEN spdx_id <> '' THEN spdx_id
-            {arms}
-            ELSE 'none' END AS license,
-       spdx_id
-FROM s"""
-
-
-def _quality_verdict_ctes() -> str:
-    """The base/r/v CTE chain of `textstats.quality_filter` (appended
-    after PRELUDE) — shared by _sql_quality_filter and
-    _sql_curation_funnel."""
-    stop = _lang_count_sql(ts.LANG_MARKERS["en"])
-    return f"""base AS (SELECT d.doc_id, toks,
-                len(toks) AS n_tok,
-                {stop} AS stop_cnt,
-                length(coalesce(text, '')) AS n_chars,
-                (length(coalesce(text, '')) - length(regexp_replace(coalesce(text, ''), '[0-9]', '', 'g')))
-                  AS digits,
-                list_sum(list_transform(toks, t -> length(t))) AS tok_chars
-         FROM documents d JOIN docs0 USING (doc_id)),
-r AS (SELECT doc_id, n_tok::BIGINT AS n_tokens,
-    floor(CASE WHEN n_tok > 0 THEN stop_cnt / n_tok ELSE 0.0 END
-          * 1e6 + 0.5)::BIGINT AS stop_r,
-    floor(CASE WHEN n_chars > 0 THEN digits / n_chars ELSE 0.0 END
-          * 1e6 + 0.5)::BIGINT AS digit_r,
-    floor(CASE WHEN n_tok > 0 THEN tok_chars / n_tok ELSE 0.0 END
-          * 1e6 + 0.5)::BIGINT AS avgtok_r
-  FROM base),
-v AS (SELECT doc_id, concat_ws(',',
-    CASE WHEN n_tokens < {ts.FILTER_MIN_TOKENS} THEN 'too_few_tokens' END,
-    CASE WHEN stop_r = 0 THEN 'no_stopwords' END,
-    CASE WHEN stop_r > {ts.FILTER_MAX_STOP_R} THEN 'stop_heavy' END,
-    CASE WHEN digit_r > {ts.FILTER_MAX_DIGIT_R} THEN 'digit_heavy' END,
-    CASE WHEN avgtok_r < {ts.FILTER_MIN_AVGTOK_R} THEN 'tokens_too_short' END,
-    CASE WHEN avgtok_r > {ts.FILTER_MAX_AVGTOK_R} THEN 'tokens_too_long' END
-  ) AS reasons FROM r)"""
-
-
-def _sql_quality_filter() -> str:
-    """`quality_features` ratios (the _sql_quality CTEs) → Gopher-rule
-    verdict; concat_ws skips NULL arms identically in DuckDB and Spark."""
-    return f"""{PRELUDE},
-{_quality_verdict_ctes()}
-SELECT doc_id,
-       (CASE WHEN reasons = '' THEN 1 ELSE 0 END)::BIGINT AS keep,
-       reasons
-FROM v"""
-
-
-def _nb_model_ctes() -> str:
-    """lab/tb/tot/cnt/w CTE chain of the hashed-NB quality model
-    (`pipeline.quality_model`): Gopher-verdict labels (the shared
-    `_quality_verdict_ctes`), md5-prefix token buckets (the
-    `token_hash32` scheme), per-bucket Laplace log-odds quantized to
-    floor(w·1e6+0.5) ppm. The ln input is a DOUBLE product/quotient of
-    BIGINTs — IEEE-identical in Spark and DuckDB — mirroring
-    `quality_model._weight_expr`."""
-    v, s = qm.QM_BUCKETS, qm.QM_SCALE
-    return f"""{PRELUDE},
-{_quality_verdict_ctes()},
-lab AS (SELECT doc_id,
-               CASE WHEN reasons = '' THEN 1 ELSE 0 END AS label FROM v),
-tb AS (SELECT t.doc_id,
-              ('0x' || substr(md5(t.term), 1, 8))::UBIGINT::BIGINT
-                % {v} AS bucket,
-              label
-       FROM tok t JOIN lab USING (doc_id)),
-tot AS (SELECT coalesce(sum(label), 0)::BIGINT AS tg,
-               (count(*) - coalesce(sum(label), 0))::BIGINT AS tbad
-        FROM tb),
-cnt AS (SELECT bucket, sum(label)::BIGINT AS n_good,
-               (count(*) - sum(label))::BIGINT AS n_bad
-        FROM tb GROUP BY bucket),
-w AS (SELECT bucket, n_good, n_bad,
-             floor(ln(((n_good + 1)::DOUBLE * (tbad + {v})::DOUBLE)
-                    / ((n_bad + 1)::DOUBLE * (tg + {v})::DOUBLE))
-                   * {s} + 0.5)::BIGINT AS w_ppm
-      FROM cnt CROSS JOIN tot)"""
-
-
-def _sql_quality_model_weights() -> str:
-    return f"""{_nb_model_ctes()}
-SELECT bucket, n_good, n_bad, w_ppm FROM w"""
-
-
-def _sql_quality_model_score() -> str:
-    s = qm.QM_SCALE
-    return f"""{_nb_model_ctes()},
-pri AS (SELECT floor(ln((coalesce(sum(label), 0) + 1.0)
-                      / (count(*) - coalesce(sum(label), 0) + 1.0))
-                     * {s} + 0.5)::BIGINT AS prior_ppm FROM lab),
-sc AS (SELECT t.doc_id, sum(w_ppm)::BIGINT AS s
-       FROM tb t JOIN w USING (bucket) GROUP BY t.doc_id)
-SELECT d.doc_id,
-       (prior_ppm + coalesce(s, 0))::BIGINT AS score_ppm,
-       (prior_ppm + coalesce(s, 0) > 0)::BIGINT AS model_keep
-FROM (SELECT doc_id FROM docs0) d
-LEFT JOIN sc USING (doc_id) CROSS JOIN pri"""
-
-
-def _sql_lm_unigram() -> str:
-    """Replays `quality_model.unigram_lm_scores` (self-trained LM): the
-    tok CTE is the stopword-inclusive token stream; per-term logp is
-    quantized BEFORE the per-doc sum so doc scores are order-free
-    BIGINT sums; both division pairs are BIGINT→DOUBLE (IEEE-identical
-    engines)."""
-    s = qm.QM_SCALE
-    return f"""{PRELUDE},
-dtf AS (SELECT doc_id, term, count(*)::BIGINT AS tf
-        FROM tok GROUP BY doc_id, term),
-lmstats AS (SELECT term, sum(tf)::BIGINT AS ctf FROM dtf GROUP BY term),
-lmtot AS (SELECT coalesce(sum(ctf), 0)::BIGINT AS t,
-                 count(*)::BIGINT AS v FROM lmstats),
-lw AS (SELECT term,
-              floor(ln((ctf + 1)::DOUBLE / (t + v)::DOUBLE)
-                    * {s} + 0.5)::BIGINT AS logp_ppm
-       FROM lmstats CROSS JOIN lmtot),
-lsc AS (SELECT d.doc_id, sum(d.tf * lw.logp_ppm)::BIGINT AS sm,
-               sum(d.tf)::BIGINT AS n
-        FROM dtf d JOIN lw USING (term) GROUP BY d.doc_id)
-SELECT d0.doc_id,
-       coalesce(n, 0)::BIGINT AS n_tokens,
-       coalesce(floor((-sm)::DOUBLE / n + 0.5), 0)::BIGINT AS nll_ppm
-FROM (SELECT doc_id FROM docs0) d0 LEFT JOIN lsc USING (doc_id)"""
-
-
-def _sql_dsir_importance() -> str:
-    """Replays `quality_model.dsir_importance` (grams=2, target = the
-    BENCH_MOD split): bigram stream → md5-prefix buckets → the NB
-    count/weight algebra of `_nb_model_ctes` with corpus-membership
-    labels → per-raw-doc BIGINT weight sums. generate_series(1,
-    greatest(n-1, 0)) is the established empty-gram guard (DuckDB's
-    series is empty at 1..0; Spark's CASE guard matches)."""
-    v, s = qm.QM_BUCKETS, qm.QM_SCALE
-    return f"""{PRELUDE},
-dg AS (SELECT doc_id,
-              unnest(list_transform(
-                  generate_series(1, greatest(len(toks) - 1, 0)),
-                  i -> array_to_string(list_slice(toks, i, i + 1), ' ')))
-                AS gram
-       FROM docs0),
-dtb AS (SELECT doc_id,
-               ('0x' || substr(md5(gram), 1, 8))::UBIGINT::BIGINT
-                 % {v} AS bucket,
-               CASE WHEN doc_id % {BENCH_MOD} = 0 THEN 1 ELSE 0 END
-                 AS label
-        FROM dg),
-dtot AS (SELECT coalesce(sum(label), 0)::BIGINT AS tg,
-                (count(*) - coalesce(sum(label), 0))::BIGINT AS tbad
-         FROM dtb),
-dcnt AS (SELECT bucket, sum(label)::BIGINT AS n_good,
-                (count(*) - sum(label))::BIGINT AS n_bad
-         FROM dtb GROUP BY bucket),
-dw AS (SELECT bucket,
-              floor(ln(((n_good + 1)::DOUBLE * (tbad + {v})::DOUBLE)
-                     / ((n_bad + 1)::DOUBLE * (tg + {v})::DOUBLE))
-                    * {s} + 0.5)::BIGINT AS w_ppm
-       FROM dcnt CROSS JOIN dtot),
-dsc AS (SELECT t.doc_id, sum(w_ppm)::BIGINT AS sm
-        FROM dtb t JOIN dw USING (bucket)
-        WHERE t.label = 0 GROUP BY t.doc_id)
-SELECT d.doc_id, coalesce(sm, 0)::BIGINT AS imp_ppm
-FROM (SELECT doc_id FROM docs0 WHERE doc_id % {BENCH_MOD} <> 0) d
-LEFT JOIN dsc USING (doc_id)"""
-
-
-def _sql_corpus_composition() -> str:
-    return r"""SELECT lang, source, count(*)::BIGINT AS n_docs,
-       sum(length(text))::BIGINT AS n_chars_sum,
-       sum(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                           t -> t <> '')))::BIGINT AS n_tokens_sum,
-       count(DISTINCT sha256(text))::BIGINT AS n_distinct_texts
-FROM documents GROUP BY lang, source"""
-
-
-def _decontam_ctes() -> str:
-    """ng (distinct word-k-grams of every doc) + bng (the deduped grams
-    of the doc_id % BENCH_MOD bench split) — shared by
-    _sql_decontam_scan and _sql_curation_funnel."""
-    k = cur.DECONTAM_K
-    return f"""ng AS (SELECT DISTINCT doc_id, gram FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= {k} THEN
-      list_transform(range(1, len(toks) - {k - 2}),
-                     i -> array_to_string(toks[i:i+{k - 1}], ' '))
-      ELSE [] END) AS gram
-  FROM docs0)),
-bng AS (SELECT DISTINCT gram FROM ng WHERE doc_id % {BENCH_MOD} = 0)"""
-
-
-def _sql_decontam_scan() -> str:
-    """Replays `curation.decontaminate` with k = DECONTAM_K over the
-    doc_id % BENCH_MOD bench split: distinct word-k-grams, bench grams
-    deduped, per-doc totals and hit counts, verdict at
-    DECONTAM_MIN_HITS."""
-    return f"""{PRELUDE},
-{_decontam_ctes()},
-tot AS (SELECT doc_id, count(*)::BIGINT AS n_grams FROM ng GROUP BY doc_id),
-hit AS (SELECT ng.doc_id, count(*)::BIGINT AS n_hits
-        FROM ng JOIN bng USING (gram) GROUP BY ng.doc_id)
-SELECT d.doc_id,
-       coalesce(t.n_grams, 0)::BIGINT AS n_grams,
-       coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-       (coalesce(h.n_hits, 0) >= {cur.DECONTAM_MIN_HITS})::BIGINT
-         AS contaminated
-FROM (SELECT DISTINCT doc_id::BIGINT AS doc_id FROM documents) d
-LEFT JOIN tot t USING (doc_id)
-LEFT JOIN hit h USING (doc_id)"""
-
-
-def _sql_curation_funnel() -> str:
-    """Replays `curation.curate_corpus` stage by stage: Gopher quality
-    verdict → Gopher repetition removal → license allowlist → exact
-    dedup (min doc_id per text) → decontamination vs the doc_id %
-    BENCH_MOD bench split → alpha=0.5 temperature sampling on the
-    SURVIVORS' (lang, source) group sizes — emitting the per-stage
-    survivor counts."""
-    allow = ", ".join(f"'{lic}'" for lic in cur.ALLOW_LICENSES)
-    rate = "floor(1e6 / sqrt(n_group::DOUBLE / n_min::DOUBLE) + 0.5)::BIGINT"
-    spdx = f"lower(regexp_extract(text, '{cst.SPDX_RE}', 1))"
-    return f"""{PRELUDE},
-{_quality_verdict_ctes()},
-s1 AS (SELECT doc_id FROM v WHERE reasons = ''),
-{_repetition_ctes('rp')},
-s1r AS (SELECT s1.doc_id FROM s1 JOIN rpv USING (doc_id)
-        WHERE rpv.reasons = ''),
-lic AS (SELECT doc_id::BIGINT AS doc_id,
-               CASE WHEN {spdx} <> '' THEN {spdx}
-            {_license_arms()}
-            ELSE 'none' END AS license
-        FROM documents),
-s2 AS (SELECT s1r.doc_id FROM s1r JOIN lic USING (doc_id)
-       WHERE license IN ({allow})),
-s3 AS (SELECT doc_id FROM (
-         SELECT d.doc_id::BIGINT AS doc_id,
-                min(d.doc_id::BIGINT) OVER (PARTITION BY d.text) AS keep_id
-         FROM documents d JOIN s2 ON d.doc_id = s2.doc_id)
-       WHERE doc_id = keep_id),
-{_decontam_ctes()},
-cont AS (SELECT ng.doc_id FROM ng JOIN bng USING (gram)
-         GROUP BY ng.doc_id
-         HAVING count(*) >= {cur.DECONTAM_MIN_HITS}),
-s4 AS (SELECT doc_id FROM s3
-       WHERE doc_id NOT IN (SELECT doc_id FROM cont)),
-grp AS (SELECT d.doc_id::BIGINT AS doc_id,
-               count(*) OVER (PARTITION BY d.lang, d.source)::BIGINT
-                 AS n_group
-        FROM documents d JOIN s4 ON d.doc_id = s4.doc_id),
-m AS (SELECT min(n_group) AS n_min FROM grp),
-s5 AS (SELECT doc_id FROM grp, m
-       WHERE (('0x' || substr(md5('{cur.SAMPLE_SALT}' || doc_id::VARCHAR),
-               1, 8))::UBIGINT::BIGINT % 1000000) < {rate})
-SELECT '00_input' AS stage, count(*)::BIGINT AS n_docs FROM documents
-UNION ALL SELECT '01_quality', count(*)::BIGINT FROM s1
-UNION ALL SELECT '02_repetition', count(*)::BIGINT FROM s1r
-UNION ALL SELECT '03_license', count(*)::BIGINT FROM s2
-UNION ALL SELECT '04_exact_dedup', count(*)::BIGINT FROM s3
-UNION ALL SELECT '05_decontam', count(*)::BIGINT FROM s4
-UNION ALL SELECT '06_sample', count(*)::BIGINT FROM s5"""
-
-
-def _sql_sample_temperature() -> str:
-    """Replays `curation.sample_temperature` (alpha = 0.5 over
-    (lang, source)): window group counts, global min, rate
-    1e6/sqrt(n_g/n_min), salted-md5 keep hash — sqrt and division are
-    IEEE-correctly-rounded in both engines, so rate_r matches
-    bit-identically."""
-    rate = "floor(1e6 / sqrt(n_group::DOUBLE / n_min::DOUBLE) + 0.5)::BIGINT"
-    return f"""WITH g AS (
-  SELECT doc_id::BIGINT AS doc_id, lang, source,
-         count(*) OVER (PARTITION BY lang, source)::BIGINT AS n_group
-  FROM documents),
-m AS (SELECT min(n_group) AS n_min FROM g)
-SELECT doc_id, lang, source, n_group,
-       {rate} AS rate_r,
-       ((('0x' || substr(md5('{cur.SAMPLE_SALT}' || doc_id::VARCHAR), 1, 8))
-         ::UBIGINT::BIGINT % 1000000) < {rate})::BIGINT AS kept
-FROM g, m"""
-
-
-def _sql_pii_scan() -> str:
-    counts = ",\n       ".join(
-        f"len(regexp_extract_all(text, '{pat}'))::BIGINT AS n_{name}"
-        for name, pat in cst.PII_PATTERNS.items())
-    email = cst.PII_PATTERNS["email"]
-    return f"""SELECT doc_id::BIGINT AS doc_id,
-       {counts},
-       md5(regexp_replace(text, '{email}', '<EMAIL>', 'g')) AS redacted_hash
-FROM documents"""
 
 
 def _fb_ctes(terms: list[str], alias: str) -> str:
@@ -3620,291 +2490,6 @@ FROM c
 ORDER BY dist_r ASC, vec_id ASC LIMIT {k}"""
 
 
-# Fixed, corpus-independent unigram-LM vocabulary for the Viterbi
-# driver entry: every [a-z0-9] char, 20 common bigrams, 4 trigrams.
-# Weights make longer pieces strictly preferable when available
-# (ln(3/50) > 2·ln(1/50); ln(4/50) > ln(1/50)+ln(3/50)), so the DP
-# genuinely competes between segmentations.
-_UNI_CHARS = "abcdefghijklmnopqrstuvwxyz0123456789"
-_UNI_BIGRAMS = ["th", "he", "in", "er", "an", "re", "on", "at", "en",
-                "nd", "ti", "es", "or", "te", "of", "ed", "is", "it",
-                "al", "ar"]
-_UNI_TRIGRAMS = ["the", "ing", "ion", "ent"]
-_UNI_VOCAB = ([(c, math.log(1 / 50)) for c in _UNI_CHARS]
-              + [(b, math.log(3 / 50)) for b in _UNI_BIGRAMS]
-              + [(t, math.log(4 / 50)) for t in _UNI_TRIGRAMS])
-
-
-def q_unigram_viterbi(spark, sf_dir):
-    """The unigram-LM Viterbi encoder (`tokenizer.unigram_encode`)
-    under the FIXED vocabulary above → per-doc total best log-prob,
-    quantized at 1e4. The oracle replays the same DP as a recursive
-    CTE carrying a sliding window of the last best[] values — one
-    recursion step per character position, the NEAR-zipper precedent.
-    (EM training itself is oracle-exempt — iterative float fitting —
-    and is gated by the brute-force enumeration pytest oracles.)"""
-    from .pipeline.tokenizer import unigram_encode
-    enc = unigram_encode(_docs(spark, sf_dir), _UNI_VOCAB,
-                         max_piece_len=3)
-    lut = F.create_map(*[F.lit(x) for p, lp in _UNI_VOCAB
-                         for x in (p, float(lp))])
-    score = F.aggregate(
-        F.transform("pieces", lambda p: F.coalesce(lut[p], F.lit(-1e9))),
-        F.lit(0.0), lambda a, x: a + x)
-    return enc.select(
-        "doc_id",
-        F.floor(score * 1e4 + F.lit(0.5)).cast("long").alias("score_r"))
-
-
-def _sql_unigram_viterbi() -> str:
-    def case_chain(var: str) -> str:
-        arms = " ".join(
-            f"WHEN '{p}' THEN CAST({lp!r} AS DOUBLE)"
-            for p, lp in _UNI_VOCAB)
-        return f"CASE {var} {arms} ELSE -1e18 END"
-
-    return f"""WITH RECURSIVE toks AS (
-  SELECT doc_id::BIGINT AS doc_id, t AS word
-  FROM (SELECT doc_id, unnest(list_filter(
-          regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-          x -> x <> '')) AS t FROM documents)),
-words AS (SELECT DISTINCT word FROM toks),
-dp(word, i, w) AS (
-  SELECT word, 0,
-         [CAST(-1e18 AS DOUBLE), -1e18, CAST(0.0 AS DOUBLE)]
-  FROM words
-  UNION ALL
-  SELECT word, i + 1,
-         [w[2], w[3],
-          list_max(list_transform(range(1, least(3, i + 1) + 1),
-            ln -> w[4 - ln]
-                  + {case_chain("substr(word, i + 2 - ln, ln)")}))]
-  FROM dp WHERE i < length(word)),
-best AS (SELECT word, w[3] AS b FROM dp WHERE i = length(word))
-SELECT doc_id, floor(sum(b) * 1e4 + 0.5)::BIGINT AS score_r
-FROM toks JOIN best USING (word)
-GROUP BY doc_id"""
-
-
-def q_unigram_estep(spark, sf_dir):
-    """ONE unigram-LM EM E-step (`tokenizer.unigram_estep`) under the
-    same FIXED `_UNI_VOCAB` the Viterbi entry uses → (piece,
-    e_count_r): expected piece counts from the forward-backward
-    lattice, plus one `__ll__` row carrying the corpus log-likelihood
-    Σ freq·logZ(word). This closes the one operator family that had no
-    SQL oracle at all — EM training — by driver-gating its E-step; the
-    iterative sweep on top is plain re-normalization (pytest-gated
-    monotone-LL + enumeration oracles).
-
-    The oracle replays α (forward) and β (backward) as recursive CTEs
-    carrying a sliding 3-window of log-sum-exp values — the Viterbi
-    entry's DP shape with lse in place of max — and forms
-    E[piece@(i,j)] = exp(α(i)+logp+β(j)−logZ)·freq. Quantized at 1e2:
-    log-sum-exp accumulation order differs between np.logaddexp chains
-    and ln(Σexp) (and Spark's float groupBy sum is partitioning-order-
-    dependent), bounding absolute drift well under 5e-3 while still
-    falsifying any real lattice/count bug."""
-    from .pipeline.tokenizer import bpe_word_counts, unigram_estep
-    wc = bpe_word_counts(_docs(spark, sf_dir)).select("word", "freq")
-    ec = unigram_estep(wc, dict(_UNI_VOCAB), max_piece_len=3)
-    return (ec.select(
-        F.when(F.col("piece") == "\x00ll", F.lit("__ll__"))
-        .otherwise(F.col("piece")).alias("piece"),
-        F.floor(F.col("e_count") * 1e2 + F.lit(0.5))
-        .cast("long").alias("e_count_r"))
-        .where(F.col("e_count_r") != 0))
-
-
-def q_unigram_em2(spark, sf_dir):
-    """TWO chained unigram-LM EM iterations — the trainer's `em_sweep`
-    wiring, not just one lattice pass: E-step under the fixed
-    `_UNI_VOCAB`, closed-form M-step re-normalization (logp =
-    ln(e_count / Σ e_counts), zero-count pieces dropped — the exact
-    `unigram_train.em_sweep` driver state, vocab-bounded), then a
-    SECOND E-step under the updated vocabulary. Output = both
-    iterations' expected counts + `__ll__` corpus-LL riders, so the
-    driver row certifies the iteration plumbing (count → renormalize →
-    re-lattice) end-to-end, closing VERDICT r4 item 5.
-
-    The oracle's second pass can't use pass 1's CASE-literal vocab
-    (its log-probs are data-dependent), so each word carries a
-    position×length-indexed list of piece log-probs (built by joining
-    the span grid to the renormalized pass-1 counts) through the
-    recursive α/β CTEs — list indexing in place of the CASE chain,
-    same lse lattice."""
-    from .pipeline.tokenizer import bpe_word_counts, unigram_estep
-    wc = bpe_word_counts(_docs(spark, sf_dir)).select("word", "freq")
-    rows = unigram_estep(wc, dict(_UNI_VOCAB),
-                         max_piece_len=3).collect()
-    # rows are vocab-bounded (== trainer's em_sweep driver state); the
-    # iter-1 output block is rebuilt FROM the collected rows so the
-    # pass-1 lattice runs exactly once per driver materialization
-    counts = {r["piece"]: r["e_count"] for r in rows
-              if r["piece"] != "\x00ll"}
-    tot = sum(counts.values()) or 1.0
-    vocab2 = {p: math.log(c / tot) for p, c in counts.items() if c > 0.0}
-    ec1 = spark.createDataFrame(
-        [(r["piece"], float(r["e_count"])) for r in rows],
-        "piece string, e_count double")
-    ec2 = unigram_estep(wc, vocab2, max_piece_len=3)
-
-    def fmt(ec, it):
-        return (ec.select(
-            F.lit(it).cast("long").alias("em_iter"),
-            F.when(F.col("piece") == "\x00ll", F.lit("__ll__"))
-            .otherwise(F.col("piece")).alias("piece"),
-            F.floor(F.col("e_count") * 1e2 + F.lit(0.5))
-            .cast("long").alias("e_count_r"))
-            .where(F.col("e_count_r") != 0))
-
-    return fmt(ec1, 1).unionByName(fmt(ec2, 2))
-
-
-def _sql_unigram_estep() -> str:
-    def lp(var: str) -> str:
-        arms = " ".join(
-            f"WHEN '{p}' THEN CAST({lpv!r} AS DOUBLE)"
-            for p, lpv in _UNI_VOCAB)
-        return f"CASE {var} {arms} ELSE -1e18 END"
-
-    # exp(-1e18) = 0 kills out-of-vocab arms inside the lse; the
-    # greatest(.., 1e-300) clamp only guards DuckDB's ln(0) error on
-    # positions with no in-vocab incoming piece — unreachable here
-    # because _UNI_VOCAB contains every [a-z0-9] character
-    fw_step = (f"ln(greatest(list_sum(list_transform("
-               f"range(1, least(3, i + 1) + 1), "
-               f"L -> exp(w[4 - L] + "
-               f"{lp('substr(word, i + 2 - L, L)')}))), 1e-300))")
-    bw_step = (f"ln(greatest(list_sum(list_transform("
-               f"range(1, least(3, length(word) - i + 1) + 1), "
-               f"L -> exp(w[4 - L] + "
-               f"{lp('substr(word, i, L)')}))), 1e-300))")
-    return f"""WITH RECURSIVE toks AS (
-  SELECT doc_id::BIGINT AS doc_id, t AS word
-  FROM (SELECT doc_id, unnest(list_filter(
-          regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-          x -> x <> '')) AS t FROM documents)),
-wc AS (SELECT word, count(*)::DOUBLE AS freq FROM toks GROUP BY word),
-words AS (SELECT word FROM wc),
-af(word, i, w) AS (
-  SELECT word, 0,
-         [CAST(-1e18 AS DOUBLE), -1e18, CAST(0.0 AS DOUBLE)]
-  FROM words
-  UNION ALL
-  SELECT word, i + 1, [w[2], w[3], {fw_step}]
-  FROM af WHERE i < length(word)),
-bb(word, i, w) AS (
-  SELECT word, length(word),
-         [CAST(-1e18 AS DOUBLE), -1e18, CAST(0.0 AS DOUBLE)]
-  FROM words
-  UNION ALL
-  SELECT word, i - 1, [w[2], w[3], {bw_step}]
-  FROM bb WHERE i > 0),
-alpha AS (SELECT word, i, w[3] AS a FROM af),
-beta AS (SELECT word, i, w[3] AS b FROM bb),
-zt AS (SELECT word, w[3] AS z FROM af WHERE i = length(word)),
-spans AS (
-  SELECT word, n, i, L, substr(word, i + 1, L) AS piece
-  FROM (SELECT word, length(word) AS n,
-               unnest(range(0, length(word))) AS i FROM words),
-       (SELECT unnest([1, 2, 3]) AS L)
-  WHERE i + L <= n),
-ec AS (
-  SELECT s.piece,
-         exp(a.a + {lp('s.piece')} + b.b - zt.z) * wc.freq AS e
-  FROM spans s
-  JOIN alpha a ON a.word = s.word AND a.i = s.i
-  JOIN beta b ON b.word = s.word AND b.i = s.i + s.L
-  JOIN zt ON zt.word = s.word
-  JOIN wc ON wc.word = s.word
-  WHERE zt.z > -1e8),
-counts AS (SELECT piece, sum(e) AS e_count FROM ec WHERE e > 0
-           GROUP BY piece),
-ll AS (SELECT '__ll__' AS piece, sum(freq * z) AS e_count
-       FROM wc JOIN zt USING (word) WHERE z > -1e8)
-SELECT piece, floor(e_count * 1e2 + 0.5)::BIGINT AS e_count_r
-FROM (SELECT * FROM counts UNION ALL SELECT * FROM ll)
-WHERE floor(e_count * 1e2 + 0.5) <> 0"""
-
-
-def _sql_unigram_em2() -> str:
-    """Two chained EM iterations. Pass 1 = `_sql_unigram_estep`'s CTE
-    chain verbatim (CASE-literal `_UNI_VOCAB`); the M-step renormalizes
-    its counts in SQL (v2); pass 2 re-runs the α/β lse lattice with
-    each word carrying `lps` — a (position, length)-indexed list of v2
-    log-probs (index (i*3 + L), -1e18 filler past the word end) —
-    because a recursive term can neither CASE over data-dependent
-    probs nor aggregate over a join."""
-    base = _sql_unigram_estep()
-    # strip the pass-1 final SELECT; keep everything through `ll AS (...)`
-    cut = base.rindex("SELECT piece, floor")
-    prelude = base[:cut].rstrip().rstrip(",")
-    return f"""{prelude},
-tot1 AS (SELECT sum(e_count) AS t FROM counts),
-v2 AS (SELECT piece, ln(e_count / t) AS lp
-       FROM counts, tot1 WHERE e_count > 0),
-grid AS (
-  SELECT word, i, L,
-         CASE WHEN i + L <= n
-              THEN substr(word, i + 1, L) END AS piece
-  FROM (SELECT word, length(word) AS n,
-               unnest(range(0, length(word))) AS i FROM words),
-       (SELECT unnest([1, 2, 3]) AS L)),
-wlp AS (
-  SELECT word,
-         list(coalesce(v2.lp, CAST(-1e18 AS DOUBLE))
-              ORDER BY i, L) AS lps
-  FROM grid LEFT JOIN v2 USING (piece)
-  GROUP BY word),
-af2(word, lps, n, i, w) AS (
-  SELECT word, lps, length(word), 0,
-         [CAST(-1e18 AS DOUBLE), -1e18, CAST(0.0 AS DOUBLE)]
-  FROM wlp
-  UNION ALL
-  SELECT word, lps, n, i + 1,
-         [w[2], w[3],
-          ln(greatest(list_sum(list_transform(
-            range(1, least(3, i + 1) + 1),
-            L -> exp(w[4 - L] + lps[(i + 1 - L) * 3 + L]))), 1e-300))]
-  FROM af2 WHERE i < n),
-bb2(word, lps, i, w) AS (
-  SELECT word, lps, length(word),
-         [CAST(-1e18 AS DOUBLE), -1e18, CAST(0.0 AS DOUBLE)]
-  FROM wlp
-  UNION ALL
-  SELECT word, lps, i - 1,
-         [w[2], w[3],
-          ln(greatest(list_sum(list_transform(
-            range(1, least(3, length(word) - i + 1) + 1),
-            L -> exp(w[4 - L] + lps[(i - 1) * 3 + L]))), 1e-300))]
-  FROM bb2 WHERE i > 0),
-alpha2 AS (SELECT word, i, w[3] AS a FROM af2),
-beta2 AS (SELECT word, i, w[3] AS b FROM bb2),
-zt2 AS (SELECT word, w[3] AS z FROM af2 WHERE i = n),
-ec2 AS (
-  SELECT s.piece,
-         exp(a.a + v2.lp + b.b - zt2.z) * wc.freq AS e
-  FROM spans s
-  JOIN v2 ON v2.piece = s.piece
-  JOIN alpha2 a ON a.word = s.word AND a.i = s.i
-  JOIN beta2 b ON b.word = s.word AND b.i = s.i + s.L
-  JOIN zt2 ON zt2.word = s.word
-  JOIN wc ON wc.word = s.word
-  WHERE zt2.z > -1e8),
-counts2 AS (SELECT piece, sum(e) AS e_count FROM ec2 WHERE e > 0
-            GROUP BY piece),
-ll2 AS (SELECT '__ll__' AS piece, sum(freq * z) AS e_count
-        FROM wc JOIN zt2 USING (word) WHERE z > -1e8)
-SELECT 1::BIGINT AS em_iter, piece,
-       floor(e_count * 1e2 + 0.5)::BIGINT AS e_count_r
-FROM (SELECT * FROM counts UNION ALL SELECT * FROM ll)
-WHERE floor(e_count * 1e2 + 0.5) <> 0
-UNION ALL
-SELECT 2::BIGINT, piece, floor(e_count * 1e2 + 0.5)::BIGINT
-FROM (SELECT * FROM counts2 UNION ALL SELECT * FROM ll2)
-WHERE floor(e_count * 1e2 + 0.5) <> 0"""
-
-
 def q_hybrid_rrf(spark, sf_dir):
     """Hybrid retrieval (`serving.hybrid_rrf`): reciprocal-rank fusion
     of the BM25 top-100 for the BOW3 query and the cosine top-100 for
@@ -4067,40 +2652,12 @@ FROM ranked WHERE rank <= 3"""
 
 # ---------------------------------------------------------------- registry --
 
-# name -> (spark_fn, oracle_sql | None)
+# name -> (spark_fn, oracle_sql | None), in driver-window order.
 #
 # ORDER MATTERS: the driver snapshots the FIRST 50 entries for its
-# hard-oracle comparison. Every operator family keeps at least one row
-# inside that window; six long-stable entries whose code paths are
-# fully covered by an in-window sibling (bm25_bow5/bm25_rare_term →
-# bm25_bow3 + index_open_bm25's oracle, ranked_or → ranked_and,
-# indri_wsum/indri_wand → indri_batch_onepass's flat #wsum/#wand
-# arms + indri_and's pivot plan, dedup_embedding →
-# dedup_embedding_lsh, ann_lsh_bucketed / ann_lsh_indexed →
-# ann_lsh_append (identical candidate set; append is a strict superset
-# of the static build), letor_features / letor_features_multifield →
-# letor_features_18slot, the full grid, feedback_expansion →
-# feedback_expansion_batch, same plan batched, dedup_ngram_jaccard →
-# dedup_minhash_lsh + code_winnow_pairs, the same shingle-join shape)
-# are rotated past it — see the tail block. They remain fully
-# pytest-covered and were driver-green in earlier rounds.
-#
-# ROUND-4 ROTATION: the eight round-3 families that post-dated the r3
-# window snapshot (PQ ANN, streamed ANN, hybrid RRF, autocomplete,
-# hashed embeddings, unigram Viterbi; the pHash pair left with the
-# media cut) are spliced into
-# the window via _R3_PROMOTED below; eight r1-r3-driver-green entries
-# with strict in-window kernel gates (bpe_encode_pieces, diversity_pm2,
-# eval_metrics, spell_suggest, facet_counts, bool_batch_onepass,
-# quality_model_score, dsir_importance) move to the tail — each
-# displacement's gate is documented at its tail entry.
-#
-# MEDIA CUT: the two perceptual-hash dedup entries left with the media
-# stack (image/audio/video decoders and fingerprints, which the
-# source-code corpus never feeds); their two window slots go to
-# segments_delete_topk and merged_segments_topk (_MEDIA_CUT_FILL below),
-# retrieval paths over the segment store, so the _R5_DISPLACE entries
-# stay past the window and it stays at 50 entries.
+# hard-oracle comparison (tests/test_entry_window.py pins them). Each
+# tail entry names the in-window sibling (or test) that covers its
+# code path.
 REGISTRY: dict[str, tuple] = {
     "bm25_syn": (q_bm25_syn, _sql_bm25_syn()),
     "bm25_sdm_structured": (q_bm25_sdm, _sql_bm25_sdm()),
@@ -4110,16 +2667,9 @@ REGISTRY: dict[str, tuple] = {
     "indri_and": (q_indri_and, _indri_pivot_sql(
         ["spark", "stream", "join"],
         _geo_combiner([1.0 / 3, 1.0 / 3, 1.0 / 3]))),
-    "pack_sequences": (q_pack_sequences, _sql_pack_sequences()),
-    "bpe_train_merges": (q_bpe_train, _sql_bpe_train()),
-    "cms_heavy_hitters": (q_cms_heavy_hitters, _sql_cms_heavy_hitters()),
     "segments_update_topk": (q_segments_update_topk,
                              _bm25_sql_updated(BOW3)),
     "streamed_postings_equal_batch": (q_streamed_postings, _sql_postings()),
-    "streamed_dedup_equal_batch": (q_streamed_dedup, _sql_streamed_dedup()),
-    "standing_query_topk": (q_standing_stream, _sql_standing_topk()),
-    "diversity_xquad": (q_diversity_xquad, _sql_diversity_xquad()),
-    "search_snippets": (q_search_snippets, _sql_search_snippets()),
     "bm25_batch_onepass": (q_bm25_batch, _sql_trec_topk()),
     "indri_batch_onepass": (q_indri_batch, _sql_indri_batch()),
     "daat_batch_topk": (q_daat_batch, _sql_trec_topk()),
@@ -4133,374 +2683,77 @@ REGISTRY: dict[str, tuple] = {
     "dedup_minhash_lsh": (q_dedup_minhash, _sql_dedup_minhash()),
     "dedup_substring_spans": (q_dedup_spans, _sql_dedup_spans()),
     "dedup_cc_clusters": (q_dedup_cc, _sql_dedup_cc()),
-    "code_token_stats": (q_code_tokens, _sql_code_tokens()),
-    "code_winnow_pairs": (q_winnow_pairs, _sql_winnow_pairs()),
-    "pii_scan": (q_pii_scan, _sql_pii_scan()),
-    "dedup_embedding_lsh": (q_dedup_embedding_lsh, _sql_dedup_embedding_lsh(0.3)),
     "ann_lsh_append": (q_ann_lsh_append, _sql_ann_lsh()),
     "ann_ivf_indexed": (q_ann_ivf_indexed, _sql_ann_ivf()),
     "graph_pagerank": (q_graph_pagerank, _sql_graph_pagerank()),
-    "text_repetition": (q_repetition, _sql_repetition()),
-    "license_scan": (q_license_scan, _sql_license_scan()),
-    "quality_filter": (q_quality_filter, _sql_quality_filter()),
-    "quality_model_weights": (q_quality_model_weights,
-                              _sql_quality_model_weights()),
-    "lm_unigram_score": (q_lm_unigram, _sql_lm_unigram()),
-    "decontam_scan": (q_decontam_scan, _sql_decontam_scan()),
-    "curation_funnel": (q_curation_funnel, _sql_curation_funnel()),
-    "export_shards": (q_export_shards, _sql_export_shards()),
-    # ---- rotated past the driver's 50-entry window (see note above) --
-    "postings_term": (q_postings, _sql_postings()),
-    # the raw posting scan stays hard-gated in-window by
-    # streamed_postings_equal_batch, which runs the IDENTICAL oracle SQL
-    # (_sql_postings) against the streamed store — a strict superset
-    # (same scan plus the exactly-once ingest equivalence); rotated
-    # late-r3 to admit bpe_train_merges
+    "term_autocomplete": (q_autocomplete, _sql_autocomplete()),
+    "text_hashed_embeddings": (q_featurize_text, _sql_featurize()),
+    "ann_pq_topk": (q_ann_pq_topk, _sql_ann_pq()),
+    "streamed_ann_equal_batch": (q_streamed_ann, _sql_ivfpq()),
+    "hybrid_rrf_topk": (q_hybrid_rrf, _sql_hybrid_rrf()),
     "segments_delete_topk": (q_segments_delete_topk,
                              _bm25_sql_deleted(BOW3)),
-    # the delete/tombstone read path is a strict subset of in-window
-    # segments_update_topk (update = supersede + tombstone in one op,
-    # same broadcast anti-join mask, same merged read); pytest
-    # test_merge.py covers delete-only stores directly; rotated late-r3
-    # to admit bpe_encode_pieces, back in the window since the media
-    # cut (_MEDIA_CUT_FILL)
-    "corpus_composition": (q_corpus_composition, _sql_corpus_composition()),
-    # the per-(lang, source) rollup is one map-side-combined groupBy
-    # whose grouping kernels stay gated in-window by sample_temperature
-    # (same composition keys feed its group window) + text_langid (the
-    # lang_guess column it rolls up) + pytest; rotated late-r3 to admit
-    # cms_heavy_hitters
-    "text_langid": (q_langid, _sql_langid()),
-    # the marker-count kernel (filter + array_contains over canonical
-    # tokens) stays gated in-window by quality_filter's no_stopwords /
-    # stop_heavy rules (the identical _marker_count expression on the
-    # 'en' set); the de/fr argmax is planted-case pytest-covered
-    # (test_capabilities); rotated late-r3 to admit
-    # streamed_dedup_equal_batch
+    "merged_segments_topk": (q_merged_segments_topk, _bm25_sql(BOW5)),
+    "semantic_dedup": (q_semantic_dedup, _sql_semantic_dedup()),
+    "dedup_strip_spans": (q_strip_spans, _sql_strip_spans()),
+    "ann_lsh_indexed": (q_ann_lsh_indexed, _sql_ann_lsh()),
+    "standing_query_topk": (q_standing_stream, _sql_standing_topk()),
+    "diversity_xquad": (q_diversity_xquad, _sql_diversity_xquad()),
+    "search_snippets": (q_search_snippets, _sql_search_snippets()),
+    "dedup_embedding_lsh": (q_dedup_embedding_lsh, _sql_dedup_embedding_lsh(0.3)),
+    "postings_term": (q_postings, _sql_postings()),
     "indri_wand": (q_indri_wand, _indri_pivot_sql(
         ["merge", "batch"],
         _geo_combiner([w / (0.6 + 0.4) for w in (0.6, 0.4)]))),
-    # the weighted-geo #WAND combiner stays gated in-window by
-    # indri_batch_onepass (its i11 arm is a flat #wand through the same
-    # closed-form default-score algebra) + single-query indri_and (the
-    # same per-query pivot plan, uniform-share geo) + the
-    # reference-binary goldens (WAND queries, all four models); rotated
-    # late-r3 to admit pack_sequences
     "window3_bool": (q_window3_bool, _sql_window3_bool()),
-    # the #WINDOW/n zipper stays gated in-window by bm25_sdm_structured
-    # (its SDM arms run the same window kernel under BM25) + the
-    # reference-binary goldens (WINDOW queries, rank + 1e-9 scores) +
-    # pytest; rotated late-r3 to admit dsir_importance
     "bm25_bow3": (_q_bm25(BOW3), _bm25_sql(BOW3)),
-    # single-query BM25 #SUM stays gated in-window by index_open_bm25
-    # (the same Engine.search bm25 path over a saved/reopened index,
-    # BOW_RARE terms), bm25_batch_onepass (same scoring algebra, same
-    # oracle family), and the reference-binary goldens; rotated late-r3
-    # to admit lm_unigram_score
-    "code_winnow_fps": (q_winnow_fps, _sql_winnow_fps()),
-    # the fp CTE chain is a strict prefix of in-window code_winnow_pairs
-    # (same winnow k/w/hash kernel; pairs only adds the fp equi-join on
-    # top), so the pairs row gates it; planted-case pytest in
-    # test_codestats.py covers the fp set directly; rotated late-r3 to
-    # admit quality_model_weights
-    "text_quality": (q_quality, _sql_quality()),
-    # the quality_features ratios are the same base/r CTEs that feed
-    # in-window quality_filter's verdict (strict subset of its oracle)
-    # + planted-case pytest; rotated late-r3 to admit quality_model_score
-    "dedup_strip_spans": (q_strip_spans, _sql_strip_spans()),
-    # the strip transform shares duplicate_spans' entire marking plan
-    # (gated in-window by dedup_substring_spans); only the final
-    # interval-cut projection is new, and check_entry covers it
     "dedup_simhash": (q_dedup_simhash, _sql_dedup_simhash()),
-    # simhash is one groupBy of conditional sums over the same
-    # token_hash kernels as in-window dedup_minhash_lsh (same shingle
-    # tokenization + md5 hash family) + pytest (test_capabilities);
-    # rotated late-r3 to admit dedup_substring_spans
-    "text_fingerprints": (q_fingerprints, _sql_fingerprints()),
-    # fp_exact (sha256) gated by in-window dedup_exact + export_shards'
-    # lineage manifest; fp_norm's canonical-token stream hash by
-    # code_token_stats' stream_hash (strictly harder kernel) + pytest;
-    # rotated late-r3 to admit text_repetition
-    "text_token_counts": (q_token_counts, _sql_token_counts()),
-    # token-count projections gated by in-window text_quality +
-    # text_langid (same null-safe canonical-tokenizer size/filter
-    # kernels) + pytest; rotated r3 to admit graph_pagerank
     "unranked_and": (q_unranked_and, _sql_unranked_and()),
-    # the unranked-boolean model is gated by in-window ranked_and (same
-    # #AND plan) + the reference-binary goldens covering all four models
     "term_stats": (q_term_stats, _sql_term_stats()),
-    # df/ctf stats gated by in-window bm25/indri scoring entries (their
-    # idf/pmle terms) + pytest
     "doclen_store": (q_doclens, _sql_doclens()),
-    # stopword-inclusive doclen gated by every in-window scoring entry
-    # (doclen is in each BM25/Indri denominator) + pytest
     "docterms_forward_index": (q_docterms, _sql_docterms()),
-    # forward index gated by in-window feedback_expansion_batch (its
-    # TermVector probe reads docterms) + pytest
-    "merged_segments_topk": (q_merged_segments_topk, _bm25_sql(BOW5)),
-    # append+merged-read gated by in-window segments_update_topk (which
-    # appends a generation AND tombstones) + segments_delete_topk +
-    # segments_structured_near; pytest test_merge.py covers it directly;
-    # in the window since the media cut (_MEDIA_CUT_FILL)
-    "trec_topk": (q_trec_topk, _sql_trec_topk()),  # trec sink format
-    # stays byte-for-byte gated by tests/test_reference_golden.py
-    # (HW1-queries-UB.teIn reproduction) + in-window bm25_batch_onepass
-    # (same oracle SQL)
-    "near2_bool": (q_near2_bool, _sql_near2_bool()),  # NEAR/2 gated by
-    # in-window ranked_near + segments_structured_near (same oracle SQL)
-    "indri_term": (q_indri_term, _sql_indri_term()),  # single-term Indri
-    # #SCORE gated by in-window indri_and/indri_batch_onepass
-    # + the reference-binary goldens
-    "daat_wand_topk": (q_daat_wand_topk, _bm25_sql(BOW3)),  # single-
-    # query DAAT: same kernel as in-window daat_batch_topk + pytest
-    # accumulator-verified block-max skips
-    "ann_cosine_topk": (q_ann_topk, _sql_ann_topk()),  # brute baseline;
-    # the scale paths ann_lsh_append / ann_ivf_indexed stay in-window
-    "ann_lsh_indexed": (q_ann_lsh_indexed, _sql_ann_lsh()),
-    # static-build LSH layout: a strict subset of in-window
-    # ann_lsh_append (same write_ann_index base build, same oracle SQL,
-    # same partition-pruned read — append only adds a generation on
-    # top), so the append row gates this path too; plan- and
-    # equality-tested in tests/test_similarity.py
-    "bm25_stopquery": (q_bm25_stop, _bm25_sql(STOPQ)),  # stopword-
-    # inclusive doclen stays hard-gated by doclen_store (in-window) +
-    # the reference-binary goldens + pytest
+    "trec_topk": (q_trec_topk, _sql_trec_topk()),
+    "near2_bool": (q_near2_bool, _sql_near2_bool()),
+    "indri_term": (q_indri_term, _sql_indri_term()),
+    "daat_wand_topk": (q_daat_wand_topk, _bm25_sql(BOW3)),
+    "ann_cosine_topk": (q_ann_topk, _sql_ann_topk()),
+    # ---- past the driver's 50-entry window --
+    # stopword-inclusive doclen: doclen_store + goldens
+    "bm25_stopquery": (q_bm25_stop, _bm25_sql(STOPQ)),
+    # same Engine.search bm25 path as bm25_bow3
     "bm25_bow5": (_q_bm25(BOW5), _bm25_sql(BOW5)),
+    # same path as bm25_bow3 / index_open_bm25
     "bm25_rare_term": (_q_bm25(BOW_RARE), _bm25_sql(BOW_RARE)),
+    # same per-query boolean plan as ranked_and
     "ranked_or": (q_ranked_or, _sql_ranked_or()),
+    # indri_batch_onepass' #wsum arm + indri_and's pivot plan
     "indri_wsum": (q_indri_wsum, _indri_pivot_sql(
         ["spark", "stream", "join"],
         _sum_combiner([w / (0.5 + 0.3 + 0.2) for w in (0.5, 0.3, 0.2)]))),
+    # brute-force sibling of dedup_embedding_lsh
     "dedup_embedding": (q_dedup_embedding, _sql_dedup_embedding(0.3)),
+    # same candidate set as ann_lsh_append
     "ann_lsh_bucketed": (q_ann_lsh, _sql_ann_lsh()),
+    # feedback_expansion_batch runs it batched
     "feedback_expansion": (q_feedback_expand, _sql_feedback_expand()),
+    # a slice of letor_features_18slot's grid
     "letor_features": (q_letor_features, _sql_letor_features()),
+    # a slice of letor_features_18slot's grid
     "letor_features_multifield": (q_letor_multifield,
                                   _sql_letor_multifield()),
+    # dedup_minhash_lsh's shingle-join shape
     "dedup_ngram_jaccard": (q_dedup_ngram, _sql_dedup_ngram()),
-    "hll_registers": (q_hll_registers, _sql_hll_registers()),
-    # HyperLogLog register build (pipeline.sketches): overflow-born —
-    # the (bucket, max rho) groupBy kernel shares the fixed-key-space
-    # mergeable-sketch shape gated in-window by cms_heavy_hitters, and
-    # the md5 hex-prefix hash is in-window via dedup_exact /
-    # export_shards; register-level python-replay + merge-law pytest in
-    # test_tokenizer_sketches.py; check_entry-green at sf0.001 + sf0.01
-    "hll_token_cardinality": (q_hll_cardinality, _sql_hll_cardinality()),
-    # the estimate head over hll_registers' table (Σ2^-r is exact
-    # dyadic double math; ln verified jvm==libm); same gating siblings
-    "bloom_decontam_scan": (q_bloom_decontam, _sql_bloom_decontam()),
-    # Bloom-prefiltered decontamination: overflow-born — the gram CTEs
-    # and per-doc count shape are gated in-window by decontam_scan
-    # (exact variant, same split/k/min_hits), the salted-md5 bit hash
-    # by cms_heavy_hitters / dedup_exact; one-sidedness vs the exact
-    # scan + merge law + FP-rate pytest in test_tokenizer_sketches.py;
-    # check_entry-green at sf0.001 + sf0.01
-    "streamed_sketches_equal_batch": (q_streamed_sketches,
-                                      _sql_streamed_sketches()),
-    # streaming sketch maintenance: overflow-born — the exactly-once
-    # commit protocol (batch partitions + journal publish + rewind
-    # guard) is gated in-window by streamed_postings_equal_batch /
-    # streamed_dedup_equal_batch (identical protocol, same journal
-    # primitive), the cell kernel by cms_heavy_hitters; any-split
-    # merge equality + restart idempotence pytest in
-    # test_streaming.py; check_entry-green at sf0.001 + sf0.01
-    "doclen_quantile_sketch": (q_doclen_quantiles,
-                               _sql_doclen_quantiles()),
-    # log2-histogram quantile sketch: overflow-born — the token-count
-    # projection is gated in-window by text_token_counts' siblings
-    # (quality_filter's length features) and the fixed-key-space
-    # groupBy shape by cms_heavy_hitters; bin()-parity, merge law, and
-    # quantile-bound pytest in test_tokenizer_sketches.py;
-    # check_entry-green at sf0.001 + sf0.01
-    "semantic_dedup": (q_semantic_dedup, _sql_semantic_dedup()),
-    # SemDedup: overflow-born — the centroid assignment is the
-    # IDENTICAL least-chain + tie rule the ann_ivf_indexed oracle
-    # replays, the quantized cosine the dedup_embedding_lsh family's;
-    # python-replay + planted-keeper + empty-frame pytest in
-    # test_similarity.py; check_entry-green at sf0.001 + sf0.01
-    # ---- displaced late-r4 to admit the round-3 operator families --
-    # (each displacement documents its in-window gate; all eight were
-    # driver-green in CORRECTNESS_r01-r03 and stay check_entry-green)
-    "bpe_encode_pieces": (q_bpe_encode, _sql_bpe_encode()),
-    # the encode fold chain is plan-asserted zero-shuffle and replays
-    # the SAME merge table in-window bpe_train_merges produces (its
-    # oracle's w{r}/p{r}/b{r} CTE chain re-derives every merge); piece
-    # counts pytest-pinned (doc 0 → 117 pieces, test_tokenizer_sketches)
+    # diversity_xquad's ranking-file scaffolding
     "diversity_pm2": (q_diversity_pm2, _sql_diversity_pm2()),
-    # PM2 shares xQuAD's ranking-file parse, normalization, and
-    # per-intent scaffolding (in-window diversity_xquad); the s-reset
-    # quirk is pinned by the literal-replay pytest (test_capabilities)
+    # per-metric replays in test_evaluation.py
     "eval_metrics": (q_eval_metrics, _sql_eval_metrics()),
-    # trec_eval metric battery: all-relevant-qrels exactness property
-    # (rr = ap = ndcg = 1) + per-metric replays in test_evaluation.py;
-    # three rounds of driver-green history
+    # dedup_minhash_lsh's banded candidate join
     "spell_suggest": (q_spell_suggest, _sql_spell_suggest()),
-    # the banded edit-distance candidate join is the same pigeonhole
-    # shape as in-window dedup_minhash_lsh;
-    # suggestion ranking pytest-pinned (test_serving.py)
+    # one rollup + having-count; test_serving.py
     "facet_counts": (q_facet_counts, _sql_facet_counts()),
-    # one map-side-combined rollup + having-count, the grouping shape
-    # in-window curation_funnel / sample_temperature exercise;
-    # pytest-pinned (test_serving.py)
+    # ranked_and / ranked_near + test_batch_models.py
     "bool_batch_onepass": (q_bool_batch, _sql_bool_batch()),
-    # boolean one-pass batch frame: #AND/#OR scoring gated in-window by
-    # ranked_and + ranked_near, batch==solo equality pytest-pinned
-    # (test_batch_models.py), and the reference-binary goldens cover
-    # the boolean model end-to-end
-    "quality_model_score": (q_quality_model_score,
-                            _sql_quality_model_score()),
-    # the broadcast-weight scoring side: in-window
-    # quality_model_weights gates the shared train kernel, and
-    # model_scores == fit_model + score_with_model is pytest-equality
-    # (plan-asserted zero-shuffle, test_quality_model.py)
-    "dsir_importance": (q_dsir_importance, _sql_dsir_importance()),
-    # hashed-bigram features + broadcast log-ratio weights: the same
-    # hashed-feature/broadcast-score kernels in-window
-    # quality_model_weights and lm_unigram_score gate; plain-Python
-    # formula replay in test_quality_model.py
-    "sample_temperature": (q_sample_temperature, _sql_sample_temperature()),
-    # displaced late-r4 to admit unigram_estep_1iter: the temperature
-    # sampler is a strict subset of in-window curation_funnel's final
-    # sample stage (same composition group window, broadcast scalar,
-    # deterministic hash-keep rule); resumability + formula pytest in
-    # test_curation.py; driver-green r01-r03
-    "unigram_em_2iter": (q_unigram_em2, _sql_unigram_em2()),
-    # NEW r5 (VERDICT item 5): two chained EM iterations — E-step →
-    # closed-form M re-normalization → second E-step — certifying the
-    # trainer's iteration wiring, not just one lattice pass; promoted
-    # into the window via _R5_PROMOTE below, displacing
-    # unigram_estep_1iter (a strict subset: its whole output is this
-    # entry's em_iter=1 block)
 }
-
-
-# ---- round-3 families promoted into the driver window (late r4) ----
-# These registry families were added after the round-3 window
-# snapshot and had never had a driver-recorded oracle row; they are
-# spliced into the first 50 here (in place of the eight displaced
-# entries above) so CORRECTNESS_r04 records them. The two pHash
-# entries that were among them left with the media cut; the
-# _MEDIA_CUT_FILL retrieval entries take their slots.
-_R3_PROMOTED: dict[str, tuple] = {
-    "term_autocomplete": (q_autocomplete, _sql_autocomplete()),
-    # serving-tier type-ahead table: prefix explode + per-prefix top-k
-    # window, identical SQL replay; the short-term guard pins the
-    # descending-sequence gotcha
-    "text_hashed_embeddings": (q_featurize_text, _sql_featurize()),
-    # in-engine feature-hashing embeddings: fixed-point idf makes
-    # every component an exact integer, so the oracle replays the full
-    # hash/sign/ln arithmetic; pytest composes the output into
-    # ann_cosine_topk / semantic_dedup (test_similarity.py)
-    "ann_pq_topk": (q_ann_pq_topk, _sql_ann_pq()),
-    # product-quantization ADC: deterministic seeded codebooks (the
-    # ann_ivf precedent), per-subspace argmin with the lowest-cid tie
-    # rule, 1e6-quantized ADC distances; python-replay + refinement +
-    # recall pytest in test_similarity.py
-    "unigram_viterbi_score": (q_unigram_viterbi, _sql_unigram_viterbi()),
-    # the unigram-LM Viterbi DP under a FIXED vocabulary: one
-    # recursion step per character position carrying the last-3 best[]
-    # window (the NEAR-zipper CTE precedent); EM training is driver-
-    # gated by unigram_estep_1iter plus the enumeration pytest oracles
-    "unigram_estep_1iter": (q_unigram_estep, _sql_unigram_estep()),
-    # NEW r4: one EM E-step under the same fixed vocab — forward-
-    # backward expected piece counts + the corpus-LL rider, against a
-    # twin recursive-CTE lse lattice replay; closes the last operator
-    # family (EM training) that had no SQL oracle. Displaces
-    # sample_temperature (strict subset of in-window curation_funnel's
-    # final sample stage — same group window + broadcast scalar +
-    # hash-keep rule — plus resumability pytest in test_curation.py)
-    "streamed_ann_equal_batch": (q_streamed_ann, _sql_ivfpq()),
-    # streaming IVF-PQ maintenance: the two-batch stream folds into
-    # journaled generations and must answer probes exactly as the full
-    # in-SQL IVF-PQ construction (shared seeds → identical
-    # centroids/codebooks); restart idempotence and the streamed ==
-    # batch gate are pytest-pinned (test_streaming.py)
-    "hybrid_rrf_topk": (q_hybrid_rrf, _sql_hybrid_rrf()),
-    # hybrid lexical+vector retrieval: RRF over quantized-score ranks,
-    # both sides + the fusion replayed in one SQL statement
-    # (BM25 scored CTE ⨝ cosine top-100)
-}
-
-# splice the promoted families into the window right after the last
-# always-in-window entry (export_shards) so they occupy the eight
-# freed slots; dicts preserve insertion order, so rebuild
-_MEDIA_CUT_FILL = ["segments_delete_topk", "merged_segments_topk"]
-_tail_start = list(REGISTRY).index("postings_term")
-_items = list(REGISTRY.items())
-# a key already spliced in keeps its first (in-window) position
-REGISTRY = (dict(_items[:_tail_start]) | _R3_PROMOTED
-            | {n: REGISTRY[n] for n in _MEDIA_CUT_FILL}
-            | dict(_items[_tail_start:]))
-_window_end = _tail_start + len(_R3_PROMOTED) + len(_MEDIA_CUT_FILL)
-
-
-# ---- round-5 rotation: the last ten never-driver-recorded entries ----
-# VERDICT r4 "What's missing" #1: these ten registry entries had never
-# appeared in any CORRECTNESS_r*.json (all were independently
-# check_entry-verified green at sf0.01 in the r4 judging session).
-# Promote them into the driver's 50-entry window; after this round,
-# EVERY registry entry has been driver-recorded at least once.
-_R5_PROMOTE = [
-    "semantic_dedup", "hll_registers", "hll_token_cardinality",
-    "bloom_decontam_scan", "streamed_sketches_equal_batch",
-    "doclen_quantile_sketch", "dedup_strip_spans", "ann_lsh_indexed",
-    "corpus_composition", "code_winnow_fps", "unigram_em_2iter",
-]
-# Each displaced entry has >=4 rounds of driver-green history AND a
-# strict in-window gate on its kernels:
-_R5_DISPLACE = [
-    "standing_query_topk",
-    #   the journal-published exactly-once stream protocol stays gated
-    #   in-window by streamed_postings/dedup/sketches/ann_equal_batch
-    #   (same publish/rewind machinery); standing-state == batch-BM25
-    #   equality is pytest-pinned (test_standing_queries.py)
-    "diversity_xquad",
-    #   shares ranking-file parse + normalization + per-intent
-    #   scaffolding with diversity_pm2 (rotated out green late-r4);
-    #   literal-replay pytest in test_capabilities.py
-    "search_snippets",
-    #   best-window top-k is the same windowed-agg shape in-window
-    #   term_autocomplete runs; snippet selection pytest-pinned
-    #   (test_serving.py)
-    "pii_scan",
-    #   zero-shuffle regex projection; the rule-battery shape stays
-    #   gated in-window by quality_filter; per-rule planted-case
-    #   pytest (test_codestats.py)
-    "license_scan",
-    #   in-window curation_funnel runs the IDENTICAL license stage
-    #   inside its staged funnel counts; per-license pytest
-    "text_repetition",
-    #   in-window curation_funnel runs the repetition stage; verdict
-    #   formulas replayed in pytest (test_textstats)
-    "dedup_embedding_lsh",
-    #   sign-LSH banded shuffle stays doubly gated in-window:
-    #   ann_lsh_append (same banded layout + frozen planes) and the
-    #   newly promoted ann_lsh_indexed; brute==banded recall pytest
-    "code_token_stats",
-    #   the code tokenizer feeds in-window code_winnow_pairs and the
-    #   newly promoted code_winnow_fps; token-class pytest
-    "decontam_scan",
-    #   exact decontamination: the newly promoted bloom_decontam_scan
-    #   is the one-sided superset over the same benchmark grams
-    #   (hits_bloom ⊇ hits_exact pytest-gated), and in-window
-    #   curation_funnel runs the decontam stage on the same split
-    "lm_unigram_score",
-    #   token fold + broadcast-LM scoring kernels stay gated in-window
-    #   by quality_model_weights; formula replay pytest
-    #   (test_quality_model.py)
-    "unigram_estep_1iter",
-    #   strict subset of the newly promoted unigram_em_2iter: its
-    #   entire output is that entry's em_iter=1 block (same kernel,
-    #   same oracle CTEs); driver-recorded green in r4
-]
-_r5_set = set(_R5_PROMOTE) | set(_R5_DISPLACE)
-assert _r5_set <= set(REGISTRY), sorted(_r5_set - set(REGISTRY))
-_head = [n for n in list(REGISTRY)[:_window_end] if n not in _r5_set]
-_tail = [n for n in REGISTRY
-         if n not in _head and n not in set(_R5_PROMOTE)]
-REGISTRY = ({n: REGISTRY[n] for n in _head}
-            | {n: REGISTRY[n] for n in _R5_PROMOTE}
-            | {n: REGISTRY[n] for n in _tail})
 
 
 def queries():

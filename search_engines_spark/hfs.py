@@ -130,7 +130,10 @@ def write_text(path: str, text: str) -> None:
     """Create/overwrite a small file. Hadoop-routed writes go to a
     `.tmp` sibling and rename into place so readers never observe a
     partial file (the meta jsons are overwrite-in-place commit points
-    for bootstrap)."""
+    for bootstrap). The rename is tried first, so where it replaces the
+    target (POSIX, `file:`) the target never goes missing; only a
+    failed rename (HDFS does not overwrite) deletes the old file and
+    retries."""
     if not has_scheme(path):
         with open(path, "w") as f:
             f.write(text)
@@ -142,11 +145,11 @@ def write_text(path: str, text: str) -> None:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
-    if fs.exists(p):
-        fs.delete(p, False)
     if not fs.rename(tmp, p):
-        fs.delete(tmp, False)
-        raise OSError(f"hfs: rename {tmp} -> {path} failed")
+        fs.delete(p, False)
+        if not fs.rename(tmp, p):
+            fs.delete(tmp, False)
+            raise OSError(f"hfs: rename {tmp} -> {path} failed")
 
 
 def _journal_dir(journal_path: str) -> str:

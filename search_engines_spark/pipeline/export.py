@@ -1,7 +1,6 @@
 """Training-corpus export sink: deterministic shards + lineage manifest.
 
-The terminal op of the curation pipeline (`curation.curate_corpus` →
-HERE): write the kept documents as `n_shards` deterministic shards with
+Write a document frame as `n_shards` deterministic shards with
 a per-shard manifest carrying counts and an order-independent content
 checksum derived from each row's sha256 — the `input_hint` per-row
 content-equality invariant extended to the OUTPUT side, so a consumer
@@ -35,7 +34,7 @@ import shutil
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import token_hash32
+from .dedup import token_hash32, tokens_expr
 
 
 def shard_expr(id_col: str = "doc_id", n_shards: int = 64):
@@ -237,10 +236,9 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048,
     determinism contract), and a DuckDB oracle replays it as a plain
     global window cumsum."""
     from pyspark.sql import Window
-    from .textstats import _tokens
 
     d = (docs.select(F.col(id_col).cast("long").alias("doc_id"),
-                     F.size(_tokens(text_col)).cast("long")
+                     F.size(tokens_expr(text_col)).cast("long")
                      .alias("n_tokens"))
          .withColumn("_b", F.floor(F.col("doc_id") / id_block)))
     bsum = d.groupBy("_b").agg(F.sum("n_tokens").alias("_bn"))

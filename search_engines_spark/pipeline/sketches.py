@@ -26,8 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .dedup import token_hash32
-from .textstats import _tokens
+from .dedup import token_hash32, tokens_expr
 
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
@@ -49,7 +48,7 @@ def cms_build(docs: DataFrame, text_col: str = "text",
     One corpus scan; the groupBy key space is depth·width cells, so the
     shuffle writes KBs no matter the corpus size. Sketches from
     different shards/streams merge by summing cnt on (row, bucket)."""
-    tok = (docs.select(F.explode(_tokens(text_col)).alias("t"))
+    tok = (docs.select(F.explode(tokens_expr(text_col)).alias("t"))
            .select("t", F.explode(F.sequence(
                F.lit(0), F.lit(depth - 1))).alias("row")))
     return (tok
@@ -89,7 +88,7 @@ def cms_heavy_hitters(docs: DataFrame, k: int = 20,
     above N/width) is visible and testable. The exact side is the
     vocab-sized groupBy a production pass would SKIP for candidates the
     sketch already rules out — here it doubles as the oracle check."""
-    exact = (docs.select(F.explode(_tokens(text_col)).alias("token"))
+    exact = (docs.select(F.explode(tokens_expr(text_col)).alias("token"))
              .groupBy("token")
              .agg(F.count("*").cast("long").alias("exact")))
     sketch = cms_build(docs, text_col, depth, width)
@@ -199,7 +198,7 @@ def hll_token_cardinality(docs: DataFrame, text_col: str = "text",
     the vocab-sized distinct a production pass would skip — here it
     rides along so the estimate's error is visible and testable (HLL
     standard error ≈ 1.04/√m ≈ 6.5% at p=8)."""
-    toks = docs.select(F.explode(_tokens(text_col)).alias("t"))
+    toks = docs.select(F.explode(tokens_expr(text_col)).alias("t"))
     est = hll_estimate(hll_build(toks, "t", p), p)
     exact = toks.agg(F.countDistinct("t").cast("long")
                      .alias("exact_distinct"))
@@ -286,6 +285,23 @@ def bloom_might_contain(element: Column, words: list[int],
     return out
 
 
+def ngrams(docs: DataFrame, k: int = 5, text_col: str = "text",
+           id_col: str = "doc_id") -> DataFrame:
+    """→ (doc_id, gram) exploded word-k-gram strings, DISTINCT per doc.
+    Docs with < k tokens produce no rows. Per-doc distinctness is
+    `array_distinct` BEFORE the explode — doc-local, zero shuffle (a
+    dataframe-level distinct() here would exchange every corpus gram).
+    Assumes doc_id identifies the row."""
+    g = (f"case when size(_toks) >= {k} then "
+         f"array_distinct(transform(sequence(1, size(_toks)-{k - 1}), "
+         f"i -> concat_ws(' ', slice(_toks, i, {k})))) "
+         f"else array() end")
+    return (docs
+            .select(F.col(id_col).cast("long").alias("doc_id"),
+                    tokens_expr(text_col).alias("_toks"))
+            .select("doc_id", F.explode(F.expr(g)).alias("gram")))
+
+
 def bloom_decontam_scan(docs: DataFrame, bench: DataFrame,
                         kgram: int = 5, m: int = BLOOM_M,
                         k: int = BLOOM_K, min_hits: int = 1,
@@ -294,12 +310,11 @@ def bloom_decontam_scan(docs: DataFrame, bench: DataFrame,
     flagged): per corpus doc, the count of distinct k-grams whose bloom
     test fires against the benchmark's gram set, and the conservative
     verdict `n_hits_bloom >= min_hits`. One-sided by construction:
-    n_hits_bloom ≥ the exact `curation.decontaminate` hit count doc by
-    doc (never a missed contamination; a false positive only sends a
+    n_hits_bloom ≥ the exact count of k-grams shared with the bench, doc
+    by doc (never a missed contamination; a false positive only sends a
     clean doc to the exact verifier). The bench bloom is a driver-side
     collect of ≤ m bit rows; the corpus side is ONE scan + one
     doc_id-keyed count — the gram-vs-gram join is gone."""
-    from .curation import ngrams
     bench_bits = sorted(
         r["bit"] for r in
         bloom_build(ngrams(bench, kgram, text_col).select("gram"),

@@ -1,9 +1,7 @@
 """Distributed BPE tokenizer training + encoding (Sennrich et al. 2016).
 
-The missing link between the curation funnel (`curation.curate_corpus` →
-`export.export_training_shards`) and a trainer: learn a byte-pair-
-encoding merge table FROM the corpus, then encode documents with it —
-both as DataFrame plans.
+Learn a byte-pair-encoding merge table FROM the corpus, then encode
+documents with it — both as DataFrame plans.
 
 Semantics (the classic word-level BPE of Sennrich et al., "Neural
 Machine Translation of Rare Words with Subword Units", ACL 2016):
@@ -46,7 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .textstats import _tokens
+from .dedup import tokens_expr
 
 EOW = "_"                      # end-of-word marker (outside [a-z0-9])
 
@@ -56,7 +54,7 @@ def bpe_word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     one corpus scan, one map-side-combined groupBy; `syms` is the
     word's initial symbol sequence (characters + the EOW marker)."""
     return (docs
-            .select(F.explode(_tokens(text_col)).alias("word"))
+            .select(F.explode(tokens_expr(text_col)).alias("word"))
             .groupBy("word")
             .agg(F.count("*").cast("long").alias("freq"))
             .withColumn("syms", F.concat(F.split(F.col("word"), "(?!$)"),
@@ -148,10 +146,10 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
             syms = merge_fold(syms, left, right)
         return syms
 
-    pieces = F.flatten(F.transform(_tokens(text_col), encode_token))
+    pieces = F.flatten(F.transform(tokens_expr(text_col), encode_token))
     return docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
-        F.size(_tokens(text_col)).cast("long").alias("n_tokens"),
+        F.size(tokens_expr(text_col)).cast("long").alias("n_tokens"),
         F.size(pieces).cast("long").alias("n_pieces"),
         F.md5(F.array_join(pieces, " ")).alias("pieces_fp"))
 
@@ -378,6 +376,6 @@ def unigram_encode(docs: DataFrame, vocab: list[tuple[str, float]],
                                 "pieces": out})
 
     return (docs.select(F.col("doc_id").cast("long").alias("doc_id"),
-                        _tokens(text_col).alias("toks"))
+                        tokens_expr(text_col).alias("toks"))
             .mapInPandas(doc_kernel,
                          schema="doc_id long, pieces array<string>"))

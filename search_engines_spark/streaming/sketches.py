@@ -33,9 +33,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..indexer.segments import journal_append, journal_read
+from ..pipeline.dedup import tokens_expr
 from ..pipeline.sketches import CMS_DEPTH, CMS_WIDTH, HLL_P, cms_build, \
     hll_build
-from ..pipeline.textstats import _tokens
 from .ingest import DOC_SCHEMA
 
 _SKETCH_JOURNAL = "_sketch_journal.jsonl"
@@ -107,7 +107,7 @@ def start_sketch_stream(spark: SparkSession, src_dir: str, out_dir: str,
                 ("cms", cms_build(batch_df, text_col, depth, width)),
                 ("hll", hll_build(
                     batch_df.select(
-                        F.explode(_tokens(text_col)).alias("t")),
+                        F.explode(tokens_expr(text_col)).alias("t")),
                     "t", p))):
             (frame.withColumn("batch_id", F.lit(batch_id))
              .write.mode("overwrite")

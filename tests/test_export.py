@@ -186,10 +186,34 @@ def test_pack_sequences_block_invariant_and_gappy_ids(spark):
     assert got[1_000_001][2] == 6
 
 
+PACK_SEQ_LEN = 128
+PACK_ID_BLOCK = 64
+
+# pack_sequences replayed as the plain global window cumsum the
+# distributed prefix sum must equal (same order key, same exclusive frame)
+PACK_SQL = f"""WITH pd AS (
+  SELECT doc_id::BIGINT AS doc_id,
+         len(list_filter(regexp_split_to_array(lower(coalesce(text, '')),
+                                               '[^a-z0-9]+'),
+                         t -> t <> ''))::BIGINT AS n_tokens
+  FROM documents),
+po AS (SELECT doc_id, n_tokens,
+              coalesce(sum(n_tokens) OVER (ORDER BY doc_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                0)::BIGINT AS tok_start
+       FROM pd)
+SELECT doc_id, n_tokens, tok_start,
+       (CASE WHEN n_tokens > 0 THEN floor(tok_start / {PACK_SEQ_LEN})
+             ELSE -1 END)::BIGINT AS seq_first,
+       (CASE WHEN n_tokens > 0
+             THEN floor((tok_start + n_tokens - 1) / {PACK_SEQ_LEN})
+             ELSE -1 END)::BIGINT AS seq_last
+FROM po"""
+
+
 def test_pack_sequences_entry_oracle_parity(spark):
     import duckdb
 
-    import search_engines_spark.entry_queries as eq
     rows = [(i, ("tok " * (1 + i % 7)) if i % 11 else None, "en", "s")
             for i in range(150)]
     sdf = spark.createDataFrame(
@@ -198,9 +222,9 @@ def test_pack_sequences_entry_oracle_parity(spark):
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR, "
                 "lang VARCHAR, source VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?, ?, ?)", rows)
-    got = ex.pack_sequences(sdf, seq_len=eq.PACK_SEQ_LEN,
-                            id_block=eq.PACK_ID_BLOCK).toPandas()
-    want = con.execute(eq.oracle_sql()["pack_sequences"]).fetchdf()
+    got = ex.pack_sequences(sdf, seq_len=PACK_SEQ_LEN,
+                            id_block=PACK_ID_BLOCK).toPandas()
+    want = con.execute(PACK_SQL).fetchdf()
     got = got[sorted(got.columns)].sort_values(
         by=sorted(got.columns), ignore_index=True)
     want = want[sorted(want.columns)].sort_values(

@@ -66,13 +66,53 @@ def test_read_write_exists_roundtrip(spark, tmp_path):
     hfs.write_text(uri, json.dumps({"a": 1}))
     assert hfs.exists(uri)
     assert json.loads(hfs.read_text(uri)) == {"a": 1}
-    # overwrite goes through the tmp+rename commit
+    # overwrite goes through the tmp+rename commit, leaving no `.tmp`
+    # sibling behind
     hfs.write_text(uri, json.dumps({"a": 2}))
     assert json.loads(hfs.read_text(uri)) == {"a": 2}
+    assert not [n for n in os.listdir(tmp_path) if ".tmp" in n]
     # plain-os view agrees (same bytes on disk)
     assert json.loads(open(tmp_path / "meta.json").read()) == {"a": 2}
     assert hfs.is_dir(f"file://{tmp_path}")
     assert not hfs.is_dir(uri)
+
+
+def test_write_text_overwrite_when_rename_refuses(monkeypatch):
+    """HDFS-style rename refuses an existing target: write_text then
+    deletes the old file and renames again; a rename that still fails
+    drops the `.tmp` file and raises."""
+    from types import SimpleNamespace
+
+    class FakeFS:
+        def __init__(self, files, fail=False):
+            self.files, self.fail = files, fail
+
+        def create(self, p, _overwrite):
+            files = self.files
+            return SimpleNamespace(
+                write=lambda b: files.__setitem__(p, bytes(b)),
+                close=lambda: None)
+
+        def rename(self, src, dst):
+            if self.fail or dst in self.files:
+                return False
+            self.files[dst] = self.files.pop(src)
+            return True
+
+        def delete(self, p, _recursive):
+            return self.files.pop(p, None) is not None
+
+    jvm = SimpleNamespace(org=SimpleNamespace(apache=SimpleNamespace(
+        hadoop=SimpleNamespace(fs=SimpleNamespace(Path=str)))))
+    files = {"hdfs://nn/m.json": b"old"}
+    fs = FakeFS(files)
+    monkeypatch.setattr(hfs, "_fs", lambda p: (fs, p, jvm))
+    hfs.write_text("hdfs://nn/m.json", "new")
+    assert files == {"hdfs://nn/m.json": b"new"}
+    fs.fail = True
+    with pytest.raises(OSError, match="rename"):
+        hfs.write_text("hdfs://nn/m.json", "newer")
+    assert files == {}
 
 
 def test_journal_uri_append_read_order(spark, tmp_path):

@@ -228,7 +228,7 @@ def test_stream_sketches_equal_batch_any_split(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from search_engines_spark.pipeline.sketches import cms_build, hll_build
-    from search_engines_spark.pipeline.textstats import _tokens
+    from search_engines_spark.pipeline.dedup import tokens_expr
     from search_engines_spark.streaming.sketches import (
         start_sketch_stream, stream_cms, stream_hll)
     src = str(tmp_path_factory.mktemp("sksrc"))
@@ -247,7 +247,7 @@ def test_stream_sketches_equal_batch_any_split(spark, tmp_path_factory):
     got_cms = sorted(map(tuple, stream_cms(spark, out).collect()))
     assert got_cms == want_cms
     want_hll = sorted(map(tuple, hll_build(
-        docs.select(F.explode(_tokens("text")).alias("t")), "t").collect()))
+        docs.select(F.explode(tokens_expr("text")).alias("t")), "t").collect()))
     got_hll = sorted(map(tuple, stream_hll(spark, out).collect()))
     assert got_hll == want_hll
 

@@ -3,6 +3,7 @@ against plain-Python references on planted corpora."""
 import hashlib
 import re
 from collections import Counter
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
@@ -283,20 +284,35 @@ def test_bloom_membership_no_false_negatives_fp_rate(spark):
     assert fp <= 10
 
 
+def _exact_decontam(docs, bench, k=5):
+    """Python reference: per doc, distinct word-k-grams and how many of
+    them occur in any bench doc → {doc_id: (n_grams, n_hits, flag)}."""
+    def grams(text):
+        toks = [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
+        return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+    bench_grams = set().union(*(grams(t) for _, t in bench))
+    out = {}
+    for d, t in docs:
+        g = grams(t)
+        hits = len(g & bench_grams)
+        out[d] = (len(g), hits, int(hits >= 1))
+    return out
+
+
 def test_bloom_decontam_one_sided_vs_exact(spark):
-    from pyspark.sql import functions as F
-    from search_engines_spark.pipeline.curation import decontaminate
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{i}_{j}" for j in range(12))) for i in range(40)]
-        + [(100 + i, " ".join(f"b{i}_{j}" for j in range(12)))
-           for i in range(5)],
-        "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [(1000 + i, " ".join(f"b{i}_{j}" for j in range(12)))
-         for i in range(5)],
-        "doc_id long, text string")
+    doc_rows = ([(i, " ".join(f"w{i}_{j}" for j in range(12)))
+                 for i in range(40)]
+                + [(100 + i, " ".join(f"b{i}_{j}" for j in range(12)))
+                   for i in range(5)])
+    bench_rows = [(1000 + i, " ".join(f"b{i}_{j}" for j in range(12)))
+                  for i in range(5)]
+    docs = spark.createDataFrame(doc_rows, "doc_id long, text string")
+    bench = spark.createDataFrame(bench_rows, "doc_id long, text string")
     bl = {r.doc_id: r for r in sk.bloom_decontam_scan(docs, bench).collect()}
-    ex = {r.doc_id: r for r in decontaminate(docs, bench).collect()}
+    ex = {d: SimpleNamespace(n_grams=n, n_hits=h, contaminated=c)
+          for d, (n, h, c) in _exact_decontam(doc_rows, bench_rows).items()}
+    # the planted docs really are contaminated, the rest really clean
+    assert {d for d in ex if ex[d].contaminated} == set(range(100, 105))
     assert set(bl) == set(ex)
     for d in bl:
         assert bl[d].n_grams == ex[d].n_grams

@@ -36,8 +36,7 @@ Jobs measured per level (2, 8, 32 cores):
   * batched block-max DAAT over the compressed segment store
     (`Engine.search_daat_many`) at 8/32 — queries/sec;
   * FULL structured language off the compressed store
-    (`Engine.search_segments_many` — batch-vectorized block decode);
-  * winnowing fingerprints (doc-local map-only kernel).
+    (`Engine.search_segments_many` — batch-vectorized block decode).
 
 Usage:
     python tools/scaling_bench.py            # all levels, writes
@@ -447,22 +446,6 @@ def run_one(cores: int, sf_dir: str, mult: int, corpus: str = "zipf",
         finally:
             shutil.rmtree(seg_dir, ignore_errors=True)
 
-        # ---- winnowing fingerprint kernel (code-clone MOSS path) ----------
-        # same shape as the arrow postings build: doc-local mapInPandas,
-        # zero shuffle — parallelism enters only through input partitions
-        from search_engines_spark.pipeline.codestats import (
-            winnow_fingerprints)
-        wdocs = src.select("doc_id", "text").repartition(cores * 2)
-        best = None
-        for _ in range(3):
-            t0 = time.time()
-            n_fp = winnow_fingerprints(wdocs).count()
-            s = time.time() - t0
-            best = s if best is None else min(best, s)
-        res["n_winnow_fps"] = n_fp
-        res["winnow_sec"] = round(best, 2)
-        res["winnow_docs_per_sec"] = round(n_docs / best, 1)
-
         # ---- span-level substring dedup (pipeline.dedup) -------------------
         # the marking plan is ONE gram-keyed count agg (map-side partial
         # absorbs hot boilerplate grams) + one semi-join + one doc-keyed
@@ -486,34 +469,6 @@ def run_one(cores: int, sf_dir: str, mult: int, corpus: str = "zipf",
         t0 = time.time()
         duplicate_spans(sdocs, hash_grams=True).count()
         res["spans_hash_sec"] = round(time.time() - t0, 2)
-
-        # ---- hashed-NB quality model (pipeline.quality_model) --------------
-        # train + score in one plan: fit is a token-bucket groupBy that
-        # collapses to ≤256 rows (map-side partial absorbs every hot
-        # bucket — no reduce-side skew possible), scoring is a broadcast
-        # of the weight table + ONE doc_id-keyed BIGINT sum. The corpus
-        # is replicated 4× for this stage: the operator finishes 500k
-        # docs in ~1 s, i.e. at the scheduler floor, where per-level
-        # task-count overhead — not data work — would be the measured
-        # object (md5 volume is identical per doc either way)
-        from pyspark.sql import functions as F
-
-        from search_engines_spark.pipeline.quality_model import model_scores
-        qdocs = (spark.range(4).crossJoin(sdocs)
-                 .withColumn("doc_id",
-                             F.col("doc_id") + F.col("id") * n_docs)
-                 .drop("id").persist())
-        qn = qdocs.count()
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            model_scores(qdocs).count()
-            s = time.time() - t0
-            best = s if best is None else min(best, s)
-        qdocs.unpersist()
-        res["qmodel_n_docs"] = qn
-        res["qmodel_sec"] = round(best, 2)
-        res["qmodel_docs_per_sec"] = round(qn / best, 1)
 
         # ---- iterative PageRank (pipeline.graph) ---------------------------
         # per-iteration: one src-layout-reusing join + one dst-keyed agg;
@@ -546,98 +501,13 @@ def run_one(cores: int, sf_dir: str, mult: int, corpus: str = "zipf",
         res["pagerank_medges_per_sec"] = round(
             n_edges * pr_iters / best / 1e6, 2)
 
-        # ---- training-sequence packing (pipeline.export) -------------------
-        # the distributed prefix sum: block token sums → block-count
-        # offset window → broadcast join → block-partitioned window
-        from search_engines_spark.pipeline.export import pack_sequences
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            pack_sequences(src.select("doc_id", "text")).count()
-            s = time.time() - t0
-            best = s if best is None else min(best, s)
-        res["pack_sec"] = round(best, 2)
-        res["pack_docs_per_sec"] = round(n_docs / best, 1)
-
-        # ---- BPE tokenizer training (pipeline.tokenizer) -------------------
-        # one corpus scan → vocab table, then 4 vocab-bounded merge
-        # rounds (pair agg + 1-row argmax each); the corpus scan is the
-        # data-scaled stage, the rounds are vocab-sized by construction
-        from search_engines_spark.pipeline.tokenizer import bpe_train
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            bpe_train(src, num_merges=4)
-            s = time.time() - t0
-            best = s if best is None else min(best, s)
-        res["bpe_train_sec"] = round(best, 2)
-        res["bpe_docs_per_sec"] = round(n_docs / best, 1)
-
-        # ---- count-min sketch build (pipeline.sketches) --------------------
-        # explode ×depth → (row, bucket) groupBy whose key space is
-        # 4×1024 cells: the map-side partial absorbs the whole token
-        # volume, the exchange writes KBs — the mergeable-sketch shape
-        from search_engines_spark.pipeline.sketches import cms_build
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            cms_build(src).count()
-            s = time.time() - t0
-            best = s if best is None else min(best, s)
-        res["cms_sec"] = round(best, 2)
-        res["cms_docs_per_sec"] = round(n_docs / best, 1)
-
-        # ---- HyperLogLog distinct-token estimate (pipeline.sketches) ------
-        # one scan → 2^8-register max groupBy; exact distinct rides
-        # along in the same plan (the vocab-sized side a production
-        # pass would drop)
-        from search_engines_spark.pipeline.sketches import (
-            bloom_decontam_scan, hll_token_cardinality, log2_histogram,
-            histogram_quantiles)
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            hll_token_cardinality(src).collect()
-            s = time.time() - t0
-            best = s if best is None else min(best, s)
-        res["hll_sec"] = round(best, 2)
-        res["hll_docs_per_sec"] = round(n_docs / best, 1)
-
-        # ---- bloom-prefiltered decontam (pipeline.sketches) ---------------
-        # bench split's gram set as a 512-byte literal bitmask; k bit
-        # tests per gram in one codegen projection, no gram join
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            bloom_decontam_scan(
-                src, src.where(F.col("doc_id") % 41 == 0)).count()
-            s = time.time() - t0
-            best = s if best is None else min(best, s)
-        res["bloom_sec"] = round(best, 2)
-        res["bloom_docs_per_sec"] = round(n_docs / best, 1)
-
-        # ---- doclen quantile sketch (pipeline.sketches) -------------------
-        # ≤64-bucket bit-length histogram + 5 quantile rows
-        from search_engines_spark.pipeline.textstats import _tokens
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            histogram_quantiles(log2_histogram(
-                src.select(F.size(_tokens("text")).cast("long")
-                           .alias("v")), "v")).collect()
-            s = time.time() - t0
-            best = s if best is None else min(best, s)
-        res["qsketch_sec"] = round(best, 2)
-        res["qsketch_docs_per_sec"] = round(n_docs / best, 1)
-
         # ---- PQ encode (pipeline.similarity) ------------------------------
         # the ADC-side ingest kernel: per-subspace least-chain argmin
         # over literal codebooks — m×k aggregate-folds of 64-dim
         # arrays, pure whole-stage codegen, zero shuffle. Vectors are
         # deterministic xxhash64-derived doubles (no data dependency).
         # 4× the corpus row count: at 1× the kernel finishes in ~1.6 s
-        # — the scheduler floor, not the compute (the qmodel-arm
-        # precedent).
+        # — the scheduler floor, not the compute.
         from search_engines_spark.pipeline.similarity import (
             pq_encode, pq_train)
         vecs = spark.range(4 * n_docs).select(
@@ -780,17 +650,9 @@ ARM_PAIRS = (
     ("seg_build_sec", None),
     ("daat_batch_sec", "daat_queries_per_sec"),
     ("segdec_batch_sec", "segdec_queries_per_sec"),
-    ("winnow_sec", "winnow_docs_per_sec"),
     ("spans_sec", "spans_docs_per_sec"),
     ("spans_hash_sec", None),
-    ("qmodel_sec", "qmodel_docs_per_sec"),
     ("pagerank_sec", "pagerank_medges_per_sec"),
-    ("pack_sec", "pack_docs_per_sec"),
-    ("bpe_train_sec", "bpe_docs_per_sec"),
-    ("cms_sec", "cms_docs_per_sec"),
-    ("hll_sec", "hll_docs_per_sec"),
-    ("bloom_sec", "bloom_docs_per_sec"),
-    ("qsketch_sec", "qsketch_docs_per_sec"),
     ("pq_sec", "pq_docs_per_sec"),
 )
 
@@ -1080,16 +942,8 @@ def write_report(r: dict, hw: dict, corpus: str, mult: int,
     has_weak = "weak_bm25_qps" in r.get(8, {}) and \
         "weak_bm25_qps" in r.get(32, {})
     g832 = _eff(r, 8, 32, "segdec_queries_per_sec")
-    w832 = _eff(r, 8, 32, "winnow_docs_per_sec")
     p832 = _eff(r, 8, 32, "pagerank_medges_per_sec")
     sp832 = _eff(r, 8, 32, "spans_docs_per_sec")
-    qm832 = _eff(r, 8, 32, "qmodel_docs_per_sec")
-    pk832 = _eff(r, 8, 32, "pack_docs_per_sec")
-    bp832 = _eff(r, 8, 32, "bpe_docs_per_sec")
-    cm832 = _eff(r, 8, 32, "cms_docs_per_sec")
-    hl832 = _eff(r, 8, 32, "hll_docs_per_sec")
-    bl832 = _eff(r, 8, 32, "bloom_docs_per_sec")
-    qk832 = _eff(r, 8, 32, "qsketch_docs_per_sec")
 
     if corpus == "zipf":
         corpus_desc = (f"{r[8]['n_docs']:,} docs, deterministic Zipf(1) "
@@ -1305,22 +1159,6 @@ the one-plan `search_many` paths over the decoded sub-index:
 (8→32 efficiency {g832:.2f} against the {bw_832:.2f} bandwidth /
 {sha_832:.2f} CPU ceilings.)
 
-## Winnowing fingerprint throughput (8 vs 32 cores)
-
-`pipeline.codestats.winnow_fingerprints` — MOSS-style code-clone
-fingerprints (k-gram rolling hashes + sliding-window minimum) over the
-same corpus; {r[32]['n_winnow_fps']:,} fingerprints emitted. The kernel
-is the postings-builder shape: doc-local `mapInPandas`, zero shuffle:
-
-| cores | sec | docs/sec |
-|---|---|---|
-| 8  | {r[8]['winnow_sec']} | {r[8]['winnow_docs_per_sec']:,} |
-| 32 | {r[32]['winnow_sec']} | {r[32]['winnow_docs_per_sec']:,} |
-
-(8→32 efficiency {w832:.2f} against the {bw_832:.2f} bandwidth /
-{sha_832:.2f} CPU ceilings.) Map-only: on a real cluster each
-executor fingerprints its own input split — no cross-node structure.
-
 ## Span-level substring dedup throughput (8 vs 32 cores)
 
 `pipeline.dedup.duplicate_spans` — Lee et al. 2021 span marking over
@@ -1348,28 +1186,6 @@ exchange and semi-join carry xxhash64(gram) — 8-byte uniform keys,
 pytest-gated). On one box the win is bounded by DRAM, not network;
 on a real cluster shuffle bytes cross the wire, where the 6× applies.
 
-## Hashed-NB quality-model train+score throughput (8 vs 32 cores)
-
-`pipeline.quality_model.model_scores` — CCNet/GPT-3-style model-based
-quality filtering, trained (closed-form NB fit over md5-bucketed token
-occurrences, Gopher-verdict bootstrap labels) AND scored in one plan
-over the corpus replicated 4× ({r[32]['qmodel_n_docs']:,} docs — at 1×
-the operator finishes in ~1 s, i.e. at the scheduler floor). The fit's
-groupBy collapses to ≤256 rows at the map side; the measured object is
-the scoring pass: a broadcast of the weight table + one doc_id-keyed
-BIGINT sum — the uniform-key shuffle shape of batched retrieval:
-
-| cores | train+score sec | docs/sec |
-|---|---|---|
-| 8  | {r[8]['qmodel_sec']} | {r[8]['qmodel_docs_per_sec']:,} |
-| 32 | {r[32]['qmodel_sec']} | {r[32]['qmodel_docs_per_sec']:,} |
-
-(8→32 efficiency {qm832:.2f} against the {bw_832:.2f} bandwidth /
-{sha_832:.2f} CPU ceilings.) On a real cluster the repeated-scan shape
-is `fit_model` + `score_with_model` — the 256 weights collect once
-(IVF-centroid-sized driver state) and scoring is a zero-shuffle codegen
-projection (plan-asserted in pytest), i.e. a curation pass at scan speed.
-
 ## Iterative PageRank throughput (8 vs 32 cores)
 
 `pipeline.graph.pagerank` — 6 power iterations over a deterministic
@@ -1389,37 +1205,24 @@ aggregation; ranks re-persist one iteration deep:
 high-degree salting); on a real cluster each iteration is one exchange
 of (node, contribution) rows — no driver-side state beyond one scalar.
 
-## Sequence packing / BPE / sketch sidecars (8 vs 32 cores)
+## PQ encode (8 vs 32 cores)
 
-Export-side training-pipeline operators over the same corpus, one row
-each (sec at 8 / 32 cores, docs/sec at 32, 8→32 efficiency against
-the {bw_832:.2f} DRAM / {sha_832:.2f} CPU ceilings):
+`similarity.pq_encode` over {r[32]['pq_n_vecs']:,} 64-dim vectors
+(per-subspace least-chain argmin over literal codebooks — m×k
+aggregate-folds, pure codegen, zero shuffle; the IVF-PQ ingest kernel):
 
-| operator | 8-core sec | 32-core sec | docs/sec @32 | 8→32 eff |
-|---|---|---|---|---|
-| `export.pack_sequences` (distributed prefix sum: block sums → block-count offset window → broadcast → bucketed window) | {r[8]['pack_sec']} | {r[32]['pack_sec']} | {r[32]['pack_docs_per_sec']:,} | {pk832:.2f} |
-| `tokenizer.bpe_train` ×4 merges (one corpus scan → vocab table; rounds are vocab-bounded pair aggs + 1-row argmax) | {r[8]['bpe_train_sec']} | {r[32]['bpe_train_sec']} | {r[32]['bpe_docs_per_sec']:,} | {bp832:.2f} |
-| `sketches.cms_build` (explode ×4 → 4×1024-cell groupBy; map-side partials absorb the token volume, the exchange writes KBs) | {r[8]['cms_sec']} | {r[32]['cms_sec']} | {r[32]['cms_docs_per_sec']:,} | {cm832:.2f} |
-| `sketches.hll_token_cardinality` (256-register max groupBy + the exact-distinct rider) | {r[8]['hll_sec']} | {r[32]['hll_sec']} | {r[32]['hll_docs_per_sec']:,} | {hl832:.2f} |
-| `sketches.bloom_decontam_scan` (bench grams as a 512-byte literal bitmask; k bit tests/gram, doc_id-keyed count — no gram join) | {r[8]['bloom_sec']} | {r[32]['bloom_sec']} | {r[32]['bloom_docs_per_sec']:,} | {bl832:.2f} |
-| `sketches.log2_histogram`+`quantiles` (≤64-bucket bit-length groupBy + 64-row cumulative window) | {r[8]['qsketch_sec']} | {r[32]['qsketch_sec']} | {r[32]['qsketch_docs_per_sec']:,} | {qk832:.2f} |
-| `similarity.pq_encode` over {r[32]['pq_n_vecs']:,} 64-dim vectors (per-subspace least-chain argmin over literal codebooks — m×k aggregate-folds, pure codegen, zero shuffle; the IVF-PQ ingest kernel) | {r[8]['pq_sec']} | {r[32]['pq_sec']} | {r[32]['pq_docs_per_sec']:,} | floor† |
+| cores | sec | vectors/sec |
+|---|---|---|
+| 8  | {r[8]['pq_sec']} | {r[8]['pq_docs_per_sec']:,} |
+| 32 | {r[32]['pq_sec']} | {r[32]['pq_docs_per_sec']:,} |
 
-† pq_encode sits at the SCHEDULER FLOOR at both levels (~1.7 s for
+pq_encode sits at the SCHEDULER FLOOR at both levels (~1.7 s for
 2M vectors, >1M vectors/s at 8 cores): the whole-stage-codegen argmin
 costs less than the job setup that launches it, at 1× and 4× the
 corpus alike. That is the finding — at 10^12 vectors the encode rides
 whatever scan feeds it and contributes no stage of its own; an
 efficiency ratio of two floor measurements would be noise presented as
 signal.
-
-All these shapes put parallelism in the data: the packer's only
-unpartitioned stage is the block-count offset window (metadata-sized by
-construction); BPE's per-round global argmax is ONE driver row — the
-synchronization point every distributed BPE has; and every sketch's
-exchange is fixed-size at any corpus (cells / registers / bits /
-buckets), so on a real cluster the scan dominates and each new
-executor brings its own scan bandwidth.
 
 ## Headline query latency (pointer)
 
@@ -1505,7 +1308,7 @@ build r01 27.7 s (jvm builder) → 9.8 s (arrow builder default) →
 """)
     print(f"arrow 2->8={a28:.3f} 8->32={a832:.3f} jvm 8->32={j832:.3f} "
           f"query 8->32={q832:.3f} indri 8->32={i832:.3f} "
-          f"daat 8->32={d832:.3f} winnow 8->32={w832:.3f} "
+          f"daat 8->32={d832:.3f} "
           f"pagerank 8->32={p832:.3f} spans 8->32={sp832:.3f} "
           f"-> BENCH/BASELINE.md")
 
