@@ -17,10 +17,11 @@ Transcribes `QryEval.java:78-200` (expandQuery) + the `:738-744` rewrite:
 Deviation (documented): the reference's PriorityQueue breaks score ties
 arbitrarily (`:183-196`); we break by term ascending for determinism.
 
-Spark shape: the top-doc set is tiny (fb_docs ≤ 100), so the candidate
-grid is |top docs| × |their vocabulary| — built as a broadcast join of
-the forward index (`docterms`) restricted to the top docs, a left join
-for tf=0 cells, one groupBy(term) sum. No full-corpus pass at all.
+Spark shape: a query file's top-doc sets are tiny (fb_docs ≤ 100 per
+query), so the candidate grid is, per query, |top docs| × |their
+vocabulary| — built as a broadcast join of the forward index
+(`docterms`) restricted to the top docs, a left join for tf=0 cells,
+one groupBy(qid, term) sum. No full-corpus pass at all.
 """
 
 from __future__ import annotations
@@ -31,53 +32,17 @@ from ..indexer.build import Index
 from ..literals import local_frame
 
 
-def expansion_scores(index: Index, top: list[tuple[int, float]],
-                     fb_mu: float, field: str = "body"):
-    """→ (term, score) frame of candidate-term RM scores over the given
-    top docs (`QryEval.java:96-177`, both tf>0 and tf=0 passes)."""
-    from pyspark.sql import functions as F
-    spark = index.docs.sparkSession
-    c_length = float(index.stats_for(field)["sum_len"])  # QryEval.java:89
-
-    top_df = F.broadcast(local_frame(
-        spark, [(int(d), float(s)) for d, s in top],
-        "doc_id long, doc_score double"))
-    doclens = (index.doclens.where(F.col("field") == field)
-               .select("doc_id", "doclen"))
-    # stems of the top docs, with per-doc tf (forward-index scan,
-    # TermVector analog)
-    tv = (index.postings
-          .where(F.col("field") == field)
-          .join(top_df.select("doc_id"), "doc_id")
-          .select("doc_id", "term", "tf")
-          .where(~F.col("term").contains(".") & ~F.col("term").contains(",")))
-    cand_terms = tv.select("term").distinct()
-    # global ctf → mle (totalStemFreq, QryEval.java:114-116)
-    mle_df = (cand_terms.join(
-        index.term_stats.where(F.col("field") == field)
-        .select("term", "ctf"), "term")
-        .select("term", (F.col("ctf") / F.lit(c_length)).alias("mle")))
-    # full grid: candidate term × top doc, tf=0 where absent
-    grid = (mle_df.crossJoin(top_df)
-            .join(tv, ["term", "doc_id"], "left")
-            .withColumn("tf", F.coalesce(F.col("tf"), F.lit(0)))
-            .join(doclens, "doc_id"))
-    ptd = (F.col("tf") + fb_mu * F.col("mle")) / (F.col("doclen") + F.lit(fb_mu))
-    contrib = ptd * F.col("doc_score") * F.log(1.0 / F.col("mle"))
-    return grid.groupBy("term").agg(F.sum(contrib).alias("score"))
-
-
 def expansion_scores_many(index: Index,
                           tops: dict[str, list[tuple[int, float]]],
                           fb_mu: float, field: str = "body"):
-    """Batched RM expansion: → (qid, term, score) for EVERY query's
-    top-doc set in one plan — the per-query loop (`QryEval.java:684` +
-    expandQuery per qid) costs two jobs per query; this is one
-    broadcast-joined postings pass + one (qid, term) aggregation for the
-    whole query file, the same batching shape as search_many.
-
-    Semantics per qid are exactly `expansion_scores` (both tf>0 and
-    tf=0 grid cells, collection-ctf mle, '.'/',' stems skipped)."""
+    """RM expansion: → (qid, term, score) of candidate-term RM scores
+    over each query's top docs (`QryEval.java:96-177`), for EVERY
+    query's top-doc set in one plan — the reference's per-query loop
+    (`QryEval.java:684` + expandQuery per qid) costs two jobs per query;
+    this is one broadcast-joined postings pass + one (qid, term)
+    aggregation for the whole query file, the same batching shape as
+    search_many. Per qid: both tf>0 and tf=0 grid cells, collection-ctf
+    mle, '.'/',' stems skipped."""
     spark = index.docs.sparkSession
     c_length = float(index.stats_for(field)["sum_len"])
     top_df = F.broadcast(local_frame(
@@ -115,8 +80,11 @@ def expand_queries(index: Index,
                    rankings: dict[str, list[tuple[int, float]]],
                    fb_docs: int, fb_terms: int, fb_mu: float,
                    field: str = "body") -> dict[str, str]:
-    """Batched `expand_query`: every query's `#wand ( ... )` expansion
-    from ONE expansion plan + ONE collect (≤ |queries|·fb_terms rows)."""
+    """rankings: {qid: [(doc_id, score)]}, each sorted as the initial
+    retrieval returned it (`score_list` order, `QryEval.java:96-99`).
+    → {qid: '#wand ( ... )'}: every query's expansion from ONE expansion
+    plan + ONE collect (≤ |queries|·fb_terms rows); an empty ranking
+    expands to '#wand ( )'."""
     from pyspark.sql import Window
     tops = {qid: ranking[:fb_docs] for qid, ranking in rankings.items()
             if ranking}
@@ -134,22 +102,6 @@ def expand_queries(index: Index,
     for qid, ps in parts.items():
         out[qid] = "#wand ( " + " ".join(ps) + " )"
     return out
-
-
-def expand_query(index: Index, ranking: list[tuple[int, float]],
-                 fb_docs: int, fb_terms: int, fb_mu: float,
-                 field: str = "body") -> str:
-    """ranking: [(doc_id, score)] sorted as the initial retrieval returned
-    them (`score_list` order, `QryEval.java:96-99`). → '#wand ( ... )'."""
-    from pyspark.sql import functions as F
-    top = ranking[:fb_docs]
-    if not top:
-        return "#wand ( )"
-    scored = (expansion_scores(index, top, fb_mu, field)
-              .orderBy(F.desc("score"), F.asc("term"))
-              .limit(fb_terms))
-    parts = [f"{r['score']:.4f} {r['term']}" for r in scored.collect()]
-    return "#wand ( " + " ".join(parts) + " )"
 
 
 def rewrite_with_feedback(query: str, expanded: str,

@@ -155,11 +155,11 @@ class Engine:
     def attach_segments(self, seg_dir: str, num_buckets: int = 32,
                         as_of: int | None = None) -> None:
         """Point the engine at a compressed segment store
-        (indexer.segments); bag-of-words BM25 then routes through the
-        block-max DAAT path in `search_daat`. `as_of=G` pins every
-        segment read to the store's snapshot at generation G (appends
-        and deletions after G are invisible — indexer.merge time
-        travel); history reaches back to the compaction floor.
+        (indexer.segments) for `search_daat_many` and
+        `search_segments_many`. `as_of=G` pins every segment read to the
+        store's snapshot at generation G (appends and deletions after G
+        are invisible — indexer.merge time travel); history reaches back
+        to the compaction floor.
 
         Derived-arm statistics that `search_segments_many` reads off the
         store are cached per attachment: attach again after appending
@@ -169,46 +169,20 @@ class Engine:
         self._seg_as_of = as_of
         self._store_arm_stats: dict[tuple[str, object], tuple[int, int]] = {}
 
-    def search_daat(self, qstring: str, k: int = 100) -> DataFrame:
-        """Bag-of-words BM25 top-k over the attached segment store via
-        document-at-a-time scoring with block-max pruning (engine/daat):
-        the kernel of `search_daat_many` with one query, ranked by a
-        sort plus limit (TakeOrderedAndProject) instead of a per-qid
-        window. Exact — rank-identical to `search` up to the
-        doc_id-vs-ext_id tie-break (see daat module docstring).
-        → (doc_id, ext_id, score), score desc / doc_id asc."""
-        top = self._daat_topk({qstring: qstring}, k)
-        ext = self._extid_sql()
-        if ext is not None:
-            return (top.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                    .selectExpr("doc_id", f"{ext} AS ext_id", "score"))
-        return (top.join(self._doc_map(), "doc_id")
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                .select("doc_id", "ext_id", "score"))
-
     def search_daat_many(self, queries: dict[str, str],
                          k: int = 100) -> DataFrame:
-        """Batched DAAT: per-query BM25 top-k for a whole query file over
-        the attached segment store in ONE segments pass
-        (engine.daat.bm25_wand_topk_many — shared block decode, per-query
-        block-max pruning). Requires `attach_segments`, model == 'bm25',
-        bag-of-words #SUM queries and one field for the whole batch; the
-        reference loops queries one-by-one (`QryEval.java:684`).
+        """Bag-of-words BM25 top-k for a query file (one query is a file
+        of one) over the attached segment store in ONE segments pass:
+        document-at-a-time scoring with block-max pruning
+        (engine.daat.bm25_wand_topk_many — shared block decode,
+        per-query pruning), ranked by `daat.rank_topk`. Requires
+        `attach_segments`, model == 'bm25', bag-of-words #SUM queries
+        and one field for the whole batch; the reference loops queries
+        one-by-one (`QryEval.java:684`). Exact — rank-identical to
+        `search` up to the doc_id-vs-ext_id tie-break.
         → (qid, doc_id, ext_id, score, rank ≤ k), tie-break doc_id asc
         (see daat module docstring for the ext_id-coincidence argument)."""
-        from .daat import rank_topk
-        top = rank_topk(self._daat_topk(queries, k), k)
-        ext = self._extid_sql()
-        if ext is None:
-            top, ext = top.join(self._doc_map(), "doc_id"), "ext_id"
-        return top.selectExpr("qid", "doc_id", f"{ext} AS ext_id", "score",
-                              "rank")
-
-    def _daat_topk(self, queries: dict[str, str], k: int) -> DataFrame:
-        """The DAAT kernel over the attached store for a batch of
-        bag-of-words BM25 queries → (qid, doc_id, score), each pk
-        partition's top-k per query, unranked."""
-        from .daat import bm25_wand_topk_many
+        from .daat import bm25_wand_topk_many, rank_topk
         if self.model != "bm25":
             raise ValueError("search_daat_many is the BM25 fast path")
         bags: dict[str, dict[str, int]] = {}
@@ -231,10 +205,15 @@ class Engine:
                  for t in terms}
         st = self.index.stats_for(field)
         segs, deleted = self._attached_store(terms)
-        return bm25_wand_topk_many(
+        top = rank_topk(bm25_wand_topk_many(
             segs, bags, stats, st["n_docs"],
             st["sum_len"] / st["doc_count"], k=k, params=self.p,
-            field=field, deleted=deleted)
+            field=field, deleted=deleted), k)
+        ext = self._extid_sql()
+        if ext is None:
+            top, ext = top.join(self._doc_map(), "doc_id"), "ext_id"
+        return top.selectExpr("qid", "doc_id", f"{ext} AS ext_id", "score",
+                              "rank")
 
     def _attached_store(self, terms: list[str], decode: bool = False):
         """→ (segments, deleted) of the attached store for `terms`: the
@@ -272,50 +251,26 @@ class Engine:
         eng._arm_stats = self._store_arm_stats
         return eng, deleted
 
-    def search_segments(self, qstring: str, k: int = 100) -> DataFrame:
-        """The FULL query language (Boolean / Indri / BM25, structured
-        `#NEAR/#WINDOW/#SYN/#WSUM/#WAND` included) over the attached
-        compressed segment store: decode ONLY the query terms' blocks
-        back to the logical postings shape
-        (indexer.segments.decode_to_postings — the `InvList.java:107-145`
-        materialization analog) and run the standard compiled plan
-        against them. Identical results to `search` over the
-        uncompressed index. Tombstoned docs are excluded from the
-        RESULTS, not from the decoded postings, so every statistic —
-        leaf df/ctf (term_stats table) AND derived-list df recomputed
-        from `#NEAR/#WINDOW/#SYN` output (`InvList.java:166-167`,
-        quirk: BM25 scores a derived list with its own df,
-        `QrySopScore.java:96`) — stays full-corpus, matching
-        `search_daat`'s docFreq-includes-deletes masking. `search_daat`
-        is the bag-of-words fast path; this is the completeness path
-        that makes the segment store a full index substitute."""
-        node = self.parse(qstring)
-        terms = sorted({n.term for n in self._term_leaves(node)})
-        eng, deleted = self._attached_store(terms, decode=True)
-        s = eng.eval_sop(node).where(F.col("score") >= 0)
-        if deleted is not None:
-            s = s.join(F.broadcast(deleted), "doc_id", "left_anti")
-        ext = eng._extid_sql()
-        if ext is not None:
-            return (s.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                    .selectExpr("doc_id", f"{ext} AS ext_id", "score"))
-        res = s.join(eng._doc_map(), "doc_id")
-        return (res.orderBy(F.desc("score"), F.asc("ext_id")).limit(k)
-                .select("doc_id", "ext_id", "score"))
-
     def search_segments_many(self, queries: dict[str, str],
                              k: int = 100) -> DataFrame:
-        """Batched `search_segments`: decode the UNION of all queries'
-        terms from the compressed store ONCE (bucket-pruned scan, one
-        Arrow decode stage) and answer the whole batch through
-        `search_many`'s one-plan paths against the decoded sub-index —
-        the full structured language per query, with the batch economics
-        of the DataFrame fast paths. Tombstoned docs are masked from
-        results with full-corpus stats (same contract as
-        `search_segments`/`search_daat`): the mask anti-joins the scored
-        candidates INSIDE the batched plan, before the per-query
-        row_number/limit — fetch depth stays k no matter how many
-        deletes are pending.
+        """The FULL query language (Boolean / Indri / BM25, structured
+        `#NEAR/#WINDOW/#SYN/#WSUM/#WAND` included) for a query file over
+        the attached compressed segment store: decode the UNION of all
+        queries' terms ONCE (bucket-pruned scan, one Arrow decode stage)
+        back to the logical postings shape
+        (indexer.segments.decode_to_postings — the `InvList.java:107-145`
+        materialization analog) and answer the whole batch through
+        `search_many`'s one-plan paths against the decoded sub-index.
+        Identical results to `search` over the uncompressed index.
+        Tombstoned docs are excluded from the RESULTS, not from the
+        decoded postings, so every statistic — leaf df/ctf (term_stats
+        table) AND derived-list df recomputed from `#NEAR/#WINDOW/#SYN`
+        output (`InvList.java:166-167`, quirk: BM25 scores a derived list
+        with its own df, `QrySopScore.java:96`) — stays full-corpus,
+        matching `search_daat_many`'s docFreq-includes-deletes masking.
+        The mask anti-joins the scored candidates INSIDE the batched
+        plan, before the per-query row_number/limit — fetch depth stays
+        k no matter how many deletes are pending.
         → (qid, doc_id, ext_id, score, rank ≤ k)."""
         terms = sorted({n.term
                         for node in self.parse_many(queries.values())
@@ -356,7 +311,6 @@ class Engine:
                 f"lpad(CAST(doc_id AS STRING), {int(width)}, '0'))")
 
     def search_many(self, queries: dict[str, str], k: int = 100,
-                    bow_fast_path: bool = True,
                     exclude_docs: DataFrame | None = None) -> DataFrame:
         """Batch: → (qid, doc_id, ext_id, score, rank ≤ k) for all queries
         in one plan (the reference loops queries sequentially,
@@ -393,12 +347,11 @@ class Engine:
         the excluded docs just never occupy a top-k slot."""
         held, self._persisted = self._persisted, []
         with self._plan_scope():
-            out = self._search_many(queries, k, bow_fast_path, exclude_docs)
+            out = self._search_many(queries, k, exclude_docs)
         self._release(held, keep=self._persisted)
         return out
 
     def _search_many(self, queries: dict[str, str], k: int,
-                     bow_fast_path: bool,
                      exclude_docs: DataFrame | None) -> DataFrame:
         frames = []
         bow_rows: list[tuple] = []    # (qid, term, field, mult, df)
@@ -409,7 +362,7 @@ class Engine:
         bool_entries: list[tuple] = []    # (qid, root, {(term, field)})
         nodes = self.parse_many(queries.values())
         for qid, node in zip(queries, nodes):
-            if bow_fast_path and self.model == "bm25":
+            if self.model == "bm25":
                 split = self._split_arms(node)
                 if split is not None:
                     bow, prox = split
@@ -426,8 +379,7 @@ class Engine:
                             arms[arm_ids[key]] = key
                         prox_rows.append((qid, arm_ids[key], m))
                     continue
-            elif (bow_fast_path and self.model == "indri"
-                  and (self.p.mu > 0 or self.p.lam > 0)):
+            elif self.model == "indri" and (self.p.mu > 0 or self.p.lam > 0):
                 # mu=lam=0 makes every smoothed probability 0 — the log
                 # reformulation below would take log(0); that degenerate
                 # configuration keeps the per-query linear-domain plan
@@ -436,8 +388,7 @@ class Engine:
                     if ent[3] or ent[4]:   # ≥1 live arm ⇒ candidates exist
                         indri_entries.append(ent)
                     continue
-            elif bow_fast_path and self.model in ("rankedboolean",
-                                                  "unrankedboolean"):
+            elif self.model in ("rankedboolean", "unrankedboolean"):
                 ent = self._bool_entry(qid, node)
                 if ent is not None:
                     bool_entries.append(ent)

@@ -3,11 +3,12 @@ pruning (the north-star WAND path).
 
 The set-at-a-time `Engine` (compile.py) is the semantics reference; this
 module is the throughput path for bag-of-words BM25 top-k. One kernel,
-`bm25_wand_topk_many`, scores a batch of queries (a single query is a
-batch of one, `Engine.search_daat`): it reads the varbyte segment blocks
-(indexer.segments) for the union of the query terms only — bucket
-directory pruning + parquet min/max on `term` — and scores inside one
-`applyInPandas` pass per doc-range partition:
+`bm25_wand_topk_many`, scores a batch of queries
+(`Engine.search_daat_many`; a single query is a batch of one): it reads
+the varbyte segment blocks (indexer.segments) for the union of the
+query terms only — bucket directory pruning + parquet min/max on
+`term` — and scores inside one `applyInPandas` pass per doc-range
+partition:
 
 1. each block is assigned to the pk partition groups (runs of
    STRIDES_PER_PART doc-range strides) it overlaps: dense and
@@ -29,14 +30,14 @@ directory pruning + parquet min/max on `term` — and scores inside one
    WITHOUT DECODING — the block-max skip.  Surviving strides are
    varbyte-decoded once (numpy), the per-posting weights are shared by
    every query that holds the term, and each θ is updated from its heap;
-4. per-partition top-k per query; the caller ranks those survivors
-   (score desc / doc_id asc): `rank_topk`'s per-qid `row_number`
-   window for a batch, a sort plus limit for one query
-   (`Engine.search_daat`), which needs no window and, over a store of
-   more than one pk group, no extra exchange.  The reference tie-break
-   is EXTERNAL id asc (`ScoreList.java:87-114`); these coincide
-   whenever internal ids are assigned in external-id order (true for
-   the `documents` corpus and any corpus ingested via
+4. per-partition top-k per query; `rank_topk`'s per-qid `row_number`
+   window ranks those survivors (score desc / doc_id asc).  Over a
+   one-pk-group store the kernel's single partition satisfies the
+   window, which then needs no exchange of its own; over more groups
+   the window costs one exchange, a single query included.  The
+   reference tie-break is EXTERNAL id asc (`ScoreList.java:87-114`);
+   these coincide whenever internal ids are assigned in external-id
+   order (true for the `documents` corpus and any corpus ingested via
    `assign_dense_ids` on the ext-id key).  When they differ, re-sort
    the k returned rows by ext_id after joining `docs` — k rows, free.
 

@@ -437,9 +437,10 @@ def q_bool_batch(spark, sf_dir):
 
 def q_segments_structured_near(spark, sf_dir):
     """Structured `#NEAR/2` evaluated OFF THE COMPRESSED STORE
-    (Engine.search_segments → indexer.segments.decode_to_postings — the
-    `InvList.java:107-145` materialization analog): the segment store
-    serves the FULL query language, not just the bow DAAT fast path.
+    (Engine.search_segments_many with a one-query file →
+    indexer.segments.decode_to_postings — the `InvList.java:107-145`
+    materialization analog): the segment store serves the FULL query
+    language, not just the bow DAAT fast path.
     Results are identical to the uncompressed plan, so the oracle is
     the same SQL as near2_bool."""
     from .indexer.segments import build_segments
@@ -450,7 +451,7 @@ def q_segments_structured_near(spark, sf_dir):
         build_segments(idx.postings, idx.doclens, d, num_buckets=8)
     eng = Engine(idx, "unrankedboolean")
     eng.attach_segments(d, num_buckets=8)
-    res = eng.search_segments("#near/2( big join )", k=1_000_000)
+    res = eng.search_segments_many({"q": "#near/2( big join )"}, k=1_000_000)
     return res.select("ext_id", F.col("score").cast("long").alias("score_i"))
 
 
@@ -871,7 +872,7 @@ def q_feedback_expand(spark, sf_dir):
     rare-term query (`QryEval.java:78-200`); top-10 terms by rounded
     score. Deterministic: the top-doc set is chosen by rounded-score +
     ext_id ordering on both sides."""
-    from .capabilities.feedback import expansion_scores
+    from .capabilities.feedback import expansion_scores_many
     idx = _index(spark, sf_dir)
     eng = Engine(idx, "bm25")
     node = eng.parse(" ".join(BOW_RARE))
@@ -881,7 +882,7 @@ def q_feedback_expand(spark, sf_dir):
            .orderBy(F.desc("score_r"), F.asc("ext_id")).limit(10)
            .select("doc_id", "score").collect())
     ranking = [(r["doc_id"], r["score"]) for r in top]
-    scored = expansion_scores(idx, ranking, fb_mu=40.0)
+    scored = expansion_scores_many(idx, {"q": ranking}, fb_mu=40.0)
     return (scored.withColumn("score_r", _r(F.col("score")))
             .orderBy(F.desc("score_r"), F.asc("term")).limit(10)
             .select("term", "score_r"))
@@ -1084,7 +1085,7 @@ def q_daat_wand_topk(spark, sf_dir):
         build_segments(idx.postings, idx.doclens, d, num_buckets=8)
     eng = Engine(idx, "bm25")
     eng.attach_segments(d, num_buckets=8)
-    res = eng.search_daat(" ".join(BOW3), k=200)
+    res = eng.search_daat_many({"q": " ".join(BOW3)}, k=200)
     return (res.withColumn("score_r", _r(F.col("score")))
             .orderBy(F.desc("score_r"), F.asc("ext_id")).limit(100)
             .select("ext_id", "score_r"))
@@ -1113,7 +1114,7 @@ def q_merged_segments_topk(spark, sf_dir):
                         d, num_buckets=8)
     eng = Engine(idx, "bm25")
     eng.attach_segments(d, num_buckets=8)
-    res = eng.search_daat(" ".join(BOW5), k=200)
+    res = eng.search_daat_many({"q": " ".join(BOW5)}, k=200)
     return (res.withColumn("score_r", _r(F.col("score")))
             .orderBy(F.desc("score_r"), F.asc("ext_id")).limit(100)
             .select("ext_id", "score_r"))
@@ -1141,7 +1142,7 @@ def q_segments_delete_topk(spark, sf_dir):
                     .select("doc_id"))
     eng = Engine(idx, "bm25")
     eng.attach_segments(d, num_buckets=8)
-    res = eng.search_daat(" ".join(BOW3), k=200)
+    res = eng.search_daat_many({"q": " ".join(BOW3)}, k=200)
     return (res.withColumn("score_r", _r(F.col("score")))
             .orderBy(F.desc("score_r"), F.asc("ext_id")).limit(100)
             .select("ext_id", "score_r"))
@@ -1189,7 +1190,7 @@ def q_segments_update_topk(spark, sf_dir):
             num_buckets=8)
     eng = Engine(idx, "bm25")
     eng.attach_segments(d, num_buckets=8)
-    res = eng.search_daat(" ".join(BOW3), k=200)
+    res = eng.search_daat_many({"q": " ".join(BOW3)}, k=200)
     return (res.withColumn("score_r", _r(F.col("score")))
             .orderBy(F.desc("score_r"), F.asc("ext_id")).limit(100)
             .select("ext_id", "score_r"))

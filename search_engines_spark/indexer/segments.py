@@ -392,7 +392,7 @@ def decode_blocks_batch(pdf: pd.DataFrame,
     `n`, so the WHOLE batch decodes with four `varbyte_decode` calls on
     concatenated bytes + segmented cumsums — no per-block (let alone
     per-posting) Python. The earlier per-posting dict-append loop was
-    ~all of compaction's and `search_segments`' decode wall time.
+    ~all of compaction's and `search_segments_many`' decode wall time.
 
     deleted: optional sorted tombstone id array masked during decode.
     extra_cols: block columns to carry through per posting (e.g.

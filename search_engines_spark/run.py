@@ -22,11 +22,17 @@ A reference user's workflow maps 1:1:
     diversity:maxResultRankingLength,
     diversity:initialRankingFile       same              same
 
+The reference answers a query file one query at a time
+(`QryEval.java:684`); the runner answers it as one batch. Final
+rankings, feedback's initial rankings and every diversity topic and
+intent ranking each come from one batch call (`Engine.search_many`, or
+the segment-store batch paths), feedback expands every query in one
+plan (`feedback.expand_queries`), and only the greedy diversity re-rank
+(`Diversity.java:415-605`) runs per topic on the driver. Per-query
+results, and so the trec output, are those of the reference's loop.
+
 Engine extensions beyond the reference's parameters:
 
-    batchQueries=true        whole query file through the one-plan batch
-                             paths (search_many; composes with fb and
-                             engine-ranked diversity)
     analyzer=parity          full Lucene-equivalent analysis chain
                              (StandardTokenizer analog → possessive →
                              stop → KStem) on both index and query side;
@@ -55,11 +61,12 @@ import sys
 from pyspark.sql import SparkSession
 
 from .capabilities.diversity import DiversityInput, pm2, xquad
-from .capabilities.feedback import expand_query, rewrite_with_feedback
+from .capabilities.feedback import expand_queries, rewrite_with_feedback
 from .engine.compile import Engine
 from .indexer.build import Index, build_index_frames, docs_from_documents_table
 from .io import (read_parameter_file, read_query_file, read_ranking_file,
                  write_expanded_query_file, write_trec_file)
+from .literals import local_frame
 from .oracle import Models, f32
 from .session import get_spark
 
@@ -144,28 +151,31 @@ def open_index(spark: SparkSession, params: dict[str, str]) -> Index:
     return build_index_frames(docs, extid_docid_fmt=fmt)
 
 
-def _search_one(eng: Engine, query: str, k: int):
-    """One ranked retrieval through whatever store the engine has:
-    segments attached → DAAT fast path, decode path for anything the
-    kernel can't take; otherwise the DataFrame index plans. Keeps every
-    ranking consumer (final retrieval, fb initial, diversity intents)
-    working in a segments-only deployment."""
-    if hasattr(eng, "_seg_dir"):
-        try:
-            return eng.search_daat(query, k=k)
-        except ValueError:   # structured / non-bm25 → decode path
-            return eng.search_segments(query, k=k)
-    return eng.search(query, k=k)
-
-
 def _search_batch(eng: Engine, queries: dict[str, str], k: int):
-    """Batched `_search_one` — one-plan batch paths on either store."""
+    """A query file's top-k through the one-plan batch path of whatever
+    store the engine has: segments attached → the DAAT kernel, or the
+    decode path for anything the kernel can't take; otherwise the
+    DataFrame index plans. Keeps every ranking consumer (final
+    retrieval, fb initial, diversity intents) working in a
+    segments-only deployment."""
     if hasattr(eng, "_seg_dir"):
         try:
             return eng.search_daat_many(queries, k=k)
-        except ValueError:
+        except ValueError:   # structured / non-bm25 → decode path
             return eng.search_segments_many(queries, k=k)
     return eng.search_many(queries, k=k)
+
+
+def _ranked_lists(eng: Engine, queries: dict[str, str], k: int):
+    """→ ({qid: [(doc_id, score)] in rank order, [] for no results},
+    {doc_id: ext_id}) from one `_search_batch` call."""
+    lists: dict[str, list[tuple[int, float]]] = {q: [] for q in queries}
+    ext_of: dict[int, str] = {}
+    for r in sorted(_search_batch(eng, queries, k).collect(),
+                    key=lambda r: r["rank"]):
+        lists[r["qid"]].append((r["doc_id"], r["score"]))
+        ext_of[r["doc_id"]] = r["ext_id"]
+    return lists, ext_of
 
 
 def _expand_index(idx: Index, eng: Engine, top_doc_ids) -> Index:
@@ -192,33 +202,63 @@ def _expand_index(idx: Index, eng: Engine, top_doc_ids) -> Index:
     return dataclasses.replace(idx, postings=dec)
 
 
-def _feedback_query(eng: Engine, idx: Index, qid: str, query: str,
-                    params: dict[str, str],
-                    rankings: dict[str, list] | None) -> tuple[str, str]:
-    """`QryEval.java:717-745`: initial ranking (engine or file) → expand
-    → combined #wand query. Returns (expanded, combined)."""
+def _feedback_queries(spark: SparkSession, eng: Engine, idx: Index,
+                      queries: dict[str, str],
+                      params: dict[str, str]) -> dict[str, str]:
+    """`QryEval.java:717-745` for a whole query file: initial rankings
+    (`fbInitialRankingFile`, else the engine) → RM expansion →
+    {qid: expanded #wand query}."""
     fb_docs = int(params["fbDocs"])
-    fb_terms = int(params["fbTerms"])
-    fb_mu = float(params["fbMu"])
-    w = float(params["fbOrigWeight"])
-    if rankings is not None:
-        if qid not in rankings:
-            raise ValueError(f"No query {qid} in ranking file!")
-        ranking = rankings[qid]
+    if "fbInitialRankingFile" in params:
+        # ext→int via join (ranking file is tiny; doc_map never collected)
+        rdf = (read_ranking_file(spark, params["fbInitialRankingFile"])
+               .join(idx.doc_map, "ext_id", "left"))
+        ranked: dict[str, list] = {}
+        for r in rdf.collect():
+            if r["doc_id"] is None:   # Idx.getInternalDocid throws
+                raise ValueError(f"unknown external id {r['ext_id']!r}")
+            ranked.setdefault(r["qid"], []).append(
+                (r["rank"], r["doc_id"], r["score"]))
+        rankings = {}
+        for qid in queries:
+            if qid not in ranked:
+                raise ValueError(f"No query {qid} in ranking file!")
+            rankings[qid] = [(d, s) for _, d, s in sorted(ranked[qid])]
     else:
-        ranking = [(r["doc_id"], r["score"])
-                   for r in _search_one(eng, query, fb_docs).collect()]
-    fb_idx = _expand_index(idx, eng, [d for d, _ in ranking[:fb_docs]])
-    expanded = expand_query(fb_idx, ranking, fb_docs, fb_terms, fb_mu)
-    return expanded, rewrite_with_feedback(query, expanded, w)
+        rankings = _ranked_lists(eng, queries, fb_docs)[0]
+    fb_idx = _expand_index(idx, eng, [d for rk in rankings.values()
+                                      for d, _ in rk[:fb_docs]])
+    return expand_queries(fb_idx, rankings, fb_docs, int(params["fbTerms"]),
+                          float(params["fbMu"]))
+
+
+def _diversity_inputs(qids, intent_keys,
+                      lists: dict[str, list[tuple[int, float]]]
+                      ) -> dict[str, DiversityInput]:
+    """{qid: DiversityInput} from ranked lists keyed by topic id and by
+    intent key (`qid.n`): a topic's intents take their slots in
+    `intent_keys` order, each restricted to the topic's initial docs
+    (`QryEval.java:522-567`). A topic's zero-result intents keep their
+    slot — the intent count feeds the algorithms."""
+    out = {}
+    for qid in qids:
+        initial = lists.get(qid, [])
+        keep = {d for d, _ in initial}
+        ikeys = [kk for kk in intent_keys
+                 if "." in kk and kk.split(".", 1)[0] == qid]
+        out[qid] = DiversityInput(
+            initial=initial,
+            intents={i: {d: s for d, s in lists.get(kk, []) if d in keep}
+                     for i, kk in enumerate(ikeys)})
+    return out
 
 
 def _diversity_from_file(spark: SparkSession, idx: Index, path: str,
-                         depth: int) -> dict[str, DiversityInput]:
+                         depth: int):
     """`Diversity.readRankingMap` (`Diversity.java:184-265`): ONE trec
     file holds both initial (`qid`) and per-intent (`qid.intent`)
-    rankings; each group truncated to maxInputRankingsLength. Returns
-    {qid: DiversityInput}."""
+    rankings; each group truncated to maxInputRankingsLength.
+    → ({qid: DiversityInput} for the file's topics, {doc_id: ext_id})."""
     # resolve ext→int ids by joining the (tiny) ranking frame against
     # doc_map — never collect the corpus-sized map to the driver
     # (`Idx.getInternalDocid` is a per-id index lookup, `Idx.java:100-116`;
@@ -228,46 +268,21 @@ def _diversity_from_file(spark: SparkSession, idx: Index, path: str,
             .join(idx.doc_map, "ext_id", "left")
             .orderBy("qid", "rank").collect())
     groups: dict[str, list[tuple[int, float]]] = {}
+    ext_of: dict[int, str] = {}
     for r in rows:
         d = r["doc_id"]
         if d is None:   # Idx.getInternalDocid would throw (`Idx.java:100-116`)
             raise ValueError(f"unknown external id {r['ext_id']!r}")
+        ext_of[d] = r["ext_id"]
         g = groups.setdefault(r["qid"], [])
         if len(g) < depth:   # ScoreList.truncate per group
             g.append((d, r["score"]))
-    out: dict[str, DiversityInput] = {}
-    for qid, initial in groups.items():
-        if "." in qid:
-            continue
-        keep = {d for d, _ in initial}
-        # lexicographic by full "qid.n" key — faithful to the reference,
-        # whose from-file path iterates a TreeMap<String, ScoreList>
-        # (`Diversity.java:188-189`); the intents-FILE paths use file
-        # order instead, as the reference's ArrayList does
-        ikeys = sorted((k for k in groups if k.startswith(f"{qid}.")),
-                       key=lambda k: k.split(".", 1)[1])
-        intents = {i: {d: s for d, s in groups[k] if d in keep}
-                   for i, k in enumerate(ikeys)}
-        out[qid] = DiversityInput(initial=initial, intents=intents)
-    return out
-
-
-def _diversity_rankings(eng: Engine, idx: Index, qid: str, query: str,
-                        intents: dict[str, str], depth: int) -> DiversityInput:
-    """Initial + per-intent rankings from the engine itself
-    (`QryEval.java:522-567` branch)."""
-    initial = [(r["doc_id"], r["score"])
-               for r in _search_one(eng, query, depth).collect()]
-    keep = {d for d, _ in initial}
-    intent_scores: dict[int, dict[int, float]] = {}
-    # intents in INTENTS-FILE order (read_query_file preserves it; the
-    # reference appends to queryIntentMap's ArrayList as read) — NOT
-    # lexicographic, which misorders intent 10 before intent 2
-    for i, (ikey, iq) in enumerate(intents.items()):
-        rows = _search_one(eng, iq, depth).collect()
-        intent_scores[i] = {r["doc_id"]: r["score"] for r in rows
-                            if r["doc_id"] in keep}
-    return DiversityInput(initial=initial, intents=intent_scores)
+    # intents lexicographic by full "qid.n" key — faithful to the
+    # reference, whose from-file path iterates a TreeMap<String,
+    # ScoreList> (`Diversity.java:188-189`); the intents-FILE path uses
+    # file order instead, as the reference's ArrayList does
+    topics = [q for q in groups if "." not in q]
+    return _diversity_inputs(topics, sorted(groups), groups), ext_of
 
 
 def _letor_run(spark: SparkSession, idx: Index, params: dict[str, str],
@@ -405,6 +420,86 @@ def _write_eval(spark: SparkSession, params: dict[str, str]) -> None:
             f.write("all num_q=0\n")
 
 
+def _ranked_run(spark: SparkSession, idx: Index, params: dict[str, str],
+                queries: dict[str, str], k: int):
+    """The plain, feedback (`fb=true`) and diversity (`diversity=true`)
+    runs of a whole query file through `_search_batch`.
+    → ((qid, ext_id, score[, rank]) frame, {qid: expanded query} when
+    feedback ran, else None)."""
+    model, m = init_model(params)
+    eng = Engine(idx, model, params=m, analyzer=runner_analyzer(params))
+    # segmentsPath (engine extension): route ALL ranked retrieval —
+    # final, fb initial, diversity intents — through the compressed
+    # block-max segment store (indexer.segments; built offline with
+    # build_segments). Bag-of-words BM25 rides the DAAT kernel
+    # (search_daat_many), everything else decodes its terms' blocks and
+    # runs the standard plans (search_segments_many); feedback's
+    # forward-index probe decodes the top docs' blocks (_expand_index).
+    # A store saved with include_postings=False plus segmentsPath is
+    # therefore a complete retrieval deployment.
+    if "segmentsPath" in params:
+        # segmentsAsOf=<gen> pins the whole run to a store snapshot
+        # (indexer.merge time travel) — reproducible re-runs against an
+        # evolving index
+        as_of = params.get("segmentsAsOf")
+        eng.attach_segments(params["segmentsPath"],
+                            num_buckets=int(params.get("segmentsBuckets",
+                                                       "32")),
+                            as_of=None if as_of is None else int(as_of))
+
+    if params.get("diversity") == "true":
+        depth = int(params.get("diversity:maxInputRankingsLength", 100))
+        if "diversity:initialRankingFile" in params:
+            inputs, ext_of = _diversity_from_file(
+                spark, idx, params["diversity:initialRankingFile"], depth)
+            for qid in queries:
+                if qid not in inputs:
+                    raise ValueError(f"No query {qid} in ranking file!")
+        else:
+            # every topic's initial AND per-intent rankings from ONE
+            # batch; intents take their slots in INTENTS-FILE order (the
+            # reference appends them to queryIntentMap's ArrayList as
+            # read) — NOT lexicographic, which misorders intent 10
+            # before intent 2
+            intents = read_query_file(params["diversity:intentsFile"])
+            batch = dict(queries)
+            for ik, iq in intents.items():
+                # a dot-less key equal to a topic id would otherwise
+                # OVERWRITE the real query with the intent text
+                if "." in ik and ik.split(".", 1)[0] in queries:
+                    batch[ik] = iq
+            lists, ext_of = _ranked_lists(eng, batch, depth)
+            inputs = _diversity_inputs(queries, intents, lists)
+        algo = params.get("diversity:algorithm", "xquad").lower()
+        lam = float(params["diversity:lambda"])
+        rows = []
+        for qid in queries:
+            # the greedy re-rank is inherently sequential over
+            # ≤ depth-sized lists (`Diversity.java:415-605`)
+            if algo == "xquad":
+                ranked = xquad(inputs[qid], lam, depth=k)
+            elif algo == "pm2":
+                ranked = pm2(inputs[qid], lam, max_result_len=k, depth=k)
+            else:
+                raise ValueError("Illegal Diversity Algorithm")
+            rows += [(qid, ext_of[d], float(s), rk)
+                     for rk, (d, s) in enumerate(ranked[:k], start=1)]
+        # the rank column keeps the greedy order (PM2 scores are not
+        # monotone)
+        res = local_frame(spark, rows,
+                          "qid string, ext_id string, score double, rank int")
+        return res, None
+
+    expanded = None
+    if params.get("fb") == "true":
+        expanded = _feedback_queries(spark, eng, idx, queries, params)
+        w0 = float(params["fbOrigWeight"])
+        queries = {qid: rewrite_with_feedback(q, expanded[qid], w0)
+                   for qid, q in queries.items()}
+    res = _search_batch(eng, queries, k).select("qid", "ext_id", "score")
+    return res, expanded
+
+
 def main(param_path: str, spark: SparkSession | None = None) -> str:
     params = read_parameter_file(param_path)
     source_keys = ("indexPath",) if "indexPath" in params else ("corpusPath",)
@@ -442,228 +537,29 @@ def main(param_path: str, spark: SparkSession | None = None) -> str:
             raise ValueError(
                 "Required parameters were missing from the parameter file.")
 
+    expanded = None
     if params.get("retrievalAlgorithm", "BM25").lower() == "letor":
         if idx.postings is None:
             raise ValueError(
                 "retrievalAlgorithm=letor needs the postings table "
                 "(per-field scoring probes); rebuild the store with "
                 "include_postings=True")
-        # entry point C never enters the per-query loop below
-        # (`QryEval.java:274-295` replaces processQuery with re-ranking).
-        # Parse BOTH model families through init_model so its range
-        # asserts apply (letor features span BM25 and Indri slots).
+        # entry point C replaces processQuery with re-ranking
+        # (`QryEval.java:274-295`). Parse BOTH model families through
+        # init_model so its range asserts apply (letor features span
+        # BM25 and Indri slots).
         _, m = init_model({**params, "retrievalAlgorithm": "BM25"})
         m_ind = init_model({**params, "retrievalAlgorithm": "Indri"})[1]
         m.mu, m.lam = m_ind.mu, m_ind.lam
         res = _letor_run(spark, idx, params, m, queries, k)
-        write_trec_file(res, params["trecEvalOutputPath"],
-                        run_id=params.get("runID", "run"), k=k,
-                        all_qids=list(queries))
-        _write_eval(spark, params)
-        if own_spark:
-            spark.stop()
-        return params["trecEvalOutputPath"]
-
-    model, m = init_model(params)
-    eng = Engine(idx, model, params=m, analyzer=runner_analyzer(params))
-    # segmentsPath (engine extension): route ALL ranked retrieval —
-    # final, fb initial, diversity intents — through the compressed
-    # block-max segment store (indexer.segments; built offline with
-    # build_segments). Bag-of-words BM25 rides the DAAT kernel
-    # (search_daat/_many), everything else decodes its terms' blocks
-    # and runs the standard plans (search_segments/_many); feedback's
-    # forward-index probe decodes the top docs' blocks
-    # (_expand_index). A store saved with include_postings=False plus
-    # segmentsPath is therefore a complete retrieval deployment.
-    if "segmentsPath" in params:
-        # segmentsAsOf=<gen> pins the whole run to a store snapshot
-        # (indexer.merge time travel) — reproducible re-runs against an
-        # evolving index
-        as_of = params.get("segmentsAsOf")
-        eng.attach_segments(params["segmentsPath"],
-                            num_buckets=int(params.get("segmentsBuckets",
-                                                       "32")),
-                            as_of=None if as_of is None else int(as_of))
-
-    fb = params.get("fb") == "true"
-    diversity = params.get("diversity") == "true"
-    rankings_file = None
-    if fb and "fbInitialRankingFile" in params:
-        # ext→int via join (ranking file is tiny; doc_map never collected)
-        rdf = (read_ranking_file(spark, params["fbInitialRankingFile"])
-               .join(idx.doc_map, "ext_id", "left"))
-        rankings_file = {}
-        for r in rdf.collect():
-            if r["doc_id"] is None:   # Idx.getInternalDocid throws
-                raise ValueError(f"unknown external id {r['ext_id']!r}")
-            rankings_file.setdefault(r["qid"], []).append(
-                (r["rank"], r["doc_id"], r["score"]))
-        rankings_file = {q: [(d, s) for _, d, s in sorted(v)]
-                         for q, v in rankings_file.items()}
-
-    # batchQueries=true (engine extension, not a reference parameter):
-    # answer the WHOLE query file through the one-plan batch path
-    # (`Engine.search_many` — stage count constant in query count,
-    # docs/PLANS.md §2b/2c/2g) instead of the reference's per-query loop
-    # (`QryEval.java:684`). Per-query results are identical, so the
-    # trec output is byte-identical. With fb=true, the expansion also
-    # batches: initial rankings from ONE search_many, RM term scores for
-    # every query from ONE expansion plan (feedback.expand_queries), and
-    # the combined #wand queries re-enter one final search_many.
-    # With diversity=true (engine-ranked intents), ALL topics' initial
-    # and per-intent rankings come from ONE search_many; only the greedy
-    # re-rank (inherently sequential, ≤ depth-sized lists,
-    # `Diversity.java:415-605`) stays driver-side per topic.
-    if (params.get("batchQueries") == "true" and diversity
-            and "diversity:initialRankingFile" not in params):
-        depth = int(params.get("diversity:maxInputRankingsLength", 100))
-        intents_all = read_query_file(params["diversity:intentsFile"])
-        batch_qs = dict(queries)
-        for ik, iq in intents_all.items():
-            # a dot-less key equal to a topic id would otherwise
-            # OVERWRITE the real query with the intent text
-            if "." in ik and ik.split(".", 1)[0] in queries:
-                batch_qs[ik] = iq
-        rows = (_search_batch(eng, batch_qs, depth)
-                .orderBy("qid", "rank").collect())
-        groups: dict[str, list] = {}
-        ext_of: dict[int, str] = {}
-        for r in rows:
-            groups.setdefault(r["qid"], []).append((r["doc_id"], r["score"]))
-            ext_of[r["doc_id"]] = r["ext_id"]
-        algo = params.get("diversity:algorithm", "xquad").lower()
-        lam = float(params["diversity:lambda"])
-        out_rows = []
-        for qid in queries:
-            initial = groups.get(qid, [])
-            keep = {d for d, _ in initial}
-            # intents in INTENTS-FILE order (the reference appends them
-            # to queryIntentMap's ArrayList as read) including
-            # zero-result intents — intent count feeds the algorithms
-            ikeys = [kk for kk in intents_all
-                     if "." in kk and kk.split(".", 1)[0] == qid]
-            intents = {i: {d: s for d, s in groups.get(kk, [])
-                           if d in keep}
-                       for i, kk in enumerate(ikeys)}
-            din = DiversityInput(initial=initial, intents=intents)
-            if algo == "xquad":
-                ranked = xquad(din, lam, depth=k)
-            elif algo == "pm2":
-                ranked = pm2(din, lam, max_result_len=k, depth=k)
-            else:
-                raise ValueError("Illegal Diversity Algorithm")
-            for rk, (d, s) in enumerate(ranked[:k], start=1):
-                out_rows.append((qid, ext_of[d], float(s), rk))
-        res = spark.createDataFrame(
-            out_rows, "qid string, ext_id string, score double, rank int")
-        write_trec_file(res, params["trecEvalOutputPath"],
-                        run_id=params.get("runID", "run"), k=k,
-                        all_qids=list(queries))
-        _write_eval(spark, params)
-        if own_spark:
-            spark.stop()
-        return params["trecEvalOutputPath"]
-    if params.get("batchQueries") == "true" and not diversity:
-        expanded_batch: dict[str, str] = {}
-        if fb:
-            from .capabilities.feedback import expand_queries
-            fb_docs = int(params["fbDocs"])
-            if rankings_file is not None:
-                for qid in queries:
-                    if qid not in rankings_file:
-                        raise ValueError(f"No query {qid} in ranking file!")
-                rankings = {qid: rankings_file[qid] for qid in queries}
-            else:
-                init = (_search_batch(eng, queries, fb_docs)
-                        .orderBy("qid", "rank").collect())
-                rankings = {qid: [] for qid in queries}
-                for r in init:
-                    rankings[r["qid"]].append((r["doc_id"], r["score"]))
-            fb_idx = _expand_index(
-                idx, eng, [d for rk in rankings.values()
-                           for d, _ in rk[:fb_docs]])
-            expanded_batch = expand_queries(
-                fb_idx, rankings, fb_docs, int(params["fbTerms"]),
-                float(params["fbMu"]))
-            w0 = float(params["fbOrigWeight"])
-            run_queries = {qid: rewrite_with_feedback(q, expanded_batch[qid],
-                                                      w0)
-                           for qid, q in queries.items()}
-        else:
-            run_queries = queries
-        batch_res = _search_batch(eng, run_queries, k)
-        res = batch_res.select("qid", "ext_id", "score")
-        write_trec_file(res, params["trecEvalOutputPath"],
-                        run_id=params.get("runID", "run"), k=k,
-                        all_qids=list(queries))
-        _write_eval(spark, params)
-        if fb and "fbExpansionQueryFile" in params:
-            write_expanded_query_file(params["fbExpansionQueryFile"],
-                                      expanded_batch)
-        if own_spark:
-            spark.stop()
-        return params["trecEvalOutputPath"]
-
-    results_rows = []
-    div_file_inputs: dict[str, DiversityInput] | None = None
-    div_intents_all: dict[str, str] | None = None
-    expanded_out: dict[str, str] = {}
-    for qid, query in queries.items():
-        if diversity:
-            depth = int(params.get("diversity:maxInputRankingsLength", 100))
-            if "diversity:initialRankingFile" in params:
-                if div_file_inputs is None:
-                    div_file_inputs = _diversity_from_file(
-                        spark, idx,
-                        params["diversity:initialRankingFile"], depth)
-                if qid not in div_file_inputs:
-                    raise ValueError(f"No query {qid} in ranking file!")
-                din = div_file_inputs[qid]
-            else:
-                if div_intents_all is None:   # read the file once
-                    div_intents_all = read_query_file(
-                        params["diversity:intentsFile"])
-                intents = {ik: iq for ik, iq in div_intents_all.items()
-                           if ik.startswith(f"{qid}.")}
-                din = _diversity_rankings(eng, idx, qid, query, intents,
-                                          depth)
-            algo = params.get("diversity:algorithm", "xquad").lower()
-            lam = float(params["diversity:lambda"])
-            if algo == "xquad":
-                ranked = xquad(din, lam, depth=k)
-            elif algo == "pm2":
-                ranked = pm2(din, lam, max_result_len=k, depth=k)
-            else:
-                raise ValueError("Illegal Diversity Algorithm")
-            for rk, (d, s) in enumerate(ranked[:k], start=1):
-                results_rows.append((qid, int(d), float(s), rk))
-            continue
-        if fb:
-            expanded, query = _feedback_query(eng, idx, qid, query, params,
-                                              rankings_file)
-            expanded_out[qid] = expanded
-        rows = _search_one(eng, query, k).collect()
-        for r in rows:
-            results_rows.append((qid, r["ext_id"], float(r["score"])))
-
-    if diversity:
-        # preserve the greedy order (PM2 scores are not monotone); int→ext
-        # ids resolve via a join of the tiny (≤ queries×k rows) result
-        # frame against doc_map — no driver-side corpus map
-        res = (spark.createDataFrame(
-                   results_rows,
-                   "qid string, doc_id long, score double, rank int")
-               .join(idx.doc_map, "doc_id")
-               .select("qid", "ext_id", "score", "rank"))
     else:
-        res = spark.createDataFrame(
-            results_rows, "qid string, ext_id string, score double")
+        res, expanded = _ranked_run(spark, idx, params, queries, k)
     write_trec_file(res, params["trecEvalOutputPath"],
                     run_id=params.get("runID", "run"), k=k,
                     all_qids=list(queries))
     _write_eval(spark, params)
-    if fb and "fbExpansionQueryFile" in params:
-        write_expanded_query_file(params["fbExpansionQueryFile"], expanded_out)
+    if expanded is not None and "fbExpansionQueryFile" in params:
+        write_expanded_query_file(params["fbExpansionQueryFile"], expanded)
     if own_spark:
         spark.stop()
     return params["trecEvalOutputPath"]

@@ -13,6 +13,38 @@ import os
 
 from pyspark.sql import SparkSession
 
+_UNITS = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40,
+          "p": 1 << 50}
+
+
+def heap_bytes(spec: str) -> int:
+    """A JVM memory string ("16g", "2048m", "512k") → bytes; a bare
+    number is MiB, as `spark.driver.memory` reads it."""
+    s = spec.strip().lower()
+    num, unit = (s[:-1], s[-1]) if s[-1:] in _UNITS else (s, "m")
+    if not num.isdigit():
+        raise ValueError(f"bad JVM memory size {spec!r}")
+    return int(num) * _UNITS[unit]
+
+
+def driver_memory(explicit: str | None, mem_total: int) -> str:
+    """`spark.driver.memory` for a host of `mem_total` bytes: `explicit`
+    (SPARK_DRIVER_MEM) when given, else half the host's memory capped
+    at 16g. An explicit heap larger than the host raises ValueError —
+    the JVM would start and die at its first large allocation."""
+    if explicit:
+        if heap_bytes(explicit) > mem_total:
+            raise ValueError(
+                f"driver heap {explicit} exceeds this host's "
+                f"{mem_total >> 20} MiB of memory")
+        return explicit
+    return f"{min(mem_total // 2, 16 << 30) >> 20}m"
+
+
+def host_memory() -> int:
+    """Physical memory of this host in bytes (MemTotal on Linux)."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
 
 def get_spark(app: str = "search-engines-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
@@ -24,8 +56,15 @@ def get_spark(app: str = "search-engines-spark", cores: int | None = None,
     real N→4N cluster has and local[k] lacks). `executor_mem` sets
     spark.executor.memory — REQUIRED with local-cluster masters, whose
     executors otherwise get the 1g default no matter how much memory
-    the worker declares (exit code 52 OOMs on any real build)."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    the worker declares (exit code 52 OOMs on any real build).
+
+    Defaults come from the host: `cores` from SPARK_GRAFT_CPUS, else the
+    CPUs this process may run on; the driver heap from SPARK_DRIVER_MEM,
+    else `driver_memory`'s half of the host's memory."""
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS")
+                         or len(os.sched_getaffinity(0)))
+    driver_mem = driver_memory(os.environ.get("SPARK_DRIVER_MEM"),
+                               host_memory())
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     if master and master.startswith("local-cluster") and not executor_mem:
         raise ValueError(
@@ -61,7 +100,7 @@ def get_spark(app: str = "search-engines-spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -3,68 +3,28 @@ each validated against a hand-transcribed pure-Python reference of the
 same `QryEval.java` / `Diversity.java` / `FeatureVector.java` semantics.
 """
 
-import math
-
 import pytest
 
 from search_engines_spark.capabilities.diversity import (
     DiversityInput, pm2, xquad)
 from search_engines_spark.capabilities.feedback import (
-    expand_query, rewrite_with_feedback)
+    expand_queries, rewrite_with_feedback)
 from search_engines_spark.capabilities.letor import (
     letor_features, letor_features_18, svmrank_lines, svmrank_lines_slots)
 from search_engines_spark.engine import Engine
 from search_engines_spark.oracle import Models, run_query
 
+from rm_oracle import py_expand
+
 
 # ------------------------------------------------------------- feedback --
-
-
-def _py_expand(oracle_index, ranking, fb_docs, fb_terms, fb_mu):
-    """Pure-Python transcription of `QryEval.java:78-200` (ties → term asc)."""
-    top = ranking[:fb_docs]
-    c = oracle_index.sumlen["body"]
-    # candidate terms = stems of top docs
-    cand = set()
-    tf_map = {}
-    for d, _ in top:
-        for (term, fld), il in oracle_index.inv.items():
-            if fld != "body":
-                continue
-            for p in il.postings:
-                if p.doc_id == d:
-                    cand.add(term)
-                    tf_map[(term, d)] = p.tf
-    scores = {}
-    for t in cand:
-        if "." in t or "," in t:
-            continue
-        ctf = oracle_index.inv[(t, "body")].ctf
-        mle = ctf / c
-        s = 0.0
-        for d, doc_score in top:
-            tf = tf_map.get((t, d), 0)
-            dl = oracle_index.doclen[("body", d)]
-            ptd = (tf + fb_mu * mle) / (dl + fb_mu)
-            s += ptd * doc_score * math.log(1 / mle)
-        scores[t] = s
-    ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:fb_terms]
-    return "#wand ( " + " ".join(f"{s:.4f} {t}" for t, s in ranked) + " )"
-
-
-def test_expand_query_matches_python_reference(spark_index, oracle_index):
-    ranking = [(d, s) for d, _, s in
-               run_query("fickle creek farm", oracle_index, "indri", k=10)]
-    got = expand_query(spark_index, ranking, fb_docs=5, fb_terms=8, fb_mu=40.0)
-    want = _py_expand(oracle_index, ranking, 5, 8, 40.0)
-    assert got == want
 
 
 def test_expanded_query_reenters_engine(spark_index, oracle_index):
     """The expanded #wand string must parse and run (SURVEY.md §3.2)."""
     ranking = [(d, s) for d, _, s in
                run_query("fickle creek farm", oracle_index, "indri", k=10)]
-    expanded = expand_query(spark_index, ranking, 5, 5, 40.0)
+    expanded = expand_queries(spark_index, {"q": ranking}, 5, 5, 40.0)["q"]
     new_q = rewrite_with_feedback("#and( fickle creek farm )", expanded, 0.5)
     eng = Engine(spark_index, "indri")
     rows = eng.search(new_q, k=10).collect()
@@ -78,10 +38,10 @@ def test_expanded_query_reenters_engine(spark_index, oracle_index):
 
 def test_expand_queries_batch_matches_single(spark_index, oracle_index):
     """Batched expansion (ONE postings pass + ONE (qid, term) agg for
-    every query, feedback.expand_queries) must produce the identical
-    expansion string the per-query path produces for each qid — incl.
-    a qid with an empty ranking."""
-    from search_engines_spark.capabilities.feedback import expand_queries
+    every query, feedback.expand_queries) must produce, for each qid,
+    the expansion string the pure-Python transcription of
+    `QryEval.java:78-200` produces for that qid alone — incl. a qid with
+    an empty ranking."""
     rankings = {
         "q1": [(d, s) for d, _, s in
                run_query("fickle creek farm", oracle_index, "indri", k=10)],
@@ -91,9 +51,10 @@ def test_expand_queries_batch_matches_single(spark_index, oracle_index):
     }
     batch = expand_queries(spark_index, rankings, fb_docs=5, fb_terms=8,
                            fb_mu=40.0)
-    for qid, ranking in rankings.items():
-        want = expand_query(spark_index, ranking, 5, 8, 40.0)
-        assert batch[qid] == want, qid
+    assert batch["q3"] == "#wand ( )"
+    for qid in ("q1", "q2"):
+        assert batch[qid] == py_expand(oracle_index, rankings[qid],
+                                       5, 8, 40.0), qid
 
 
 # ------------------------------------------------------------ diversity --

@@ -116,9 +116,12 @@ def test_plan_cache_scoped_to_one_call(spark_index):
     for i in range(20):
         q = f"#sum( #near/{i + 1}( creek farm ) fickle )"
         if i % 2:
-            eng.search_many({"q": q, "n": f"#sum( #syn( creek #near/{i}( "
-                                          f"fickle farm ) ) )"}, k=5,
-                            bow_fast_path=False)
+            # a #SUM arm under #SUM keeps the per-query compiled plan
+            # inside search_many, so its Iop frames enter the cache
+            eng.search_many({"q": f"#sum( #sum( #near/{i + 1}( creek "
+                                  f"farm ) creek ) fickle )",
+                             "n": f"#sum( #syn( creek #near/{i}( "
+                                  f"fickle farm ) ) )"}, k=5)
         else:
             eng.search(q, k=5)
         assert eng._iop_cache == {}, q

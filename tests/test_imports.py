@@ -39,7 +39,10 @@ def _package_imports(path: Path) -> list[tuple[int, str, list[str]]]:
 
 
 def test_package_imports_resolve():
-    assert len(FILES) > 40
+    # every scanned root contributes: a glob that matched nothing would
+    # pass the check below vacuously
+    for root in (ROOT / PKG, ROOT / "bench.py", ROOT / "tools"):
+        assert any(f == root or root in f.parents for f in FILES), root
     missing = []
     for path in FILES:
         where = path.relative_to(ROOT)

@@ -43,6 +43,12 @@ def _decoded_map(block_rows):
     return out
 
 
+def _daat(eng, q, k):
+    """One query through `search_daat_many` → its rows in rank order."""
+    return sorted(eng.search_daat_many({"q": q}, k=k).collect(),
+                  key=lambda r: r["rank"])
+
+
 @pytest.fixture(scope="module")
 def merged_dir(spark, spark_index, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("merge_segs"))
@@ -149,11 +155,11 @@ def test_tombstone_ids_write_from_a_local_table(spark, tmp_path):
 
 
 def test_daat_over_generations_matches_engine(spark, spark_index, merged_dir):
-    """search_daat reads base ∪ generations transparently and stays
+    """search_daat_many reads base ∪ generations transparently and stays
     rank-identical to the set-at-a-time plan over the FULL index."""
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(merged_dir, num_buckets=NUM_BUCKETS)
-    got = eng.search_daat("fickle creek farm", k=20).collect()
+    got = _daat(eng, "fickle creek farm", k=20)
     want = eng.search("fickle creek farm", k=20).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
     assert np.allclose([r["score"] for r in got],
@@ -177,7 +183,7 @@ def test_compaction_folds_generations(spark, spark_index, merged_dir):
     # queries unchanged post-compaction
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(merged_dir, num_buckets=NUM_BUCKETS)
-    got_q = eng.search_daat("fickle creek farm", k=20).collect()
+    got_q = _daat(eng, "fickle creek farm", k=20)
     want_q = eng.search("fickle creek farm", k=20).collect()
     assert [r["doc_id"] for r in got_q] == [r["doc_id"] for r in want_q]
 
@@ -193,14 +199,14 @@ def test_delete_tombstones_and_purge(spark, spark_index, tmp_path_factory):
                    num_buckets=NUM_BUCKETS)
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(d, num_buckets=NUM_BUCKETS)
-    before = eng.search_daat("fickle creek farm", k=30).collect()
+    before = _daat(eng, "fickle creek farm", k=30)
     victims = [r["doc_id"] for r in before[:2]]
     m = delete_docs(spark, d, victims)
     assert m["deleted_total"] == 2
     # idempotent replay
     delete_docs(spark, d, victims)
     assert list(deleted_doc_ids(spark, d)) == sorted(victims)
-    after = eng.search_daat("fickle creek farm", k=30).collect()
+    after = _daat(eng, "fickle creek farm", k=30)
     got = [(r["doc_id"], round(r["score"], 9)) for r in after]
     # exactly the undeleted prefix, scores unchanged (full-corpus stats)
     want = [(r["doc_id"], round(r["score"], 9)) for r in before
@@ -216,7 +222,7 @@ def test_delete_tombstones_and_purge(spark, spark_index, tmp_path_factory):
         read_segments(spark, d, num_buckets=NUM_BUCKETS).collect())
     all_docs = {doc for run in decoded.values() for doc in run}
     assert not all_docs & set(victims)
-    post = eng.search_daat("fickle creek farm", k=30).collect()
+    post = _daat(eng, "fickle creek farm", k=30)
     assert [(r["doc_id"], round(r["score"], 9)) for r in post] == want
 
 
@@ -318,7 +324,7 @@ def test_compaction_replay_after_crash(spark, spark_index, tmp_path_factory,
     assert got == want
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(d, num_buckets=NUM_BUCKETS)
-    got_q = eng.search_daat("fickle creek farm", k=20).collect()
+    got_q = _daat(eng, "fickle creek farm", k=20)
     want_q = eng.search("fickle creek farm", k=20).collect()
     assert [r["doc_id"] for r in got_q] == [r["doc_id"] for r in want_q]
     assert np.allclose([r["score"] for r in got_q],
@@ -430,7 +436,7 @@ def test_purge_all_docs_never_resurrects(spark, spark_index,
     assert read_segments(spark, d, num_buckets=NUM_BUCKETS).count() == 0
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(d, num_buckets=NUM_BUCKETS)
-    assert eng.search_daat("fickle creek farm", k=10).count() == 0
+    assert _daat(eng, "fickle creek farm", k=10) == []
 
 
 def test_mask_with_deletes_far_exceeding_k(spark, spark_index,
@@ -457,7 +463,7 @@ def test_mask_with_deletes_far_exceeding_k(spark, spark_index,
     want = [(r["doc_id"], round(r["score"], 9)) for r in full
             if r["doc_id"] not in victims][:k]
     got_daat = [(r["doc_id"], round(r["score"], 9))
-                for r in eng.search_daat("fickle creek farm", k=k).collect()]
+                for r in _daat(eng, "fickle creek farm", k=k)]
     assert got_daat == want
     res = eng.search_segments_many(
         {"q1": "fickle creek farm", "q2": "#near/2( creek farm )"}, k=k)
@@ -537,7 +543,7 @@ def test_update_supersedes_and_time_travels(spark, corpus_rows,
     idx_union = build_index_frames(docs_union)
     eng = Engine(idx_union, "bm25")
     eng.attach_segments(d, num_buckets=NUM_BUCKETS)
-    before = eng.search_daat("fickle creek farm", k=30).collect()
+    before = _daat(eng, "fickle creek farm", k=30)
     assert before and union_src.count() == len(corpus_rows) + 2
 
     victims = superseded_doc_ids(idx_v1.docs, delta_src)
@@ -548,7 +554,7 @@ def test_update_supersedes_and_time_travels(spark, corpus_rows,
     assert m["gen"] == 1 and not m["skipped"] and m["deleted_total"] == 2
 
     # current read: old versions gone, new versions (ids >= offset) live
-    after = eng.search_daat("fickle creek farm", k=30).collect()
+    after = _daat(eng, "fickle creek farm", k=30)
     got_ids = {r["doc_id"] for r in after}
     assert not got_ids & vids
     assert any(i >= offset for i in got_ids)
@@ -559,15 +565,15 @@ def test_update_supersedes_and_time_travels(spark, corpus_rows,
             if r["doc_id"] not in vids][:len(after)]
     assert [(r["doc_id"], round(r["score"], 9)) for r in after] == want
     # the new content is searchable...
-    ren = eng.search_daat("renovated", k=10).collect()
+    ren = _daat(eng, "renovated", k=10)
     assert {r["doc_id"] for r in ren} == {offset, offset + 1}
 
     # ...and time travel reproduces the pre-update snapshot exactly
     eng.attach_segments(d, num_buckets=NUM_BUCKETS, as_of=0)
-    got0 = eng.search_daat("fickle creek farm", k=30).collect()
+    got0 = _daat(eng, "fickle creek farm", k=30)
     assert [(r["doc_id"], round(r["score"], 9)) for r in got0] == \
         [(r["doc_id"], round(r["score"], 9)) for r in before]
-    assert eng.search_daat("renovated", k=10).collect() == []
+    assert _daat(eng, "renovated", k=10) == []
 
     # replaying the same update converges (append skipped by fingerprint,
     # tombstones are a set)
@@ -575,19 +581,19 @@ def test_update_supersedes_and_time_travels(spark, corpus_rows,
                          num_buckets=NUM_BUCKETS)
     assert m2["skipped"] and m2["deleted_total"] == 2
     eng.attach_segments(d, num_buckets=NUM_BUCKETS)
-    again = eng.search_daat("fickle creek farm", k=30).collect()
+    again = _daat(eng, "fickle creek farm", k=30)
     assert [(r["doc_id"], r["score"]) for r in again] == \
         [(r["doc_id"], r["score"]) for r in after]
 
     # compaction folds gen 1 into the base: snapshot 0 expires
     compact_segments(spark, d, num_buckets=NUM_BUCKETS)
     assert compaction_floor(d) == 1
-    post = eng.search_daat("fickle creek farm", k=30).collect()
+    post = _daat(eng, "fickle creek farm", k=30)
     assert [(r["doc_id"], r["score"]) for r in post] == \
         [(r["doc_id"], r["score"]) for r in after]
     eng.attach_segments(d, num_buckets=NUM_BUCKETS, as_of=0)
     with pytest.raises(ValueError, match="expired"):
-        eng.search_daat("fickle creek farm", k=5).collect()
+        _daat(eng, "fickle creek farm", k=5)
 
 
 def test_journal_torn_tail_is_crash_debris(spark, spark_index,

@@ -1,5 +1,7 @@
 """Property-based rank-identity: randomly composed structured queries
-must match the pure-Python oracle exactly (docids + scores to 1e-9).
+must match the pure-Python oracle exactly (docids + scores to 1e-9) —
+per query, batched over the index, and batched off the compressed
+segment store (the decode path and the block-max DAAT kernel).
 
 Hypothesis drives the query generator with a fixed seed profile
 (derandomized) so CI is stable; the generator composes every operator
@@ -122,18 +124,33 @@ def query_batch(draw, strat):
     return out
 
 
-def _check_batch(queries, model, spark_index, oracle_index):
+def _by_qid(rows) -> dict:
+    out: dict = {}
+    for r in sorted(rows, key=lambda r: r["rank"]):
+        out.setdefault(r["qid"], []).append(r)
+    return out
+
+
+def _assert_ranked(got, want, label):
+    assert [r["doc_id"] for r in got] == [d for d, _, _ in want], label
+    for g, (_, _, s) in zip(got, want):
+        assert g["score"] == pytest.approx(s, abs=1e-9), label
+
+
+def _check_batch(queries, model, spark_index, oracle_index, store=None):
+    """Every qid of one batch call == the oracle for that query alone:
+    `search_many` over the index, or with `store`, `search_segments_many`
+    over the compressed segment store."""
     eng = Engine(spark_index, model)
-    rows = eng.search_many(queries, k=30).collect()
-    by_qid: dict = {}
-    for r in rows:
-        by_qid.setdefault(r["qid"], []).append(r)
+    if store is None:
+        res = eng.search_many(queries, k=30)
+    else:
+        eng.attach_segments(store, num_buckets=STORE_BUCKETS)
+        res = eng.search_segments_many(queries, k=30)
+    by_qid = _by_qid(res.collect())
     for qid, q in queries.items():
-        got = sorted(by_qid.get(qid, []), key=lambda r: r["rank"])
         want = run_query(q, oracle_index, model, Models(), k=30)
-        assert [r["doc_id"] for r in got] == [d for d, _, _ in want], (qid, q)
-        for g, (_, _, s) in zip(got, want):
-            assert g["score"] == pytest.approx(s, abs=1e-9), (qid, q)
+        _assert_ranked(by_qid.get(qid, []), want, (qid, q))
 
 
 BATCH_COMMON = dict(max_examples=6, deadline=None, derandomize=True,
@@ -156,3 +173,72 @@ def test_random_boolean_batch(qs, spark_index, oracle_index):
 @settings(**BATCH_COMMON)
 def test_random_indri_batch(qs, spark_index, oracle_index):
     _check_batch(qs, "indri", spark_index, oracle_index)
+
+
+# ------------------------------- segment store (search_*_many off disk) --
+
+STORE_BUCKETS = 4
+STORE_COMMON = dict(max_examples=4, deadline=None, derandomize=True,
+                    suppress_health_check=[HealthCheck.too_slow])
+
+
+@pytest.fixture(scope="module")
+def seg_store(spark_index, tmp_path_factory):
+    """One compressed segment store over the test index, shared by every
+    example of this module's store arms."""
+    from search_engines_spark.indexer.segments import build_segments
+    d = str(tmp_path_factory.mktemp("property_segments"))
+    build_segments(spark_index.postings, spark_index.doclens, d,
+                   num_buckets=STORE_BUCKETS)
+    return d
+
+
+@given(qs=query_batch(bm25_query()))
+@settings(**STORE_COMMON)
+def test_random_bm25_batch_from_store(qs, spark_index, oracle_index,
+                                      seg_store):
+    _check_batch(qs, "bm25", spark_index, oracle_index, seg_store)
+
+
+@given(qs=query_batch(boolean_query()))
+@settings(**STORE_COMMON)
+def test_random_boolean_batch_from_store(qs, spark_index, oracle_index,
+                                         seg_store):
+    _check_batch(qs, "rankedboolean", spark_index, oracle_index, seg_store)
+
+
+@given(qs=query_batch(indri_query()))
+@settings(**STORE_COMMON)
+def test_random_indri_batch_from_store(qs, spark_index, oracle_index,
+                                       seg_store):
+    _check_batch(qs, "indri", spark_index, oracle_index, seg_store)
+
+
+@st.composite
+def bow_batch(draw):
+    """2-4 bag-of-words queries: repeated terms, the stopword and an OOV
+    term included, but never a query that analyzes to nothing."""
+    words = TERMS + [_OOV]
+    out = {}
+    for i in range(draw(st.integers(min_value=2, max_value=4))):
+        first = draw(st.sampled_from([w for w in words if w != "the"]))
+        rest = draw(st.lists(st.sampled_from(words), max_size=3))
+        out[f"q{i}"] = " ".join([first] + rest)
+    return out
+
+
+@given(qs=bow_batch())
+@settings(**STORE_COMMON)
+def test_random_bow_batch_daat(qs, spark_index, oracle_index, seg_store):
+    """`search_daat_many` (block-max DAAT over the store) == the oracle
+    per qid under DAAT's documented tie-break, doc_id asc: the oracle's
+    full ranking is re-sorted by (score desc, doc_id asc) before the
+    top-k cut."""
+    eng = Engine(spark_index, "bm25")
+    eng.attach_segments(seg_store, num_buckets=STORE_BUCKETS)
+    by_qid = _by_qid(eng.search_daat_many(qs, k=30).collect())
+    for qid, q in qs.items():
+        full = run_query(q, oracle_index, "bm25", Models(),
+                         k=len(oracle_index.ext_id))
+        want = sorted(full, key=lambda r: (-r[2], r[0]))[:30]
+        _assert_ranked(by_qid.get(qid, []), want, (qid, q))

@@ -38,11 +38,38 @@ def _write(tmp_path, name, text):
     return str(p)
 
 
+def _trec(path):
+    """trec file → {qid: [(ext_id, rank, score)] in file order}."""
+    by_qid = {}
+    for ln in open(path).read().splitlines():
+        qid, _, ext, rank, score, _ = ln.split()
+        by_qid.setdefault(qid, []).append((ext, int(rank), float(score)))
+    return by_qid
+
+
+def _assert_run_matches(got, want):
+    """One topic's trec rows == the oracle's ranking: ext_ids and ranks
+    exact, scores within 1e-9; an empty ranking is the dummy line."""
+    if not want:
+        assert got == [("dummy", 1, 0.0)]
+        return
+    assert [(e, r) for e, r, _ in got] == \
+        [(e, r) for r, (_, e, _) in enumerate(want, start=1)]
+    for (_, _, s), (_, _, ws) in zip(got, want):
+        assert s == pytest.approx(ws, abs=1e-9)
+
+
 def test_bm25_run_matches_oracle(spark, corpus_parquet, tmp_path,
                                  oracle_documents_index):
+    """A query file runs as one batch: every topic's trec block matches
+    the oracle ranking of that query alone — bag-of-words, structured
+    (batched proximity path) and all-OOV (dummy line) topics alike."""
     d, _ = corpus_parquet
+    queries = {"1": "fickle creek farm", "2": "voyager probe",
+               "3": "#sum( #near/2( fickle creek ) farm )",
+               "4": "zzzunknownterm"}
     qf = _write(tmp_path, "q.txt",
-                "1:fickle creek farm\n2:voyager probe\n")
+                "".join(f"{q}:{t}\n" for q, t in queries.items()))
     out = str(tmp_path / "out.teIn")
     pf = _write(tmp_path, "p.txt", f"""corpusPath={d}
 queryFilePath={qf}
@@ -54,16 +81,12 @@ BM25:k_3=0
 runID=t
 """)
     main(pf, spark=spark)
-    lines = open(out).read().splitlines()
-    by_qid = {}
-    for ln in lines:
-        qid, _, ext, rank, score, _ = ln.split()
-        by_qid.setdefault(qid, []).append((ext, int(rank), float(score)))
-    want1 = run_query("fickle creek farm", oracle_documents_index, "bm25")
-    got1 = sorted(by_qid["1"], key=lambda t: t[1])
-    assert [e for e, _, _ in got1] == [e for _, e, _ in want1]
-    for (e, _, s), (_, we, ws) in zip(got1, want1):
-        assert s == pytest.approx(ws, abs=1e-9)
+    by_qid = _trec(out)
+    assert list(by_qid) == list(queries)          # query-file order
+    for qid, q in queries.items():
+        _assert_run_matches(by_qid[qid],
+                            run_query(q, oracle_documents_index, "bm25"))
+    assert by_qid["4"] == [("dummy", 1, 0.0)]
 
 
 def test_fb_run_produces_expansion(spark, corpus_parquet, tmp_path):
@@ -90,85 +113,117 @@ fbExpansionQueryFile={exp}
     assert len(open(out).read().splitlines()) > 0
 
 
-def test_batch_fb_matches_per_query_fb(spark, corpus_parquet, tmp_path):
-    """batchQueries=true + fb=true: initial rankings from ONE
-    search_many, every query's RM expansion from ONE plan
-    (feedback.expand_queries), final combined #wand queries through one
-    more search_many — trec ranking identical to the per-query fb loop
-    (scores to 1e-9) and the expansion files agree per qid (weights to
-    the same %.4f, modulo summation-order ulps at the boundary)."""
+def test_batch_fb_matches_per_query_fb(spark, corpus_parquet, tmp_path,
+                                      oracle_documents_index):
+    """fb=true answers the query file as one batch (initial rankings
+    from ONE search_many, every query's RM expansion from ONE plan,
+    final combined #wand queries through one more search_many), and each
+    topic matches the oracle run of that query alone: initial ranking
+    from `run_query`, expansion from the pure-Python RM transcription
+    (terms equal, weights to 1e-4), final ranking from `run_query` on
+    the combined query (scores to 1e-9)."""
+    from rm_oracle import py_expand
+
+    from search_engines_spark.capabilities.feedback import (
+        rewrite_with_feedback)
+    from search_engines_spark.run import init_model
     d, _ = corpus_parquet
     # fb rewrites by TEXT (`QryEval.java:740-742`): a bare multi-term
     # query inside #wand would leave terms without weights, so fb query
     # files use structured originals (same constraint as the reference)
+    queries = {"1": "#and( fickle creek farm )", "2": "#and( voyager probe )"}
     qf = _write(tmp_path, "qfb.txt",
-                "1:#and( fickle creek farm )\n2:#and( voyager probe )\n")
-    outs, exps = [], []
-    for i, extra in enumerate(("", "batchQueries=true\n")):
-        out = str(tmp_path / f"fb{i}.teIn")
-        exp = str(tmp_path / f"fbexp{i}.txt")
-        pf = _write(tmp_path, f"pfb{i}.txt", f"""corpusPath={d}
-queryFilePath={qf}
-trecEvalOutputPath={out}
-retrievalAlgorithm=Indri
+                "".join(f"{q}:{t}\n" for q, t in queries.items()))
+    out = str(tmp_path / "fb.teIn")
+    exp = str(tmp_path / "fbexp.txt")
+    params = """retrievalAlgorithm=Indri
 Indri:mu=2500
 Indri:lambda=0.4
-fb=true
+"""
+    pf = _write(tmp_path, "pfb.txt", f"""corpusPath={d}
+queryFilePath={qf}
+trecEvalOutputPath={out}
+{params}fb=true
 fbDocs=5
 fbTerms=6
 fbMu=40
 fbOrigWeight=0.5
 fbExpansionQueryFile={exp}
 runID=t
-{extra}""")
-        main(pf, spark=spark)
-        outs.append(open(out).read().splitlines())
-        exps.append(sorted(open(exp).read().splitlines()))
-    assert len(outs[0]) == len(outs[1])
-    for a, b in zip(outs[0], outs[1]):
-        qa, _, ea, ra, sa, _ = a.split()
-        qb, _, eb, rb, sb, _ = b.split()
-        assert (qa, ea, ra) == (qb, eb, rb)
-        assert abs(float(sa) - float(sb)) < 1e-9
-    assert exps[0] == exps[1]
+""")
+    main(pf, spark=spark)
+    got_exp = dict(ln.split(": ", 1) for ln in open(exp).read().splitlines())
+    assert list(got_exp) == list(queries)
+    by_qid = _trec(out)
+    _, m = init_model(dict(ln.split("=", 1) for ln in params.split()))
+    oi = oracle_documents_index
+    for qid, q in queries.items():
+        initial = [(doc, s) for doc, _, s in
+                   run_query(q, oi, "indri", m, k=5)]
+        want_exp = py_expand(oi, initial, 5, 6, 40.0).split()[2:-1]
+        got = got_exp[qid].split()
+        assert got[:2] == ["#wand", "("] and got[-1] == ")"
+        assert got[3:-1:2] == want_exp[1::2], qid         # terms
+        for w, ww in zip(got[2:-1:2], want_exp[0::2]):     # weights
+            assert float(w) == pytest.approx(float(ww), abs=1e-4), qid
+        # the final ranking re-enters the engine as the combined TEXT
+        # query; the engine's own expansion string (checked above)
+        # builds it, so the ranking must match the oracle exactly
+        final = rewrite_with_feedback(q, got_exp[qid], 0.5)
+        _assert_run_matches(by_qid[qid], run_query(final, oi, "indri", m))
 
 
 @pytest.mark.parametrize("algo", ["xquad", "pm2"])
 def test_batch_diversity_matches_per_query(spark, corpus_parquet, tmp_path,
-                                           algo):
-    """batchQueries=true + diversity=true (engine-ranked intents): every
-    topic's initial AND per-intent rankings come from ONE search_many;
-    the greedy re-rank stays per-topic. Output must be byte-identical to
-    the per-query loop."""
+                                           oracle_documents_index, algo):
+    """diversity=true (engine-ranked intents) answers every topic's
+    initial AND per-intent rankings from ONE batch; the greedy re-rank
+    stays per topic. Each topic must equal the oracle: `run_query`
+    rankings for the topic and its intents (intents-file order),
+    re-ranked by `capabilities.diversity`'s xquad / pm2."""
+    from search_engines_spark.capabilities.diversity import (
+        DiversityInput, pm2, xquad)
     d, _ = corpus_parquet
-    qf = _write(tmp_path, "qdv.txt", "1:creek farm\n2:voyager probe\n")
-    intents = _write(tmp_path, "idv.txt",
-                     "1.1:creek\n1.2:farm\n2.1:voyager\n")
-    outs = []
-    for i, extra in enumerate(("", "batchQueries=true\n")):
-        out = str(tmp_path / f"dv_{algo}_{i}.teIn")
-        pf = _write(tmp_path, f"pdv_{algo}_{i}.txt", f"""corpusPath={d}
+    queries = {"1": "creek farm", "2": "voyager probe"}
+    intents = {"1.1": "creek", "1.2": "farm", "2.1": "voyager"}
+    qf = _write(tmp_path, f"qdv_{algo}.txt",
+                "".join(f"{q}:{t}\n" for q, t in queries.items()))
+    itf = _write(tmp_path, f"idv_{algo}.txt",
+                 "".join(f"{q}:{t}\n" for q, t in intents.items()))
+    out = str(tmp_path / f"dv_{algo}.teIn")
+    pf = _write(tmp_path, f"pdv_{algo}.txt", f"""corpusPath={d}
 queryFilePath={qf}
 trecEvalOutputPath={out}
 retrievalAlgorithm=BM25
 diversity=true
 diversity:algorithm={algo}
 diversity:lambda=0.5
-diversity:intentsFile={intents}
+diversity:intentsFile={itf}
 diversity:maxInputRankingsLength=20
 diversity:maxResultRankingLength=10
 runID=t
-{extra}""")
-        main(pf, spark=spark)
-        outs.append(open(out).read())
-    assert outs[0] == outs[1]
+""")
+    main(pf, spark=spark)
+    by_qid = _trec(out)
+    oi = oracle_documents_index
+    for qid, q in queries.items():
+        initial = [(doc, s) for doc, _, s in run_query(q, oi, "bm25", k=20)]
+        keep = {doc for doc, _ in initial}
+        slots = [iq for ik, iq in intents.items() if ik.startswith(qid + ".")]
+        din = DiversityInput(initial=initial, intents={
+            i: {doc: s for doc, _, s in run_query(iq, oi, "bm25", k=20)
+                if doc in keep}
+            for i, iq in enumerate(slots)})
+        ranked = (xquad(din, 0.5, depth=10) if algo == "xquad"
+                  else pm2(din, 0.5, max_result_len=10, depth=10))
+        want = [(doc, oi.ext_id[doc], s) for doc, s in ranked[:10]]
+        _assert_run_matches(by_qid[qid], want)
 
 
 def test_segments_path_param(spark, corpus_parquet, tmp_path):
     """segmentsPath serves ranked retrieval from the compressed store:
     bow BM25 through the DAAT kernel, structured queries through the
-    decode path — trec output ranking identical to the DataFrame plans,
-    in both the per-query loop and batchQueries mode."""
+    decode path — trec output ranking identical to the DataFrame plans."""
     from search_engines_spark.indexer.build import (
         build_index_frames, docs_from_documents_table)
     from search_engines_spark.indexer.segments import build_segments
@@ -182,10 +237,7 @@ def test_segments_path_param(spark, corpus_parquet, tmp_path):
                 "2:#sum( #near/2( fickle creek ) farm )\n")
     outs = {}
     for tag, extra in (("plain", ""),
-                       ("segs", f"segmentsPath={seg}\nsegmentsBuckets=4\n"),
-                       ("segs_batch", f"segmentsPath={seg}\n"
-                                      "segmentsBuckets=4\n"
-                                      "batchQueries=true\n")):
+                       ("segs", f"segmentsPath={seg}\nsegmentsBuckets=4\n")):
         out = str(tmp_path / f"sp_{tag}.teIn")
         pf = _write(tmp_path, f"psp_{tag}.txt", f"""corpusPath={d}
 queryFilePath={qf}
@@ -197,7 +249,6 @@ runID=t
         outs[tag] = [(ln.split()[0], ln.split()[2], ln.split()[3])
                      for ln in open(out).read().splitlines()]
     assert outs["segs"] == outs["plain"]
-    assert outs["segs_batch"] == outs["plain"]
 
 
 def test_segments_as_of_param(spark, corpus_parquet, tmp_path):
@@ -256,8 +307,7 @@ def test_segments_only_deployment(spark, corpus_parquet, tmp_path):
     postings parquet at all) + segmentsPath. Every ranking (final, fb
     initial, diversity intents) and feedback's forward-index probe must
     come off the segments, and the trec output must match the full
-    corpusPath deployment rank-for-rank (scores to 1e-9), in both the
-    per-query loop and batchQueries mode."""
+    corpusPath deployment rank-for-rank (scores to 1e-9)."""
     import os
 
     from search_engines_spark.indexer.build import (
@@ -285,28 +335,26 @@ def test_segments_only_deployment(spark, corpus_parquet, tmp_path):
                f"diversity:intentsFile={intents}\n"
                "diversity:maxInputRankingsLength=20\n"
                "diversity:maxResultRankingLength=10\n")
-    for batch in ("", "batchQueries=true\n"):
-        for tag, qf, cfg in (("fb", fbq, fb_cfg), ("div", divq, div_cfg)):
-            runs = {}
-            for src, base in (
-                    ("full", f"corpusPath={d}\n"),
-                    ("segonly", f"indexPath={store}\nsegmentsPath={seg}\n"
-                                "segmentsBuckets=4\n")):
-                out = str(tmp_path / f"so_{tag}_{src}_{len(batch)}.teIn")
-                pf = _write(tmp_path,
-                            f"so_p_{tag}_{src}_{len(batch)}.txt",
-                            f"{base}queryFilePath={qf}\n"
-                            f"trecEvalOutputPath={out}\n"
-                            f"{cfg}runID=t\n{batch}")
-                main(pf, spark=spark)
-                runs[src] = open(out).read().splitlines()
-            assert runs["full"] and \
-                len(runs["full"]) == len(runs["segonly"]), (tag, batch)
-            for a, b in zip(runs["full"], runs["segonly"]):
-                qa, _, ea, ra, sa, _ = a.split()
-                qb, _, eb, rb, sb, _ = b.split()
-                assert (qa, ea, ra) == (qb, eb, rb), (tag, batch)
-                assert abs(float(sa) - float(sb)) < 1e-9
+    for tag, qf, cfg in (("fb", fbq, fb_cfg), ("div", divq, div_cfg)):
+        runs = {}
+        for src, base in (
+                ("full", f"corpusPath={d}\n"),
+                ("segonly", f"indexPath={store}\nsegmentsPath={seg}\n"
+                            "segmentsBuckets=4\n")):
+            out = str(tmp_path / f"so_{tag}_{src}.teIn")
+            pf = _write(tmp_path, f"so_p_{tag}_{src}.txt",
+                        f"{base}queryFilePath={qf}\n"
+                        f"trecEvalOutputPath={out}\n"
+                        f"{cfg}runID=t\n")
+            main(pf, spark=spark)
+            runs[src] = open(out).read().splitlines()
+        assert runs["full"] and \
+            len(runs["full"]) == len(runs["segonly"]), tag
+        for a, b in zip(runs["full"], runs["segonly"]):
+            qa, _, ea, ra, sa, _ = a.split()
+            qb, _, eb, rb, sb, _ = b.split()
+            assert (qa, ea, ra) == (qb, eb, rb), tag
+            assert abs(float(sa) - float(sb)) < 1e-9
 
 
 def test_segments_only_requires_segments_path(spark, corpus_parquet,
@@ -634,60 +682,26 @@ runID=t
     assert lines == ["7 Q0 dummy 1 0 t"]
 
 
-def test_batch_queries_param_matches_per_query_loop(spark, corpus_parquet,
-                                                    tmp_path):
-    """batchQueries=true routes the whole query file through the
-    one-plan batch path; ranking (qid, ext_id, rank) is identical to the
-    reference-style per-query loop and scores agree to 1e-9 (summation
-    order may differ between the batched and per-arm plans). Includes a
-    structured query (batched proximity path) and an OOV topic (dummy
-    line must survive batching)."""
-    d, _ = corpus_parquet
-    qf = _write(tmp_path, "qb.txt",
-                "1:fickle creek farm\n"
-                "2:#sum( #near/2( fickle creek ) farm )\n"
-                "3:zzzunknownterm\n")
-    outs = []
-    for i, extra in enumerate(("", "batchQueries=true\n")):
-        out = str(tmp_path / f"b{i}.teIn")
-        pf = _write(tmp_path, f"pb{i}.txt", f"""corpusPath={d}
-queryFilePath={qf}
-trecEvalOutputPath={out}
-retrievalAlgorithm=BM25
-runID=t
-{extra}""")
-        main(pf, spark=spark)
-        outs.append(open(out).read().splitlines())
-    assert len(outs[0]) == len(outs[1])
-    for a, b in zip(outs[0], outs[1]):
-        qa, _, ea, ra, sa, _ = a.split()
-        qb, _, eb, rb, sb, _ = b.split()
-        assert (qa, ea, ra) == (qb, eb, rb)
-        assert abs(float(sa) - float(sb)) < 1e-9
-    assert any(ln.startswith("3 Q0 dummy") for ln in outs[1])
-
-
-def test_intent_slots_follow_file_order(spark, spark_index):
+def test_intent_slots_follow_file_order(tmp_path):
     """`QryEval.java:746-756` appends each intent to its query's
     ArrayList in intents-FILE order, so intent slot i is the i-th line —
     NOT lexicographic key order, which would put '1.10' before '1.2'.
-    Feed insertion order 1.2-then-1.10 and pin each slot's scores."""
-    from search_engines_spark.engine import Engine
-    from search_engines_spark.run import _diversity_rankings, _search_one
-    eng = Engine(spark_index, "bm25")
-    intents = {"1.2": "voyager probe", "1.10": "fickle creek"}
-    din = _diversity_rankings(eng, spark_index, "1",
-                              "creek farm probe", intents, 20)
-    keep = {d for d, _ in din.initial}
-    assert len(din.intents) == 2
-    for slot, iq in enumerate(intents.values()):
-        want = {r["doc_id"]: r["score"]
-                for r in _search_one(eng, iq, 20).collect()
-                if r["doc_id"] in keep}
-        assert din.intents[slot] == want
-    # the two intent rankings genuinely differ, so a lexicographic
-    # implementation would have swapped the slots and failed above
-    assert din.intents[0] != din.intents[1]
+    The runner builds each topic's DiversityInput from the batch's
+    ranked lists in the intents file's order: feed 1.2-then-1.10 (and a
+    zero-result intent, which keeps its slot) and pin every slot."""
+    from search_engines_spark.io import read_query_file
+    from search_engines_spark.run import _diversity_inputs
+    intents = read_query_file(_write(
+        tmp_path, "slots.txt",
+        "1.2:voyager probe\n1.10:fickle creek\n2.1:farm\n1.3:zzz\n"))
+    lists = {"1": [(4, 3.0), (7, 2.0), (9, 1.0)],
+             "1.2": [(7, 5.0), (8, 4.0)],          # 8 is not a topic doc
+             "1.10": [(9, 6.0), (4, 1.5)],
+             "2": [(8, 1.0)], "2.1": [(8, 0.5)]}
+    inputs = _diversity_inputs(["1", "2"], intents, lists)
+    assert inputs["1"].initial == lists["1"]
+    assert inputs["1"].intents == {0: {7: 5.0}, 1: {9: 6.0, 4: 1.5}, 2: {}}
+    assert inputs["2"].intents == {0: {8: 0.5}}
 
 
 def test_plain_run_depth_unaffected_by_diversity_param(

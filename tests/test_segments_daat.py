@@ -108,14 +108,14 @@ def test_daat_wand_rank_identity(spark, spark_index, seg_dir, q):
 
 
 def test_engine_search_daat_api(spark, spark_index, seg_dir):
-    """Engine.attach_segments + search_daat end-to-end; rank-identical to
-    the compiled plan under the doc_id tie-break."""
+    """Engine.attach_segments + a one-query search_daat_many end-to-end;
+    rank-identical to the compiled plan under the doc_id tie-break."""
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(seg_dir, num_buckets=NUM_BUCKETS)
-    got = eng.search_daat("fickle creek farm", k=20).collect()
-    _assert_matches_eval_sop(eng, "fickle creek farm", got, 20)
+    got = _ranked(eng.search_daat_many({"q": "fickle creek farm"}, k=20))
+    _assert_matches_eval_sop(eng, "fickle creek farm", got["q"], 20)
     with pytest.raises(ValueError):
-        eng.search_daat("#near/2( creek farm )")
+        eng.search_daat_many({"q": "#near/2( creek farm )"})
 
 
 def test_search_daat_repeated_term(spark, spark_index, seg_dir):
@@ -123,8 +123,8 @@ def test_search_daat_repeated_term(spark, spark_index, seg_dir):
     (`QrySopSum.java:39-53`) — DAAT folds multiplicity into idf."""
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(seg_dir, num_buckets=NUM_BUCKETS)
-    got = eng.search_daat("creek creek farm", k=15).collect()
-    _assert_matches_eval_sop(eng, "creek creek farm", got, 15)
+    got = _ranked(eng.search_daat_many({"q": "creek creek farm"}, k=15))
+    _assert_matches_eval_sop(eng, "creek creek farm", got["q"], 15)
 
 
 def test_block_max_pruning_fires_and_stays_exact(spark, spark_index,
@@ -196,10 +196,10 @@ def test_prune_counter_batch_stays_exact(spark, spark_index, seg_dir):
 
 def test_search_daat_steady_job_count(spark, spark_index, tmp_path_factory,
                                       jobs_submitted):
-    """A steady single-query DAAT call over a one-group store with one
-    tombstone submits a pinned number of Spark jobs. The kernel's
-    survivors are ranked by the final sort + limit, which plans as
-    TakeOrderedAndProject."""
+    """A steady one-query `search_daat_many` call over a one-group store
+    with one tombstone submits a pinned number of Spark jobs: the
+    kernel's single partition satisfies the per-qid rank window, so a
+    query ranked by the window costs no job more than a sort + limit."""
     from pyspark.sql import functions as F
     from search_engines_spark.indexer.merge import delete_docs
     d = str(tmp_path_factory.mktemp("segs_jobs"))
@@ -209,27 +209,12 @@ def test_search_daat_steady_job_count(spark, spark_index, tmp_path_factory,
                 .select("doc_id"))
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(d, num_buckets=NUM_BUCKETS)
-    q = "fickle creek farm"
-    want = eng.search_daat(q, k=10).collect()  # warm: stats prefetch
+    q = {"q": "fickle creek farm"}
+    want = eng.search_daat_many(q, k=10).collect()  # warm: stats prefetch
     got, jobs = jobs_submitted(
-        "daat_steady", lambda: eng.search_daat(q, k=10).collect())
+        "daat_steady", lambda: eng.search_daat_many(q, k=10).collect())
     assert got == want and 3 not in [r["doc_id"] for r in got]
     assert len(jobs) == STEADY_DAAT_JOBS
-
-
-def test_search_daat_plans_no_rank_window(spark, spark_index, seg_dir):
-    """A single DAAT query is ranked by its final sort + limit alone:
-    the executed plan holds no per-qid Window node (one costs its own
-    exchange over a store of more than one pk group). The fixture's
-    cached doc_map carries the id-assignment window, which is not it."""
-    eng = Engine(spark_index, "bm25")
-    eng.attach_segments(seg_dir, num_buckets=NUM_BUCKETS)
-    top = eng.search_daat("fickle creek farm", k=20)
-    _assert_matches_eval_sop(eng, "fickle creek farm", top.collect(), 20)
-    plan = top._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert not [ln for ln in plan.splitlines()
-                if "Window" in ln and "qid" in ln]
 
 
 @pytest.mark.parametrize("model,q", [
@@ -245,7 +230,7 @@ def test_search_segments_full_language(spark, spark_index, seg_dir, model, q):
     the bow fast path."""
     eng = Engine(spark_index, model)
     eng.attach_segments(seg_dir, num_buckets=NUM_BUCKETS)
-    got = eng.search_segments(q, k=25).collect()
+    got = _ranked(eng.search_segments_many({"q": q}, k=25)).get("q", [])
     want = eng.search(q, k=25).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
     for g, w in zip(got, want):
@@ -299,8 +284,8 @@ def test_segments_sub_engine_fetches_no_stats(spark_index, seg_dir,
     eng.search_segments_many(queries, k=5).collect()
     assert [who for who, _ in fetched] == [True]
     eng.search_segments_many(queries, k=5).collect()
-    eng.search_segments("#sum( #window/4( stage token ) index )",
-                        k=5).collect()
+    eng.search_segments_many({"s4": "#sum( #window/4( stage token ) index )"},
+                             k=5).collect()
     assert [who for who, _ in fetched] == [True, True]
     eng.close()
 
@@ -343,14 +328,14 @@ def test_search_segments_masks_deletes(spark, spark_index, tmp_path_factory):
                    num_buckets=NUM_BUCKETS)
     eng = Engine(spark_index, "bm25")
     eng.attach_segments(d, num_buckets=NUM_BUCKETS)
-    q = "#sum( #near/2( fickle creek ) farm )"
-    before = eng.search_segments(q, k=30).collect()
+    q = {"q": "#sum( #near/2( fickle creek ) farm )"}
+    before = _ranked(eng.search_segments_many(q, k=30))["q"]
     assert before
     victim = before[0]["doc_id"]
     delete_docs(spark, d,
                 spark_index.docs.where(F.col("doc_id") == victim)
                 .select("doc_id"))
-    after = eng.search_segments(q, k=30).collect()
+    after = _ranked(eng.search_segments_many(q, k=30)).get("q", [])
     assert victim not in [r["doc_id"] for r in after]
     # survivors keep their full-corpus-stats scores exactly
     before_scores = {r["doc_id"]: r["score"] for r in before}
