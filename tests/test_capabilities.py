@@ -20,6 +20,16 @@ from rm_oracle import py_expand
 # ------------------------------------------------------------- feedback --
 
 
+def test_expand_query_matches_python_reference(spark_index, oracle_index):
+    """One query's RM expansion equals the pure-Python transcription of
+    `QryEval.java:78-200` (ties → term asc)."""
+    ranking = [(d, s) for d, _, s in
+               run_query("fickle creek farm", oracle_index, "indri", k=10)]
+    got = expand_queries(spark_index, {"q": ranking}, fb_docs=5, fb_terms=8,
+                         fb_mu=40.0)
+    assert got == {"q": py_expand(oracle_index, ranking, 5, 8, 40.0)}
+
+
 def test_expanded_query_reenters_engine(spark_index, oracle_index):
     """The expanded #wand string must parse and run (SURVEY.md §3.2)."""
     ranking = [(d, s) for d, _, s in

@@ -682,6 +682,44 @@ runID=t
     assert lines == ["7 Q0 dummy 1 0 t"]
 
 
+def test_batch_queries_param_matches_per_query_loop(spark, corpus_parquet,
+                                                    tmp_path):
+    """A query file answered as one batch gives each topic the trec block
+    a run of that topic alone gives: ranking (qid, ext_id, rank)
+    identical, scores to 1e-9 (summation order may differ between the
+    batched and single-query plans). Includes a structured query
+    (batched proximity path) and an OOV topic (its dummy line must
+    survive batching). The batch run's parameter file still sets the
+    retired `batchQueries` key, which the runner ignores."""
+    d, _ = corpus_parquet
+    queries = {"1": "fickle creek farm",
+               "2": "#sum( #near/2( fickle creek ) farm )",
+               "3": "zzzunknownterm"}
+
+    def run(tag, qtext, extra=""):
+        qf = _write(tmp_path, f"qb_{tag}.txt", qtext)
+        out = str(tmp_path / f"b_{tag}.teIn")
+        pf = _write(tmp_path, f"pb_{tag}.txt", f"""corpusPath={d}
+queryFilePath={qf}
+trecEvalOutputPath={out}
+retrievalAlgorithm=BM25
+runID=t
+{extra}""")
+        main(pf, spark=spark)
+        return open(out).read().splitlines()
+
+    batch = run("all", "".join(f"{q}:{t}\n" for q, t in queries.items()),
+                "batchQueries=true\n")
+    loop = [ln for q, t in queries.items() for ln in run(q, f"{q}:{t}\n")]
+    assert len(batch) == len(loop)
+    for a, b in zip(batch, loop):
+        qa, _, ea, ra, sa, _ = a.split()
+        qb, _, eb, rb, sb, _ = b.split()
+        assert (qa, ea, ra) == (qb, eb, rb)
+        assert abs(float(sa) - float(sb)) < 1e-9
+    assert any(ln.startswith("3 Q0 dummy") for ln in batch)
+
+
 def test_intent_slots_follow_file_order(tmp_path):
     """`QryEval.java:746-756` appends each intent to its query's
     ArrayList in intents-FILE order, so intent slot i is the i-th line —
